@@ -252,6 +252,14 @@ object Bench {
     // "12,3" under comma-decimal default locales — invalid JSON; r18
     // review)
     def r1(v: Double): String = (math.round(v * 10) / 10.0).toString
+    // a quoted JSON string: paths and /proc text may hold quotes,
+    // backslashes or control characters
+    def jstr(v: String): String = "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
     def jwallOf(m: scala.collection.Map[String, (Double, Double)],
         sel: ((Double, Double)) => Double) = m
       .map { case (k, v) => "\"" + k + "\":" + r1(sel(v)) }
@@ -261,7 +269,7 @@ object Bench {
     val smeared = stillNoisy.filter(reruns.contains)
       .map(n => "\"" + n + "\":" + resultsFirst(n).med)
       .mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(_.cold)},"queries_median":${jmap(_.med)},"queries_p25":${jmap(_.lo)},"queries_p75":${jmap(_.hi)},"queries_t0":${jwallOf(qWall, _._1)},"queries_t1":${jwallOf(qWall, _._2)},"rerun_queries":$rerunList,"queries_smeared":$smeared,"rerun_t0":${jwallOf(rWall, _._1)},"rerun_t1":${jwallOf(rWall, _._2)},"total_median":$totalMedian,"total_lo":$totalLo,"loadavg":"$loadStart","loadavg_end":"$loadavg","load1_start":$load1Start,"load5_start":$load5Start,"extra_warm_runs":$extraWarmRuns,"contamination_threshold":$loadThreshold,"contaminated":$contaminated,"idle_wait_sec":$waitedSec,"bench_wall_sec":$wallSec,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(_.cold)},"queries_median":${jmap(_.med)},"queries_p25":${jmap(_.lo)},"queries_p75":${jmap(_.hi)},"queries_t0":${jwallOf(qWall, _._1)},"queries_t1":${jwallOf(qWall, _._2)},"rerun_queries":$rerunList,"queries_smeared":$smeared,"rerun_t0":${jwallOf(rWall, _._1)},"rerun_t1":${jwallOf(rWall, _._2)},"total_median":$totalMedian,"total_lo":$totalLo,"loadavg":${jstr(loadStart)},"loadavg_end":${jstr(loadavg)},"load1_start":$load1Start,"load5_start":$load5Start,"extra_warm_runs":$extraWarmRuns,"contamination_threshold":$loadThreshold,"contaminated":$contaminated,"idle_wait_sec":$waitedSec,"bench_wall_sec":$wallSec,"sf":${jstr(sfDir)}}"""
     println(json)
     // The driver captures stdout with a grep that truncated round 4's
     // artifact (lost ~10 queries' medians). Persist the full line ourselves
@@ -319,7 +327,7 @@ object Bench {
     // `parsed: null`). A few-hundred-byte second line always fits any
     // tail capture. Additive only — the full line and `bench_out.json`
     // are unchanged, and no timing methodology moved.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total_median":$totalMedian,"total_lo":$totalLo,"n_queries":${results.size},"extra_warm_runs":$extraWarmRuns,"contaminated":$contaminated,"load1_start":$load1Start,"load5_start":$load5Start,"bench_wall_sec":$wallSec,"queries_file":"$outPath","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","total_median":$totalMedian,"total_lo":$totalLo,"n_queries":${results.size},"extra_warm_runs":$extraWarmRuns,"contaminated":$contaminated,"load1_start":$load1Start,"load5_start":$load5Start,"bench_wall_sec":$wallSec,"queries_file":${jstr(outPath)},"sf":${jstr(sfDir)}}""")
     spark.stop()
   }
 }

@@ -105,10 +105,13 @@ object SparkCep {
       throw new IllegalArgumentException(
         "CEP navigation (PREV/NEXT) has no lag/lead formulation on " +
           "streaming input (the window needs the whole key partition). " +
-          "PREV is supported by the arrival-order StreamingCep" +
-          ".matchPattern/matchPatternMeasures operators via per-key " +
-          "history in state; run NEXT queries in batch, or express the " +
-          "dependency with LET registers (previous BOUND event).")
+          "Use the StreamingCep operators instead: every one of them " +
+          "supports PREV via per-key history in state, and the " +
+          "event-time ones (matchPatternEventTime and its measures, " +
+          "shared and timeout forms) also support NEXT via the " +
+          "watermark hold-back; for NEXT on an arrival-order stream, " +
+          "run the query in batch, or express the dependency with LET " +
+          "registers (previous BOUND event).")
     val navNames = navs.flatMap(n => Seq(n.valueName, n.hasName))
     val attrNames: Vector[String] =
       (spec.orderCol +: (spec.attrCols ++ navNames).distinct

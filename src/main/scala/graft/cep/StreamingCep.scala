@@ -14,9 +14,17 @@ import org.apache.spark.sql.types._
   * reordering, matching the reference exactly. State size is bounded by the
   * pattern's live-run count; skip strategies and `until` prune it.
   *
-  * The DST is recompiled per executor from the broadcast query (compilation
-  * is deterministic, so state names in stored runs resolve stably across
-  * batches and restarts).
+  * The DST is compiled once on the driver and ships, immutable, in the
+  * task closure (compilation is deterministic, so state names in stored
+  * runs resolve stably across batches and restarts).
+  *
+  * All ten public operators are thin wrappers over ONE private per-key
+  * core (`perKey`): a member list (k = 1 for the single-query
+  * operators), a feed order (arrival, or watermark release with the
+  * NEXT hold-back) and an emission (rendered matches, or drained
+  * timeouts). Decode, cross-variant refusal, nav/SHOW EMPTY restore,
+  * feed, idle-key GC and encode exist once; the four on-disk shapes
+  * hide behind `StateLayout`.
   */
 object StreamingCep {
 
@@ -99,9 +107,6 @@ object StreamingCep {
       firstTake: Int = 0, firstTakeTs: Long = 0L,
       anchorFirst: Int = 0, anchorLast: Int = 0)
 
-  /** Whole per-key executor state (position-order variant). */
-  final case class CepState(step: Int, runs: Seq[SerRun])
-
   /** Decode an event from a projected row: `ordIdx`/`typeIdx` locate the
     * order and type columns, attrs start at `attrStart` (shared by both
     * streaming variants, whose projections differ only by the ts column).
@@ -133,24 +138,22 @@ object StreamingCep {
       if (strs == null) Vector.empty else strs.result())
   }
 
-  private def matchToRow(key: Any, m: Match, piNames: Vector[String],
-      orderName: String): Row = {
-    val byName = m.toMap
+  /** `(key, one array<bigint> of order ids per pattern name)`. */
+  private def orderIdsRow(key: Any, byName: Map[String, Vector[Event]],
+      piNames: Vector[String], orderName: String): Row =
     Row.fromSeq(key +: piNames.map(n =>
       byName.getOrElse(n, Vector.empty).map(_(orderName))))
-  }
 
-  /** The per-key stateful dispatch shared by every streaming operator:
-    * group the prepared frame by its key column (ordinal 0) under the
-    * key's EXACT type and run `f` per key with explicit state/output
-    * encoders. Long (numeric/unkeyed), string and struct (multi-column
-    * `PARTITION BY`) keys are supported — the state store's KEY schema
-    * is the key's own type, so key identity is exact end-to-end (no
-    * hashed-key collision contract), and Spark's state schema check
-    * refuses a checkpoint whose key type changed, loudly. Numeric keys
-    * keep the exact long layout earlier rounds wrote — their
-    * checkpoints restore unchanged. Other key types: cast to long or
-    * string upstream, or wrap in a struct.
+  /** The per-key stateful dispatch: group the prepared frame by its key
+    * column (ordinal 0) under the key's EXACT type and run `f` per key
+    * with explicit state/output encoders. Long (numeric/unkeyed), string
+    * and struct (multi-column `PARTITION BY`) keys are supported — the
+    * state store's KEY schema is the key's own type, so key identity is
+    * exact end-to-end (no hashed-key collision contract), and Spark's
+    * state schema check refuses a checkpoint whose key type changed,
+    * loudly. Numeric keys keep the exact long layout earlier rounds
+    * wrote — their checkpoints restore unchanged. Other key types: cast
+    * to long or string upstream, or wrap in a struct.
     */
   private def groupedFlatMap[S](prepared: DataFrame, keyDt: DataType,
       timeout: GroupStateTimeout, stateEnc: Encoder[S],
@@ -181,19 +184,27 @@ object StreamingCep {
   private def fromSer(e: SerEvent): Event =
     Event(e.tpe, e.names.zip(e.vals).toVector,
       e.sNames.zip(e.sVals).toVector)
+  private def fromBuf(e: BufEvent): Event =
+    Event(e.tpe, e.names.zip(e.vals).toVector,
+      e.sNames.zip(e.sVals).toVector)
 
-  private def snapshotState(ex: Executor): CepState = {
+  /** One member's run state as a codec payload: step, runs, clock floor,
+    * writer variant and SHOW EMPTY sites (buffer and nav are per key —
+    * the layout decides where they go).
+    */
+  private def snapshotState(ex: Executor, variant: Byte,
+      tracker: EmptySiteTracker): CepStateEt = {
     val (step, runs) = ex.snapshot
-    CepState(step, runs.map { case (k, c) =>
+    CepStateEt(step, runs.map { case (k, c) =>
       SerRun(k, c.q.name, c.lastTake, c.revEpsClosure.toSeq,
         c.eta.keys.toSeq, c.eta.values.toSeq,
         c.ctx.keys.toSeq, c.ctx.values.toSeq.map(_.map(toSer)),
         c.firstTake, c.firstTakeTs, c.anchorFirst, c.anchorLast)
-    })
+    }, Nil, ex.clock, variant,
+      trackedEmpty = tracker.tracking, pending = tracker.pending)
   }
 
-  private def restoreState(ex: Executor, s: CepState,
-      clockFloor: Long): Unit =
+  private def restoreState(ex: Executor, s: CepStateEt): Unit =
     ex.restore(s.step, s.runs.toVector.map { r =>
       (r.start, Configuration(
         ex.stateByName(r.q),
@@ -205,67 +216,26 @@ object StreamingCep {
         r.firstTakeTs,
         r.anchorFirst,
         r.anchorLast))
-    }, clockFloor)
+    }, s.clock)
 
-  /** Event-time source policy shared by the single- and multi-query
-    * event-time operators — ONE implementation so it cannot drift between
-    * formulations: watermark first, then the optional pre-NFA filter,
-    * null key/ts drop, canonical `(__key, __ts, __ord, __type, attr…)`
-    * projection. `tsCol` stays a TIMESTAMP — a cast would strip the
-    * watermark tag and EventTimeTimeout requires a watermarked column in
-    * the child plan.
-    *
-    * The pre-NFA filter must run ABOVE the watermark node: Catalyst
-    * pushes deterministic predicates that do not reference the
-    * watermark column below `EventTimeWatermark`, and a pushed-down
-    * union filter would compute the watermark on the FILTERED stream —
-    * a member set whose alphabet drops most events would then stall the
-    * reorder-buffer drain (events outside the alphabet never advance
-    * the watermark, so buffered in-alphabet events are never released).
-    * The filter is therefore applied as `cond OR tsCol IS NULL`: it
-    * references the watermark column, which blocks the pushdown (the
-    * optimizer's EventTimeWatermark pushdown rule keeps any
-    * ts-referencing predicate above the node), and it is semantically
-    * identical because ts-null rows are dropped by the source policy
-    * immediately after. Non-alphabet events still drop BEFORE the key
-    * shuffle and the state store — only the parquet-scan pushdown is
-    * traded away, for drain liveness (`EventTimeCepSpec` pins both the
-    * plan shape and the drain). A watermark heartbeat therefore needs
-    * no special type: ANY event with a non-null key and ts advances
-    * the watermark, and events outside the union alphabet are never
-    * fed to members.
-    */
-  /** Navigation for the SHARED operators: ONE history per key over the
-    * UNION of the members' navigations (the physical rows are common to
-    * every member — that sharing is the point), augmenting each event
-    * once BEFORE the member feed gates. The union prefilter is disabled
-    * when any member navigates (`PREV` observes rows the filter would
-    * drop); the per-member feed gates stay — a gate only skips rows the
-    * member's own prefilter proves invisible, and such rows still enter
-    * the shared history first. Each member is validated individually so
-    * the error names the member's own navigation.
-    */
-  private def sharedNavs(queries: Seq[(String, CepQuery)],
-      spec: SparkCep.CepSpec, allowNext: Boolean = false): Vector[Nav] =
-    queries.flatMap { case (_, q) => streamingNavs(q, spec, allowNext) }
-      .distinct.sortBy(_.valueName).toVector
-
-  /** Navigation contract for the ARRIVAL-ORDER streaming operators:
-    * `PREV` is supported via a per-key history of the last maxK
-    * physical rows carried in state (codec v5); `NEXT` is rejected — it
-    * references FOLLOWING rows the unbounded stream has not produced.
-    * The navigated base attribute must be in the operator's projection
-    * (`attrCols` or the order column): unlike batch, where any input
-    * column can be navigated (the lag/lead window reads the raw frame),
-    * the history is built from the projected event, so a base outside
-    * the projection would silently read as absent. Nav queries take no
-    * pre-NFA filter (`PREV` observes rows the filter would drop —
-    * exactly the batch navigation path's rule) and forgo the idle-key
-    * state GC (the history on a run-free key is itself semantics), so
-    * per-key state is O(maxK × bases) for every key ever seen.
+  /** Navigation contract for the streaming operators: `PREV` is
+    * supported everywhere via a per-key history of the last maxK
+    * physical rows carried in state (codec v5); `NEXT` only in event
+    * time (`allowNext`), whose watermark hold-back makes the followers
+    * final — the arrival-order operators reject it, it references
+    * FOLLOWING rows the unbounded stream has not produced. The navigated
+    * base attribute must be in the operator's projection (`attrCols` or
+    * the order column): unlike batch, where any input column can be
+    * navigated (the lag/lead window reads the raw frame), the history is
+    * built from the projected event, so a base outside the projection
+    * would silently read as absent. Nav queries take no pre-NFA filter
+    * (`PREV` observes rows the filter would drop — exactly the batch
+    * navigation path's rule) and forgo the idle-key state GC (the
+    * history on a run-free key is itself semantics), so per-key state is
+    * O(maxK × bases) for every key ever seen.
     */
   private def streamingNavs(query: CepQuery,
-      spec: SparkCep.CepSpec, allowNext: Boolean = false): Vector[Nav] = {
+      spec: SparkCep.CepSpec, allowNext: Boolean): Vector[Nav] = {
     val navs = Nav.ofQuery(query)
     val nexts = navs.filterNot(_.prev)
     if (nexts.nonEmpty && !allowNext)
@@ -291,14 +261,12 @@ object StreamingCep {
     navs
   }
 
-  /** NEXT augmentation over a watermark-release slice — ONE
-    * implementation for the single-query and shared event-time
-    * operators so the hold-back semantics cannot drift between them:
-    * event `i` of `sortedReady` reads each `NEXT(base, k)` value from
-    * slice position `i + k`, which the caller's hold-back (only the
-    * first `length - maxK` events are fed) guarantees exists and is
-    * final. Last occurrence of the base wins — parity with the generic
-    * attribute lookup.
+  /** NEXT augmentation over a watermark-release slice: event `i` of
+    * `sortedReady` reads each `NEXT(base, k)` value from slice position
+    * `i + k`, which the hold-back (only the first `length - maxK` events
+    * feed the NEXT members) guarantees exists and is final. Last
+    * occurrence of the base wins — parity with the generic attribute
+    * lookup.
     */
   private def withNextFromSlice(nextNavs: Vector[Nav],
       sortedReady: Vector[BufEvent], ev: Event, i: Int): Event =
@@ -316,15 +284,15 @@ object StreamingCep {
       Event(ev.tpe, ev.attrs ++ extra.result(), ev.strs)
     }
 
-  /** Per-key navigation feed state, ONE implementation for every
-    * streaming operator that supports `PREV` so the history semantics
-    * cannot drift between them: instantiate per key invocation, restore
-    * from the decoded state (validates the signature), `augment` each
-    * event IN FEED ORDER (arrival order for the processing-time
-    * operators, watermark-release `(ts, ord)` order for the event-time
-    * ones — whatever order the NFA consumes is the order PREV sees),
-    * and persist `sig`/`serHist` back into the codec payload. A key
-    * with an ACTIVE nav feed must skip the idle-key state GC.
+  /** Per-key navigation feed state: ONE history per key over the union
+    * of the members' `PREV` navigations (the physical rows are common to
+    * every member), instantiated per key invocation, restored from the
+    * decoded state (validates the signature), `augment`ing each event IN
+    * FEED ORDER (arrival order for the processing-time operators,
+    * watermark-release `(ts, ord)` order for the event-time ones —
+    * whatever order the NFA consumes is the order PREV sees), and
+    * persisted as `sig`/`serHist`. A key with an ACTIVE nav feed must
+    * skip the idle-key state GC.
     */
   private final class NavFeed(navs: Vector[Nav]) {
     val sig: Seq[String] = navs.map(_.valueName)
@@ -453,6 +421,34 @@ object StreamingCep {
           "boundary would be wrong. Resume with the original " +
           "navigation set, or discard the checkpoint directory.")
 
+  /** Event-time source policy shared by the single- and multi-query
+    * event-time operators — ONE implementation so it cannot drift between
+    * formulations: watermark first, then the optional pre-NFA filter,
+    * null key/ts drop, canonical `(__key, __ts, __ord, __type, attr…)`
+    * projection. `tsCol` stays a TIMESTAMP — a cast would strip the
+    * watermark tag and EventTimeTimeout requires a watermarked column in
+    * the child plan.
+    *
+    * The pre-NFA filter must run ABOVE the watermark node: Catalyst
+    * pushes deterministic predicates that do not reference the
+    * watermark column below `EventTimeWatermark`, and a pushed-down
+    * union filter would compute the watermark on the FILTERED stream —
+    * a member set whose alphabet drops most events would then stall the
+    * reorder-buffer drain (events outside the alphabet never advance
+    * the watermark, so buffered in-alphabet events are never released).
+    * The filter is therefore applied as `cond OR tsCol IS NULL`: it
+    * references the watermark column, which blocks the pushdown (the
+    * optimizer's EventTimeWatermark pushdown rule keeps any
+    * ts-referencing predicate above the node), and it is semantically
+    * identical because ts-null rows are dropped by the source policy
+    * immediately after. Non-alphabet events still drop BEFORE the key
+    * shuffle and the state store — only the parquet-scan pushdown is
+    * traded away, for drain liveness (`EventTimeCepSpec` pins both the
+    * plan shape and the drain). A watermark heartbeat therefore needs
+    * no special type: ANY event with a non-null key and ts advances
+    * the watermark, and events outside the union alphabet are never
+    * fed to members.
+    */
   private def etPrepare(df: DataFrame,
       filter: Option[org.apache.spark.sql.Column], spec: SparkCep.CepSpec,
       tsCol: String, delay: String): (DataFrame, Vector[String]) = {
@@ -483,8 +479,8 @@ object StreamingCep {
     (prepared, attrNames)
   }
 
-  /** Reorder-buffer step shared by both event-time operators: append
-    * non-late arrivals (events already behind the watermark are dropped —
+  /** Reorder-buffer step of the event-time feed: append non-late
+    * arrivals (events already behind the watermark are dropped —
     * standard late-data policy), release the strict prefix below the
     * watermark. Returns (ready, still-buffered).
     *
@@ -505,8 +501,8 @@ object StreamingCep {
     else buffered.partition(_.ts < wmMs)
   }
 
-  /** Member-set checkpoint contract shared by both shared operators:
-    * names AND order must match exactly — a count-only check would let a
+  /** Member-set checkpoint contract of both shared layouts: names AND
+    * order must match exactly — a count-only check would let a
     * reordered set silently decode one pattern's runs into another
     * executor (DST state names are per-pattern counters like `a:1` that
     * resolve against the wrong pattern without error).
@@ -520,460 +516,6 @@ object StreamingCep {
           s"[${built.mkString(", ")}] — the query set changed across " +
           "restart (names and order are the checkpoint contract); " +
           "discard the checkpoint or restore the original set")
-
-  /** A per-match output renderer for the shared operators:
-    * `(member index, key, bound events by pattern name, order attr)` →
-    * one output Row.
-    */
-  private type SharedRender =
-    (Int, Any, Map[String, Vector[Event]], String) => Row
-
-  /** Gated feed shared by the shared streaming operators (gate semantics
-    * proven at `SparkCep.memberFeedTypes`); the output shape is the
-    * renderer's affair.
-    */
-  private def feedShared(executors: Vector[Executor],
-      gates: Array[Set[String]], key: Any, orderName: String,
-      ev: Event, trackers: Vector[EmptySiteTracker] = Vector.empty,
-      memberSteps: Array[Int] = null,
-      only: Int => Boolean = _ => true)(render: SharedRender): Seq[Row] =
-    executors.indices.filter(only).flatMap { i =>
-      val gate = gates(i)
-      if (gate == null || (ev.tpe != null && gate.contains(ev.tpe))) {
-        val ms = executors(i).feed(ev)
-        if (trackers.nonEmpty) {
-          // tracked members run gate-less (sites are defined over the
-          // full feed), so memberSteps mirrors the executor's counter
-          memberSteps(i) += 1
-          trackers(i).onFeed(ev(orderName), executors(i).clock,
-            memberSteps(i))
-          ms.map { m =>
-            val byName = m.toMap
-            trackers(i).onMatch(byName, orderName)
-            render(i, key, byName, orderName)
-          }
-        } else ms.map(m => render(i, key, m.toMap, orderName))
-      } else Vector.empty
-    }
-
-  /** The classic shared reporting shape `(qname, key, binding)`: order
-    * ids comma-joined per pattern name, ';'-joined across names in
-    * declared order.
-    */
-  private def bindingRender(queries: Seq[(String, CepQuery)])
-      : SharedRender = {
-    val names = queries.toVector.map(_._1)
-    val piNamesByQ = queries.toVector.map { case (_, q) =>
-      SparkCep.patternNames(q.patseq) }
-    (i, key, byName, orderName) =>
-      Row(names(i), key, piNamesByQ(i).map { n =>
-        byName.getOrElse(n, Vector.empty)
-          .map(_(orderName)).mkString(",")
-      }.mkString(";"))
-  }
-
-  /** The measured shared shape `(qname, key, measures, smeasures)` —
-    * alias → emission-time folded value, NULL kept for
-    * measure-over-missing. TWO maps split by the item's declared type
-    * (`CepMeasures.itemDataType`): long-valued measures in `measures`,
-    * STRING-valued ones — `CLASSIFIER()` and FIRST/LAST over a
-    * string-typed attribute (round 16) — in `smeasures` (empty when a
-    * member declares none). The split keeps the long map's existing
-    * contract while giving string measures a typed sink, so the shared
-    * shape no longer rejects CLASSIFIER().
-    */
-  private def measuresRender(stmts: Seq[(String, CepSql.CepSqlStatement)],
-      strAttrs: Set[String]): SharedRender = {
-    val names = stmts.toVector.map(_._1)
-    val sVec = stmts.toVector.map(_._2)
-    val isStrItem = stmts.toVector.map(_._2.measures.map(it =>
-      CepMeasures.itemDataType(it, strAttrs) ==
-        org.apache.spark.sql.types.StringType))
-    (i, key, byName, orderName) => {
-      val st = sVec(i)
-      val flags = isStrItem(i)
-      val longs = Map.newBuilder[String, Any]
-      val strs = Map.newBuilder[String, Any]
-      st.measures.zip(flags).foreach { case (it, isStr) =>
-        val v = CepMeasures.evalItemBoxed(it, byName, orderName,
-          st.subsetMap, strAttrs)
-        if (isStr) strs += it.alias -> v else longs += it.alias -> v
-      }
-      Row(names(i), key, longs.result(), strs.result())
-    }
-  }
-
-  /** Snapshot / restore of k member run-sets through the versioned
-    * binary codec (payloads tagged with the writing operator's variant).
-    */
-  private def encodeMembers(executors: Vector[Executor],
-      variant: Byte,
-      trackers: Vector[EmptySiteTracker] = Vector.empty)
-      : Vector[CepStateCodec.VersionedState] =
-    executors.zipWithIndex.map { case (ex, i) =>
-      val snap = snapshotState(ex)
-      val (te, pe) =
-        if (trackers.isEmpty) (false, Nil)
-        else (trackers(i).tracking, trackers(i).pending)
-      CepStateCodec.encode(
-        CepStateEt(snap.step, snap.runs, Nil, ex.clock, variant,
-          trackedEmpty = te, pending = pe))
-    }
-
-  /** Restore member executors and return the decoded states (the SHOW
-    * EMPTY trackers read their pending sections from them).
-    */
-  private def restoreMembers(members: Seq[CepStateCodec.VersionedState],
-      executors: Vector[Executor]): Vector[CepStateEt] =
-    members.zip(executors).map { case (vs, ex) =>
-      val st = CepStateCodec.decode(vs)
-      restoreState(ex, CepState(st.step, st.runs), st.clock)
-      st
-    }.toVector
-
-  /** Apply a CEP query to a *streaming* DataFrame. Input columns are mapped
-    * exactly as in the batch operator (`SparkCep.CepSpec`); output rows are
-    * (key, one array<bigint> of order-ids per pattern name).
-    *
-    * Usage: `StreamingCep.matchPattern(readStreamDf, query, spec)
-    * .writeStream.outputMode("append")...`
-    */
-  def matchPattern(df: DataFrame, query: CepQuery,
-      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame = {
-    val piNames = SparkCep.patternNames(query.patseq)
-    val keyName = spec.keyCol.getOrElse("__global")
-    SparkCep.checkWithinStateBound(query, maxRunsPerKey, streaming = true)
-    val effMaxRuns =
-      SparkCep.resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
-    val navs = streamingNavs(query, spec)
-    // same source policy as the batch operator (shared `prepare`):
-    // semantics-preserving pre-NFA pushdown, null keys dropped,
-    // non-numeric keys hashed, canonical projection — the returned
-    // attrNames ARE the projection's attr order the row decode relies on.
-    // Navigation queries take no pre-NFA filter (PREV observes rows the
-    // filter would drop) and no lag/lead window (batch-only) — the
-    // per-key history in state supplies the nav attributes instead.
-    val (prepared, attrNames) =
-      if (navs.isEmpty) SparkCep.prepare(df, query, spec)
-      else {
-        SparkCep.checkStrTyping(df, query, spec)
-        SparkCep.prepareWithFilter(df, None, spec)
-      }
-    val strFlags = SparkCep.strAttrFlags(prepared)
-    val orderName = attrNames.head
-
-    val outSchema = StructType(
-      StructField(keyName, SparkCep.keyType(df, spec), nullable = false) +:
-        piNames.map(n =>
-          StructField(n, ArrayType(LongType, containsNull = false),
-            nullable = false)))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val stateEnc: Encoder[CepStateCodec.VersionedState] =
-      Encoders.product[CepStateCodec.VersionedState]
-
-    // compile once on the driver; the immutable DST ships in the closure
-    // and is shared by every key in the task (state names resolve against
-    // it stably across batches/restarts since compilation is deterministic)
-    val dst = DstCompiler.compile(query)
-
-    groupedFlatMap[CepStateCodec.VersionedState](prepared,
-      SparkCep.keyType(df, spec), GroupStateTimeout.NoTimeout(),
-      stateEnc, outEnc) {
-        (key, rows, state) =>
-          val executor = new Executor(dst, query.strategy, effMaxRuns,
-            query.within, query.withinTime,
-            anchorStart = query.anchorStart)
-          val nf = new NavFeed(navs)
-          if (state.exists) {
-            val st = CepStateCodec.decode(state.get)
-            // cross-variant refusal is DETERMINISTIC via the v3 variant
-            // tag: the event-time operator feeds in watermark-released
-            // event-time order, this one in arrival order — restoring its
-            // state here changes match multisets even when its reorder
-            // buffer happens to be empty. Migrated v2 state (unknown
-            // writer) falls back to the old buffer-contents inference.
-            if (st.variant == CepStateCodec.VariantEventTime ||
-                (st.variant == CepStateCodec.VariantUnknown &&
-                  st.buffer.nonEmpty))
-              throw new IllegalStateException(
-                "CEP streaming state was written by matchPatternEventTime " +
-                  "and cannot be restored by the arrival-order operator " +
-                  "(different feed-order semantics; buffered events would " +
-                  "be lost). Resume with matchPatternEventTime, or " +
-                  "discard the checkpoint directory.")
-            nf.restore(st)
-            restoreState(executor, CepState(st.step, st.runs), st.clock)
-          }
-          // arrival-order semantics within the micro-batch: sort by order
-          // column (monotone ingestion ids), as the reference's processing
-          // order is the stream order
-          val events = rows.toVector.sortBy(_.getLong(1))
-          val out = events.flatMap { row =>
-            executor.feed(nf.augment(
-              rowToEvent(row, 1, 2, 3, attrNames, orderName, strFlags)))
-              .map(matchToRow(key, _, piNames, orderName))
-          }
-          val snap = snapshotState(executor)
-          // idle-key state GC: a key with NO live runs is semantically
-          // a fresh key (every semantic quantity is a step/clock
-          // DIFFERENCE within a live run, so resetting the counters is
-          // invisible) — remove the entry instead of storing it, so the
-          // state store scales with keys that have LIVE RUNS, not with
-          // every key ever seen. EXCEPTION: withinTime queries keep
-          // their entries — the persisted clock floor on a run-free key
-          // is itself semantics (the loud rewound-clock refusal pinned
-          // by CheckpointRestartSpec) — and navigation queries keep
-          // theirs (the physical-row history on a run-free key feeds the
-          // NEXT event's PREV), so both forgo the GC.
-          if (executor.liveRunCount == 0 && query.withinTime.isEmpty &&
-              !nf.active && !query.anchorStart)
-            state.remove()
-          else state.update(CepStateCodec.encode(
-            CepStateEt(snap.step, snap.runs, Nil, executor.clock,
-              CepStateCodec.VariantArrival, nf.sig, nf.serHist)))
-          out.iterator
-      }
-      // align with the batch operator: the synthetic key column is an
-      // implementation detail in un-keyed mode
-      .transform(ds =>
-        if (spec.keyCol.isEmpty) ds.drop(keyName) else ds.toDF())
-  }
-
-  /** Streaming MEASURES: `matchPattern` + the MATCH_RECOGNIZE `MEASURES`
-    * projection in ONE stateful operator — output is one flat row of
-    * scalar measures per match, emitted the micro-batch the match
-    * completes.
-    *
-    * Unlike the batch tier (`CepMeasures.project`, which joins the match
-    * frame back to the event table because the relational frame keeps
-    * order ids alone), the streaming operator folds every measure AT
-    * EMISSION over the match's own bound events, which still carry all
-    * their attributes inside the executor (`CepMeasures.evalMeasure`).
-    * That sidesteps both streaming hazards of the relational
-    * formulation: no stream-stream join-back (the event table IS the
-    * stream) and no cross-batch streaming aggregation whose `__mid`
-    * grouping state would grow without a watermark. Cost is O(match) per
-    * match, state is exactly `matchPattern`'s (same codec, same
-    * `VariantArrival` tag — a checkpoint written by either operator
-    * restores into the other; only the projection differs).
-    *
-    * Semantics gate: `StreamingCepMeasuresSpec` pins batch==stream
-    * across micro-batch boundaries — the fold here must equal the batch
-    * join-back tier row-for-row — plus a checkpoint restart.
-    */
-  def matchPatternMeasures(df: DataFrame, st: CepSql.CepSqlStatement,
-      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame = {
-    // multi-column `PARTITION BY a, b, …` — the streaming form of
-    // `CepMeasures.runMultiKey`: derive the EXACT composite struct key,
-    // run single-key (the struct rides the state store's key schema
-    // verbatim — no restore join, no hash, batch-identical identity),
-    // and expand the struct back into the original leading columns.
-    if (st.partitionByCols.nonEmpty) {
-      require(spec.keyCol.isEmpty,
-        "matchPatternMeasures: the statement declares a multi-column " +
-          "PARTITION BY — pass a spec without keyCol (the composite " +
-          "key is derived from the statement)")
-      val keyed = df.withColumn("__mkey",
-        CepMeasures.multiKeyExpr(df, st.partitionByCols))
-      val inner = matchPatternMeasures(keyed,
-        st.copy(partitionByCols = Vector.empty),
-        spec.copy(keyCol = Some("__mkey")), maxRunsPerKey)
-      val rest = inner.columns.filterNot(_ == "__mkey").toSeq
-      return inner.select(st.partitionByCols.map(c =>
-        col("__mkey").getField(c).as(c)) ++ rest.map(col): _*)
-    }
-    val query = st.query
-    // nullary atoms are rejected wherever they appear — standalone or
-    // inside a measure expression (MATCH_NUMBER() is legal in batch
-    // arithmetic but needs the key's total match order; CLASSIFIER()
-    // never reaches here, the Atom constructor rejects it in arithmetic)
-    validateStreamingMeasures(st, spec, "matchPatternMeasures",
-      allowClassifier = true, allowShowEmpty = true)
-    val trackEmpty =
-      st.rowsPerMatch == CepSql.RowsPerMatch.OneRowShowEmpty &&
-        Pattern.canMatchEmpty(st.query.patseq)
-    val keyName = spec.keyCol.getOrElse("__global")
-    SparkCep.checkWithinStateBound(query, maxRunsPerKey, streaming = true)
-    val effMaxRuns =
-      SparkCep.resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
-    val navs = streamingNavs(query, spec)
-    // nav queries: no pre-NFA filter, history-fed nav attrs (see
-    // matchPattern). SHOW EMPTY disables it too: sites are defined
-    // over ALL events of the key (batch derives them from the raw
-    // table), and a withinTime all-skippable pattern would otherwise
-    // keep the type pushdown and silently drop the ignorable events
-    // that host empty matches (positional WITHIN already forgoes the
-    // pushdown, so only the withinTime form could hit this)
-    val (prepared, attrNames) =
-      if (navs.isEmpty && !trackEmpty) SparkCep.prepare(df, query, spec)
-      else {
-        SparkCep.checkStrTyping(df, query, spec)
-        SparkCep.prepareWithFilter(df, None, spec)
-      }
-    val strFlags = SparkCep.strAttrFlags(prepared)
-    val strAttrs = CepMeasures.strAttrsOf(df, spec)
-    CepMeasures.requireStrMeasuresSupported(st.measures, strAttrs)
-    val orderName = attrNames.head
-
-    val outSchema = StructType(
-      StructField(keyName, SparkCep.keyType(df, spec), nullable = false) +:
-        st.measures.map(m =>
-          StructField(m.alias, CepMeasures.itemDataType(m, strAttrs),
-            nullable = true)))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val stateEnc: Encoder[CepStateCodec.VersionedState] =
-      Encoders.product[CepStateCodec.VersionedState]
-
-    val dst = DstCompiler.compile(query)
-    val measures = st.measures
-
-    groupedFlatMap[CepStateCodec.VersionedState](prepared,
-      SparkCep.keyType(df, spec), GroupStateTimeout.NoTimeout(),
-      stateEnc, outEnc) {
-        (key, rows, state) =>
-          val executor = new Executor(dst, query.strategy, effMaxRuns,
-            query.within, query.withinTime,
-            anchorStart = query.anchorStart)
-          val nf = new NavFeed(navs)
-          val tracker = new EmptySiteTracker(trackEmpty,
-            query.strategy, query.anchorStart, query.within,
-            query.withinTime.map(_.span))
-          var stepIdx = 0
-          if (state.exists) {
-            val stt = CepStateCodec.decode(state.get)
-            if (stt.variant == CepStateCodec.VariantEventTime ||
-                (stt.variant == CepStateCodec.VariantUnknown &&
-                  stt.buffer.nonEmpty))
-              throw new IllegalStateException(
-                "CEP streaming state was written by matchPatternEventTime " +
-                  "and cannot be restored by the arrival-order operator " +
-                  "(different feed-order semantics; buffered events would " +
-                  "be lost). Resume with matchPatternEventTime, or " +
-                  "discard the checkpoint directory.")
-            nf.restore(stt)
-            tracker.restore(stt)
-            stepIdx = stt.step
-            restoreState(executor, CepState(stt.step, stt.runs), stt.clock)
-          }
-          def emptyRow: Row = Row.fromSeq(key +: measures.map(ms =>
-            CepMeasures.evalItemBoxed(ms, Map.empty, orderName,
-              st.subsetMap, strAttrs)))
-          val events = rows.toVector.sortBy(_.getLong(1))
-          val out = events.flatMap { row =>
-            val ms = executor.feed(nf.augment(
-              rowToEvent(row, 1, 2, 3, attrNames, orderName, strFlags)))
-            stepIdx += 1
-            tracker.onFeed(row.getLong(1), executor.clock, stepIdx)
-            ms.map { m =>
-              val byName = m.toMap
-              tracker.onMatch(byName, orderName)
-              Row.fromSeq(key +: measures.map(ms2 =>
-                CepMeasures.evalItemBoxed(ms2, byName, orderName,
-                  st.subsetMap, strAttrs)))
-            }
-          }
-          val snap = snapshotState(executor)
-          val empties =
-            tracker.flush(snap.step, executor.clock).map(_ => emptyRow)
-          if (executor.liveRunCount == 0 && query.withinTime.isEmpty &&
-              !nf.active && !query.anchorStart &&
-              tracker.pending.isEmpty)
-            state.remove()
-          else state.update(CepStateCodec.encode(
-            CepStateEt(snap.step, snap.runs, Nil, executor.clock,
-              CepStateCodec.VariantArrival, nf.sig, nf.serHist,
-              trackedEmpty = tracker.tracking,
-              pending = tracker.pending)))
-          (out ++ empties).iterator
-      }
-      .transform(ds =>
-        if (spec.keyCol.isEmpty) ds.drop(keyName) else ds.toDF())
-  }
-
-  /** Streaming form of the TIMEOUT side output
-    * (`SparkCep.timedOutPartials` — FlinkCEP's
-    * `TimedOutPartialMatchHandler`): emits the partial runs whose
-    * `within`/`withinTime` window provably closed without completing,
-    * with run state carried across micro-batches exactly like
-    * `matchPattern` (same codec, same `VariantArrival` tag — the state
-    * EVOLUTION is identical to the match operator's, only the
-    * projection differs, so a checkpoint written by either restores
-    * into the other without semantic drift; runs whose window closes
-    * after a restart still report). The drain happens after every fed
-    * event, so a snapshot never holds an undrained timeout — the
-    * buffer needs no codec representation.
-    */
-  def timedOutPartials(df: DataFrame, query: CepQuery,
-      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None)
-      : DataFrame = {
-    require(query.within.isDefined || query.withinTime.isDefined,
-      "timedOutPartials needs a windowed query (within/withinTime) — " +
-        "an unwindowed run never times out")
-    val piNames = SparkCep.patternNames(query.patseq)
-    val keyName = spec.keyCol.getOrElse("__global")
-    SparkCep.checkWithinStateBound(query, maxRunsPerKey, streaming = true)
-    val effMaxRuns =
-      SparkCep.resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
-    // no pre-NFA filter: the timeout output observes sweep moments (see
-    // the batch operator's doc) — a dropped event can be the only one
-    // that closes a window. PREV is history-fed as in matchPattern.
-    val navs = streamingNavs(query, spec)
-    SparkCep.checkStrTyping(df, query, spec)
-    val (prepared, attrNames) = SparkCep.prepareWithFilter(df, None, spec)
-    val strFlags = SparkCep.strAttrFlags(prepared)
-    val orderName = attrNames.head
-    val outSchema = StructType(
-      StructField(keyName, SparkCep.keyType(df, spec), nullable = false) +:
-        piNames.map(n =>
-          StructField(n, ArrayType(LongType, containsNull = false),
-            nullable = false)))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val stateEnc: Encoder[CepStateCodec.VersionedState] =
-      Encoders.product[CepStateCodec.VersionedState]
-    val dst = DstCompiler.compile(query)
-    groupedFlatMap[CepStateCodec.VersionedState](prepared,
-      SparkCep.keyType(df, spec), GroupStateTimeout.NoTimeout(),
-      stateEnc, outEnc) {
-        (key, rows, state) =>
-          val executor = new Executor(dst, query.strategy, effMaxRuns,
-            query.within, query.withinTime, captureTimeouts = true,
-            anchorStart = query.anchorStart)
-          val nf = new NavFeed(navs)
-          if (state.exists) {
-            val st = CepStateCodec.decode(state.get)
-            if (st.variant == CepStateCodec.VariantEventTime ||
-                (st.variant == CepStateCodec.VariantUnknown &&
-                  st.buffer.nonEmpty))
-              throw new IllegalStateException(
-                "CEP streaming state was written by matchPatternEventTime " +
-                  "and cannot be restored by the arrival-order operator " +
-                  "(different feed-order semantics; buffered events would " +
-                  "be lost). Resume with matchPatternEventTime, or " +
-                  "discard the checkpoint directory.")
-            nf.restore(st)
-            restoreState(executor, CepState(st.step, st.runs), st.clock)
-          }
-          val events = rows.toVector.sortBy(_.getLong(1))
-          val out = events.flatMap { row =>
-            executor.feed(nf.augment(
-              rowToEvent(row, 1, 2, 3, attrNames, orderName, strFlags)))
-            executor.drainTimedOut().map(c =>
-              matchToRow(key, executor.partialOutput(c, piNames),
-                piNames, orderName))
-          }
-          val snap = snapshotState(executor)
-          // idle-key state GC (see matchPattern)
-          if (executor.liveRunCount == 0 && query.withinTime.isEmpty &&
-              !nf.active && !query.anchorStart)
-            state.remove()
-          else state.update(CepStateCodec.encode(
-            CepStateEt(snap.step, snap.runs, Nil, executor.clock,
-              CepStateCodec.VariantArrival, nf.sig, nf.serHist)))
-          out.iterator
-      }
-      .transform(ds =>
-        if (spec.keyCol.isEmpty) ds.drop(keyName) else ds.toDF())
-  }
 
   /** Per-key state of the multi-query shared stream: one codec-versioned
     * member payload per query, in declared query order, plus the member
@@ -1001,6 +543,713 @@ object StreamingCep {
       names: Seq[String],
       members: Seq[CepStateCodec.VersionedState])
 
+  /** Per-key state of the EVENT-TIME multi-query shared stream: the
+    * reorder buffer is stored ONCE (the buffered events are common to
+    * every member — that sharing is the point), member run-sets once per
+    * query in declared order, names validated on restore exactly as in
+    * the arrival-order shared operator. Yet another distinct state-store
+    * schema, so cross-operator restores are structurally refused.
+    *
+    * The buffer rides as a codec-versioned BINARY payload (an empty-run
+    * `CepStateEt` carrying only the buffer), NOT as a raw `Seq[BufEvent]`
+    * column: a raw product would freeze `BufEvent`'s shape into the
+    * Spark state-store schema, and the next field added to it would kill
+    * every checkpoint with an opaque schema error — the exact failure
+    * mode `CepStateCodec` exists to prevent (its version bump gives an
+    * actionable message instead).
+    */
+  final case class SharedMultiStateEt(
+      names: Seq[String],
+      bufferPayload: CepStateCodec.VersionedState,
+      members: Seq[CepStateCodec.VersionedState])
+
+  // ------------------------------------------------------ the per-key core
+
+  /** One query of the core's member list: its compiled DST, its feed
+    * gate (`null` = feed every event; the shared operators' alphabet
+    * gate, proven at `SparkCep.memberFeedTypes`) and whether it tracks
+    * SHOW EMPTY sites.
+    */
+  private final case class Member(name: String, query: CepQuery, dst: Dst,
+      gate: Set[String], trackEmpty: Boolean)
+
+  /** The member list: `shared` selects the shared state layouts (which
+    * carry member names) even for a single member.
+    */
+  private final case class Members(all: Vector[Member], shared: Boolean)
+
+  /** k = 1 member list of the single-query operators (no feed gate). */
+  private def single(query: CepQuery, trackEmpty: Boolean = false): Members =
+    Members(Vector(Member("", query, DstCompiler.compile(query), null,
+      trackEmpty)), shared = false)
+
+  /** Member list of the shared operators. A SHOW EMPTY member runs
+    * GATE-LESS: its sites are the full feed, and its executor's
+    * step/clock must advance on the site events themselves (the gate is
+    * an optimization the prefilter proof makes invisible, so dropping
+    * it only costs ignored feeds).
+    */
+  private def shared(queries: Seq[(String, CepQuery)], spec: SparkCep.CepSpec,
+      trackFlags: Seq[Boolean]): Members =
+    Members(queries.toVector.zip(trackFlags).map { case ((n, q), track) =>
+      Member(n, q, DstCompiler.compile(q),
+        if (track) null else SparkCep.memberFeedTypes(q, spec).orNull, track)
+    }, shared = true)
+
+  private sealed trait FeedOrder
+  /** Micro-batch arrival order per key (the reference's processing-time
+    * order): rows sort by the order column.
+    */
+  private case object ArrivalOrder extends FeedOrder
+  /** Event time: rows buffer per key and feed in `(ts, ord)` order once
+    * the watermark passes them, with the NEXT hold-back.
+    */
+  private final case class WatermarkOrder(tsCol: String, delay: String)
+      extends FeedOrder
+
+  /** A per-match output renderer: `(member index, key, bound events by
+    * pattern name, order attr)` → one output Row. An empty match (a
+    * final SHOW EMPTY site) renders with an empty binding.
+    */
+  private type Render = (Int, Any, Map[String, Vector[Event]], String) => Row
+
+  private sealed trait Emission
+  private final case class Matches(render: Render) extends Emission
+  /** The timeout side output: after every feed, the partial runs whose
+    * window closed, as `(key, order ids per pattern name)`.
+    */
+  private final case class Timeouts(piNames: Vector[String]) extends Emission
+
+  /** What a key's stored state restores to: one payload per member, and
+    * the payload common to all members, holding the nav signature/history
+    * and the reorder buffer; `held` counts the buffer's leading events
+    * already fed to the members without NEXT (shared event time only).
+    */
+  private final case class Restored(members: Seq[CepStateEt],
+      common: CepStateEt, held: Int)
+
+  /** The four on-disk state shapes. `write` gets one payload per member
+    * (`snapshotState`) and the common payload (nav section, buffer, and
+    * the held-tail count in its `step`); each layout keeps exactly
+    * the form earlier builds wrote, plus its own refusal and name checks.
+    */
+  private sealed abstract class StateLayout[S](val eventTime: Boolean)
+      extends Serializable {
+    def encoder: Encoder[S]
+    def read(stored: S, names: Vector[String]): Restored
+    def write(names: Vector[String], members: Vector[CepStateEt],
+        common: CepStateEt): S
+    /** The held NEXT tail is stored with its PREV augmentation applied
+      * (shared event time: PREV advances once per event, at first
+      * release) instead of raw (single event time: PREV advances at
+      * feed time).
+      */
+    def augmentsTail: Boolean = false
+  }
+
+  /** Single-query layouts: ONE `VersionedState` whose payload holds the
+    * member's runs and the common nav section and buffer.
+    */
+  private abstract class SingleLayout(eventTime: Boolean)
+      extends StateLayout[CepStateCodec.VersionedState](eventTime) {
+    def encoder: Encoder[CepStateCodec.VersionedState] =
+      Encoders.product[CepStateCodec.VersionedState]
+    protected def refuse(st: CepStateEt): Unit
+    def read(stored: CepStateCodec.VersionedState,
+        names: Vector[String]): Restored = {
+      val st = CepStateCodec.decode(stored)
+      refuse(st)
+      Restored(Seq(st), st, 0)
+    }
+    def write(names: Vector[String], members: Vector[CepStateEt],
+        common: CepStateEt): CepStateCodec.VersionedState =
+      CepStateCodec.encode(members.head.copy(buffer = common.buffer,
+        navSig = common.navSig, navHist = common.navHist))
+  }
+
+  private object ArrivalSingle extends SingleLayout(eventTime = false) {
+    // cross-variant refusal is DETERMINISTIC via the v3 variant tag: the
+    // event-time operators feed in watermark-released event-time order,
+    // this one in arrival order — restoring their state here changes
+    // match multisets even when the reorder buffer happens to be empty.
+    // Migrated v2 state (unknown writer) falls back to the old
+    // buffer-contents inference.
+    protected def refuse(st: CepStateEt): Unit =
+      if (st.variant == CepStateCodec.VariantEventTime ||
+          (st.variant == CepStateCodec.VariantUnknown && st.buffer.nonEmpty))
+        throw new IllegalStateException(
+          "CEP streaming state was written by matchPatternEventTime " +
+            "and cannot be restored by the arrival-order operator " +
+            "(different feed-order semantics; buffered events would " +
+            "be lost). Resume with matchPatternEventTime, or " +
+            "discard the checkpoint directory.")
+  }
+
+  private object EventTimeSingle extends SingleLayout(eventTime = true) {
+    // an arrival-order checkpoint restored here would re-feed future
+    // events in a different order than the state assumes. Unknown
+    // (migrated v2) state is accepted — the pre-v3 behavior, documented
+    // rather than inferred.
+    protected def refuse(st: CepStateEt): Unit =
+      if (st.variant == CepStateCodec.VariantArrival)
+        throw new IllegalStateException(
+          "CEP streaming state was written by an arrival-order operator " +
+            "(matchPattern / matchPatternMeasures / timedOutPartials) and " +
+            "cannot be restored by the event-time operators (different " +
+            "feed-order semantics). Resume with the arrival-order " +
+            "operator, or discard the checkpoint directory.")
+  }
+
+  /** `SharedMultiState`: k member payloads plus, when the set
+    * navigates, a trailing nav payload.
+    */
+  private object SharedArrival extends StateLayout[SharedMultiState](false) {
+    def encoder: Encoder[SharedMultiState] = Encoders.product[SharedMultiState]
+    def read(stored: SharedMultiState, names: Vector[String]): Restored = {
+      validateMemberNames(stored.names, names)
+      val k = names.size
+      if (stored.members.size != k && stored.members.size != k + 1)
+        throw new IllegalStateException(
+          s"shared CEP checkpoint holds ${stored.members.size} " +
+            s"payloads for $k members — corrupt state")
+      // a missing nav section restores as an empty signature, which
+      // checkNavSig refuses when this query set navigates
+      Restored(stored.members.take(k).map(CepStateCodec.decode),
+        stored.members.lift(k).map(CepStateCodec.decode)
+          .getOrElse(CepStateEt(0, Nil, Nil)), 0)
+    }
+    def write(names: Vector[String], members: Vector[CepStateEt],
+        common: CepStateEt): SharedMultiState = {
+      val base = members.map(CepStateCodec.encode)
+      SharedMultiState(names,
+        if (common.navSig.isEmpty) base
+        else base :+ CepStateCodec.encode(common))
+    }
+  }
+
+  /** `SharedMultiStateEt`: the buffer payload (buffer, nav section and,
+    * in its `step`, the held-tail count — a pre-NEXT checkpoint decodes
+    * step 0 = nothing pre-fed, which is exactly its truth) plus k member
+    * payloads.
+    */
+  private object SharedEventTime
+      extends StateLayout[SharedMultiStateEt](true) {
+    def encoder: Encoder[SharedMultiStateEt] =
+      Encoders.product[SharedMultiStateEt]
+    override def augmentsTail: Boolean = true
+    def read(stored: SharedMultiStateEt, names: Vector[String]): Restored = {
+      validateMemberNames(stored.names, names)
+      val bufEt = CepStateCodec.decode(stored.bufferPayload)
+      Restored(stored.members.map(CepStateCodec.decode), bufEt, bufEt.step)
+    }
+    def write(names: Vector[String], members: Vector[CepStateEt],
+        common: CepStateEt): SharedMultiStateEt =
+      SharedMultiStateEt(names, CepStateCodec.encode(common),
+        members.map(CepStateCodec.encode))
+  }
+
+  /** The per-key core behind every streaming operator: validation and
+    * the source policy on the driver, then one `flatMapGroupsWithState`
+    * that restores the members' executors, feeds them in `order`, emits
+    * per `emit`, and writes the state back (or drops an idle key).
+    *
+    * Source policy: the union pre-NFA filter (for k = 1 exactly the
+    * query's own `SparkCep.prefilter`) applies to rendered matches in
+    * arrival order and to the shared event-time scan, unless a member
+    * navigates (`PREV` observes rows the filter would drop) or tracks
+    * SHOW EMPTY sites (sites are defined over ALL events of the key, as
+    * batch derives them from the raw table). The single-query event-time
+    * operators and the timeout outputs never take it (a dropped event
+    * can be the only one that closes a window).
+    *
+    * Event-time NEXT: the release order makes FOLLOWING rows knowable —
+    * released events all carry ts < the watermark, future arrivals all
+    * carry ts >= it, so the (ts, ord) successor of a released event
+    * that has k released successors is FINAL. The feed therefore HOLDS
+    * BACK the last maxK releasable events per key (maxK over every
+    * member's NEXT offsets — a smaller-k member rides the larger hold)
+    * from the members with NEXT; they stay in the reorder buffer and
+    * feed in a later batch, exactly the feed sequence an uninterrupted
+    * stream would produce, and every fed event reads its NEXT values
+    * from the in-memory release slice. A member WITHOUT NEXT feeds every
+    * released event immediately, as it would run alone — so in the
+    * shared scan the withheld tail is ALREADY FED to those members, and
+    * the layout persists its count (`Restored.held`). A key's tail
+    * events feed only when successors arrive; on a stream that simply
+    * stops they wait forever, which IS the unbounded-stream reading of
+    * "the following row" (batch resolves the partition edge to NULL
+    * because it can see the end).
+    */
+  private def perKey(df: DataFrame, spec: SparkCep.CepSpec,
+      maxRunsPerKey: Option[Int], outSchema: StructType)(
+      members: Members, order: FeedOrder, emit: Emission): DataFrame = {
+    val ms = members.all
+    val queries = ms.map(m => m.name -> m.query)
+    ms.foreach(m =>
+      SparkCep.checkWithinStateBound(m.query, maxRunsPerKey, streaming = true))
+    val effMaxRuns =
+      SparkCep.resolveMaxRuns(df.sparkSession, queries.map(_._2), maxRunsPerKey)
+    val layout: StateLayout[_] = (order, members.shared) match {
+      case (ArrivalOrder, false) => ArrivalSingle
+      case (ArrivalOrder, true) => SharedArrival
+      case (_: WatermarkOrder, false) => EventTimeSingle
+      case (_: WatermarkOrder, true) => SharedEventTime
+    }
+    val memberNavs = ms.map(m =>
+      streamingNavs(m.query, spec, allowNext = layout.eventTime))
+    val navs = memberNavs.flatten.distinct.sortBy(_.valueName)
+    ms.foreach(m => SparkCep.checkStrTyping(df, m.query, spec))
+    val timeouts = emit.isInstanceOf[Timeouts]
+    val filter =
+      if (timeouts || layout == EventTimeSingle || navs.nonEmpty ||
+          ms.exists(_.trackEmpty)) None
+      else SparkCep.unionPrefilter(queries, spec)
+    val (prepared, attrNames) = order match {
+      case ArrivalOrder => SparkCep.prepareWithFilter(df, filter, spec)
+      case WatermarkOrder(tsCol, delay) =>
+        etPrepare(df, filter, spec, tsCol, delay)
+    }
+    val strFlags = SparkCep.strAttrFlags(prepared)
+    val orderName = attrNames.head
+    val nextNavs = navs.filterNot(_.prev)
+    val prevNavs = navs.filter(_.prev)
+    val holdBack = nextNavs.map(_.k).maxOption.getOrElse(0)
+    val holdsNext = memberNavs.map(_.exists(!_.prev))
+    // idle-key state GC: a key whose members hold NO live runs is
+    // semantically a fresh key (every semantic quantity is a step/clock
+    // DIFFERENCE within a live run, so resetting the counters is
+    // invisible) — remove the entry instead of storing it, so the state
+    // store scales with keys that have LIVE RUNS, not with every key
+    // ever seen. EXCEPT: withinTime queries (the persisted clock floor
+    // on a run-free key is itself semantics — the loud rewound-clock
+    // refusal pinned by CheckpointRestartSpec), `^`-anchored queries
+    // (the step counter is semantics), navigation (the physical-row
+    // history feeds the NEXT event's PREV), pending SHOW EMPTY sites and
+    // buffered events.
+    val gcEligible = prevNavs.isEmpty &&
+      ms.forall(m => m.query.withinTime.isEmpty && !m.query.anchorStart)
+    val names = ms.map(_.name)
+    val variant =
+      if (layout.eventTime) CepStateCodec.VariantEventTime
+      else CepStateCodec.VariantArrival
+    val timeout =
+      if (layout.eventTime) GroupStateTimeout.EventTimeTimeout()
+      else GroupStateTimeout.NoTimeout()
+    def run[S](layout: StateLayout[S]): Dataset[Row] =
+      groupedFlatMap[S](prepared, SparkCep.keyType(df, spec), timeout,
+        layout.encoder, Encoders.row(outSchema)) { (key, rows, state) =>
+        val exs = ms.map(m => new Executor(m.dst, m.query.strategy,
+          effMaxRuns, m.query.within, m.query.withinTime,
+          captureTimeouts = timeouts, anchorStart = m.query.anchorStart))
+        val trackers = ms.map(m => new EmptySiteTracker(m.trackEmpty,
+          m.query.strategy, m.query.anchorStart, m.query.within,
+          m.query.withinTime.map(_.span)))
+        val nf = new NavFeed(prevNavs)
+        val steps = new Array[Int](ms.length)
+        val restored =
+          if (state.exists) Some(layout.read(state.get, names)) else None
+        restored.foreach { r =>
+          r.members.zipWithIndex.foreach { case (st, i) =>
+            restoreState(exs(i), st)
+            trackers(i).restore(st)
+            steps(i) = st.step
+          }
+          nf.restore(r.common)
+        }
+        val out = Vector.newBuilder[Row]
+        def feed(i: Int, ev: Event): Unit = {
+          val g = ms(i).gate
+          if (g == null || (ev.tpe != null && g.contains(ev.tpe))) {
+            val ex = exs(i)
+            val found = ex.feed(ev)
+            steps(i) += 1
+            if (trackers(i).tracking)
+              trackers(i).onFeed(ev(orderName), ex.clock, steps(i))
+            emit match {
+              case Matches(render) => found.foreach { m =>
+                val byName = m.toMap
+                trackers(i).onMatch(byName, orderName)
+                out += render(i, key, byName, orderName)
+              }
+              case Timeouts(piNames) => ex.drainTimedOut().foreach { c =>
+                out += orderIdsRow(key, ex.partialOutput(c, piNames).toMap,
+                  piNames, orderName)
+              }
+            }
+          }
+        }
+        // (released events held back from the NEXT members, arrivals
+        // still waiting for the watermark)
+        val (tail, waiting) = order match {
+          case ArrivalOrder =>
+            rows.toVector.sortBy(_.getLong(1)).foreach { row =>
+              val ev = nf.augment(
+                rowToEvent(row, 1, 2, 3, attrNames, orderName, strFlags))
+              ms.indices.foreach(feed(_, ev))
+            }
+            (Vector.empty[BufEvent], Vector.empty[BufEvent])
+          case _: WatermarkOrder =>
+            val incoming = rows.map { row =>
+              val ev = rowToEvent(row, 2, 3, 4, attrNames, orderName, strFlags)
+              // millisecond precision — sub-second out-of-order events
+              // must still sort by true event time
+              BufEvent(row.getTimestamp(1).getTime, row.getLong(2), ev.tpe,
+                ev.attrs.map(_._1), ev.attrs.map(_._2),
+                ev.strs.map(_._1), ev.strs.map(_._2))
+            }.toVector
+            val held = restored.fold(0)(_.held)
+            val (ready, waiting) = releaseBuffer(
+              restored.fold(Seq.empty[BufEvent])(_.common.buffer), incoming,
+              state.getCurrentWatermarkMs())
+            val sorted = ready.sortBy(e => (e.ts, e.ord))
+            val feedCount = math.max(0, sorted.length - holdBack)
+            // events below `held` were augmented when first released and
+            // carry their nav attrs in the stored tail
+            val pre = sorted.zipWithIndex.map { case (e, i) =>
+              if (layout.augmentsTail && i >= held) nf.augment(fromBuf(e))
+              else fromBuf(e)
+            }
+            sorted.indices.foreach { i =>
+              val toNext = i < feedCount // NEXT members' frontier
+              val toPlain = i >= held    // the other members' frontier
+              // built on first use: a raw-tail layout advances PREV
+              // history only for events some member is fed
+              lazy val ev =
+                if (!layout.augmentsTail)
+                  nf.augment(withNextFromSlice(nextNavs, sorted, pre(i), i))
+                else if (toNext) withNextFromSlice(nextNavs, sorted, pre(i), i)
+                else pre(i)
+              ms.indices.foreach { m =>
+                if (if (holdsNext(m)) toNext else toPlain) feed(m, ev)
+              }
+            }
+            val tail =
+              if (!layout.augmentsTail) sorted.drop(feedCount)
+              else (feedCount until sorted.length).map { i =>
+                val (e, a) = (sorted(i), pre(i))
+                BufEvent(e.ts, e.ord, a.tpe, a.attrs.map(_._1),
+                  a.attrs.map(_._2), a.strs.map(_._1), a.strs.map(_._2))
+              }.toVector
+            (tail, waiting)
+        }
+        emit match {
+          case Matches(render) => ms.indices.foreach { i =>
+            trackers(i).flush(steps(i), exs(i).clock).foreach { _ =>
+              out += render(i, key, Map.empty[String, Vector[Event]], orderName)
+            }
+          }
+          case _: Timeouts => ()
+        }
+        if (gcEligible && exs.forall(_.liveRunCount == 0) &&
+            trackers.forall(_.pending.isEmpty) && tail.isEmpty &&
+            waiting.isEmpty)
+          state.remove()
+        else {
+          state.update(layout.write(names,
+            exs.zip(trackers).map { case (ex, t) =>
+              snapshotState(ex, variant, t) },
+            CepStateEt(tail.length, Nil, tail ++ waiting, variant = variant,
+              navSig = nf.sig, navHist = nf.serHist)))
+          // wake when the watermark passes the earliest GENUINELY
+          // buffered event (ts >= wm). Held-back events (ts < wm) are
+          // waiting for DATA (successors), not for time — a timeout
+          // cannot resolve them, and their past-watermark timestamps
+          // would be rejected by the state store anyway.
+          if (layout.eventTime)
+            waiting.map(_.ts).minOption.foreach(t =>
+              state.setTimeoutTimestamp(t + 1))
+        }
+        out.result().iterator
+      }
+    // align with the batch operator: the synthetic key column is an
+    // implementation detail in un-keyed mode
+    val keyName = spec.keyCol.getOrElse("__global")
+    run(layout).transform(ds =>
+      if (spec.keyCol.isEmpty) ds.drop(keyName) else ds.toDF())
+  }
+
+  // ------------------------------------------------ output shapes
+
+  private def keyField(df: DataFrame, spec: SparkCep.CepSpec): StructField =
+    StructField(spec.keyCol.getOrElse("__global"), SparkCep.keyType(df, spec),
+      nullable = false)
+
+  /** `(key, one array<bigint> of order ids per pattern name)`. */
+  private def orderIdsSchema(df: DataFrame, spec: SparkCep.CepSpec,
+      piNames: Vector[String]): StructType =
+    StructType(keyField(df, spec) +: piNames.map(n =>
+      StructField(n, ArrayType(LongType, containsNull = false),
+        nullable = false)))
+
+  private def orderIdsRender(piNames: Vector[String]): Render =
+    (_, key, byName, orderName) => orderIdsRow(key, byName, piNames, orderName)
+
+  /** `(qname, key, binding)`: the classic shared reporting shape. */
+  private def bindingSchema(df: DataFrame, spec: SparkCep.CepSpec)
+      : StructType =
+    StructType(Seq(StructField("qname", StringType, nullable = false),
+      keyField(df, spec),
+      StructField("binding", StringType, nullable = false)))
+
+  /** The classic shared reporting shape `(qname, key, binding)`: order
+    * ids comma-joined per pattern name, ';'-joined across names in
+    * declared order.
+    */
+  private def bindingRender(queries: Seq[(String, CepQuery)]): Render = {
+    val names = queries.toVector.map(_._1)
+    val piNamesByQ = queries.toVector.map { case (_, q) =>
+      SparkCep.patternNames(q.patseq) }
+    (i, key, byName, orderName) =>
+      Row(names(i), key, piNamesByQ(i).map { n =>
+        byName.getOrElse(n, Vector.empty)
+          .map(_(orderName)).mkString(",")
+      }.mkString(";"))
+  }
+
+  /** The measured shared shape `(qname, key, measures, smeasures)` —
+    * alias → emission-time folded value, NULL kept for
+    * measure-over-missing. TWO maps split by the item's declared type
+    * (`CepMeasures.itemDataType`): long-valued measures in `measures`,
+    * STRING-valued ones — `CLASSIFIER()` and FIRST/LAST over a
+    * string-typed attribute (round 16) — in `smeasures` (empty when a
+    * member declares none). The split keeps the long map's existing
+    * contract while giving string measures a typed sink, so the shared
+    * shape no longer rejects CLASSIFIER().
+    */
+  private def measuresRender(stmts: Seq[(String, CepSql.CepSqlStatement)],
+      strAttrs: Set[String]): Render = {
+    val names = stmts.toVector.map(_._1)
+    val sVec = stmts.toVector.map(_._2)
+    val isStrItem = stmts.toVector.map(_._2.measures.map(it =>
+      CepMeasures.itemDataType(it, strAttrs) == StringType))
+    (i, key, byName, orderName) => {
+      val st = sVec(i)
+      val longs = Map.newBuilder[String, Any]
+      val strs = Map.newBuilder[String, Any]
+      st.measures.zip(isStrItem(i)).foreach { case (it, isStr) =>
+        val v = CepMeasures.evalItemBoxed(it, byName, orderName,
+          st.subsetMap, strAttrs)
+        if (isStr) strs += it.alias -> v else longs += it.alias -> v
+      }
+      Row(names(i), key, longs.result(), strs.result())
+    }
+  }
+
+  /** The shared measured output schema: `(qname, key, measures:
+    * map<string,long>, smeasures: map<string,string>)`.
+    */
+  private def sharedMeasuresSchema(df: DataFrame, spec: SparkCep.CepSpec)
+      : StructType =
+    StructType(Seq(
+      StructField("qname", StringType, nullable = false),
+      keyField(df, spec),
+      StructField("measures",
+        MapType(StringType, LongType, valueContainsNull = true),
+        nullable = false),
+      StructField("smeasures",
+        MapType(StringType, StringType, valueContainsNull = true),
+        nullable = false)))
+
+  /** SHOW EMPTY site tracking applies to a `ONE ROW PER MATCH SHOW EMPTY
+    * MATCHES` statement whose pattern can match empty.
+    */
+  private def tracksEmpty(st: CepSql.CepSqlStatement): Boolean =
+    st.rowsPerMatch == CepSql.RowsPerMatch.OneRowShowEmpty &&
+      Pattern.canMatchEmpty(st.query.patseq)
+
+  private def requireWindowed(query: CepQuery, opName: String): Unit =
+    require(query.within.isDefined || query.withinTime.isDefined,
+      s"$opName needs a windowed query (within/withinTime) — an " +
+        "unwindowed run never times out")
+
+  /** The `ONE ROW PER MATCH` + non-nullary-measures contract shared by
+    * every streaming measures operator (SHOW EMPTY on windowed queries
+    * and `CLASSIFIER()` are supported by all of them).
+    */
+  private def validateStreamingMeasures(st: CepSql.CepSqlStatement,
+      spec: SparkCep.CepSpec, opName: String): Unit = {
+    require(st.measures.nonEmpty, s"$opName: empty MEASURES")
+    val showEmpty =
+      st.rowsPerMatch == CepSql.RowsPerMatch.OneRowShowEmpty
+    require(st.rowsPerMatch != CepSql.RowsPerMatch.AllRowsShowEmpty,
+      s"$opName: this SHOW EMPTY MATCHES form is batch-only — " +
+        "empty-match sites are derived from a partition's COMPLETE " +
+        "reported match set, which an unbounded stream cannot close " +
+        "(the measures operators — single-query and shared, " +
+        "arrival-order and event-time — support ONE ROW ... SHOW " +
+        "EMPTY MATCHES on WINDOWED queries, where the within window " +
+        "makes each site final in bounded feed distance); " +
+        "run the batch projection per micro-batch via foreachBatch " +
+        "if needed")
+    if (showEmpty) {
+      require(st.query.within.isDefined || st.query.withinTime.isDefined,
+        s"$opName: streaming SHOW EMPTY MATCHES needs a WINDOWED query " +
+          "(WITHIN / WITHIN_TIME) — without a window an empty-match " +
+          "site's status never becomes final on an unbounded stream")
+      require(!st.query.anchorEnd,
+        s"$opName: SHOW EMPTY MATCHES with the '$$' partition-end " +
+          "anchor is not supported (as in batch — a zero-width match " +
+          "at the partition edge has no input row to emit)")
+    }
+    require(st.rowsPerMatch == CepSql.RowsPerMatch.OneRow || showEmpty,
+      s"$opName: ALL ROWS PER MATCH is batch-only — its " +
+        "deterministic per-key match_no sequence needs a total order " +
+        "over a key's matches, which an unbounded stream cannot close; " +
+        "emit ONE ROW PER MATCH and explode downstream, or run the " +
+        "ALL ROWS projection per micro-batch via foreachBatch")
+    val atoms = st.measures.flatMap(CepMeasures.MeasureItem.atomsOf)
+    atoms.find(_.phys.isDefined).foreach { m =>
+      throw new IllegalArgumentException(
+        s"$opName: PREV/NEXT(${m.fn.sqlName}(...)) physical navigation " +
+          "is batch-only — the navigated row may be an unbound " +
+          "neighbor the match state never carried")
+    }
+    // MATCH_NUMBER() is rejected wherever it appears — standalone or
+    // inside a measure expression (legal in batch arithmetic, but it
+    // needs the key's total match order)
+    if (atoms.exists(_.fn == CepMeasures.Fn.MatchNo))
+      throw new IllegalArgumentException(
+        s"$opName: MATCH_NUMBER() is batch-only — the deterministic " +
+          "per-key sequence needs a total order over a key's matches, " +
+          "which an unbounded stream cannot close")
+    CepMeasures.validate(st.query, spec, st.measures, Set.empty,
+      st.subsetMap)
+    ()
+  }
+
+  /** The single-query measures operators (arrival and event time):
+    * validation, typed flat output `(key?, <aliases…>)`, and the
+    * multi-column `PARTITION BY` form — the streaming form of
+    * `CepMeasures.runMultiKey`: derive the EXACT composite struct key,
+    * run single-key (the struct rides the state store's key schema
+    * verbatim — no restore join, no hash, batch-identical identity),
+    * and expand the struct back into the original leading columns.
+    */
+  private def singleMeasures(df: DataFrame, st: CepSql.CepSqlStatement,
+      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int], opName: String,
+      order: FeedOrder): DataFrame =
+    if (st.partitionByCols.nonEmpty) {
+      require(spec.keyCol.isEmpty,
+        s"$opName: the statement declares a multi-column PARTITION BY — " +
+          "pass a spec without keyCol (the composite key is derived " +
+          "from the statement)")
+      val keyed = df.withColumn("__mkey",
+        CepMeasures.multiKeyExpr(df, st.partitionByCols))
+      val inner = singleMeasures(keyed, st.copy(partitionByCols = Vector.empty),
+        spec.copy(keyCol = Some("__mkey")), maxRunsPerKey, opName, order)
+      val rest = inner.columns.filterNot(_ == "__mkey").toSeq
+      inner.select(st.partitionByCols.map(c =>
+        col("__mkey").getField(c).as(c)) ++ rest.map(col): _*)
+    } else {
+      validateStreamingMeasures(st, spec, opName)
+      val strAttrs = CepMeasures.strAttrsOf(df, spec)
+      CepMeasures.requireStrMeasuresSupported(st.measures, strAttrs)
+      val outSchema = StructType(keyField(df, spec) +: st.measures.map(m =>
+        StructField(m.alias, CepMeasures.itemDataType(m, strAttrs),
+          nullable = true)))
+      perKey(df, spec, maxRunsPerKey, outSchema)(
+        single(st.query, tracksEmpty(st)), order,
+        Matches((_, key, byName, orderName) =>
+          Row.fromSeq(key +: st.measures.map(ms =>
+            CepMeasures.evalItemBoxed(ms, byName, orderName, st.subsetMap,
+              strAttrs)))))
+    }
+
+  /** The shared measures operators (arrival and event time): every
+    * member is validated like a single-query measures statement and
+    * renders into the `(qname, key, measures, smeasures)` shape.
+    */
+  private def sharedMeasures(df: DataFrame,
+      stmts: Seq[(String, CepSql.CepSqlStatement)], spec: SparkCep.CepSpec,
+      maxRunsPerKey: Option[Int], opName: String, plainOp: String,
+      order: FeedOrder): DataFrame = {
+    require(stmts.nonEmpty, s"$opName needs >= 1 member")
+    val strAttrs = CepMeasures.strAttrsOf(df, spec)
+    stmts.foreach { case (n, st) =>
+      require(st.measures.nonEmpty,
+        s"$opName: member '$n' has no MEASURES — use $plainOp for the " +
+          "plain binding shape")
+      validateStreamingMeasures(st, spec, s"$opName: member '$n'")
+      CepMeasures.requireStrMeasuresSupported(st.measures, strAttrs)
+    }
+    perKey(df, spec, maxRunsPerKey, sharedMeasuresSchema(df, spec))(
+      shared(stmts.map { case (n, st) => n -> st.query }, spec,
+        stmts.map(s => tracksEmpty(s._2))),
+      order, Matches(measuresRender(stmts, strAttrs)))
+  }
+
+  // ------------------------------------------------ public operators
+
+  /** Apply a CEP query to a *streaming* DataFrame. Input columns are mapped
+    * exactly as in the batch operator (`SparkCep.CepSpec`); output rows are
+    * (key, one array<bigint> of order-ids per pattern name).
+    *
+    * Same source policy as the batch operator: semantics-preserving
+    * pre-NFA pushdown, null keys dropped, canonical projection. `PREV`
+    * queries take no pre-NFA filter and no lag/lead window (batch-only)
+    * — the per-key history in state supplies the nav attributes instead.
+    *
+    * Usage: `StreamingCep.matchPattern(readStreamDf, query, spec)
+    * .writeStream.outputMode("append")...`
+    */
+  def matchPattern(df: DataFrame, query: CepQuery,
+      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame = {
+    val piNames = SparkCep.patternNames(query.patseq)
+    perKey(df, spec, maxRunsPerKey, orderIdsSchema(df, spec, piNames))(
+      single(query), ArrivalOrder, Matches(orderIdsRender(piNames)))
+  }
+
+  /** Streaming MEASURES: `matchPattern` + the MATCH_RECOGNIZE `MEASURES`
+    * projection in ONE stateful operator — output is one flat row of
+    * scalar measures per match, emitted the micro-batch the match
+    * completes.
+    *
+    * Unlike the batch tier (`CepMeasures.project`, which joins the match
+    * frame back to the event table because the relational frame keeps
+    * order ids alone), the streaming operator folds every measure AT
+    * EMISSION over the match's own bound events, which still carry all
+    * their attributes inside the executor (`CepMeasures.evalMeasure`).
+    * That sidesteps both streaming hazards of the relational
+    * formulation: no stream-stream join-back (the event table IS the
+    * stream) and no cross-batch streaming aggregation whose `__mid`
+    * grouping state would grow without a watermark. Cost is O(match) per
+    * match, state is exactly `matchPattern`'s (same codec, same
+    * `VariantArrival` tag — a checkpoint written by either operator
+    * restores into the other; only the projection differs).
+    *
+    * Semantics gate: `StreamingCepMeasuresSpec` pins batch==stream
+    * across micro-batch boundaries — the fold here must equal the batch
+    * join-back tier row-for-row — plus a checkpoint restart.
+    */
+  def matchPatternMeasures(df: DataFrame, st: CepSql.CepSqlStatement,
+      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame =
+    singleMeasures(df, st, spec, maxRunsPerKey, "matchPatternMeasures",
+      ArrivalOrder)
+
+  /** Streaming form of the TIMEOUT side output
+    * (`SparkCep.timedOutPartials` — FlinkCEP's
+    * `TimedOutPartialMatchHandler`): emits the partial runs whose
+    * `within`/`withinTime` window provably closed without completing,
+    * with run state carried across micro-batches exactly like
+    * `matchPattern` (same codec, same `VariantArrival` tag — the state
+    * EVOLUTION is identical to the match operator's, only the
+    * projection differs, so a checkpoint written by either restores
+    * into the other without semantic drift; runs whose window closes
+    * after a restart still report). The drain happens after every fed
+    * event, so a snapshot never holds an undrained timeout — the
+    * buffer needs no codec representation. No pre-NFA filter: the
+    * timeout output observes sweep moments (see the batch operator's
+    * doc) — a dropped event can be the only one that closes a window.
+    */
+  def timedOutPartials(df: DataFrame, query: CepQuery,
+      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None)
+      : DataFrame = {
+    requireWindowed(query, "timedOutPartials")
+    val piNames = SparkCep.patternNames(query.patseq)
+    perKey(df, spec, maxRunsPerKey, orderIdsSchema(df, spec, piNames))(
+      single(query), ArrivalOrder, Timeouts(piNames))
+  }
+
   /** Streaming multi-query shared-scan CEP: the streaming form of
     * `SparkCep.matchPatternsShared` — k patterns over ONE source read,
     * ONE union pushdown filter, ONE key shuffle, and ONE state store
@@ -1016,6 +1265,13 @@ object StreamingCep {
     * (proof at `SparkCep.memberFeedTypes`). Output is the batch shared
     * operator's reporting shape `(qname, <key>, binding)`.
     *
+    * Navigation: ONE history per key over the UNION of the members'
+    * navigations, augmenting each event once BEFORE the member feed
+    * gates. The union prefilter is disabled when any member navigates;
+    * the per-member feed gates stay — a gate only skips rows the
+    * member's own prefilter proves invisible, and such rows still enter
+    * the shared history first.
+    *
     * The member query SET (names and order) is part of the checkpoint
     * contract: restoring with a different set fails loudly rather than
     * silently misassigning member states.
@@ -1023,13 +1279,10 @@ object StreamingCep {
   def matchPatternsShared(df: DataFrame, queries: Seq[(String, CepQuery)],
       spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None)
       : DataFrame = {
-    val keyName = spec.keyCol.getOrElse("__global")
-    val outSchema = StructType(Seq(
-      StructField("qname", StringType, nullable = false),
-      StructField(keyName, SparkCep.keyType(df, spec), nullable = false),
-      StructField("binding", StringType, nullable = false)))
-    sharedArrival(df, queries, spec, maxRunsPerKey, outSchema)(
-      bindingRender(queries))
+    require(queries.nonEmpty, "matchPatternsShared needs >= 1 query")
+    perKey(df, spec, maxRunsPerKey, bindingSchema(df, spec))(
+      shared(queries, spec, queries.map(_ => false)), ArrivalOrder,
+      Matches(bindingRender(queries)))
   }
 
   /** Streaming MEASURES over the SHARED multi-pattern scan — the
@@ -1054,168 +1307,9 @@ object StreamingCep {
     */
   def matchPatternsSharedMeasures(df: DataFrame,
       stmts: Seq[(String, CepSql.CepSqlStatement)], spec: SparkCep.CepSpec,
-      maxRunsPerKey: Option[Int] = None): DataFrame = {
-    require(stmts.nonEmpty, "matchPatternsSharedMeasures needs >= 1 member")
-    val strAttrs = CepMeasures.strAttrsOf(df, spec)
-    stmts.foreach { case (n, st) =>
-      require(st.measures.nonEmpty,
-        s"matchPatternsSharedMeasures: member '$n' has no MEASURES — " +
-          "use matchPatternsShared for the plain binding shape")
-      validateStreamingMeasures(st, spec,
-        s"matchPatternsSharedMeasures: member '$n'",
-        allowClassifier = true, allowShowEmpty = true)
-      CepMeasures.requireStrMeasuresSupported(st.measures, strAttrs)
-    }
-    val keyName = spec.keyCol.getOrElse("__global")
-    sharedArrival(df, stmts.map { case (n, st) => n -> st.query }, spec,
-      maxRunsPerKey, sharedMeasuresSchema(df, spec, keyName),
-      trackFlags = stmts.toVector.map { case (_, st) =>
-        st.rowsPerMatch == CepSql.RowsPerMatch.OneRowShowEmpty &&
-          Pattern.canMatchEmpty(st.query.patseq) })(
-      measuresRender(stmts, strAttrs))
-  }
-
-  /** The shared measured output schema: `(qname, key, measures:
-    * map<string,long>, smeasures: map<string,string>)`.
-    */
-  private def sharedMeasuresSchema(df: DataFrame, spec: SparkCep.CepSpec,
-      keyName: String): StructType =
-    StructType(Seq(
-      StructField("qname", StringType, nullable = false),
-      StructField(keyName, SparkCep.keyType(df, spec), nullable = false),
-      StructField("measures",
-        MapType(StringType, LongType, valueContainsNull = true),
-        nullable = false),
-      StructField("smeasures",
-        MapType(StringType, StringType, valueContainsNull = true),
-        nullable = false)))
-
-  /** The arrival-order shared-scan core behind [[matchPatternsShared]]
-    * and [[matchPatternsSharedMeasures]]: one `flatMapGroupsWithState`
-    * over k member executors with the `SharedMultiState` checkpoint
-    * layout; the output row shape is the renderer's.
-    */
-  private def sharedArrival(df: DataFrame,
-      queries: Seq[(String, CepQuery)], spec: SparkCep.CepSpec,
-      maxRunsPerKey: Option[Int], outSchema: StructType,
-      trackFlags: Vector[Boolean] = Vector.empty)(
-      render: SharedRender): DataFrame = {
-    require(queries.nonEmpty, "matchPatternsShared needs >= 1 query")
-    val keyName = spec.keyCol.getOrElse("__global")
-    queries.foreach { case (_, q) =>
-      SparkCep.checkWithinStateBound(q, maxRunsPerKey, streaming = true)
-    }
-    val anyTrack = trackFlags.exists(identity)
-    val effMaxRuns =
-      SparkCep.resolveMaxRuns(df.sparkSession, queries.map(_._2), maxRunsPerKey)
-    val navs = sharedNavs(queries, spec)
-    queries.foreach { case (_, q) =>
-      SparkCep.checkStrTyping(df, q, spec) }
-    // SHOW EMPTY members disable the union pushdown like nav does:
-    // sites are defined over ALL events of the key (see the single-op
-    // note at matchPatternMeasures)
-    val (prepared, attrNames) = SparkCep.prepareWithFilter(
-      df,
-      if (navs.isEmpty && !anyTrack)
-        SparkCep.unionPrefilter(queries, spec)
-      else None,
-      spec)
-    val strFlags = SparkCep.strAttrFlags(prepared)
-    val orderName = attrNames.head
-
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val stateEnc: Encoder[SharedMultiState] =
-      Encoders.product[SharedMultiState]
-
-    val qVec = queries.toVector
-    val names = qVec.map(_._1)
-    val dsts = qVec.map { case (_, q) => DstCompiler.compile(q) }
-    // null = feed everything (member declined a prefilter). A SHOW
-    // EMPTY member runs GATE-LESS: its sites are the full feed, and
-    // its executor's step/clock must advance on the site events
-    // themselves (the gate is an optimization the prefilter proof
-    // makes invisible, so dropping it only costs ignored feeds)
-    val gates: Array[Set[String]] =
-      qVec.zipWithIndex.map { case ((_, q), i) =>
-        if (i < trackFlags.length && trackFlags(i)) null
-        else SparkCep.memberFeedTypes(q, spec).orNull
-      }.toArray
-    val flags =
-      if (trackFlags.nonEmpty) trackFlags
-      else Vector.fill(qVec.length)(false)
-
-    groupedFlatMap[SharedMultiState](prepared,
-      SparkCep.keyType(df, spec), GroupStateTimeout.NoTimeout(),
-      stateEnc, outEnc) {
-        (key, rows, state) =>
-          val executors = qVec.zipWithIndex.map { case ((_, q), i) =>
-            new Executor(dsts(i), q.strategy, effMaxRuns,
-              q.within, q.withinTime,
-              anchorStart = q.anchorStart)
-          }
-          val nf = new NavFeed(navs)
-          val trackers = qVec.indices.toVector.map { i =>
-            new EmptySiteTracker(flags(i), qVec(i)._2.strategy,
-              qVec(i)._2.anchorStart, qVec(i)._2.within,
-              qVec(i)._2.withinTime.map(_.span))
-          }
-          val memberSteps = new Array[Int](qVec.length)
-          if (state.exists) {
-            val stored = state.get
-            validateMemberNames(stored.names, names)
-            // k payloads = written without navigation; k+1 = trailing
-            // shared nav section (see SharedMultiState)
-            val (memberPayloads, navPayload) =
-              if (stored.members.size == names.size)
-                (stored.members, None)
-              else if (stored.members.size == names.size + 1)
-                (stored.members.init, Some(stored.members.last))
-              else throw new IllegalStateException(
-                s"shared CEP checkpoint holds ${stored.members.size} " +
-                  s"payloads for ${names.size} members — corrupt state")
-            val decoded = restoreMembers(memberPayloads, executors)
-            decoded.zipWithIndex.foreach { case (st, i) =>
-              trackers(i).restore(st)
-              memberSteps(i) = st.step
-            }
-            // a missing section restores as an empty signature, which
-            // checkNavSig refuses when this query set navigates
-            nf.restore(navPayload.map(CepStateCodec.decode)
-              .getOrElse(CepStateEt(0, Nil, Nil)))
-          }
-          val events = rows.toVector.sortBy(_.getLong(1))
-          val out = events.flatMap { row =>
-            feedShared(executors, gates, key, orderName,
-              nf.augment(rowToEvent(row, 1, 2, 3, attrNames, orderName, strFlags)),
-              trackers, memberSteps)(
-              render)
-          }
-          val empties = qVec.indices.flatMap { i =>
-            trackers(i).flush(memberSteps(i), executors(i).clock)
-              .map(_ => render(i, key,
-                Map.empty[String, Vector[Event]], orderName))
-          }
-          // idle-key state GC: all members run-free, no member query
-          // carrying a withinTime floor, no navigation history to keep
-          if (executors.forall(_.liveRunCount == 0) &&
-              qVec.forall(q => q._2.withinTime.isEmpty &&
-                !q._2.anchorStart) && !nf.active &&
-              trackers.forall(_.pending.isEmpty))
-            state.remove()
-          else {
-            val base = encodeMembers(executors,
-              CepStateCodec.VariantArrival, trackers)
-            state.update(SharedMultiState(names,
-              if (nf.active) base :+ CepStateCodec.encode(CepStateEt(
-                0, Nil, Nil, Long.MinValue, CepStateCodec.VariantArrival,
-                nf.sig, nf.serHist))
-              else base))
-          }
-          (out ++ empties).iterator
-      }
-      .transform(ds =>
-        if (spec.keyCol.isEmpty) ds.drop(keyName) else ds.toDF())
-  }
+      maxRunsPerKey: Option[Int] = None): DataFrame =
+    sharedMeasures(df, stmts, spec, maxRunsPerKey,
+      "matchPatternsSharedMeasures", "matchPatternsShared", ArrivalOrder)
 
   /** Event-time CEP (beyond-parity extension — the reference is strictly
     * processing-time): out-of-order events are buffered per key and fed to
@@ -1226,6 +1320,12 @@ object StreamingCep {
     * each key when the watermark passes its earliest buffered event, so
     * quiet keys still drain.
     *
+    * PREV is history-fed AT RELEASE TIME: the NFA consumes events in
+    * watermark-released (ts, ord) order, so that is the physical-row
+    * order PREV navigates (late arrivals dropped before the buffer never
+    * enter the history, exactly as they never reach the NFA). NEXT
+    * (round 17) uses the watermark hold-back described at `perKey`.
+    *
     * `tsCol` must be a timestamp column; `delay` is a duration string
     * (e.g. "10 seconds") used for `withWatermark`.
     */
@@ -1233,15 +1333,9 @@ object StreamingCep {
       spec: SparkCep.CepSpec, tsCol: String, delay: String,
       maxRunsPerKey: Option[Int] = None): DataFrame = {
     val piNames = SparkCep.patternNames(query.patseq)
-    val keyName = spec.keyCol.getOrElse("__global")
-    val outSchema = StructType(
-      StructField(keyName, SparkCep.keyType(df, spec),
-        nullable = false) +:
-        piNames.map(n =>
-          StructField(n, ArrayType(LongType, containsNull = false),
-            nullable = false)))
-    etSingle(df, query, spec, tsCol, delay, maxRunsPerKey, outSchema)(
-      (key, m, orderName) => matchToRow(key, m.toVector, piNames, orderName))
+    perKey(df, spec, maxRunsPerKey, orderIdsSchema(df, spec, piNames))(
+      single(query), WatermarkOrder(tsCol, delay),
+      Matches(orderIdsRender(piNames)))
   }
 
   /** Event-time MEASURES: `matchPatternEventTime`'s reorder buffer +
@@ -1256,383 +1350,30 @@ object StreamingCep {
     */
   def matchPatternMeasuresEventTime(df: DataFrame,
       st: CepSql.CepSqlStatement, spec: SparkCep.CepSpec, tsCol: String,
-      delay: String, maxRunsPerKey: Option[Int] = None): DataFrame = {
-    // multi-column PARTITION BY: exact composite struct key, expanded
-    // back into the leading output columns (see matchPatternMeasures)
-    if (st.partitionByCols.nonEmpty) {
-      require(spec.keyCol.isEmpty,
-        "matchPatternMeasuresEventTime: the statement declares a " +
-          "multi-column PARTITION BY — pass a spec without keyCol " +
-          "(the composite key is derived from the statement)")
-      val keyed = df.withColumn("__mkey",
-        CepMeasures.multiKeyExpr(df, st.partitionByCols))
-      val inner = matchPatternMeasuresEventTime(keyed,
-        st.copy(partitionByCols = Vector.empty),
-        spec.copy(keyCol = Some("__mkey")), tsCol, delay, maxRunsPerKey)
-      val rest = inner.columns.filterNot(_ == "__mkey").toSeq
-      return inner.select(st.partitionByCols.map(c =>
-        col("__mkey").getField(c).as(c)) ++ rest.map(col): _*)
-    }
-    validateStreamingMeasures(st, spec,
-      "matchPatternMeasuresEventTime", allowClassifier = true,
-      allowShowEmpty = true)
-    val trackEmpty =
-      st.rowsPerMatch == CepSql.RowsPerMatch.OneRowShowEmpty &&
-        Pattern.canMatchEmpty(st.query.patseq)
-    val keyName = spec.keyCol.getOrElse("__global")
-    val strAttrs = CepMeasures.strAttrsOf(df, spec)
-    CepMeasures.requireStrMeasuresSupported(st.measures, strAttrs)
-    val outSchema = StructType(
-      StructField(keyName, SparkCep.keyType(df, spec),
-        nullable = false) +:
-        st.measures.map(m =>
-          StructField(m.alias, CepMeasures.itemDataType(m, strAttrs),
-            nullable = true)))
-    etSingle(df, st.query, spec, tsCol, delay, maxRunsPerKey, outSchema,
-      trackEmpty)(
-      (key, byName, orderName) => Row.fromSeq(key +: st.measures.map(ms =>
-        CepMeasures.evalItemBoxed(ms, byName, orderName, st.subsetMap,
-          strAttrs))))
-  }
-
-  /** The `ONE ROW PER MATCH` + non-nullary-measures contract shared by
-    * every streaming measures operator.
-    */
-  private def validateStreamingMeasures(st: CepSql.CepSqlStatement,
-      spec: SparkCep.CepSpec, opName: String,
-      allowClassifier: Boolean = false,
-      allowShowEmpty: Boolean = false): Unit = {
-    require(st.measures.nonEmpty, s"$opName: empty MEASURES")
-    val showEmpty =
-      st.rowsPerMatch == CepSql.RowsPerMatch.OneRowShowEmpty
-    require((!showEmpty || allowShowEmpty) &&
-      st.rowsPerMatch != CepSql.RowsPerMatch.AllRowsShowEmpty,
-      s"$opName: this SHOW EMPTY MATCHES form is batch-only — " +
-        "empty-match sites are derived from a partition's COMPLETE " +
-        "reported match set, which an unbounded stream cannot close " +
-        "(the measures operators — single-query and shared, " +
-        "arrival-order and event-time — support ONE ROW ... SHOW " +
-        "EMPTY MATCHES on WINDOWED queries, where the within window " +
-        "makes each site final in bounded feed distance); " +
-        "run the batch projection per micro-batch via foreachBatch " +
-        "if needed")
-    if (showEmpty && allowShowEmpty) {
-      require(st.query.within.isDefined || st.query.withinTime.isDefined,
-        s"$opName: streaming SHOW EMPTY MATCHES needs a WINDOWED query " +
-          "(WITHIN / WITHIN_TIME) — without a window an empty-match " +
-          "site's status never becomes final on an unbounded stream")
-      require(!st.query.anchorEnd,
-        s"$opName: SHOW EMPTY MATCHES with the '$$' partition-end " +
-          "anchor is not supported (as in batch — a zero-width match " +
-          "at the partition edge has no input row to emit)")
-    }
-    require(st.rowsPerMatch == CepSql.RowsPerMatch.OneRow ||
-      (showEmpty && allowShowEmpty),
-      s"$opName: ALL ROWS PER MATCH is batch-only — its " +
-        "deterministic per-key match_no sequence needs a total order " +
-        "over a key's matches, which an unbounded stream cannot close; " +
-        "emit ONE ROW PER MATCH and explode downstream, or run the " +
-        "ALL ROWS projection per micro-batch via foreachBatch")
-    st.measures.flatMap(CepMeasures.MeasureItem.atomsOf)
-      .find(_.phys.isDefined).foreach { m =>
-      throw new IllegalArgumentException(
-        s"$opName: PREV/NEXT(${m.fn.sqlName}(...)) physical navigation " +
-          "is batch-only — the navigated row may be an unbound " +
-          "neighbor the match state never carried")
-    }
-    st.measures.flatMap(CepMeasures.MeasureItem.atomsOf)
-      .find(m => CepMeasures.Fn.isNullary(m.fn) &&
-        !(allowClassifier && m.fn == CepMeasures.Fn.Classifier))
-      .foreach { m =>
-      val why = m.fn match {
-        case CepMeasures.Fn.MatchNo =>
-          "MATCH_NUMBER() is batch-only — the deterministic per-key " +
-            "sequence needs a total order over a key's matches, which " +
-            "an unbounded stream cannot close"
-        case _ =>
-          // every streaming measures operator now carries CLASSIFIER()
-          // (typed single-query rows; the shared shape's `smeasures`
-          // string map — round 16); this branch guards any future
-          // caller that opts out
-          "CLASSIFIER() is not supported by this operator"
-      }
-      throw new IllegalArgumentException(s"$opName: $why")
-    }
-    CepMeasures.validate(st.query, spec, st.measures, Set.empty,
-      st.subsetMap)
-    ()
-  }
-
-  /** The event-time single-query core behind [[matchPatternEventTime]]
-    * and [[matchPatternMeasuresEventTime]]: per-key reorder buffer under
-    * the watermark, `VariantEventTime` state, event-time timeout wakeup;
-    * the output row shape is the renderer's.
-    */
-  private def etSingle(df: DataFrame, query: CepQuery,
-      spec: SparkCep.CepSpec, tsCol: String, delay: String,
-      maxRunsPerKey: Option[Int], outSchema: StructType,
-      trackEmpty: Boolean = false)(
-      render: (Any, Map[String, Vector[Event]], String) => Row)
-      : DataFrame = {
-    // PREV is history-fed AT RELEASE TIME: the NFA consumes events in
-    // watermark-released (ts, ord) order, so that is the physical-row
-    // order PREV navigates — consistent with the operator's own feed
-    // semantics (late arrivals dropped before the buffer never enter
-    // the history, exactly as they never reach the NFA).
-    //
-    // NEXT (round 17, event-time only): the same release order makes
-    // FOLLOWING rows knowable — released events all carry ts < the
-    // watermark, future arrivals all carry ts >= it, so the (ts, ord)
-    // successor of a released event that has k released successors is
-    // FINAL. The drain therefore HOLDS BACK the last maxK releasable
-    // events per key (they stay in the reorder buffer and feed in a
-    // later batch, exactly the feed sequence an uninterrupted stream
-    // would produce), and every fed event reads its NEXT values from
-    // the in-memory release slice — no extra state, no schema change.
-    // A key's tail events feed only when successors arrive; on a
-    // stream that simply stops they wait forever, which IS the
-    // unbounded-stream reading of "the following row" (batch resolves
-    // the partition edge to NULL because it can see the end).
-    val navs = streamingNavs(query, spec, allowNext = true)
-    val nextNavs = navs.filterNot(_.prev)
-    val prevNavs = navs.filter(_.prev)
-    val holdBack = nextNavs.map(_.k).maxOption.getOrElse(0)
-    val keyName = spec.keyCol.getOrElse("__global")
-    SparkCep.checkWithinStateBound(query, maxRunsPerKey, streaming = true)
-    val effMaxRuns =
-      SparkCep.resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
-    SparkCep.checkStrTyping(df, query, spec)
-    val (prepared, attrNames) = etPrepare(df, None, spec, tsCol, delay)
-    val strFlags = SparkCep.strAttrFlags(prepared)
-    val orderName = attrNames.head
-
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val stateEnc: Encoder[CepStateCodec.VersionedState] =
-      Encoders.product[CepStateCodec.VersionedState]
-
-    val dst = DstCompiler.compile(query)
-
-    groupedFlatMap[CepStateCodec.VersionedState](prepared,
-      SparkCep.keyType(df, spec), GroupStateTimeout.EventTimeTimeout(),
-      stateEnc, outEnc) {
-        (key, rows, state) =>
-          val executor = new Executor(dst, query.strategy, effMaxRuns,
-            query.within, query.withinTime,
-            anchorStart = query.anchorStart)
-          val prev = if (state.exists) CepStateCodec.decode(state.get)
-            else CepStateEt(0, Nil, Nil)
-          // deterministic cross-variant refusal (see matchPattern): an
-          // arrival-order checkpoint restored here would re-feed future
-          // events in a different order than the state assumes. Unknown
-          // (migrated v2) state is accepted — the pre-v3 behavior,
-          // documented rather than inferred.
-          if (prev.variant == CepStateCodec.VariantArrival)
-            throw new IllegalStateException(
-              "CEP streaming state was written by the arrival-order " +
-                "matchPattern operator and cannot be restored by " +
-                "matchPatternEventTime (different feed-order semantics). " +
-                "Resume with matchPattern, or discard the checkpoint " +
-                "directory.")
-          val nf = new NavFeed(prevNavs)
-          val tracker = new EmptySiteTracker(trackEmpty,
-            query.strategy, query.anchorStart, query.within,
-            query.withinTime.map(_.span))
-          if (state.exists) {
-            nf.restore(prev)
-            tracker.restore(prev)
-          }
-          restoreState(executor,
-            CepState(prev.step, prev.runs), prev.clock)
-
-          val wmMs = state.getCurrentWatermarkMs()
-          val incoming = rows.map { row =>
-            val ev = rowToEvent(row, 2, 3, 4, attrNames, orderName, strFlags)
-            // millisecond precision — sub-second out-of-order events must
-            // still sort by true event time
-            BufEvent(row.getTimestamp(1).getTime, row.getLong(2), ev.tpe,
-              ev.attrs.map(_._1), ev.attrs.map(_._2),
-              ev.strs.map(_._1), ev.strs.map(_._2))
-          }.toVector
-          // the watermark guarantees nothing earlier can still arrive —
-          // release the prefix up to it, in event-time order
-          val (ready, still0) = releaseBuffer(prev.buffer, incoming, wmMs)
-          val sortedReady = ready.sortBy(e => (e.ts, e.ord))
-          // NEXT hold-back (see the operator doc above): keep the last
-          // maxK releasable events buffered so every fed event's NEXT
-          // followers sit in this very slice, already final
-          val feedCount =
-            if (holdBack == 0) sortedReady.length
-            else math.max(0, sortedReady.length - holdBack)
-          val feedNow = sortedReady.take(feedCount)
-          val out = feedNow.zipWithIndex.flatMap { case (e, i) =>
-            val ms = executor.feed(nf.augment(withNextFromSlice(
-              nextNavs, sortedReady,
-              Event(e.tpe, e.names.zip(e.vals).toVector,
-                e.sNames.zip(e.sVals).toVector), i)))
-            tracker.onFeed(e.ord, executor.clock, prev.step + i + 1)
-            ms.map { m =>
-              val byName = m.toMap
-              tracker.onMatch(byName, orderName)
-              render(key, byName, orderName)
-            }
-          }
-          val still = sortedReady.drop(feedCount) ++ still0
-
-          val snap = snapshotState(executor)
-          val empties = tracker.flush(snap.step, executor.clock)
-            .map(_ => render(key, Map.empty[String, Vector[Event]],
-              orderName))
-          // idle-key state GC: no live runs AND nothing buffered ==
-          // fresh key (see matchPattern)
-          if (executor.liveRunCount == 0 && !query.anchorStart &&
-              still.isEmpty && tracker.pending.isEmpty &&
-              query.withinTime.isEmpty && !nf.active) state.remove()
-          else {
-            state.update(CepStateCodec.encode(
-              CepStateEt(snap.step, snap.runs, still, executor.clock,
-                CepStateCodec.VariantEventTime, nf.sig, nf.serHist,
-                trackedEmpty = tracker.tracking,
-                pending = tracker.pending)))
-            // wake when the watermark passes the earliest GENUINELY
-            // buffered event (ts >= wm). Held-back events (ts < wm)
-            // are waiting for DATA (successors), not for time — a
-            // timeout cannot resolve them, and their past-watermark
-            // timestamps would be rejected by the state store anyway.
-            val wake = still0.map(_.ts).minOption
-            wake.foreach(t => state.setTimeoutTimestamp(t + 1))
-          }
-          (out ++ empties).iterator
-      }
-      .transform(ds =>
-        if (spec.keyCol.isEmpty) ds.drop(keyName) else ds.toDF())
-  }
+      delay: String, maxRunsPerKey: Option[Int] = None): DataFrame =
+    singleMeasures(df, st, spec, maxRunsPerKey,
+      "matchPatternMeasuresEventTime", WatermarkOrder(tsCol, delay))
 
   /** Event-time form of the TIMEOUT side output: out-of-order events
     * reorder under the watermark exactly as in `matchPatternEventTime`
-    * (same buffer, same release order, same `VariantEventTime` state —
-    * the run-state evolution is identical to the event-time match
-    * operator's, only the projection differs, so checkpoints
-    * interchange between the two), but the emitted rows are the partial
-    * runs whose `within`/`withinTime` window provably closed. With
-    * `withinTime` this is the natural pairing: the window clock IS
-    * event time, and the watermark's ordering guarantee is what makes
-    * "provably closed" sound on an out-of-order stream. No pre-NFA
-    * filter, per the timeout rule (`SparkCep.timedOutPartials`).
+    * (same buffer, same release order, same NEXT hold-back, same
+    * `VariantEventTime` state — the run-state evolution is identical to
+    * the event-time match operator's, only the projection differs, so
+    * checkpoints interchange between the two), but the emitted rows are
+    * the partial runs whose `within`/`withinTime` window provably
+    * closed. With `withinTime` this is the natural pairing: the window
+    * clock IS event time, and the watermark's ordering guarantee is what
+    * makes "provably closed" sound on an out-of-order stream. No
+    * pre-NFA filter, per the timeout rule (`SparkCep.timedOutPartials`).
     */
   def timedOutPartialsEventTime(df: DataFrame, query: CepQuery,
       spec: SparkCep.CepSpec, tsCol: String, delay: String,
       maxRunsPerKey: Option[Int] = None): DataFrame = {
-    require(query.within.isDefined || query.withinTime.isDefined,
-      "timedOutPartialsEventTime needs a windowed query " +
-        "(within/withinTime) — an unwindowed run never times out")
-    // PREV is history-fed at watermark-release time, NEXT (round 18)
-    // via the same hold-back as matchPatternEventTime — the run-state
-    // evolution stays identical to the match operator's (checkpoints
-    // keep interchanging), only the projection differs
-    val navs = streamingNavs(query, spec, allowNext = true)
-    val nextNavs = navs.filterNot(_.prev)
-    val prevNavs = navs.filter(_.prev)
-    val holdBack = nextNavs.map(_.k).maxOption.getOrElse(0)
+    requireWindowed(query, "timedOutPartialsEventTime")
     val piNames = SparkCep.patternNames(query.patseq)
-    val keyName = spec.keyCol.getOrElse("__global")
-    SparkCep.checkWithinStateBound(query, maxRunsPerKey, streaming = true)
-    val effMaxRuns =
-      SparkCep.resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
-    SparkCep.checkStrTyping(df, query, spec)
-    val (prepared, attrNames) = etPrepare(df, None, spec, tsCol, delay)
-    val strFlags = SparkCep.strAttrFlags(prepared)
-    val orderName = attrNames.head
-    val outSchema = StructType(
-      StructField(keyName, SparkCep.keyType(df, spec),
-        nullable = false) +:
-        piNames.map(n =>
-          StructField(n, ArrayType(LongType, containsNull = false),
-            nullable = false)))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val stateEnc: Encoder[CepStateCodec.VersionedState] =
-      Encoders.product[CepStateCodec.VersionedState]
-    val dst = DstCompiler.compile(query)
-    groupedFlatMap[CepStateCodec.VersionedState](prepared,
-      SparkCep.keyType(df, spec), GroupStateTimeout.EventTimeTimeout(),
-      stateEnc, outEnc) {
-        (key, rows, state) =>
-          val executor = new Executor(dst, query.strategy, effMaxRuns,
-            query.within, query.withinTime, captureTimeouts = true,
-            anchorStart = query.anchorStart)
-          val prev = if (state.exists) CepStateCodec.decode(state.get)
-            else CepStateEt(0, Nil, Nil)
-          if (prev.variant == CepStateCodec.VariantArrival)
-            throw new IllegalStateException(
-              "CEP streaming state was written by the arrival-order " +
-                "matchPattern operator and cannot be restored by " +
-                "timedOutPartialsEventTime (different feed-order " +
-                "semantics). Resume with the arrival-order operator, or " +
-                "discard the checkpoint directory.")
-          val nf = new NavFeed(prevNavs)
-          if (state.exists) nf.restore(prev)
-          restoreState(executor, CepState(prev.step, prev.runs), prev.clock)
-          val wmMs = state.getCurrentWatermarkMs()
-          val incoming = rows.map { row =>
-            val ev = rowToEvent(row, 2, 3, 4, attrNames, orderName, strFlags)
-            BufEvent(row.getTimestamp(1).getTime, row.getLong(2), ev.tpe,
-              ev.attrs.map(_._1), ev.attrs.map(_._2),
-              ev.strs.map(_._1), ev.strs.map(_._2))
-          }.toVector
-          val (ready, still0) = releaseBuffer(prev.buffer, incoming, wmMs)
-          val sortedReady = ready.sortBy(e => (e.ts, e.ord))
-          // NEXT hold-back, exactly matchPatternEventTime's
-          val feedCount =
-            if (holdBack == 0) sortedReady.length
-            else math.max(0, sortedReady.length - holdBack)
-          val out = sortedReady.take(feedCount).zipWithIndex.flatMap {
-            case (e, i) =>
-              executor.feed(nf.augment(withNextFromSlice(
-                nextNavs, sortedReady,
-                Event(e.tpe, e.names.zip(e.vals).toVector,
-                  e.sNames.zip(e.sVals).toVector), i)))
-              executor.drainTimedOut().map(c =>
-                matchToRow(key, executor.partialOutput(c, piNames),
-                  piNames, orderName))
-          }
-          val still = sortedReady.drop(feedCount) ++ still0
-          val snap = snapshotState(executor)
-          // idle-key state GC (see matchPattern)
-          if (executor.liveRunCount == 0 && !query.anchorStart &&
-              still.isEmpty &&
-              query.withinTime.isEmpty && !nf.active) state.remove()
-          else {
-            state.update(CepStateCodec.encode(
-              CepStateEt(snap.step, snap.runs, still, executor.clock,
-                CepStateCodec.VariantEventTime, nf.sig, nf.serHist)))
-            // held-back events (ts < wm) wait for DATA, not time
-            val wake = still0.map(_.ts).minOption
-            wake.foreach(t => state.setTimeoutTimestamp(t + 1))
-          }
-          out.iterator
-      }
-      .transform(ds =>
-        if (spec.keyCol.isEmpty) ds.drop(keyName) else ds.toDF())
+    perKey(df, spec, maxRunsPerKey, orderIdsSchema(df, spec, piNames))(
+      single(query), WatermarkOrder(tsCol, delay), Timeouts(piNames))
   }
-
-  /** Per-key state of the EVENT-TIME multi-query shared stream: the
-    * reorder buffer is stored ONCE (the buffered events are common to
-    * every member — that sharing is the point), member run-sets once per
-    * query in declared order, names validated on restore exactly as in
-    * the arrival-order shared operator. Yet another distinct state-store
-    * schema, so cross-operator restores are structurally refused.
-    *
-    * The buffer rides as a codec-versioned BINARY payload (an empty-run
-    * `CepStateEt` carrying only the buffer), NOT as a raw `Seq[BufEvent]`
-    * column: a raw product would freeze `BufEvent`'s shape into the
-    * Spark state-store schema, and the next field added to it would kill
-    * every checkpoint with an opaque schema error — the exact failure
-    * mode `CepStateCodec` exists to prevent (its version bump gives an
-    * actionable message instead).
-    */
-  final case class SharedMultiStateEt(
-      names: Seq[String],
-      bufferPayload: CepStateCodec.VersionedState,
-      members: Seq[CepStateCodec.VersionedState])
 
   /** Event-time multi-query shared-scan CEP: k patterns, ONE source
     * read, ONE union pushdown filter, ONE key shuffle, ONE state store
@@ -1645,14 +1386,16 @@ object StreamingCep {
     *
     * Late-data policy, release rule, timeout wake-up, and (round 18)
     * the NEXT watermark hold-back are exactly
-    * `matchPatternEventTime`'s — the reorder buffer is already shared
-    * across members, so holding back the last maxK releasable events
-    * (maxK over every member's NEXT offsets) finalizes followers for
-    * all members at once; member feed gates and the union-filter
-    * sandwich are exactly the arrival-order shared operator's
-    * (`SparkCep.memberFeedTypes` — dropping a non-alphabet event from a
-    * prefiltered member's feed is what its own prefilter would have done
-    * before the scan). Output: `(qname, <key>, binding)`.
+    * `matchPatternEventTime`'s, applied to the shared reorder buffer
+    * PER MEMBER — the shared scan stays a transparent fusion of k
+    * independent operators (see `perKey`); PREV augmentation happens
+    * ONCE per event at FIRST release, and the held tail is stored in
+    * augmented form so its re-release cannot re-advance the nav history.
+    * Member feed gates and the union-filter sandwich are exactly the
+    * arrival-order shared operator's (`SparkCep.memberFeedTypes` —
+    * dropping a non-alphabet event from a prefiltered member's feed is
+    * what its own prefilter would have done before the scan). Output:
+    * `(qname, <key>, binding)`.
     *
     * The union filter runs ABOVE the watermark node in a
     * pushdown-blocked form (see `etPrepare`), so the watermark advances
@@ -1669,13 +1412,10 @@ object StreamingCep {
       queries: Seq[(String, CepQuery)], spec: SparkCep.CepSpec,
       tsCol: String, delay: String, maxRunsPerKey: Option[Int] = None)
       : DataFrame = {
-    val keyName = spec.keyCol.getOrElse("__global")
-    val outSchema = StructType(Seq(
-      StructField("qname", StringType, nullable = false),
-      StructField(keyName, SparkCep.keyType(df, spec), nullable = false),
-      StructField("binding", StringType, nullable = false)))
-    sharedEventTime(df, queries, spec, tsCol, delay, maxRunsPerKey,
-      outSchema)(bindingRender(queries))
+    require(queries.nonEmpty, "matchPatternsSharedEventTime needs >= 1 query")
+    perKey(df, spec, maxRunsPerKey, bindingSchema(df, spec))(
+      shared(queries, spec, queries.map(_ => false)),
+      WatermarkOrder(tsCol, delay), Matches(bindingRender(queries)))
   }
 
   /** Event-time MEASURED shared scan: k measured statements, ONE source
@@ -1689,211 +1429,8 @@ object StreamingCep {
   def matchPatternsSharedMeasuresEventTime(df: DataFrame,
       stmts: Seq[(String, CepSql.CepSqlStatement)], spec: SparkCep.CepSpec,
       tsCol: String, delay: String, maxRunsPerKey: Option[Int] = None)
-      : DataFrame = {
-    require(stmts.nonEmpty,
-      "matchPatternsSharedMeasuresEventTime needs >= 1 member")
-    val strAttrs = CepMeasures.strAttrsOf(df, spec)
-    stmts.foreach { case (n, st) =>
-      require(st.measures.nonEmpty,
-        s"matchPatternsSharedMeasuresEventTime: member '$n' has no " +
-          "MEASURES — use matchPatternsSharedEventTime for the plain " +
-          "binding shape")
-      validateStreamingMeasures(st, spec,
-        s"matchPatternsSharedMeasuresEventTime: member '$n'",
-        allowClassifier = true, allowShowEmpty = true)
-      CepMeasures.requireStrMeasuresSupported(st.measures, strAttrs)
-    }
-    val keyName = spec.keyCol.getOrElse("__global")
-    sharedEventTime(df, stmts.map { case (n, st) => n -> st.query }, spec,
-      tsCol, delay, maxRunsPerKey,
-      sharedMeasuresSchema(df, spec, keyName),
-      trackFlags = stmts.toVector.map { case (_, st) =>
-        st.rowsPerMatch == CepSql.RowsPerMatch.OneRowShowEmpty &&
-          Pattern.canMatchEmpty(st.query.patseq) })(
-      measuresRender(stmts, strAttrs))
-  }
-
-  /** The event-time shared-scan core behind
-    * [[matchPatternsSharedEventTime]] and
-    * [[matchPatternsSharedMeasuresEventTime]].
-    */
-  private def sharedEventTime(df: DataFrame,
-      queries: Seq[(String, CepQuery)], spec: SparkCep.CepSpec,
-      tsCol: String, delay: String, maxRunsPerKey: Option[Int],
-      outSchema: StructType, trackFlags: Vector[Boolean] = Vector.empty)(
-      render: SharedRender): DataFrame = {
-    require(queries.nonEmpty, "matchPatternsSharedEventTime needs >= 1 query")
-    val keyName = spec.keyCol.getOrElse("__global")
-    queries.foreach { case (_, q) =>
-      SparkCep.checkWithinStateBound(q, maxRunsPerKey, streaming = true)
-    }
-    val anyTrack = trackFlags.exists(identity)
-    val effMaxRuns =
-      SparkCep.resolveMaxRuns(df.sparkSession, queries.map(_._2), maxRunsPerKey)
-    // shared navigation rides in the buffer payload (a CepStateEt
-    // already carries the nav fields), so this operator's state schema
-    // is untouched; the union filter is disabled under nav — and under
-    // SHOW EMPTY members (sites are the full feed) — as in the
-    // arrival-order shared operator. NEXT (round 18): the single-query
-    // event-time hold-back applies to the SHARED reorder buffer
-    // PER MEMBER — the shared scan must stay a transparent fusion of k
-    // independent operators, and a member WITHOUT NEXT run standalone
-    // would feed every watermark-released event immediately, so here
-    // it must too. Members WITH NEXT feed only the first
-    // `len - holdBack` of each release slice (holdBack = max offset
-    // over every member's NEXT navs — a smaller-k member rides the
-    // larger hold, trading a bounded extra delay for one shared
-    // frontier); the withheld tail stays in the buffer ALREADY FED to
-    // the non-NEXT members, so the count of such events persists in
-    // the buffer payload's otherwise-unused `step` field (zero codec
-    // change: a pre-NEXT checkpoint decodes step 0 = nothing pre-fed,
-    // which is exactly its truth). PREV augmentation happens ONCE per
-    // event at FIRST release — the held tail is stored in augmented
-    // form so its re-release cannot re-advance the nav history.
-    val navs = sharedNavs(queries, spec, allowNext = true)
-    val nextNavs = navs.filterNot(_.prev)
-    val prevNavs = navs.filter(_.prev)
-    val holdBack = nextNavs.map(_.k).maxOption.getOrElse(0)
-    val memberHolds: Vector[Boolean] = queries.toVector.map { case (_, q) =>
-      streamingNavs(q, spec, allowNext = true).exists(!_.prev)
-    }
-    queries.foreach { case (_, q) =>
-      SparkCep.checkStrTyping(df, q, spec) }
-    val (prepared, attrNames) = etPrepare(df,
-      if (navs.isEmpty && !anyTrack)
-        SparkCep.unionPrefilter(queries, spec)
-      else None,
-      spec, tsCol, delay)
-    val strFlags = SparkCep.strAttrFlags(prepared)
-    val orderName = attrNames.head
-
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val stateEnc: Encoder[SharedMultiStateEt] =
-      Encoders.product[SharedMultiStateEt]
-
-    val qVec = queries.toVector
-    val names = qVec.map(_._1)
-    val dsts = qVec.map { case (_, q) => DstCompiler.compile(q) }
-    // SHOW EMPTY members run gate-less (see sharedArrival)
-    val gates: Array[Set[String]] =
-      qVec.zipWithIndex.map { case ((_, q), i) =>
-        if (i < trackFlags.length && trackFlags(i)) null
-        else SparkCep.memberFeedTypes(q, spec).orNull
-      }.toArray
-    val flags =
-      if (trackFlags.nonEmpty) trackFlags
-      else Vector.fill(qVec.length)(false)
-
-    groupedFlatMap[SharedMultiStateEt](prepared,
-      SparkCep.keyType(df, spec), GroupStateTimeout.EventTimeTimeout(),
-      stateEnc, outEnc) {
-        (key, rows, state) =>
-          val executors = qVec.zipWithIndex.map { case ((_, q), i) =>
-            new Executor(dsts(i), q.strategy, effMaxRuns,
-              q.within, q.withinTime,
-              anchorStart = q.anchorStart)
-          }
-          val nf = new NavFeed(prevNavs)
-          val trackers = qVec.indices.toVector.map { i =>
-            new EmptySiteTracker(flags(i), qVec(i)._2.strategy,
-              qVec(i)._2.anchorStart, qVec(i)._2.within,
-              qVec(i)._2.withinTime.map(_.span))
-          }
-          val memberSteps = new Array[Int](qVec.length)
-          val (prevBuffer: Vector[BufEvent], heldPrev: Int) =
-            if (state.exists) {
-              val stored = state.get
-              validateMemberNames(stored.names, names)
-              val decoded = restoreMembers(stored.members, executors)
-              decoded.zipWithIndex.foreach { case (st, i) =>
-                trackers(i).restore(st)
-                memberSteps(i) = st.step
-              }
-              val bufEt = CepStateCodec.decode(stored.bufferPayload)
-              nf.restore(bufEt)
-              (bufEt.buffer.toVector, bufEt.step)
-            } else (Vector.empty[BufEvent], 0)
-
-          val wmMs = state.getCurrentWatermarkMs()
-          val incoming = rows.map { row =>
-            val ev = rowToEvent(row, 2, 3, 4, attrNames, orderName, strFlags)
-            BufEvent(row.getTimestamp(1).getTime, row.getLong(2), ev.tpe,
-              ev.attrs.map(_._1), ev.attrs.map(_._2),
-              ev.strs.map(_._1), ev.strs.map(_._2))
-          }.toVector
-          val (ready, still0) = releaseBuffer(prevBuffer, incoming, wmMs)
-          val sortedReady = ready.sortBy(e => (e.ts, e.ord))
-          // Per-member NEXT hold-back (see the nav comment above).
-          // heldPrev = events at the FRONT of this slice that an earlier
-          // batch already fed to the non-NEXT members (they re-release
-          // every batch until the NEXT members catch up, and they are
-          // the globally smallest (ts, ord) by the watermark's
-          // monotonicity, so a count suffices to identify them).
-          val len = sortedReady.length
-          val feedCount = if (holdBack == 0) len else math.max(0, len - holdBack)
-          // PREV augmentation: once per event, at first release, in
-          // global order; indices < heldPrev were augmented when first
-          // released and carry their nav attrs in the stored payload
-          val augmented: Vector[Event] = sortedReady.zipWithIndex.map {
-            case (e, i) =>
-              val raw = Event(e.tpe, e.names.zip(e.vals).toVector,
-                e.sNames.zip(e.sVals).toVector)
-              if (i < heldPrev) raw else nf.augment(raw)
-          }
-          val out = sortedReady.indices.flatMap { i =>
-            val toNext = i < feedCount          // NEXT members' frontier
-            val toPlain = i >= heldPrev         // non-NEXT members' frontier
-            if (!toNext && !toPlain) Vector.empty
-            else {
-              // followers at i + k exist and are final for i < feedCount
-              val ev =
-                if (toNext)
-                  withNextFromSlice(nextNavs, sortedReady, augmented(i), i)
-                else augmented(i)
-              feedShared(executors, gates, key, orderName, ev, trackers,
-                memberSteps,
-                only = m => if (memberHolds(m)) toNext else toPlain)(render)
-            }
-          }
-          // the withheld tail stays buffered in AUGMENTED form (its nav
-          // attrs are final; re-augmenting on re-release would corrupt
-          // the history) — `still0` events are raw, they have not fed
-          val heldTail = (feedCount until len).map { i =>
-            val e = sortedReady(i); val a = augmented(i)
-            BufEvent(e.ts, e.ord, a.tpe, a.attrs.map(_._1),
-              a.attrs.map(_._2), a.strs.map(_._1), a.strs.map(_._2))
-          }.toVector
-          val still = heldTail ++ still0
-          val empties = qVec.indices.flatMap { i =>
-            trackers(i).flush(memberSteps(i), executors(i).clock)
-              .map(_ => render(i, key,
-                Map.empty[String, Vector[Event]], orderName))
-          }
-
-          // idle-key state GC: all members empty AND nothing buffered
-          if (executors.forall(_.liveRunCount == 0) &&
-              qVec.forall(!_._2.anchorStart) && still.isEmpty &&
-              qVec.forall(_._2.withinTime.isEmpty) && !nf.active &&
-              trackers.forall(_.pending.isEmpty))
-            state.remove()
-          else {
-            // the buffer payload's step field carries the held-tail
-            // count (events already fed to the non-NEXT members)
-            state.update(SharedMultiStateEt(names,
-              CepStateCodec.encode(CepStateEt(heldTail.length, Nil, still,
-                variant = CepStateCodec.VariantEventTime,
-                navSig = nf.sig, navHist = nf.serHist)),
-              encodeMembers(executors, CepStateCodec.VariantEventTime,
-                trackers)))
-            // wake only for GENUINELY buffered events (ts >= wm, see
-            // etSingle): held-back events wait for DATA, not time, and
-            // their past-watermark timestamps would be rejected anyway
-            val wake = still0.map(_.ts).minOption
-            wake.foreach(t => state.setTimeoutTimestamp(t + 1))
-          }
-          (out ++ empties).iterator
-      }
-      .transform(ds =>
-        if (spec.keyCol.isEmpty) ds.drop(keyName) else ds.toDF())
-  }
+      : DataFrame =
+    sharedMeasures(df, stmts, spec, maxRunsPerKey,
+      "matchPatternsSharedMeasuresEventTime", "matchPatternsSharedEventTime",
+      WatermarkOrder(tsCol, delay))
 }

@@ -82,8 +82,11 @@ object LocalParquet {
     var i = 0
     while (i < n) {
       val f = schema.getType(i)
-      val present = g.getFieldRepetitionCount(i) > 0
-      if (!present) vals(i) = null
+      // a `repeated` field (legacy 1-level list) is a LIST, never a
+      // nullable scalar: with no values it reads as `[]` in Spark, so it
+      // must be rejected before the absent → null shortcut below
+      if (f.isRepetition(Type.Repetition.REPEATED)) return None
+      if (g.getFieldRepetitionCount(i) == 0) vals(i) = null
       else decodeField(g, f, i) match {
         case Some(v) => vals(i) = v
         case None => return None
@@ -95,11 +98,8 @@ object LocalParquet {
 
   private def decodeField(g: Group, f: Type, i: Int): Option[Any] =
     f match {
-      // a legacy `repeated` PRIMITIVE column (1-level list) would decode
-      // as its first element only — a silent wrong value; fall through to
-      // the documented None-and-fallback instead (r18 advice). Spark
-      // writes 3-level lists, so committed artifacts never hit this.
-      case p: PrimitiveType if !p.isRepetition(Type.Repetition.REPEATED) =>
+      // `repeated` fields never get here (rejected in `decodeRow`)
+      case p: PrimitiveType =>
         p.getPrimitiveTypeName match {
           // plain or integer-annotated INT64 only: a TIMESTAMP annotation
           // must NOT decode as a raw long (Spark collects it as a

@@ -209,6 +209,144 @@ class CepStateCodecSpec extends AnyFunSuite {
     assert(decoded.buffer.forall(_.sNames.isEmpty))
   }
 
+  /** Hand-rolled v4 payload: v3 header + run walk WITH anchor stamps +
+    * buffer, no navigation section, no string sections — the bytes a v4
+    * build wrote.
+    */
+  private def v4Payload(s: CepStateEt): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.writeByte(s.variant); out.writeLong(s.clock)
+    out.writeInt(s.step)
+    out.writeInt(s.runs.size)
+    s.runs.foreach { r =>
+      out.writeInt(r.start); out.writeUTF(r.q); out.writeBoolean(r.lastTake)
+      val eps = r.revEps.sorted
+      out.writeInt(eps.size); eps.foreach(out.writeUTF)
+      out.writeInt(r.etaKeys.size)
+      r.etaKeys.zip(r.etaVals).foreach { case (k, v) =>
+        out.writeUTF(k); out.writeLong(v)
+      }
+      out.writeInt(r.ctxKeys.size)
+      r.ctxKeys.zip(r.ctxVals).foreach { case (k, evs) =>
+        out.writeUTF(k); out.writeInt(evs.size)
+        evs.foreach { e =>
+          out.writeUTF(e.tpe); out.writeInt(e.names.size)
+          e.names.zip(e.vals).foreach { case (n, v) =>
+            out.writeUTF(n); out.writeLong(v)
+          }
+        }
+      }
+      out.writeInt(r.firstTake); out.writeLong(r.firstTakeTs)
+      out.writeInt(r.anchorFirst); out.writeInt(r.anchorLast)
+    }
+    out.writeInt(s.buffer.size)
+    s.buffer.foreach { b =>
+      out.writeLong(b.ts); out.writeLong(b.ord); out.writeUTF(b.tpe)
+      out.writeInt(b.names.size)
+      b.names.zip(b.vals).foreach { case (n, v) =>
+        out.writeUTF(n); out.writeLong(v)
+      }
+    }
+    // v4 ends here — no navigation section
+    out.flush()
+    bos.toByteArray
+  }
+
+  test("v4 payloads migrate: anchor stamps kept, no navigation " +
+    "section, string attributes and SHOW EMPTY default empty") {
+    val tagged = state.copy(clock = 11L,
+      variant = CepStateCodec.VariantEventTime,
+      runs = Seq(run.copy(anchorFirst = 4, anchorLast = 5)))
+    val decoded = CepStateCodec.decode(
+      CepStateCodec.VersionedState(4, v4Payload(tagged)))
+    assert(decoded.clock == 11L)
+    assert(decoded.variant == CepStateCodec.VariantEventTime)
+    assert(decoded.step == state.step)
+    assert(decoded.buffer == state.buffer)
+    assert(decoded.runs.head.anchorFirst == 4)
+    assert(decoded.runs.head.anchorLast == 5)
+    assert(decoded.runs.head.ctxVals == run.ctxVals)
+    assert(decoded.navSig.isEmpty && decoded.navHist.isEmpty)
+    assert(decoded.runs.head.ctxVals.flatten.forall(_.sNames.isEmpty))
+    assert(!decoded.trackedEmpty && decoded.pending.isEmpty)
+  }
+
+  /** Hand-rolled v6 payload: the v5 walk with every event's STRING
+    * section appended (run ctx, buffer, nav history), and no SHOW EMPTY
+    * section — the bytes a v6 build wrote.
+    */
+  private def v6Payload(s: CepStateEt): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    def strs(ns: Seq[String], vs: Seq[String]): Unit = {
+      out.writeInt(ns.size)
+      ns.zip(vs).foreach { case (n, v) => out.writeUTF(n); out.writeUTF(v) }
+    }
+    def event(e: SerEvent): Unit = {
+      out.writeUTF(e.tpe); out.writeInt(e.names.size)
+      e.names.zip(e.vals).foreach { case (n, v) =>
+        out.writeUTF(n); out.writeLong(v)
+      }
+      strs(e.sNames, e.sVals)
+    }
+    out.writeByte(s.variant); out.writeLong(s.clock)
+    out.writeInt(s.step)
+    out.writeInt(s.runs.size)
+    s.runs.foreach { r =>
+      out.writeInt(r.start); out.writeUTF(r.q); out.writeBoolean(r.lastTake)
+      val eps = r.revEps.sorted
+      out.writeInt(eps.size); eps.foreach(out.writeUTF)
+      out.writeInt(r.etaKeys.size)
+      r.etaKeys.zip(r.etaVals).foreach { case (k, v) =>
+        out.writeUTF(k); out.writeLong(v)
+      }
+      out.writeInt(r.ctxKeys.size)
+      r.ctxKeys.zip(r.ctxVals).foreach { case (k, evs) =>
+        out.writeUTF(k); out.writeInt(evs.size); evs.foreach(event)
+      }
+      out.writeInt(r.firstTake); out.writeLong(r.firstTakeTs)
+      out.writeInt(r.anchorFirst); out.writeInt(r.anchorLast)
+    }
+    out.writeInt(s.buffer.size)
+    s.buffer.foreach { b =>
+      out.writeLong(b.ts); out.writeLong(b.ord); out.writeUTF(b.tpe)
+      out.writeInt(b.names.size)
+      b.names.zip(b.vals).foreach { case (n, v) =>
+        out.writeUTF(n); out.writeLong(v)
+      }
+      strs(b.sNames, b.sVals)
+    }
+    out.writeInt(s.navSig.size); s.navSig.foreach(out.writeUTF)
+    out.writeInt(s.navHist.size); s.navHist.foreach(event)
+    // v6 ends here — no SHOW EMPTY section
+    out.flush()
+    bos.toByteArray
+  }
+
+  test("v6 payloads migrate: string sections and nav kept, SHOW EMPTY " +
+    "defaults to untracked with no pending sites") {
+    val sEv = SerEvent("a", Seq("event_id"), Seq(1L),
+      Seq("host"), Seq("a.com"))
+    val tagged = state.copy(clock = 3L,
+      variant = CepStateCodec.VariantArrival,
+      runs = Seq(run.copy(ctxVals = Seq(Seq(sEv), Seq(sEv)),
+        anchorFirst = 2, anchorLast = 2)),
+      buffer = Seq(BufEvent(1L, 2L, "c", Seq("event_id"), Seq(3L),
+        Seq("page"), Seq("/y"))),
+      navSig = Seq("__nav_v"), navHist = Seq(sEv))
+    val decoded = CepStateCodec.decode(
+      CepStateCodec.VersionedState(6, v6Payload(tagged)))
+    assert(decoded.clock == 3L)
+    assert(decoded.variant == CepStateCodec.VariantArrival)
+    assert(decoded.runs.head.ctxVals.head.head == sEv)
+    assert(decoded.runs.head.anchorFirst == 2)
+    assert(decoded.buffer == tagged.buffer)
+    assert(decoded.navSig == Seq("__nav_v"))
+    assert(decoded.navHist == Seq(sEv))
+    assert(!decoded.trackedEmpty && decoded.pending.isEmpty)
+  }
+
   test("v2 payloads migrate: derived clock sentinel + unknown variant") {
     val v2 = CepStateCodec.VersionedState(2, oldPayload(state,
       withV3Header = false))

@@ -1,5 +1,10 @@
 package graft.ops
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -50,6 +55,19 @@ class LocalParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
         canon(spark.read.parquet(events).collect().toSeq))
     // nonexistent path
     assert(LocalParquet.collect(spark, "/no/such/path").isEmpty)
+    // a legacy 1-level `repeated` int64 column whose values are all
+    // empty: Spark reads `[]`, so a local decode to null would be a
+    // wrong value — the read must fall back instead
+    val legacy = java.nio.file.Files.createTempDirectory("legacy-rep")
+      .resolve("rep.parquet").toString
+    val repSchema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; repeated int64 xs; }")
+    val w = ExampleParquetWriter.builder(new Path(legacy))
+      .withType(repSchema).withConf(new Configuration()).build()
+    try w.write(new SimpleGroupFactory(repSchema).newGroup().append("id", 1L))
+    finally w.close()
+    assert(canon(spark.read.parquet(legacy).collect().toSeq) === Seq("1|[]"))
+    assert(LocalParquet.collect(spark, legacy).isEmpty)
   }
 
   test("loaders produce identical models through the local path") {
