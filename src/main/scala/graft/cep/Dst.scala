@@ -28,6 +28,12 @@ object Dst {
   */
 final class State(val name: String, var out: Option[Dst.OutMap])
     extends Serializable {
+  /** Position in the `states` of the last `Dst` built over this state
+    * (stamped by the `Dst` constructor) — the dense index of
+    * `Dst.startFrom`. Valid only for the `Dst` whose `states(slot)` is
+    * this very object; every other `Dst` falls back to its name map.
+    */
+  private[cep] var slot: Int = -1
   def extendOutput(o: Dst.OutMap): Unit =
     out = Some(Dst.funcMerge(o, out.getOrElse(Vector.empty)))
   def clearOutput(): Unit = out = None
@@ -283,22 +289,28 @@ final class Dst(
   val stateByName: Map[String, State] =
     states.map(s => s.name -> s).toMap
 
-  // identity-keyed edge index: startFrom sits on the innermost NFA loop
-  // (once per live run per event) and must not hash state-name strings.
-  // State has reference equality, so the key hash is the (cached) identity
-  // hashCode. Built lazily and transient: it rebuilds after Java
-  // deserialization on executors, keyed by the deserialized State objects.
-  @transient private lazy val edgeIdx
-      : java.util.IdentityHashMap[State, Vector[Transition]] = {
-    val m = new java.util.IdentityHashMap[State, Vector[Transition]]()
-    states.foreach(s =>
-      m.put(s, edgeMap.getOrElse(s.name, Vector.empty)))
-    m
+  // dense edge index: startFrom sits on the innermost NFA loop (once per
+  // live run per event) and must neither hash state-name strings nor
+  // probe a hash table. Each state's position is stamped into the state
+  // itself (`State.slot`); the compiler builds sub-automata first and the
+  // DST that merges them last, so the executed DST stamps last. A state a
+  // later DST has re-stamped fails the identity check and falls back to
+  // the name map. Java serialization keeps the arrays, the stamps and
+  // object identity together.
+  private val stateArr: Array[State] = states.toArray
+  private val edgeTable: Array[Vector[Transition]] =
+    stateArr.map(s => edgeMap.getOrElse(s.name, Vector.empty))
+  for (i <- stateArr.indices) stateArr(i).slot = i
+
+  /** `q`'s index in this DST's dense tables, or -1 if it is not ours. */
+  private def slotOf(q: State): Int = {
+    val i = q.slot
+    if (i >= 0 && i < stateArr.length && (stateArr(i) eq q)) i else -1
   }
 
   def startFrom(q: State): Vector[Transition] = {
-    val v = edgeIdx.get(q)
-    if (v != null) v else edgeMap.getOrElse(q.name, Vector.empty)
+    val i = slotOf(q)
+    if (i >= 0) edgeTable(i) else edgeMap.getOrElse(q.name, Vector.empty)
   }
 
   def finalStates: Vector[State] = states.filter(_.out.isDefined)
@@ -377,10 +389,41 @@ final class Dst(
   def accept(conf: Configuration): Boolean =
     conf.lastTake && conf.q.out.isDefined
 
+  /** Per `slot`: can a path of one or more ε edges reach a state with an
+    * output map? Structural (ε predicates are not evaluated), so `false`
+    * is exact: no ε dig from that state can ever accept. Lazy: the
+    * compiler rewrites output maps in place while merging sub-automata,
+    * and only the executed DST ever digs.
+    */
+  @transient private lazy val epsReachesOut: Array[Boolean] =
+    stateArr.map { s0 =>
+      val seen = scala.collection.mutable.HashSet(s0.name)
+      val stack = scala.collection.mutable.Stack(s0)
+      var found = false
+      while (stack.nonEmpty && !found) {
+        startFrom(stack.pop()).foreach { e =>
+          if (e.isEpsilon && !seen.contains(e.q2.name)) {
+            if (e.q2.out.isDefined) found = true
+            seen += e.q2.name; stack.push(e.q2)
+          }
+        }
+      }
+      found
+    }
+
   /** DFS through ε-edges for an accepting configuration, visiting each state
     * at most once (`DST.py:272-292`).
+    *
+    * Two exact shortcuts return `None` without digging: ε edges keep
+    * `lastTake`, so a configuration whose last consuming edge was not a
+    * take can never accept through them; and a state from which no ε
+    * path reaches an output map (`epsReachesOut`) can never accept
+    * through them either.
     */
   def findAccepted(conf: Configuration): Option[Configuration] = {
+    if (!conf.lastTake) return None
+    val i = slotOf(conf.q)
+    if (i >= 0 && !epsReachesOut(i)) return None
     val visited = scala.collection.mutable.HashSet.empty[String]
     def impl(c: Configuration): Option[Configuration] = {
       visited += c.q.name

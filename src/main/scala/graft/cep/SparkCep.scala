@@ -451,8 +451,13 @@ object SparkCep {
     * and output to `matchPattern`, but the partitioning/ordering needs are
     * *declared* (`requiredChildDistribution`/`Ordering`), so the planner
     * inserts the shuffle only when the input isn't already co-partitioned
-    * by key — a pre-partitioned/bucketed input pays only a local sort,
-    * where `matchPattern`'s explicit `repartition` always shuffles.
+    * by key — a pre-partitioned/bucketed input pays only a local sort at
+    * its own partition count, where `matchPattern`'s explicit
+    * `repartition` always shuffles. The partition count is pinned: an
+    * inserted key exchange keeps `spark.sql.shuffle.partitions`
+    * partitions, as with AQE off, because AQE's byte-based coalescing
+    * would put a small but NFA-heavy input into one task. Set that conf
+    * for the cluster.
     * Registers `CepStrategy` on the session idempotently (also installed
     * by `GraftExtensions` via `spark.sql.extensions`).
     */

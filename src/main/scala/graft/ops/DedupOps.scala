@@ -22,11 +22,14 @@ import org.apache.spark.sql.types._
   *
   * Cache contract: the pair-join operators (`ngramJaccardPairs`,
   * `ngramJaccardPairsPrefix`, `minHashLshPairs`, `simHashPairs`) `cache()`
-  * an intermediate that both join sides read; the blocks persist (storage
-  * level spills, never OOMs) until the caller releases them. In a
-  * long-lived session call `spark.catalog.clearCache()` (or unpersist via
-  * the catalog) after materializing the returned frame — the graft bench
-  * does exactly that between queries.
+  * or `persist()` an intermediate that both join sides read. The cache is
+  * lazy — building the returned frame runs no job; its first action fills
+  * the cache. The blocks persist (storage level spills, never OOMs) until
+  * the caller releases them, and lineage stays, so a lost block
+  * recomputes. In a long-lived session call `spark.catalog.clearCache()`
+  * (or unpersist via the catalog) after materializing the returned frame,
+  * or build and consume it inside `CacheScope.withCaches` — the graft
+  * bench does exactly that between queries.
   */
 object DedupOps {
 
@@ -112,16 +115,13 @@ object DedupOps {
           Window.partitionBy(col("sh"))))
           .filter(col("freq") <= maxShingleFreq)
       }
-    // EAGER materialization (round 19), not a lazy cache: AQE materializes
-    // the self-join's broadcast side and probe side CONCURRENTLY, and the
-    // two racing consumers each recomputed the whole shingle+cap chain
-    // against a still-cold cache (ProfileQ: two identical ~8 s stages
-    // writing the same 118k index rows). localCheckpoint(eager) computes
-    // the chain exactly once and both consumers read the stored blocks —
-    // measured 1.7× on the full pair pipeline (JaccardLab v6/v9 vs v0),
-    // value-identical output. Released by the caller like the caches
-    // (CacheScope drops localCheckpoints too).
-    val filtered = capped.localCheckpoint(true)
+    // persisted lazily: the capped shingle index feeds both join sides
+    // and the per-doc counts. Building the frame runs no job, lineage
+    // stays (a lost block recomputes), the cap's Window stays in the plan
+    // under the InMemoryRelation, and `clearCache()`/`CacheScope` release
+    // the blocks. An eager localCheckpoint was within 7% of this at sf0.1
+    // (data/jaccard_pr3_ab.json) but ran a job at build time.
+    val filtered = capped.persist()
     val counts = filtered.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_sh"))
     // freq-1 shingles can never produce a pair (a shared shingle sits in

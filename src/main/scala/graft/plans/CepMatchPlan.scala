@@ -2,12 +2,13 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, Expression, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, HashPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, HashPartitioning, Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.cep.{CepQuery, CepRuntimeWarnings, CepSkewAccumulator, DstCompiler, Event, Executor}
 
@@ -18,13 +19,17 @@ import graft.cep.{CepQuery, CepRuntimeWarnings, CepSkewAccumulator, DstCompiler,
   *
   * Why this beats the typed-operator formulation at scale: the physical
   * node *declares* its needs — `requiredChildDistribution =
-  * ClusteredDistribution(key)` and `requiredChildOrdering = (key, ord)` —
-  * and `EnsureRequirements` inserts the exchange/sort only when the child
+  * ClusteredDistribution(key)` at a pinned partition count and
+  * `requiredChildOrdering = (key, ord)` (`CepChildContract`) — and
+  * `EnsureRequirements` inserts the exchange/sort only when the child
   * doesn't already satisfy them. A manual `repartition(key)` (the
   * `matchPattern` path) always shuffles, even when the input is already
   * hash-partitioned by the key (bucketed source, co-partitioned upstream
-  * stage); this node re-uses that partitioning and pays only a local
-  * sort — pinned by `CepExecSpec`. The NFA loop itself is identical.
+  * stage); this node re-uses that partitioning at its own partition count
+  * and pays only a local sort — pinned by `CepExecSpec`. Otherwise the
+  * exchange keeps `spark.sql.shuffle.partitions` partitions: AQE may not
+  * coalesce it by bytes (`CepExecParallelismSpec`). The NFA loop itself
+  * is identical.
   *
   * Child contract (built by `SparkCep.prepare`): columns
   * `(__key: long, __ord: long, __type: string, attr…: long)`.
@@ -81,16 +86,6 @@ final case class CepMultiMatchPlan(
       : CepMultiMatchPlan = copy(child = newChild)
 }
 
-/** Shared per-row decode of the prepared child contract
-  * `(__key, __ord, __type, attr…)` — ONE implementation for both the
-  * single- and multi-query exec nodes so the decode semantics cannot
-  * drift between them:
-  *  - a null order value has no position in the sequence — fail loudly
-  *    (the typed path NPEs on them; silent getLong-as-0 would corrupt
-  *    match ids);
-  *  - a null type is a non-matching event type (matchPattern
-  *    semantics — it still advances strict contiguity), never an NPE.
-  */
 /** Typed access to the child's key column (ordinal 0) for the exec
   * loops — EXACT for every key type. `read` returns a TRANSIENT value
   * for var-length types (a `UTF8String`/struct view into the child's
@@ -130,7 +125,23 @@ private[plans] object CepKeyAccess {
   }
 }
 
+/** Shared per-row decode of the prepared child contract
+  * `(__key, __ord, __type, attr…)` — ONE implementation for both the
+  * single- and multi-query exec nodes so the decode semantics cannot
+  * drift between them:
+  *  - a null order value has no position in the sequence — fail loudly
+  *    (the typed path NPEs on them; silent getLong-as-0 would corrupt
+  *    match ids);
+  *  - a null type is a non-matching event type (matchPattern
+  *    semantics — it still advances strict contiguity), never an NPE;
+  *  - the order value is always the event's FIRST long attribute
+  *    (`attrs(0)`), so the renderers read a bound event's order id by
+  *    position (`orderId`) instead of a name scan.
+  */
 private[plans] object CepRowDecode {
+  /** The order id of an event built by `decode`. */
+  def orderId(ev: Event): Long = ev.attrs(0)._2
+
   /** `strFlags(i)` marks position `i` as a STRING attribute (round 16
     * type-driven projection, `SparkCep.attrProj`) — decoded into
     * `Event.strs`; everything else stays the long tier. The UTF8String
@@ -167,6 +178,57 @@ private[plans] object CepRowDecode {
         a.name != "__type").toArray
 }
 
+/** The child requirements both CEP exec nodes declare — ONE
+  * implementation, so the single- and multi-query nodes cannot drift.
+  *
+  * Keyed: each key's events co-located, at a PINNED partition count, and
+  * per-key order via an in-partition secondary sort `(key, ord)` (a
+  * global sort is never required). A bare `ClusteredDistribution(key)`
+  * lets AQE size the key exchange by bytes: a prefiltered input of a few
+  * MB coalesces to one partition and the whole NFA runs in one task,
+  * although its cost follows live runs and matches, not bytes. The pin
+  * is the child's own count when the child is already hash-partitioned
+  * on exactly the key (bucketed source, join on the key — reused, no
+  * exchange), else `spark.sql.shuffle.partitions`, the count of the
+  * exchange `EnsureRequirements` inserts anyway. AQE's coalesced read
+  * (`CoalescedHashPartitioning`) then fails the requirement, so the
+  * exchange keeps its full partition count, as with AQE off.
+  *
+  * Global: the reference's single-sequence semantics need every row in
+  * one partition.
+  */
+private[plans] object CepChildContract {
+  def distribution(keyed: Boolean, child: SparkPlan, conf: SQLConf)
+      : Seq[Distribution] =
+    if (!keyed) AllTuples :: Nil
+    else {
+      val key = child.output.head
+      ClusteredDistribution(Seq(key), requiredNumPartitions =
+        Some(keyPartitions(key, child.outputPartitioning, conf))) :: Nil
+    }
+
+  def ordering(keyed: Boolean, child: SparkPlan): Seq[Seq[SortOrder]] =
+    if (keyed)
+      Seq(Seq(SortOrder(child.output.head, Ascending),
+        SortOrder(child.output(1), Ascending)))
+    else Seq(Seq(SortOrder(child.output(1), Ascending)))
+
+  /** A plain hash partitioning on exactly `key`. */
+  def hashOnKey(h: HashPartitioning, key: Expression): Boolean =
+    h.expressions.length == 1 && h.expressions.head.semanticEquals(key)
+
+  /** The pinned partition count for a child partitioned as `p`. */
+  private def keyPartitions(key: Expression, p: Partitioning,
+      conf: SQLConf): Int = {
+    def onKey(q: Partitioning): Boolean = q match {
+      case h: HashPartitioning       => hashOnKey(h, key)
+      case c: PartitioningCollection => c.partitionings.exists(onKey)
+      case _                         => false
+    }
+    if (onKey(p)) p.numPartitions else conf.numShufflePartitions
+  }
+}
+
 final case class CepMatchExec(
     query: CepQuery,
     keyed: Boolean,
@@ -178,22 +240,12 @@ final case class CepMatchExec(
     output: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
 
-  /** Keyed: each key's events co-located (any hash partitioning on the
-    * key satisfies it — no forced re-shuffle). Global: the reference's
-    * single-sequence semantics need every row in one partition.
-    */
+  /** See `CepChildContract`. */
   override def requiredChildDistribution: Seq[Distribution] =
-    if (keyed) ClusteredDistribution(Seq(child.output.head)) :: Nil
-    else AllTuples :: Nil
+    CepChildContract.distribution(keyed, child, conf)
 
-  /** Per-key arrival order via in-partition secondary sort (a global sort
-    * is never required).
-    */
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    if (keyed)
-      Seq(Seq(SortOrder(child.output.head, Ascending),
-        SortOrder(child.output(1), Ascending)))
-    else Seq(Seq(SortOrder(child.output(1), Ascending)))
+    CepChildContract.ordering(keyed, child)
 
   /** Matches stay partitioned by key — but the claim must be expressed in
     * *our* output attribute (the child's `__key` is not visible above this
@@ -206,8 +258,7 @@ final case class CepMatchExec(
   override def outputPartitioning: Partitioning =
     child.outputPartitioning match {
       case h: HashPartitioning
-          if keyed && h.expressions.length == 1 &&
-            h.expressions.head.semanticEquals(child.output.head) =>
+          if keyed && CepChildContract.hashOnKey(h, child.output.head) =>
         HashPartitioning(Seq(output.head), h.numPartitions)
       case p if !keyed => p // single partition either way
       case p => UnknownPartitioning(p.numPartitions)
@@ -287,7 +338,9 @@ final case class CepMatchExec(
             val ids = byName.getOrElse(names(j), Vector.empty)
             val arr = new Array[Long](ids.length)
             var e = 0
-            while (e < arr.length) { arr(e) = ids(e)(oName); e += 1 }
+            while (e < arr.length) {
+              arr(e) = CepRowDecode.orderId(ids(e)); e += 1
+            }
             vals(j + 1) = new GenericArrayData(arr)
             j += 1
           }
@@ -325,15 +378,12 @@ final case class CepMultiMatchExec(
     output: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
 
+  /** See `CepChildContract`. */
   override def requiredChildDistribution: Seq[Distribution] =
-    if (keyed) ClusteredDistribution(Seq(child.output.head)) :: Nil
-    else AllTuples :: Nil
+    CepChildContract.distribution(keyed, child, conf)
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    if (keyed)
-      Seq(Seq(SortOrder(child.output.head, Ascending),
-        SortOrder(child.output(1), Ascending)))
-    else Seq(Seq(SortOrder(child.output(1), Ascending)))
+    CepChildContract.ordering(keyed, child)
 
   /** Key-partitioned in, key-partitioned out — but the output key is
     * column 1 (qname leads), so the rewrite targets `output(1)`.
@@ -341,8 +391,7 @@ final case class CepMultiMatchExec(
   override def outputPartitioning: Partitioning =
     child.outputPartitioning match {
       case h: HashPartitioning
-          if keyed && h.expressions.length == 1 &&
-            h.expressions.head.semanticEquals(child.output.head) =>
+          if keyed && CepChildContract.hashOnKey(h, child.output.head) =>
         HashPartitioning(Seq(output(1)), h.numPartitions)
       case p if !keyed => p
       case p => UnknownPartitioning(p.numPartitions)
@@ -456,7 +505,7 @@ final case class CepMultiMatchExec(
                   var e = 0
                   while (e < evs.length) {
                     if (e > 0) sb.append(',')
-                    sb.append(evs(e)(oName))
+                    sb.append(CepRowDecode.orderId(evs(e)))
                     e += 1
                   }
                   i = m.length

@@ -19,13 +19,17 @@ import org.apache.spark.sql.types.StructType
   */
 object EventSource {
 
-  /** Parquet scan. NOTE the deliberate session-wide side effect: this sets
-    * `spark.sql.legacy.parquet.nanosAsLong=true` on the session (there is
-    * no per-reader option for it), so a timestamp[ns] column reads as long
-    * in *every* subsequent parquet read of the session rather than failing
-    * the scan. The current fixtures carry timestamp[us] (TIMESTAMP_NTZ) —
-    * for those the flag is a no-op; it exists to keep a ns-typed fixture
-    * readable (the physical type has drifted between driver rounds).
+  /** Parquet scan.
+    *
+    * Session contract: every call sets
+    * `spark.sql.legacy.parquet.nanosAsLong=true` on the CALLER's session
+    * (there is no per-reader option for it) and never resets it, so a
+    * timestamp[ns] column reads as long in every other parquet read of
+    * that session too — this reader's and any other — rather than
+    * failing the scan. The current fixtures carry timestamp[us]
+    * (TIMESTAMP_NTZ); for those the flag is a no-op. It exists to keep a
+    * ns-typed fixture readable (the physical type has drifted between
+    * fixture versions). `graft.Queries.table` sets the same conf.
     * Consumers that do event-time arithmetic should normalize through
     * `graft.Queries.normalizeTs` (canonical long epoch micros).
     */
