@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * `.withExtensions(new GraftExtensions)`): after that
   * `SELECT polyhash(text, 31)` works from plain SQL and views (fully
   * codegen'd), and the planner lowers `graft.plans.CepMatchPlan` nodes
-  * (the `SparkCep.matchPatternExec` path, which also self-registers the
-  * strategy per session for extension-less setups).
+  * (every batch `SparkCep` CEP entry point, each of which also
+  * self-registers the strategy per session for extension-less setups).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

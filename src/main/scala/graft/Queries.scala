@@ -3026,11 +3026,13 @@ object Queries {
     * correctness gate, not just in specs.
     */
   def cepShedGauge(spark: SparkSession, dir: String): DataFrame =
-    SparkCep.shedGauge(table(spark, dir, "events"),
-      CepQuery(Pattern.lpat("a", "click", "True", Contiguity.NdRelaxed,
-        2, 2), eventSchema),
+    SparkCep.shedGauge(table(spark, dir, "events"), cepShedGaugeQuery,
       eventSpec, cap = 1)
       .orderBy("user_id")
+
+  val cepShedGaugeQuery: CepQuery =
+    CepQuery(Pattern.lpat("a", "click", "True", Contiguity.NdRelaxed,
+      2, 2), eventSchema)
 
   val cepShedGaugeSql: String =
     """SELECT user_id,
@@ -3058,14 +3060,16 @@ object Queries {
   def cepTimeoutAbandonedSignups(spark: SparkSession, dir: String)
       : DataFrame =
     SparkCep.timedOutPartials(table(spark, dir, "events"),
-      CepQuery(
-        Pattern.Combine(Contiguity.Relaxed,
-          Pattern.spat("s", "signup", "True"),
-          Pattern.spat("p", "purchase", "True")),
-        eventSchema, within = Some(6)),
-      eventSpec)
+      cepTimeoutAbandonedSignupsQuery, eventSpec)
       .select(col("user_id"), element_at(col("s"), 1).as("s_id"))
       .orderBy("user_id", "s_id")
+
+  val cepTimeoutAbandonedSignupsQuery: CepQuery =
+    CepQuery(
+      Pattern.Combine(Contiguity.Relaxed,
+        Pattern.spat("s", "signup", "True"),
+        Pattern.spat("p", "purchase", "True")),
+      eventSchema, within = Some(6))
 
   val cepTimeoutAbandonedSignupsSql: String =
     """WITH seqd AS (

@@ -1664,7 +1664,7 @@ object CepMeasures {
     *
     * The shared frame is MATERIALIZED ONCE before the per-member slices
     * are built: without that, each returned frame carries its own copy
-    * of the full `CepMultiMatchExec` subtree, and although ReuseExchange
+    * of the full shared `CepMatchExec` subtree, and although ReuseExchange
     * dedupes the scan and key shuffle below the operator, the NFA sweep
     * itself re-runs k times — each time matching all k patterns —
     * asymptotically worse than k solo passes. With a [[graft.ops

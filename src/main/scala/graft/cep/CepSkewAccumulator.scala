@@ -15,7 +15,8 @@ import org.apache.spark.util.AccumulatorV2
   * Usage:
   * {{{
   *   val skew = CepSkewAccumulator.registered(spark, "cep_skew")
-  *   val out = SparkCep.matchPattern(df, query, spec, skewAcc = Some(skew))
+  *   val out = SparkCep.matchPatternExec(df, query, spec,
+  *     skewAcc = Some(skew))
   *   out.count() // any action
   *   skew.value  // Stats(maxRuns, hottestKey, events)
   * }}}

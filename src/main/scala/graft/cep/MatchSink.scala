@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.ArrayType
   *  - in-memory `Match` streams → the reference's display formats
   *    (fancy per-line / Python-dict repr), used by `RunTestcase` to emit
   *    `<name>.txt` / `<name>.yml` / CSV rows;
-  *  - match `DataFrame`s (from `SparkCep.matchPattern`) → distributed
+  *  - match `DataFrame`s (from `SparkCep.matchPatternExec`) → distributed
   *    CSV / JSON(lines) / Parquet sinks via Spark's writers (scale path:
   *    the sink inherits the frame's partitioning — no collect).
   */

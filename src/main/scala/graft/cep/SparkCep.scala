@@ -1,25 +1,31 @@
 package graft.cep
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.{CepEmission, CepMatchPlan, CepMember}
+
 /** DataFrame-level CEP: apply a pattern query to an event table.
   *
-  * Scale design (SURVEY.md §3 target lifecycle): one shuffle to co-locate
-  * each key's events (`repartition(key)`), in-partition secondary sort
-  * `(key, order)`, then a *streaming* `mapPartitions` that feeds each key's
-  * events through the NFA as they arrive — per-task memory is bounded by NFA
-  * state (live runs), never by group size, so the operator survives keys with
-  * millions of events as long as the pattern's run-set stays bounded (strict
-  * contiguity / until / skip strategies). The un-keyed variant reproduces the
-  * reference's single global sequence semantics and is inherently
-  * single-partition — use keys at scale.
+  * Scale design (SURVEY.md §3 target lifecycle): every batch entry point
+  * plans one Catalyst node (`graft.plans.CepMatchPlan`) over the prepared
+  * frame. It declares its child contract — each key's events co-located
+  * at a pinned partition count, sorted `(key, order)` within the
+  * partition — so the planner inserts one key exchange only when the
+  * input is not already partitioned by the key. The node then feeds each
+  * key's events through the NFA as they arrive: per-task memory is
+  * bounded by NFA state (live runs), never by group size, so the operator
+  * survives keys with millions of events as long as the pattern's run-set
+  * stays bounded (strict contiguity / until / skip strategies). The
+  * un-keyed variant reproduces the reference's single global sequence
+  * semantics and is inherently single-partition — use keys at scale.
   *
-  * Output: one row per match — key column plus one `array<bigint>` column
-  * per pattern name, holding the order-column values of the bound events
-  * (lean id-based bindings; join back to the event table for payloads
-  * instead of duplicating them into every match).
+  * Match output (`matchPatternExec`): one row per match — key column plus
+  * one `array<bigint>` column per pattern name, holding the order-column
+  * values of the bound events (lean id-based bindings; join back to the
+  * event table for payloads instead of duplicating them into every
+  * match).
   */
 object SparkCep {
 
@@ -171,8 +177,8 @@ object SparkCep {
     * DEFINE equality/IN conditions and FIRST/LAST measures; every
     * other type keeps the reference's integer model (cast to long,
     * truncating). The projected frame's own schema is the contract the
-    * row→Event decoders read (`decodeEvent`/`CepRowDecode`), so the
-    * typing cannot drift between formulations. (Before round 16 a
+    * row→Event decoders read (`CepRowDecode`, `StreamingCep`), so the
+    * typing cannot drift between operators. (Before round 16 a
     * string attr column was cast to long — all-NULL — so no green
     * query can have depended on the old behavior.)
     */
@@ -189,32 +195,6 @@ object SparkCep {
     prepared.schema.fields.map(f =>
       f.dataType == StringType && f.name != "__type")
 
-  /** Row→Event decode over a prepared frame: order at 1, type at 2,
-    * attrs from 3 (string positions per `flags` land in `Event.strs`).
-    * Shared by the typed batch operators; the Catalyst exec mirrors it
-    * in `CepRowDecode` (InternalRow).
-    */
-  private[cep] def decodeEvent(row: org.apache.spark.sql.Row,
-      attrNames: Vector[String], orderName: String,
-      flags: Array[Boolean]): Event = {
-    val attrs = Vector.newBuilder[(String, Long)]
-    var strs: scala.collection.mutable.Builder[(String, String),
-      Vector[(String, String)]] = null
-    attrs += orderName -> row.getLong(1)
-    var i = 3
-    while (i < row.length) {
-      if (!row.isNullAt(i)) {
-        if (flags(i)) {
-          if (strs == null) strs = Vector.newBuilder
-          strs += attrNames(i - 2) -> row.getString(i)
-        } else attrs += attrNames(i - 2) -> row.getLong(i)
-      }
-      i += 1
-    }
-    Event(row.getString(2), attrs.result(),
-      if (strs == null) Vector.empty else strs.result())
-  }
-
   /** The shed valve's telemetry AS DATA: run `query` per key with the
     * shed-oldest salvage at `cap` live runs and emit ONE ROW PER KEY —
     * `(key, n_matches, shed_runs, cap)` — instead of the matches. This
@@ -230,55 +210,17 @@ object SparkCep {
     * — including the transient post-accept configurations that sit in
     * the run set until the next event sweeps them, which is precisely
     * why the gauge (not intuition about "live" runs) is the thing to
-    * monitor. Same distribution contract as `matchPattern` (one shuffle
-    * by key, in-partition sort by order).
+    * monitor. Same operator and distribution contract as
+    * `matchPatternExec`; a key's row comes out at its last event.
     */
   def shedGauge(df: DataFrame, query: CepQuery, spec: CepSpec,
       cap: Int): DataFrame = {
     require(cap > 0 && cap != Int.MaxValue,
       s"shedGauge cap must be a positive live-run bound, got $cap")
-    val keyName = spec.keyCol.getOrElse("__global")
     checkWithinStateBound(query, Some(-cap), streaming = false)
     val (prepared, attrNames) = prepare(df, query, spec)
-    val parted = spec.keyCol match {
-      case Some(_) =>
-        prepared.repartition(col("__key"))
-          .sortWithinPartitions(col("__key"), col("__ord"))
-      case None =>
-        prepared.repartition(1).sortWithinPartitions(col("__ord"))
-    }
-    val outSchema = StructType(Seq(
-      StructField(keyName, keyType(df, spec), nullable = false),
-      StructField("n_matches", LongType, nullable = false),
-      StructField("shed_runs", LongType, nullable = false),
-      StructField("cap", LongType, nullable = false)))
-    val orderName = attrNames.head
-    val strFlags = strAttrFlags(parted)
-    val out = parted.mapPartitions { rows =>
-      val executor = new Executor(DstCompiler.compile(query),
-        query.strategy, Some(-cap), query.within, query.withinTime,
-        anchorStart = query.anchorStart, anchorEnd = query.anchorEnd)
-      val br = rows.buffered
-      new Iterator[Row] {
-        def hasNext: Boolean = br.hasNext
-        def next(): Row = {
-          // external Rows are fresh objects — generic key equality is
-          // exact for every key type (long, string, struct)
-          val key = br.head.get(0)
-          executor.reset()
-          var n = 0L
-          while (br.hasNext && br.head.get(0) == key) {
-            val row = br.next()
-            val isLast = !(br.hasNext && br.head.get(0) == key)
-            n += executor.feed(
-              decodeEvent(row, attrNames, orderName, strFlags),
-              isLast).size
-          }
-          Row(key, n, executor.shedCount, cap.toLong)
-        }
-      }
-    }(Encoders.row(outSchema))
-    if (spec.keyCol.isEmpty) out.drop(keyName) else out
+    cepExec(df, spec, prepared, attrNames, single(query),
+      CepEmission.ShedGauge(cap), Some(-cap), None)
   }
 
   /** The TIMEOUT side output (beyond-parity — FlinkCEP's
@@ -286,7 +228,7 @@ object SparkCep {
     * partial runs whose `within`/`withinTime` window provably closed
     * without completing — the funnel-drop-off question ("signups that
     * never purchased inside the window") as a first-class relational
-    * result. Same output shape as `matchPattern` (key + one
+    * result. Same output shape as `matchPatternExec` (key + one
     * `array<bigint>` of order-ids per pattern name; names the partial
     * never bound are empty arrays), so downstream joins/aggregations
     * compose identically.
@@ -305,8 +247,6 @@ object SparkCep {
     require(query.within.isDefined || query.withinTime.isDefined,
       "timedOutPartials needs a windowed query (within/withinTime) — " +
         "an unwindowed run never times out")
-    val piNames = patternNames(query.patseq)
-    val keyName = spec.keyCol.getOrElse("__global")
     checkWithinStateBound(query, maxRunsPerKey, streaming = false)
     val effMaxRuns = resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
     // NO pre-NFA filter here, ever: the timeout OUTPUT observes sweep
@@ -318,170 +258,45 @@ object SparkCep {
     checkStrTyping(df, query, spec)
     val (prepared, attrNames) =
       prepareWithFilter(df, None, spec, Nav.ofQuery(query))
-    val parted = spec.keyCol match {
-      case Some(_) =>
-        prepared.repartition(col("__key"))
-          .sortWithinPartitions(col("__key"), col("__ord"))
-      case None =>
-        prepared.repartition(1).sortWithinPartitions(col("__ord"))
-    }
-    val outSchema = StructType(
-      StructField(keyName, keyType(df, spec), nullable = false) +:
-        piNames.map(n =>
-          StructField(n, ArrayType(LongType, containsNull = false),
-            nullable = false)))
-    val orderName = attrNames.head
-    val strFlags = strAttrFlags(parted)
-    val out = parted.mapPartitions { rows =>
-      // NOTE: the 1-arg feed is correct here even under `anchorEnd` —
-      // the matches are discarded (only the timeout side output is
-      // kept), and with emission suppressed the skip strategy never
-      // prunes mid-partition, exactly the `$` semantics.
-      val executor = new Executor(DstCompiler.compile(query),
-        query.strategy, effMaxRuns, query.within, query.withinTime,
-        captureTimeouts = true,
-        anchorStart = query.anchorStart, anchorEnd = query.anchorEnd)
-      var curKey: Any = null
-      var started = false
-      rows.flatMap { row =>
-        val key = row.get(0)
-        if (!started || key != curKey) {
-          executor.reset(); curKey = key; started = true
-        }
-        executor.feed(decodeEvent(row, attrNames, orderName, strFlags))
-        executor.drainTimedOut().map { conf =>
-          Row.fromSeq(key +: executor.partialOutput(conf, piNames)
-            .map(_._2.map(_(orderName))))
-        }
-      }
-    }(Encoders.row(outSchema))
-    if (spec.keyCol.isEmpty) out.drop(keyName) else out
+    cepExec(df, spec, prepared, attrNames, single(query),
+      CepEmission.Timeouts, effMaxRuns, None)
   }
 
-  /** Typed-operator formulation of the CEP match — the Catalyst-planned
-    * `matchPatternExec` is the faster default (both carry the skew
-    * gauge); this one backs the streaming state codec and serves as the
-    * differential baseline.
-    *
-    * @param maxRunsPerKey hard valve: fail the task if any key's live-run
-    *   set exceeds the cap (state explosion beats a silent OOM)
-    * @param skewAcc optional gauge: records max live-run count, the key it
-    *   occurred on, and total events fed — read it driver-side after an
-    *   action to find pathological keys before they hit the valve
-    */
-  def matchPattern(df: DataFrame, query: CepQuery, spec: CepSpec,
-      maxRunsPerKey: Option[Int] = None,
-      skewAcc: Option[CepSkewAccumulator] = None): DataFrame = {
-    val piNames = patternNames(query.patseq)
-    val keyName = spec.keyCol.getOrElse("__global")
-    checkWithinStateBound(query, maxRunsPerKey, streaming = false)
-    val effMaxRuns = resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
-    val (prepared, attrNames) = prepare(df, query, spec)
-
-    val parted = spec.keyCol match {
-      case Some(_) =>
-        prepared.repartition(col("__key"))
-          .sortWithinPartitions(col("__key"), col("__ord"))
-      case None =>
-        prepared.repartition(1).sortWithinPartitions(col("__ord"))
-    }
-
-    val outSchema = StructType(
-      StructField(keyName, keyType(df, spec), nullable = false) +:
-        piNames.map(n =>
-          StructField(n, ArrayType(LongType, containsNull = false),
-            nullable = false))
-    )
-    val orderName = attrNames.head
-    val strFlags = strAttrFlags(parted)
-
-    // unkeyed = every row in one task; the guard makes a table-scale feed
-    // loud instead of silently serial (see CepRuntimeWarnings)
-    val unkeyedWarnRows: Long =
-      if (spec.keyCol.isDefined) Long.MaxValue
-      else df.sparkSession.conf.get(CepRuntimeWarnings.UnkeyedWarnRowsKey,
-        CepRuntimeWarnings.UnkeyedWarnRowsDefault.toString).toLong
-    val out = parted.mapPartitions { rows0 =>
-      val executor =
-        new Executor(DstCompiler.compile(query), query.strategy, effMaxRuns,
-          query.within, query.withinTime,
-          anchorStart = query.anchorStart, anchorEnd = query.anchorEnd)
-      // `$` needs the last-event-of-key flag: one-element lookahead
-      // (typed Rows are fresh objects per record — peeking is safe)
-      val rows = rows0.buffered
-      val needLast = query.anchorEnd
-      // resolve the optional gauge once per task: the per-event cost when
-      // disabled is a single null check, not an Option dispatch + closure
-      val acc = skewAcc.orNull
-      val guard = new CepRuntimeWarnings.UnkeyedCounter(unkeyedWarnRows)
-      var curKey: Any = null
-      var started = false
-      var prevShed = 0L
-      rows.flatMap { row =>
-        guard.tick()
-        // generic (boxed) key: exact equality for every key type —
-        // external Rows hold fresh objects, so no copy is needed
-        val key = row.get(0)
-        if (!started || key != curKey) {
-          executor.reset(); prevShed = 0L; curKey = key; started = true
-        }
-        val ev = decodeEvent(row, attrNames, orderName, strFlags)
-        val isLast = needLast &&
-          (!rows.hasNext || rows.head.get(0) != key)
-        val matches = executor.feed(ev, isLast)
-        if (acc != null) {
-          acc.add((keyGaugeId(key), executor.runCount.toLong))
-          val sc = executor.shedCount
-          if (sc != prevShed) { acc.addShed(sc - prevShed); prevShed = sc }
-        }
-        matches.map { m =>
-          val byName = m.toMap
-          Row.fromSeq(
-            key +: piNames.map(n =>
-              byName.getOrElse(n, Vector.empty).map(_(orderName))))
-        }
-      }
-    }(Encoders.row(outSchema))
-
-    if (spec.keyCol.isEmpty) out.drop(keyName) else out
-  }
-
-  /** The CEP operator as a first-class Catalyst plan (`graft.plans.
-    * CepMatchPlan` + `CepStrategy` + `CepMatchExec`): identical semantics
-    * and output to `matchPattern`, but the partitioning/ordering needs are
+  /** The CEP match as a first-class Catalyst plan (`graft.plans.
+    * CepMatchPlan` + `CepStrategy` + `CepMatchExec`): one row per match
+    * (see the object header). The partitioning/ordering needs are
     * *declared* (`requiredChildDistribution`/`Ordering`), so the planner
     * inserts the shuffle only when the input isn't already co-partitioned
     * by key — a pre-partitioned/bucketed input pays only a local sort at
-    * its own partition count, where `matchPattern`'s explicit
-    * `repartition` always shuffles. The partition count is pinned: an
+    * its own partition count. The partition count is pinned: an
     * inserted key exchange keeps `spark.sql.shuffle.partitions`
     * partitions, as with AQE off, because AQE's byte-based coalescing
     * would put a small but NFA-heavy input into one task. Set that conf
     * for the cluster.
     * Registers `CepStrategy` on the session idempotently (also installed
     * by `GraftExtensions` via `spark.sql.extensions`).
+    *
+    * {{{
+    *   val skew = CepSkewAccumulator.registered(spark, "cep_skew")
+    *   val out = SparkCep.matchPatternExec(df, query, spec,
+    *     maxRunsPerKey = Some(10000), skewAcc = Some(skew))
+    * }}}
+    *
+    * @param maxRunsPerKey hard valve: fail the task if any key's live-run
+    *   set exceeds the cap (state explosion beats a silent OOM); a
+    *   negative cap sheds the oldest runs instead
+    * @param skewAcc optional gauge: records max live-run count, the key it
+    *   occurred on, and total events fed — read it driver-side after an
+    *   action to find pathological keys before they hit the valve
     */
   def matchPatternExec(df: DataFrame, query: CepQuery, spec: CepSpec,
       maxRunsPerKey: Option[Int] = None,
       skewAcc: Option[CepSkewAccumulator] = None): DataFrame = {
-    import org.apache.spark.sql.graftbridge.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    val piNames = patternNames(query.patseq)
-    val keyName = spec.keyCol.getOrElse("__global")
     checkWithinStateBound(query, maxRunsPerKey, streaming = false)
     val effMaxRuns = resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
     val (prepared, attrNames) = prepare(df, query, spec)
-    val spark = df.sparkSession
-    GraftColumnBridge.addStrategy(spark, graft.plans.CepStrategy)
-    val output =
-      AttributeReference(keyName, keyType(df, spec), nullable = false)() +:
-        piNames.map(n => AttributeReference(n,
-          ArrayType(LongType, containsNull = false), nullable = false)())
-    val plan = graft.plans.CepMatchPlan(query, spec.keyCol.isDefined,
-      piNames, attrNames.head, attrNames, effMaxRuns, skewAcc, output,
-      prepared.queryExecution.analyzed)
-    val out = GraftColumnBridge.ofRows(spark, plan)
-    if (spec.keyCol.isEmpty) out.drop(keyName) else out
+    cepExec(df, spec, prepared, attrNames, single(query),
+      CepEmission.OrderIds, effMaxRuns, skewAcc)
   }
 
   /** Multi-query shared-scan CEP: run `queries` (name → pattern) over ONE
@@ -506,11 +321,9 @@ object SparkCep {
     * `binding` = the bound order-ids, `','`-joined within a pattern
     * component and `';'`-joined across components in declared order.
     *
-    * Physical form: the same Catalyst-planned operator family as the
-    * single-pattern path (`CepMultiMatchPlan`/`CepStrategy`/
-    * `CepMultiMatchExec`) — InternalRow end-to-end with declared
-    * distribution/ordering, shedding the external-Row per-event cost the
-    * typed formulation paid (4-8× on the scale probes, BENCH.md r3).
+    * Physical form: the same Catalyst node as the single-pattern path
+    * (`CepMatchPlan`/`CepStrategy`/`CepMatchExec`), with one member per
+    * query — InternalRow end-to-end with declared distribution/ordering.
     * Skew gauge: `skewAcc.add` fires ONCE per event with the MAX live-run
     * count across the member DSTs (the hottest pattern on that key), so
     * `Stats.events` counts events fed — not (event × query) — and
@@ -519,10 +332,7 @@ object SparkCep {
   def matchPatternsShared(df: DataFrame, queries: Seq[(String, CepQuery)],
       spec: CepSpec, maxRunsPerKey: Option[Int] = None,
       skewAcc: Option[CepSkewAccumulator] = None): DataFrame = {
-    import org.apache.spark.sql.graftbridge.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
     require(queries.nonEmpty, "matchPatternsShared needs >= 1 query")
-    val keyName = spec.keyCol.getOrElse("__global")
     queries.foreach { case (_, q) =>
       checkWithinStateBound(q, maxRunsPerKey, streaming = false)
     }
@@ -536,16 +346,34 @@ object SparkCep {
       prepareWithFilter(df, unionPrefilter(queries, spec), spec,
         queries.flatMap { case (_, q) => Nav.ofQuery(q) }
           .distinct.sortBy(_.valueName))
+    cepExec(df, spec, prepared, attrNames,
+      queries.map { case (n, q) =>
+        CepMember(n, q, memberFeedTypes(q, spec).orNull)
+      },
+      CepEmission.Bindings, effMaxRuns, skewAcc)
+  }
+
+  /** A single-query entry point's one member, fed every event. */
+  private def single(query: CepQuery): Seq[CepMember] =
+    Seq(CepMember("", query, null))
+
+  /** The tail every batch entry point shares: plan `members` over the
+    * prepared frame as one `CepMatchPlan` node rendered as `emission`,
+    * and drop the `__global` key column of an unkeyed spec.
+    */
+  private def cepExec(df: DataFrame, spec: CepSpec, prepared: DataFrame,
+      attrNames: Vector[String], members: Seq[CepMember],
+      emission: CepEmission, maxRuns: Option[Int],
+      skewAcc: Option[CepSkewAccumulator]): DataFrame = {
+    import org.apache.spark.sql.graftbridge.GraftColumnBridge
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    val keyName = spec.keyCol.getOrElse("__global")
     val spark = df.sparkSession
     GraftColumnBridge.addStrategy(spark, graft.plans.CepStrategy)
-    val output = Seq(
-      AttributeReference("qname", StringType, nullable = false)(),
-      AttributeReference(keyName, keyType(df, spec), nullable = false)(),
-      AttributeReference("binding", StringType, nullable = false)())
-    val plan = graft.plans.CepMultiMatchPlan(queries.toVector,
-      queries.map { case (_, q) => memberFeedTypes(q, spec) }.toVector,
-      spec.keyCol.isDefined, attrNames.head, attrNames, effMaxRuns,
-      skewAcc, output, prepared.queryExecution.analyzed)
+    val key = AttributeReference(keyName, keyType(df, spec), nullable = false)()
+    val plan = CepMatchPlan(members.toVector, emission, spec.keyCol.isDefined,
+      attrNames, maxRuns, skewAcc, emission.output(key, members),
+      prepared.queryExecution.analyzed)
     val out = GraftColumnBridge.ofRows(spark, plan)
     if (spec.keyCol.isEmpty) out.drop(keyName) else out
   }
@@ -580,13 +408,6 @@ object SparkCep {
       : Option[Set[String]] =
     prefilter(query, spec).map(_ => alphabet(unwrapGpat(query.patseq)))
 
-  /** The `within`-caveat contract, enforced at operator construction
-    * (driver side, once): when a window is set on a pattern whose runs
-    * can persist without taking (`Dst.hasUntakenIgnorePrefix` — see the
-    * refutation there for why such runs cannot be pruned), the window
-    * does NOT bound state. Streaming runs unbounded input, so there the
-    * valve is REQUIRED; batch terminates, so it warns loudly instead.
-    */
   /** Default per-key state valve for UNBOUNDED-loop patterns
     * (`lpat-inf`/`gpat-inf`), the skew mitigation the gauge
     * (`CepSkewAccumulator`) pointed at but nothing acted on: a hot key
@@ -638,6 +459,14 @@ object SparkCep {
       }
     }
 
+  /** The `within`-caveat contract, enforced at operator construction
+    * (driver side, once): when a window is set on a pattern whose runs
+    * can persist without taking (`Dst.hasUntakenIgnorePrefix` — see the
+    * refutation there for why such runs cannot be pruned), the window
+    * does NOT bound state. Streaming runs unbounded input, so there the
+    * valve is REQUIRED; batch terminates, so it warns loudly instead.
+    * Also rejects the batch-only `$` anchor on streaming entry points.
+    */
   private[cep] def checkWithinStateBound(query: CepQuery,
       maxRuns: Option[Int], streaming: Boolean): Unit = {
     // `$` is batch-only: an unbounded stream has no partition end, so

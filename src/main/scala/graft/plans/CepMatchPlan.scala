@@ -2,43 +2,46 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, Expression, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, HashPartitioning, Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.cep.{CepQuery, CepRuntimeWarnings, CepSkewAccumulator, DstCompiler, Event, Executor}
+import graft.cep.{CepQuery, CepRuntimeWarnings, CepSkewAccumulator, DstCompiler, Event, Executor, Match, Pattern}
 
 /** The CEP pattern-match operator as a first-class Catalyst plan — the
   * prompt's extension path (c): a custom `LogicalPlan` + `SparkStrategy` +
-  * `SparkPlan`, planned through the session's planner instead of a
-  * `mapPartitions` lambda.
+  * `SparkPlan`, planned through the session's planner. Every batch entry
+  * point (`SparkCep.matchPatternExec`, `matchPatternsShared`,
+  * `timedOutPartials`, `shedGauge`) is this one node: a list of member
+  * queries fed side by side in one key-grouped loop, and an emission
+  * (`CepEmission`) that fixes what the node outputs.
   *
-  * Why this beats the typed-operator formulation at scale: the physical
-  * node *declares* its needs — `requiredChildDistribution =
+  * The physical node *declares* its needs — `requiredChildDistribution =
   * ClusteredDistribution(key)` at a pinned partition count and
   * `requiredChildOrdering = (key, ord)` (`CepChildContract`) — and
   * `EnsureRequirements` inserts the exchange/sort only when the child
-  * doesn't already satisfy them. A manual `repartition(key)` (the
-  * `matchPattern` path) always shuffles, even when the input is already
-  * hash-partitioned by the key (bucketed source, co-partitioned upstream
-  * stage); this node re-uses that partitioning at its own partition count
-  * and pays only a local sort — pinned by `CepExecSpec`. Otherwise the
-  * exchange keeps `spark.sql.shuffle.partitions` partitions: AQE may not
-  * coalesce it by bytes (`CepExecParallelismSpec`). The NFA loop itself
-  * is identical.
+  * doesn't already satisfy them. Input already hash-partitioned by the
+  * key (bucketed source, co-partitioned upstream stage) is re-used at its
+  * own partition count and pays only a local sort — pinned by
+  * `CepExecSpec`. Otherwise the exchange keeps
+  * `spark.sql.shuffle.partitions` partitions: AQE may not coalesce it by
+  * bytes (`CepExecParallelismSpec`).
   *
-  * Child contract (built by `SparkCep.prepare`): columns
-  * `(__key: long, __ord: long, __type: string, attr…: long)`.
+  * Child contract (built by `SparkCep.prepareWithFilter`): columns
+  * `(__key, __ord: long, __type: string, attr…)`. The key may be of any
+  * type (`SparkCep.keyExpr`); each attr is a long or a string
+  * (`SparkCep.attrProj`).
   */
-final case class CepMatchPlan(
-    query: CepQuery,
+private[graft] final case class CepMatchPlan(
+    members: Vector[CepMember],
+    emission: CepEmission,
     keyed: Boolean,
-    piNames: Seq[String],
-    orderName: String,
     attrNames: Seq[String],
     maxRunsPerKey: Option[Int],
     skewAcc: Option[CepSkewAccumulator],
@@ -52,42 +55,73 @@ final case class CepMatchPlan(
       : CepMatchPlan = copy(child = newChild)
 }
 
-/** Planner rule: lower the logical CEP nodes to their physical operators. */
+/** Planner rule: lower the logical CEP node to its physical operator. */
 object CepStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: CepMatchPlan =>
-      CepMatchExec(p.query, p.keyed, p.piNames, p.orderName, p.attrNames,
+      CepMatchExec(p.members, p.emission, p.keyed, p.attrNames,
         p.maxRunsPerKey, p.skewAcc, p.output, planLater(p.child)) :: Nil
-    case p: CepMultiMatchPlan =>
-      CepMultiMatchExec(p.queries, p.feedTypes, p.keyed, p.orderName,
-        p.attrNames, p.maxRunsPerKey, p.skewAcc, p.output,
-        planLater(p.child)) :: Nil
     case _ => Nil
   }
 }
 
-/** Multi-query shared-scan CEP as a logical node: k patterns over one
-  * prepared child (one scan, one union filter upstream), lowered to
-  * `CepMultiMatchExec`. Same child contract as `CepMatchPlan`.
+/** One query the CEP operator runs: `name` labels its rows in the
+  * `Bindings` emission, and `gate` is the set of event types it is fed
+  * (`SparkCep.memberFeedTypes`); `null` feeds it every event.
   */
-final case class CepMultiMatchPlan(
-    queries: Vector[(String, CepQuery)],
-    feedTypes: Vector[Option[Set[String]]],
-    keyed: Boolean,
-    orderName: String,
-    attrNames: Seq[String],
-    maxRunsPerKey: Option[Int],
-    skewAcc: Option[CepSkewAccumulator],
-    output: Seq[Attribute],
-    child: LogicalPlan) extends UnaryNode {
-  override def references: AttributeSet = AttributeSet(child.output)
-  override def producedAttributes: AttributeSet = outputSet
-  override protected def withNewChildInternal(newChild: LogicalPlan)
-      : CepMultiMatchPlan = copy(child = newChild)
+private[graft] final case class CepMember(name: String, query: CepQuery,
+    gate: Set[String])
+
+/** What the CEP operator emits. Each case fixes the node's output shape
+  * (`output`) and the output column that holds the key (`keyIndex`).
+  */
+private[graft] sealed trait CepEmission {
+  def keyIndex: Int = 0
+
+  /** Unless a case says otherwise: the key, then one `array<bigint>` of
+    * bound order ids per pattern name of the single member.
+    */
+  def output(key: Attribute, members: Seq[CepMember]): Seq[Attribute] =
+    key +: Pattern.names(members.head.query.patseq).map(n =>
+      AttributeReference(n, ArrayType(LongType, containsNull = false),
+        nullable = false)())
+}
+
+private[graft] object CepEmission {
+  /** One row per match (`SparkCep.matchPatternExec`). */
+  case object OrderIds extends CepEmission
+
+  /** One `(qname, key, binding)` row per match of any member
+    * (`SparkCep.matchPatternsShared`).
+    */
+  case object Bindings extends CepEmission {
+    override def keyIndex: Int = 1
+    override def output(key: Attribute, members: Seq[CepMember])
+        : Seq[Attribute] =
+      Seq(AttributeReference("qname", StringType, nullable = false)(), key,
+        AttributeReference("binding", StringType, nullable = false)())
+  }
+
+  /** One row per timed-out partial run, in the `OrderIds` shape
+    * (`SparkCep.timedOutPartials`). The executor captures timeouts and
+    * is drained after every feed; the feed never flags the last event,
+    * so under `$` no match fires and no skip prunes a run.
+    */
+  case object Timeouts extends CepEmission
+
+  /** One `(key, n_matches, shed_runs, cap)` row at each key's last
+    * event (`SparkCep.shedGauge`).
+    */
+  final case class ShedGauge(cap: Int) extends CepEmission {
+    override def output(key: Attribute, members: Seq[CepMember])
+        : Seq[Attribute] =
+      key +: Seq("n_matches", "shed_runs", "cap").map(n =>
+        AttributeReference(n, LongType, nullable = false)())
+  }
 }
 
 /** Typed access to the child's key column (ordinal 0) for the exec
-  * loops — EXACT for every key type. `read` returns a TRANSIENT value
+  * loop — EXACT for every key type. `read` returns a TRANSIENT value
   * for var-length types (a `UTF8String`/struct view into the child's
   * reused UnsafeRow buffer): `copy` it before holding it across rows
   * (the per-key `curKey`), and only ever compare a fresh read against a
@@ -125,15 +159,12 @@ private[plans] object CepKeyAccess {
   }
 }
 
-/** Shared per-row decode of the prepared child contract
-  * `(__key, __ord, __type, attr…)` — ONE implementation for both the
-  * single- and multi-query exec nodes so the decode semantics cannot
-  * drift between them:
+/** Per-row decode of the prepared child contract
+  * `(__key, __ord, __type, attr…)`:
   *  - a null order value has no position in the sequence — fail loudly
-  *    (the typed path NPEs on them; silent getLong-as-0 would corrupt
-  *    match ids);
-  *  - a null type is a non-matching event type (matchPattern
-  *    semantics — it still advances strict contiguity), never an NPE;
+  *    (silent getLong-as-0 would corrupt match ids);
+  *  - a null type is a non-matching event type (it still advances strict
+  *    contiguity), never an NPE;
   *  - the order value is always the event's FIRST long attribute
   *    (`attrs(0)`), so the renderers read a bound event's order id by
   *    position (`orderId`) instead of a name scan.
@@ -148,14 +179,14 @@ private[plans] object CepRowDecode {
     * is converted (copied) — the event may outlive the row buffer.
     */
   def decode(row: InternalRow, key: Any, aNames: Vector[String],
-      oName: String, strFlags: Array[Boolean]): Event = {
+      strFlags: Array[Boolean]): Event = {
     if (row.isNullAt(1)) throw new IllegalArgumentException(
       s"CEP order column is null for key $key — order values must be " +
         "non-null and unique per key")
     val attrs = Vector.newBuilder[(String, Long)]
     var strs: scala.collection.mutable.Builder[(String, String),
       Vector[(String, String)]] = null
-    attrs += oName -> row.getLong(1)
+    attrs += aNames.head -> row.getLong(1)
     var i = 3
     while (i < row.numFields) {
       if (!row.isNullAt(i)) {
@@ -178,8 +209,7 @@ private[plans] object CepRowDecode {
         a.name != "__type").toArray
 }
 
-/** The child requirements both CEP exec nodes declare — ONE
-  * implementation, so the single- and multi-query nodes cannot drift.
+/** The child requirements `CepMatchExec` declares.
   *
   * Keyed: each key's events co-located, at a PINNED partition count, and
   * per-key order via an in-partition secondary sort `(key, ord)` (a
@@ -229,11 +259,24 @@ private[plans] object CepChildContract {
   }
 }
 
-final case class CepMatchExec(
-    query: CepQuery,
+/** The physical CEP operator: one key-grouped feed loop (`CepFeedLoop`)
+  * for every entry point. Per row it switches key, decodes the event
+  * once, peeks for the key's last event when `$` or the gauge needs it,
+  * feeds each member whose gate admits the event type, and renders what
+  * `emission` asks for. An event outside a member's gate is invisible to
+  * it (the prefilter proof), so skipping the feed leaves its state, and
+  * hence its run count, exactly as feeding would. An anchored member
+  * never has a gate (`SparkCep.prefilter` declines anchored queries), so
+  * the flagged last event always reaches it.
+  *
+  * Skew gauge: `acc.add` once per EVENT with the MAX live-run count
+  * across the members, so `Stats.events` counts events fed and
+  * `maxRuns` finds the hottest pattern on the hottest key.
+  */
+private[graft] final case class CepMatchExec(
+    members: Vector[CepMember],
+    emission: CepEmission,
     keyed: Boolean,
-    piNames: Seq[String],
-    orderName: String,
     attrNames: Seq[String],
     maxRunsPerKey: Option[Int],
     skewAcc: Option[CepSkewAccumulator],
@@ -247,32 +290,30 @@ final case class CepMatchExec(
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     CepChildContract.ordering(keyed, child)
 
-  /** Matches stay partitioned by key — but the claim must be expressed in
-    * *our* output attribute (the child's `__key` is not visible above this
-    * node, so passing its partitioning through verbatim would be a dangling
-    * reference no downstream requirement could ever match). When the child
-    * is hash-partitioned exactly on the key, rewrite to the output key
-    * attr so downstream key-wise operators skip their shuffle; otherwise
-    * claim nothing.
+  /** Rows stay partitioned by key — but the claim must be expressed in
+    * *our* output key attribute (the child's `__key` is not visible above
+    * this node, so passing its partitioning through verbatim would be a
+    * dangling reference no downstream requirement could ever match). When
+    * the child is hash-partitioned exactly on the key, rewrite to the
+    * output key so downstream key-wise operators skip their shuffle;
+    * otherwise claim nothing.
     */
   override def outputPartitioning: Partitioning =
     child.outputPartitioning match {
       case h: HashPartitioning
           if keyed && CepChildContract.hashOnKey(h, child.output.head) =>
-        HashPartitioning(Seq(output.head), h.numPartitions)
+        HashPartitioning(Seq(output(emission.keyIndex)), h.numPartitions)
       case p if !keyed => p // single partition either way
       case p => UnknownPartitioning(p.numPartitions)
     }
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val q = query
-    val names = piNames.toVector
+    val ms = members
+    val em = emission
     val aNames = attrNames.toVector
-    val oName = orderName
     val strFlags = CepRowDecode.flagsOf(child.output)
     val maxRuns = maxRunsPerKey
     val outTypes = output.map(_.dataType).toArray
-    val nOut = outTypes.length
     val skew = skewAcc
     // unkeyed = single task by construction; the guard makes a
     // table-scale feed loud instead of silently serial (see
@@ -283,72 +324,10 @@ final case class CepMatchExec(
         CepRuntimeWarnings.UnkeyedWarnRowsDefault.toString).toLong
     val keyDt = child.output.head.dataType
     child.execute().mapPartitions({ iter0 =>
-      val proj = UnsafeProjection.create(outTypes)
-      val executor =
-        new Executor(DstCompiler.compile(q), q.strategy, maxRuns, q.within,
-          q.withinTime,
-          anchorStart = q.anchorStart, anchorEnd = q.anchorEnd)
-      // `$` needs the last-event-of-key flag — one-element lookahead.
-      // UNSAFE-ROW CAUTION: the child iterator reuses its row buffer, so
-      // `iter.head` invalidates the current row — the peek must happen
-      // AFTER the row is fully decoded (key copy + Event copy), which
-      // the body below guarantees (decode first, peek, then feed).
       val iter = iter0.buffered
-      val needLast = q.anchorEnd
-      // gauge resolved once per task; disabled cost is one null check
-      val acc = skew.orNull
-      val guard = new CepRuntimeWarnings.UnkeyedCounter(unkeyedWarnRows)
-      val keyGet = CepKeyAccess.reader(keyDt)
-      val keyCopy = CepKeyAccess.copier(keyDt)
-      val keyEq = CepKeyAccess.eq(keyDt)
-      // curKey always holds a COPY (safe across the row-buffer reuse);
-      // transient reads are only ever compared against it, never held
-      var curKey: Any = null
-      var started = false
-      var prevShed = 0L
-      iter.flatMap { row =>
-        guard.tick()
-        val k0 = keyGet(row)
-        if (!started || !keyEq(k0, curKey)) {
-          executor.reset(); prevShed = 0L
-          curKey = keyCopy(k0); started = true
-        }
-        val ev = CepRowDecode.decode(row, curKey, aNames, oName, strFlags)
-        val isLast = needLast &&
-          (!iter.hasNext || !keyEq(keyGet(iter.head), curKey))
-        val matches = executor.feed(ev, isLast)
-        if (acc != null) {
-          acc.add((graft.cep.SparkCep.keyGaugeId(curKey),
-            executor.runCount.toLong))
-          // shed telemetry: delta since the last event (reset() zeroes
-          // the executor's counter at each key switch)
-          val sc = executor.shedCount
-          if (sc != prevShed) { acc.addShed(sc - prevShed); prevShed = sc }
-        }
-        // LAZY map: proj reuses one UnsafeRow buffer, so each projected
-        // row must be consumed downstream before the next match of the
-        // same event is projected (a strict Vector.map would emit N
-        // references to the last match's bytes)
-        matches.iterator.map { m =>
-          val byName = m.toMap
-          val vals = new Array[Any](nOut)
-          vals(0) = curKey
-          var j = 0
-          while (j < names.length) {
-            val ids = byName.getOrElse(names(j), Vector.empty)
-            val arr = new Array[Long](ids.length)
-            var e = 0
-            while (e < arr.length) {
-              arr(e) = CepRowDecode.orderId(ids(e)); e += 1
-            }
-            vals(j + 1) = new GenericArrayData(arr)
-            j += 1
-          }
-          // proj reuses its buffer — standard operator contract (buffering
-          // consumers copy), same as ProjectExec
-          proj(new GenericInternalRow(vals))
-        }
-      }
+      val loop = new CepFeedLoop(ms, em, maxRuns, aNames, strFlags,
+        outTypes, skew.orNull, unkeyedWarnRows, keyDt, iter)
+      iter.flatMap(loop.step)
     }, preservesPartitioning = true)
   }
 
@@ -356,171 +335,163 @@ final case class CepMatchExec(
       : CepMatchExec = copy(child = newChild)
 }
 
-/** Physical shared-scan CEP: one event decode per row, every member DST
-  * fed side by side, matches rendered to the `(qname, key, binding)`
-  * reporting shape. The distribution/ordering contract is identical to
-  * `CepMatchExec` — ONE exchange serves all k patterns, which is the
-  * operator's entire reason to exist (the 100 TB scan and the key
-  * shuffle amortize across the query set).
-  *
-  * Skew gauge semantics (deliberate, documented at the API): `acc.add`
-  * once per EVENT with the MAX live-run count across member executors —
-  * `Stats.events` counts events fed, `maxRuns` the hottest pattern.
+/** One task's state of the `CepMatchExec` feed loop: `step` takes the
+  * task's rows in order, the next one readable as `iter.head`.
   */
-final case class CepMultiMatchExec(
-    queries: Vector[(String, CepQuery)],
-    feedTypes: Vector[Option[Set[String]]],
-    keyed: Boolean,
-    orderName: String,
-    attrNames: Seq[String],
-    maxRunsPerKey: Option[Int],
-    skewAcc: Option[CepSkewAccumulator],
-    output: Seq[Attribute],
-    child: SparkPlan) extends UnaryExecNode {
+private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
+    maxRuns: Option[Int], aNames: Vector[String], strFlags: Array[Boolean],
+    outTypes: Array[DataType], acc: CepSkewAccumulator,
+    unkeyedWarnRows: Long, keyDt: DataType,
+    iter: BufferedIterator[InternalRow]) {
+  private val proj = UnsafeProjection.create(outTypes)
+  private val timeouts = em == CepEmission.Timeouts
+  private val bindings = em == CepEmission.Bindings
+  private val gauge = em.isInstanceOf[CepEmission.ShedGauge]
+  private val executors = ms.map { m =>
+    val q = m.query
+    new Executor(DstCompiler.compile(q), q.strategy, maxRuns, q.within,
+      q.withinTime, captureTimeouts = timeouts,
+      anchorStart = q.anchorStart, anchorEnd = q.anchorEnd)
+  }.toArray
+  private val gates = ms.map(_.gate).toArray
+  private val names = ms.map(m => Pattern.names(m.query.patseq)).toArray
+  // qname as UTF8String once per task, not per match
+  private val qnames = ms.map(m => UTF8String.fromString(m.name)).toArray
+  // `$` on any member needs the last-event-of-key flag (per KEY, so one
+  // peek serves every member); the gauge emits at key end
+  private val flagLast = !timeouts && ms.exists(_.query.anchorEnd)
+  private val peek = flagLast || gauge
+  // per-event scratch: this row's output per member (reused — safe, the
+  // row's output iterator is drained before the next row starts)
+  private val found = new Array[Vector[Match]](executors.length)
+  private val guard = new CepRuntimeWarnings.UnkeyedCounter(unkeyedWarnRows)
+  private val keyGet = CepKeyAccess.reader(keyDt)
+  private val keyCopy = CepKeyAccess.copier(keyDt)
+  private val keyEq = CepKeyAccess.eq(keyDt)
+  // curKey always holds a COPY (safe across the row-buffer reuse);
+  // transient reads are only ever compared against it, never held
+  private var curKey: Any = null
+  private var started = false
+  private var prevShed = 0L
+  private var keyMatches = 0L
 
-  /** See `CepChildContract`. */
-  override def requiredChildDistribution: Seq[Distribution] =
-    CepChildContract.distribution(keyed, child, conf)
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    CepChildContract.ordering(keyed, child)
-
-  /** Key-partitioned in, key-partitioned out — but the output key is
-    * column 1 (qname leads), so the rewrite targets `output(1)`.
-    */
-  override def outputPartitioning: Partitioning =
-    child.outputPartitioning match {
-      case h: HashPartitioning
-          if keyed && CepChildContract.hashOnKey(h, child.output.head) =>
-        HashPartitioning(Seq(output(1)), h.numPartitions)
-      case p if !keyed => p
-      case p => UnknownPartitioning(p.numPartitions)
-    }
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val qSeq = queries
-    val fTypes = feedTypes
-    val aNames = attrNames.toVector
-    val oName = orderName
-    val strFlags = CepRowDecode.flagsOf(child.output)
-    val maxRuns = maxRunsPerKey
-    val outTypes = output.map(_.dataType).toArray
-    val skew = skewAcc
-    val unkeyedWarnRows: Long =
-      if (keyed) Long.MaxValue
-      else conf.getConfString(CepRuntimeWarnings.UnkeyedWarnRowsKey,
-        CepRuntimeWarnings.UnkeyedWarnRowsDefault.toString).toLong
-    val keyDt = child.output.head.dataType
-    child.execute().mapPartitions({ iter0 =>
-      import org.apache.spark.unsafe.types.UTF8String
-      val proj = UnsafeProjection.create(outTypes)
-      // qname as UTF8String once per task, not per match
-      val names = qSeq.map { case (n, _) => UTF8String.fromString(n) }
-      val piNamesByQ = qSeq.map { case (_, q) =>
-        graft.cep.SparkCep.patternNames(q.patseq)
-      }
-      val executors = qSeq.map { case (_, q) =>
-        new Executor(DstCompiler.compile(q), q.strategy, maxRuns,
-          q.within, q.withinTime,
-          anchorStart = q.anchorStart, anchorEnd = q.anchorEnd)
-      }
-      // `$` on any member needs the last-event-of-key flag (per-KEY, so
-      // one peek serves all members). Same UnsafeRow caution as the
-      // single-query exec: peek only after the row is fully decoded.
-      val iter = iter0.buffered
-      val needLast = qSeq.exists(_._2.anchorEnd)
-      // null = feed everything (member declined a prefilter)
-      val gates: Array[Set[String]] = fTypes.map(_.orNull).toArray
-      // per-event scratch: this row's matches per member (reused — safe,
-      // the row's output iterator is drained before the next row starts)
-      val matchesByQ = new Array[Vector[graft.cep.Match]](executors.length)
-      val acc = skew.orNull
-      val guard = new CepRuntimeWarnings.UnkeyedCounter(unkeyedWarnRows)
-      val keyGet = CepKeyAccess.reader(keyDt)
-      val keyCopy = CepKeyAccess.copier(keyDt)
-      val keyEq = CepKeyAccess.eq(keyDt)
-      // curKey always holds a COPY (see CepMatchExec)
-      var curKey: Any = null
-      var started = false
-      var prevShed = 0L
-      iter.flatMap { row =>
-        guard.tick()
-        val k0 = keyGet(row)
-        if (!started || !keyEq(k0, curKey)) {
-          executors.foreach(_.reset()); prevShed = 0L
-          curKey = keyCopy(k0); started = true
-        }
-        val ev = CepRowDecode.decode(row, curKey, aNames, oName, strFlags)
-        val isLast = needLast &&
-          (!iter.hasNext || !keyEq(keyGet(iter.head), curKey))
-        val tpe = ev.tpe
-        var maxRunCount = 0L
-        // feed every member eagerly (the gauge samples POST-feed run
-        // counts); match vectors are collected per member without an
-        // intermediate builder — the common case is zero matches
-        var qi = 0
-        var any = false
-        while (qi < executors.length) {
-          // per-member feed gate: events outside a prefiltered member's
-          // alphabet are invisible to it (SparkCep.memberFeedTypes) —
-          // skipping the feed leaves its state, and hence runCount,
-          // exactly as feeding would
-          // an anchored member never declares a gate (SparkCep.prefilter
-          // returns None for anchored queries), so the flagged last
-          // event always reaches it
-          val gate = gates(qi)
-          matchesByQ(qi) =
-            if (gate == null || (tpe != null && gate.contains(tpe))) {
-              val ms = executors(qi).feed(ev, isLast)
-              if (ms.nonEmpty) any = true
-              ms
-            } else Vector.empty
-          val rc = executors(qi).runCount.toLong
-          if (rc > maxRunCount) maxRunCount = rc
-          qi += 1
-        }
-        if (acc != null) {
-          acc.add((graft.cep.SparkCep.keyGaugeId(curKey), maxRunCount))
-          var sc = 0L
-          var si = 0
-          while (si < executors.length) { sc += executors(si).shedCount; si += 1 }
-          if (sc != prevShed) { acc.addShed(sc - prevShed); prevShed = sc }
-        }
-        if (!any) Iterator.empty
-        else executors.indices.iterator.flatMap { q =>
-          // PROJECTION stays lazy — proj reuses one UnsafeRow buffer
-          matchesByQ(q).iterator.map { m =>
-            val piN = piNamesByQ(q)
-            val sb = new java.lang.StringBuilder
-            var j = 0
-            while (j < piN.length) {
-              if (j > 0) sb.append(';')
-              val n = piN(j)
-              // linear scan: a Match holds 1-3 tiny components — beats
-              // building a map per match
-              var i = 0
-              while (i < m.length) {
-                if (m(i)._1 == n) {
-                  val evs = m(i)._2
-                  var e = 0
-                  while (e < evs.length) {
-                    if (e > 0) sb.append(',')
-                    sb.append(CepRowDecode.orderId(evs(e)))
-                    e += 1
-                  }
-                  i = m.length
-                } else i += 1
-              }
-              j += 1
-            }
-            proj(new GenericInternalRow(Array[Any](names(q), curKey,
-              UTF8String.fromString(sb.toString))))
-          }
-        }
-      }
-    }, preservesPartitioning = true)
+  private def shedCount: Long = {
+    var sc = 0L
+    var qi = 0
+    while (qi < executors.length) { sc += executors(qi).shedCount; qi += 1 }
+    sc
   }
 
-  override protected def withNewChildInternal(newChild: SparkPlan)
-      : CepMultiMatchExec = copy(child = newChild)
+  def step(row: InternalRow): Iterator[InternalRow] = {
+    guard.tick()
+    val k0 = keyGet(row)
+    if (!started || !keyEq(k0, curKey)) {
+      executors.foreach(_.reset()); prevShed = 0L; keyMatches = 0L
+      curKey = keyCopy(k0); started = true
+    }
+    val ev = CepRowDecode.decode(row, curKey, aNames, strFlags)
+    // UNSAFE-ROW CAUTION: the child iterator reuses its row buffer, so
+    // `iter.head` invalidates the current row — the peek happens only
+    // AFTER the row is fully decoded (key copy + Event copy)
+    val last = peek && (!iter.hasNext || !keyEq(keyGet(iter.head), curKey))
+    val tpe = ev.tpe
+    var any = false
+    var qi = 0
+    while (qi < executors.length) {
+      val gate = gates(qi)
+      val ex = executors(qi)
+      val out =
+        if (gate == null || (tpe != null && gate.contains(tpe))) {
+          val matches = ex.feed(ev, flagLast && last)
+          if (!timeouts) matches
+          else ex.drainTimedOut().map(ex.partialOutput(_, names(qi)))
+        } else Vector.empty
+      if (out.nonEmpty) { any = true; keyMatches += out.size }
+      found(qi) = out
+      qi += 1
+    }
+    if (acc != null) {
+      // the hottest member's POST-feed run count
+      var maxRunCount = 0L
+      qi = 0
+      while (qi < executors.length) {
+        maxRunCount = math.max(maxRunCount, executors(qi).runCount.toLong)
+        qi += 1
+      }
+      acc.add((graft.cep.SparkCep.keyGaugeId(curKey), maxRunCount))
+      // shed telemetry: delta since the last event (reset() zeroes the
+      // executors' counters at each key switch)
+      val sc = shedCount
+      if (sc != prevShed) { acc.addShed(sc - prevShed); prevShed = sc }
+    }
+    // PROJECTION stays lazy — proj reuses one UnsafeRow buffer, so each
+    // projected row must be consumed downstream before the next one is
+    // projected (standard operator contract, as ProjectExec)
+    if (gauge) {
+      if (!last) Iterator.empty
+      else Iterator.single(proj(new GenericInternalRow(Array[Any](curKey,
+        keyMatches, shedCount,
+        em.asInstanceOf[CepEmission.ShedGauge].cap.toLong))))
+    } else if (!any) Iterator.empty
+    else found.indices.iterator.flatMap { q =>
+      found(q).iterator.map { m =>
+        proj(
+          if (bindings) CepRender.binding(qnames(q), curKey, names(q), m)
+          else CepRender.orderIds(curKey, names(q), m))
+      }
+    }
+  }
+}
+
+/** The per-match row shapes of `CepMatchExec`. */
+private[plans] object CepRender {
+  /** The key, then each name's bound order ids (`OrderIds`, `Timeouts`). */
+  def orderIds(key: Any, names: Vector[String], m: Match): InternalRow = {
+    val byName = m.toMap
+    val vals = new Array[Any](names.length + 1)
+    vals(0) = key
+    var j = 0
+    while (j < names.length) {
+      val ids = byName.getOrElse(names(j), Vector.empty)
+      val arr = new Array[Long](ids.length)
+      var e = 0
+      while (e < arr.length) {
+        arr(e) = CepRowDecode.orderId(ids(e)); e += 1
+      }
+      vals(j + 1) = new GenericArrayData(arr)
+      j += 1
+    }
+    new GenericInternalRow(vals)
+  }
+
+  /** `(qname, key, binding)` with the bound order ids `','`-joined within
+    * a pattern name and `';'`-joined across names in declared order.
+    */
+  def binding(qname: UTF8String, key: Any, names: Vector[String],
+      m: Match): InternalRow = {
+    val sb = new java.lang.StringBuilder
+    var j = 0
+    while (j < names.length) {
+      if (j > 0) sb.append(';')
+      val n = names(j)
+      // linear scan: a Match holds 1-3 tiny components — beats building
+      // a map per match
+      var i = 0
+      while (i < m.length) {
+        if (m(i)._1 == n) {
+          val evs = m(i)._2
+          var e = 0
+          while (e < evs.length) {
+            if (e > 0) sb.append(',')
+            sb.append(CepRowDecode.orderId(evs(e)))
+            e += 1
+          }
+          i = m.length
+        } else i += 1
+      }
+      j += 1
+    }
+    new GenericInternalRow(Array[Any](qname, key,
+      UTF8String.fromString(sb.toString)))
+  }
 }

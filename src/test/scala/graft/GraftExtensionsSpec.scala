@@ -54,10 +54,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
         AttributeReference("qname", StringType, nullable = false)(),
         AttributeReference("user_id", LongType, nullable = false)(),
         AttributeReference("binding", StringType, nullable = false)())
-      val plan = graft.plans.CepMultiMatchPlan(qs,
-        qs.map { case (_, q) => SparkCep.memberFeedTypes(q, spec) },
-        keyed = true, attrNames.head, attrNames, None, None, output,
-        prepared.queryExecution.analyzed)
+      val members = qs.map { case (n, q) =>
+        graft.plans.CepMember(n, q, SparkCep.memberFeedTypes(q, spec).orNull)
+      }
+      val plan = graft.plans.CepMatchPlan(members,
+        graft.plans.CepEmission.Bindings, keyed = true, attrNames, None,
+        None, output, prepared.queryExecution.analyzed)
       val n = GraftColumnBridge.ofRows(s, plan).count()
       assert(n > 0, "extension-planned multi CEP produced no matches")
     } finally s.stop()

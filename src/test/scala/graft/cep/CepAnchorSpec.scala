@@ -288,12 +288,10 @@ class CepAnchorSpec extends AnyFunSuite {
           graft.Queries.cepSqlAnchorLastStatement.query,
           graft.Queries.cepSqlAnchorFirstStatement.query)) {
         val spec = graft.Queries.eventSpec
-        def canon(d: org.apache.spark.sql.DataFrame) =
-          d.collect().map(_.toString).sorted.toVector
-        val typed = canon(SparkCep.matchPattern(df, q, spec))
-        val exec = canon(SparkCep.matchPatternExec(df, q, spec))
-        assert(typed.nonEmpty, s"$q produced no matches at sf0.001")
-        assert(typed == exec, s"$q diverged typed vs exec")
+        val model = CepModel.matches(df, q, spec)
+        val exec = CepModel.canon(SparkCep.matchPatternExec(df, q, spec))
+        assert(model.nonEmpty, s"$q produced no matches at sf0.001")
+        assert(model == exec, s"$q diverged model vs exec")
       }
     } finally spark.stop()
   }

@@ -77,10 +77,9 @@ class CepExactKeySpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = sSt.query
     val mf = SparkCep.matchPatternExec(df, q, sSpec)
     assert(mf.schema("skey").dataType == StringType)
-    val typed = SparkCep.matchPattern(df, q, sSpec)
-      .collect().map(_.toString).sorted.toSeq
-    val exec = mf.collect().map(_.toString).sorted.toSeq
-    assert(typed == exec && typed.nonEmpty)
+    val model = CepModel.matches(df, q, sSpec)
+    val exec = CepModel.canon(mf)
+    assert(model == exec && model.nonEmpty)
     // measures output: key leads, raw string, attribute join exact
     val out = CepMeasures.run(df, sSt, sSpec).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted
@@ -114,7 +113,7 @@ class CepExactKeySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
     val streamed = s.sql("SELECT * FROM cep_skey_stream").collect()
       .map(_.toString).sorted.toVector
-    val batch = SparkCep.matchPattern(evs.toDF(), sSt.query, sSpec)
+    val batch = SparkCep.matchPatternExec(evs.toDF(), sSt.query, sSpec)
       .collect().map(_.toString).sorted.toVector
     assert(streamed.nonEmpty && streamed == batch)
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.plans.{CepMatchExec, CepMultiMatchExec}
+import graft.plans.CepMatchExec
 
 /** The Catalyst CEP operators keep their key exchange at
   * `spark.sql.shuffle.partitions` partitions under AQE. A small
@@ -54,6 +54,16 @@ class CepExecParallelismSpec extends AnyFunSuite with BeforeAndAfterAll {
     "matchPatternsShared" ->
       (df => SparkCep.matchPatternsShared(df, Seq(queryName -> query), spec)))
 
+  /** The per-key gauge and timeout entry points, on their registry
+    * queries: the same pinned exchange serves them.
+    */
+  private val gaugeAndTimeoutOperators: Seq[(String, DataFrame => DataFrame)] =
+    Seq(
+      "shedGauge" -> (df => SparkCep.shedGauge(df,
+        graft.Queries.cepShedGaugeQuery, spec, cap = 1)),
+      "timedOutPartials" -> (df => SparkCep.timedOutPartials(df,
+        graft.Queries.cepTimeoutAbandonedSignupsQuery, spec)))
+
   /** Every node of an executed plan, descending into AQE's final plan and
     * its query stages.
     */
@@ -71,10 +81,8 @@ class CepExecParallelismSpec extends AnyFunSuite with BeforeAndAfterAll {
     a.executedPlan
   }
 
-  private def cepNodes(p: SparkPlan): Seq[SparkPlan] = nodes(p).filter {
-    case _: CepMatchExec | _: CepMultiMatchExec => true
-    case _                                      => false
-  }
+  private def cepNodes(p: SparkPlan): Seq[SparkPlan] =
+    nodes(p).filter(_.isInstanceOf[CepMatchExec])
 
   private def shuffles(p: SparkPlan): Int =
     nodes(p).count(_.isInstanceOf[ShuffleExchangeLike])
@@ -82,7 +90,7 @@ class CepExecParallelismSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Vector[String] =
     df.collect().map(_.toString).sorted.toVector
 
-  for ((opName, op) <- operators)
+  for ((opName, op) <- operators ++ gaugeAndTimeoutOperators)
     test(s"$opName: AQE does not coalesce the key exchange, rows as AQE off") {
       val df = op(events)
       val got = rows(df)

@@ -1,16 +1,18 @@
 package graft.cep
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** The Catalyst-planned CEP operator (`matchPatternExec` →
   * `CepMatchPlan`/`CepStrategy`/`CepMatchExec`) must (1) produce exactly
-  * the `matchPattern` match multiset on every registry pattern, and
-  * (2) declare its distribution so the planner elides the key shuffle
-  * when the input is already partitioned by the key — the property the
-  * custom plan exists for.
+  * the pure per-key model's match multiset (`CepModel`) on every
+  * registry pattern, and (2) declare its distribution so the planner
+  * elides the key shuffle when the input is already partitioned by the
+  * key — the property the custom plan exists for. (Test names that say
+  * "mapPartitions" or "typed path" predate the model; they compare
+  * against it now.)
   */
 class CepExecSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -36,10 +38,8 @@ class CepExecSpec extends AnyFunSuite with BeforeAndAfterAll {
   for ((name, query) <- graft.Queries.cepRegistryQueries.toSeq.sortBy(_._1))
     test(s"exec == mapPartitions on registry query $name") {
       val spec = graft.Queries.eventSpec
-      val a = SparkCep.matchPattern(events, query, spec)
-        .collect().map(_.toString).sorted.toVector
-      val b = SparkCep.matchPatternExec(events, query, spec)
-        .collect().map(_.toString).sorted.toVector
+      val a = CepModel.matches(events, query, spec)
+      val b = CepModel.canon(SparkCep.matchPatternExec(events, query, spec))
       assert(a.nonEmpty && a == b,
         s"$name diverged: exec ${b.length} rows vs ${a.length}")
     }
@@ -61,7 +61,6 @@ class CepExecSpec extends AnyFunSuite with BeforeAndAfterAll {
       "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).length
 
     val execPlan = SparkCep.matchPatternExec(pre, query, spec)
-    val classicPlan = SparkCep.matchPattern(pre, query, spec)
     // the exec path adds NO exchange on top of the join's output
     // partitioning — its ClusteredDistribution is satisfied and only a
     // local (key, ord) sort is inserted
@@ -69,17 +68,15 @@ class CepExecSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exchanges(execPlan) == base,
       s"exec added a shuffle:\n${execPlan.queryExecution.executedPlan}")
     // and it runs on InternalRow end-to-end: no external-Row object
-    // conversion, unlike the typed mapPartitions formulation
+    // conversion
     val execStr = execPlan.queryExecution.executedPlan.toString
-    val classicStr = classicPlan.queryExecution.executedPlan.toString
     assert(execStr.contains("CepMatch"), "custom operator missing")
     assert(!execStr.contains("DeserializeToObject"),
       "exec path must not round-trip through external Rows")
-    assert(classicStr.contains("DeserializeToObject"),
-      "baseline changed — revisit what this test contrasts")
-    // identical results either way
+    // the join is 1:1 on user_id: the same rows as on the plain events
     assert(execPlan.collect().map(_.toString).sorted.toSeq ==
-      classicPlan.collect().map(_.toString).sorted.toSeq)
+      SparkCep.matchPatternExec(events, query, spec).collect()
+        .map(_.toString).sorted.toSeq)
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
@@ -106,10 +103,8 @@ class CepExecSpec extends AnyFunSuite with BeforeAndAfterAll {
     val spec = SparkCep.CepSpec(Some("user"), "event_id", "event_type",
       Seq("value"))
     val query = graft.Queries.cepNextSignupPurchaseQuery
-    val a = SparkCep.matchPattern(df, query, spec)
-      .collect().map(_.toString).sorted.toSeq
-    val b = SparkCep.matchPatternExec(df, query, spec)
-      .collect().map(_.toString).sorted.toSeq
+    val a = CepModel.matches(df, query, spec)
+    val b = CepModel.canon(SparkCep.matchPatternExec(df, query, spec))
     assert(a == b && a.size == 1) // only alice's strict pair
   }
 
@@ -119,27 +114,35 @@ class CepExecSpec extends AnyFunSuite with BeforeAndAfterAll {
     val spec = SparkCep.CepSpec(Some("user_id"), "event_id", "event_type",
       Seq("value"))
     val query = graft.Queries.cepNextSignupPurchaseQuery
-    // a null type between signup and purchase breaks strict contiguity in
-    // BOTH formulations (it is an event, just of no matching type)
+    // a null type between signup and purchase breaks strict contiguity
+    // (it is an event, just of no matching type)
     val withNullType = Seq(
       (1L, 1L, Option("signup"), 0L), (1L, 2L, None: Option[String], 0L),
       (1L, 3L, Option("purchase"), 0L), (2L, 4L, Option("signup"), 0L),
       (2L, 5L, Option("purchase"), 0L))
       .toDF("user_id", "event_id", "event_type", "value")
-    val a = SparkCep.matchPattern(withNullType, query, spec)
-      .collect().map(_.toString).sorted.toSeq
-    val b = SparkCep.matchPatternExec(withNullType, query, spec)
-      .collect().map(_.toString).sorted.toSeq
+    val a = CepModel.matches(withNullType, query, spec)
+    val b = CepModel.canon(SparkCep.matchPatternExec(withNullType, query,
+      spec))
     assert(a == b && a.size == 1) // only user 2's uninterrupted pair
 
     val withNullOrd = Seq(
       (1L, Option(1L), "signup", 0L), (1L, None: Option[Long], "purchase", 0L))
       .toDF("user_id", "event_id", "event_type", "value")
-    val e = intercept[org.apache.spark.SparkException] {
-      SparkCep.matchPatternExec(withNullOrd, query, spec).collect()
+    val nullOrdOps: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "matchPatternExec" -> (df => SparkCep.matchPatternExec(df, query, spec)),
+      "shedGauge" -> (df => SparkCep.shedGauge(df, query, spec, cap = 1)),
+      "timedOutPartials" -> (df => SparkCep.timedOutPartials(df,
+        query.copy(within = Some(6)), spec)))
+    for ((opName, op) <- nullOrdOps) {
+      val e = intercept[org.apache.spark.SparkException] {
+        op(withNullOrd).collect()
+      }
+      assert(e.getMessage.contains("order column is null") ||
+        Option(e.getCause).flatMap(c => Option(c.getMessage))
+          .exists(_.contains("order column is null")),
+        s"$opName: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("order column is null") ||
-      Option(e.getCause).exists(_.getMessage.contains("order column is null")))
   }
 
   test("exec handles the un-keyed global-sequence mode") {
@@ -151,10 +154,8 @@ class CepExecSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF()
     val spec = SparkCep.CepSpec(None, "event_id", "event_type", Seq("value"))
     val query = graft.Queries.cepNextSignupPurchaseQuery
-    val a = SparkCep.matchPattern(df, query, spec)
-      .collect().map(_.toString).sorted.toSeq
-    val b = SparkCep.matchPatternExec(df, query, spec)
-      .collect().map(_.toString).sorted.toSeq
+    val a = CepModel.matches(df, query, spec)
+    val b = CepModel.canon(SparkCep.matchPatternExec(df, query, spec))
     assert(a == b && a.size == 2) // (1,2) and (3,4) across users globally
   }
 }

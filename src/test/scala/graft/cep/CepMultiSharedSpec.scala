@@ -7,7 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 /** `matchPatternsShared` contract (ADVICE r7: the shared path had no unit
   * test and its OR-pushdown branch was never exercised):
   *
-  *  1. differential — shared output == union of per-query `matchPattern`
+  *  1. differential — shared output == union of per-query `matchPatternExec`
   *     outputs rendered to the binding shape, BOTH when the union filter
   *     engages (every member has a prefilter) and when it is disabled
   *     (a strict member needs the full stream);
@@ -51,13 +51,13 @@ class CepMultiSharedSpec extends AnyFunSuite with BeforeAndAfterAll {
     "not_followed_by_purchase" ->
       graft.Queries.cepNotFollowedByPurchaseQuery)
 
-  /** Per-query `matchPattern` outputs rendered to the shared binding
+  /** Per-query `matchPatternExec` outputs rendered to the shared binding
     * shape — the independent baseline.
     */
   private def expected(qs: Seq[(String, CepQuery)]): Vector[String] =
     qs.flatMap { case (name, q) =>
       val piNames = SparkCep.patternNames(q.patseq)
-      SparkCep.matchPattern(events, q, spec).collect().map { row =>
+      SparkCep.matchPatternExec(events, q, spec).collect().map { row =>
         val binding = piNames.map(n =>
           row.getAs[scala.collection.Seq[Long]](n).mkString(","))
           .mkString(";")
@@ -173,7 +173,7 @@ class CepMultiSharedSpec extends AnyFunSuite with BeforeAndAfterAll {
     val perQueryMax = pushdownSet.map { case (_, q) =>
       val a = new CepSkewAccumulator
       spark.sparkContext.register(a)
-      SparkCep.matchPattern(events, q, spec, skewAcc = Some(a)).count()
+      SparkCep.matchPatternExec(events, q, spec, skewAcc = Some(a)).count()
       a.value.maxRuns
     }.max
     assert(stats.maxRuns == perQueryMax,

@@ -207,16 +207,12 @@ class CepNavSpec extends AnyFunSuite with BeforeAndAfterAll {
         runPure(q, ordered).map(m => (k, ids(m, "x"), ids(m, "y")))
       }.sortBy(_.toString)
 
-    for (runner <- Vector(
-        SparkCep.matchPattern(_: org.apache.spark.sql.DataFrame, q, spec),
-        SparkCep.matchPatternExec(_: org.apache.spark.sql.DataFrame, q,
-          spec))) {
-      val got = runner(evs.toDF()).collect().toVector.map { r: Row =>
+    val got = SparkCep.matchPatternExec(evs.toDF(), q, spec).collect()
+      .toVector.map { r: Row =>
         (r.getLong(0), r.getSeq[Long](1).toVector,
           r.getSeq[Long](2).toVector)
       }.sortBy(_.toString)
-      assert(got == pure)
-    }
+    assert(got == pure)
     assert(pure.nonEmpty, "fixture produced no matches")
   }
 

@@ -111,7 +111,7 @@ class CepRunCapShedStreamSpec extends AnyFunSuite
       rows.map(r => (r.getLong(0), r.getSeq[Long](1).toVector).toString())
         .toSeq.groupBy(identity).view.mapValues(_.size).toMap
     val streamed = multiset(s.sql("SELECT * FROM cep_shed_stream").collect())
-    val batch = multiset(SparkCep.matchPattern(evs.toDF(), query, spec,
+    val batch = multiset(SparkCep.matchPatternExec(evs.toDF(), query, spec,
       maxRunsPerKey = Some(-10)).collect())
     assert(streamed == batch)
     // sanity: shedding really happened (uncapped would emit 40*41/2 rows)

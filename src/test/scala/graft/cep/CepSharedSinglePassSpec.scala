@@ -12,11 +12,11 @@ import graft.ops.CacheLease
   * returned frames.
   *
   * Without materialization each member frame carries its own copy of the
-  * full `CepMultiMatchExec` subtree; ReuseExchange dedupes the scan and
+  * full shared `CepMatchExec` subtree; ReuseExchange dedupes the scan and
   * key shuffle BELOW the operator, but the sweep itself re-runs k times,
   * each time matching all k patterns — k× the cost of one shared pass,
   * invisible on small data, a scale-killer at 100×. The probe is the
-  * skew gauge: `CepMultiMatchExec` fires `skewAcc.add` once per event
+  * skew gauge: the shared `CepMatchExec` fires `skewAcc.add` once per event
   * fed (never per (event × query)), so `Stats.events` after consuming
   * every member equals the single-pass feed count iff the sweep ran
   * once. Accumulators only over-count on task retries, which a healthy

@@ -40,7 +40,7 @@ class CepSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("value"))
 
     val skew = CepSkewAccumulator.registered(s, "cep_skew_test")
-    val out = SparkCep.matchPattern(df, query, spec, skewAcc = Some(skew))
+    val out = SparkCep.matchPatternExec(df, query, spec, skewAcc = Some(skew))
     val matches = out.count()
     assert(matches == (11L * 12L / 2L) + 1L) // all ordered pairs per key
 
@@ -50,7 +50,7 @@ class CepSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats.events == rows.length.toLong)
 
     // the gauge must not perturb results: identical output without it
-    val plain = SparkCep.matchPattern(df, query, spec).count()
+    val plain = SparkCep.matchPatternExec(df, query, spec).count()
     assert(plain == matches)
 
     // the Catalyst-planned operator carries the same gauge

@@ -200,13 +200,10 @@ class CepStringAttrSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = CepSql.parse(
       "PATTERN (s -> c) DEFINE s AS signup; " +
         "c AS click WHERE host in ('a.com', 'c.com') WITHIN 4", schema)
-    def canon(d: DataFrame): Vector[String] =
-      d.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
-        .toVector.sorted
-    val typed = canon(SparkCep.matchPattern(df(evs), q, spec))
-    val exec = canon(SparkCep.matchPatternExec(df(evs), q, spec))
-    assert(typed == exec)
-    assert(typed.nonEmpty)
+    val model = CepModel.matches(df(evs), q, spec)
+    val exec = CepModel.canon(SparkCep.matchPatternExec(df(evs), q, spec))
+    assert(model == exec)
+    assert(model.nonEmpty)
   }
 
   test("prefilter: a single-spat string equality/IN pushes down as an " +
@@ -411,7 +408,7 @@ class CepStringAttrSpec extends AnyFunSuite with BeforeAndAfterAll {
         Vector(VarDef("budget", 0L, Expr.parse("budget + 1")))),
       schema)
     val e2 = intercept[IllegalArgumentException](
-      SparkCep.matchPattern(evs, q, spec))
+      SparkCep.matchPatternExec(evs, q, spec))
     assert(e2.getMessage.contains("register"))
     // a string column in a string position still builds and runs
     built("host like 'a%'")

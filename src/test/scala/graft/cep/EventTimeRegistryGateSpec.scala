@@ -98,7 +98,7 @@ class EventTimeRegistryGateSpec extends AnyFunSuite with BeforeAndAfterAll {
   for (name <- graft.Queries.cepRegistryQueries.keys.toSeq.sorted)
     test(s"event-time stream == batch on registry query $name") {
       val query = graft.Queries.cepRegistryQueries(name)
-      val batch = SparkCep.matchPattern(
+      val batch = SparkCep.matchPatternExec(
         spark.read.parquet(s"$sfDir/events.parquet"), query,
         graft.Queries.eventSpec)
         .collect().map(_.toString).sorted.toVector
@@ -140,7 +140,7 @@ class EventTimeRegistryGateSpec extends AnyFunSuite with BeforeAndAfterAll {
         Pattern.spat("b", "purchase", "True")),
       schema, withinTime = wt)
     val windowed = q(Some(WithinTime("event_id", 30L)))
-    def batchOf(query: CepQuery) = SparkCep.matchPattern(
+    def batchOf(query: CepQuery) = SparkCep.matchPatternExec(
       spark.read.parquet(s"$sfDir/events.parquet"), query,
       graft.Queries.eventSpec)
       .collect().map(_.toString).sorted.toVector
@@ -206,7 +206,7 @@ class EventTimeRegistryGateSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(disorder == 0L, s"fixture ts not monotone in event_id " +
         s"($disorder inversions) — this gate's premise broke")
 
-      val batch = SparkCep.matchPattern(
+      val batch = SparkCep.matchPatternExec(
         ev.drop("ts"), query, spec)
         .collect().map(_.toString).sorted.toVector
       assert(batch.nonEmpty, s"no withinTime matches at $sf")

@@ -39,7 +39,7 @@ class MatchSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = CepQuery(
       Pattern.Combine(Contiguity.Relaxed, Pattern.spat("x", "a", "True"),
         Pattern.spat("y", "b", "True")), schema)
-    SparkCep.matchPattern(df, q,
+    SparkCep.matchPatternExec(df, q,
       SparkCep.CepSpec(Some("user_id"), "event_id", "event_type",
         Seq("value")))
   }
@@ -86,14 +86,14 @@ class MatchSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = CepQuery(
       Pattern.Combine(Contiguity.Strict, Pattern.spat("x", "a", "True"),
         Pattern.spat("y", "b", "True")), schema)
-    val out = SparkCep.matchPattern(df, q,
+    val out = SparkCep.matchPatternExec(df, q,
       SparkCep.CepSpec(Some("__ck"), "event_id", "event_type", Seq("value")))
       .collect().map(r => (r.getSeq[Long](1).head, r.getSeq[Long](2).head))
       .toSet
     // strict pairs only within each composite (user, device) sequence
     assert(out == Set((1L, 2L), (3L, 4L), (5L, 6L)))
     // the OUTPUT key is the original struct value, exactly
-    val keys = SparkCep.matchPattern(df, q,
+    val keys = SparkCep.matchPatternExec(df, q,
       SparkCep.CepSpec(Some("__ck"), "event_id", "event_type", Seq("value")))
       .collect().map(r => (r.getStruct(0).getLong(0),
         r.getStruct(0).getString(1))).toSet

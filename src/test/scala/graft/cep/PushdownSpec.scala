@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** The pre-NFA filter pushdown must be invisible: `SparkCep.matchPattern`
+/** The pre-NFA filter pushdown must be invisible: `SparkCep.matchPatternExec`
   * (which may prefilter) has to equal the pure in-memory NFA run on the
   * full unfiltered event sequence, per key. Also pins exactly which
   * patterns are allowed to push down.
@@ -55,7 +55,7 @@ class PushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val df = events.toDF("user_id", "event_id", "event_type", "value")
     val names = SparkCep.patternNames(q.patseq)
-    SparkCep.matchPattern(df, q, spec).collect().map { r =>
+    SparkCep.matchPatternExec(df, q, spec).collect().map { r =>
       r.getLong(0) -> names.zipWithIndex.collect {
         case (n, i) if r.getSeq[Long](i + 1).nonEmpty =>
           s"$n:${r.getSeq[Long](i + 1).mkString("+")}"
@@ -113,7 +113,7 @@ class PushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
         Pattern.spat("y", "b", "True")), schema)
     val globalSpec = spec.copy(keyCol = None)
     val df = events.toDF("user_id", "event_id", "event_type", "value")
-    val got = SparkCep.matchPattern(df, q, globalSpec).collect()
+    val got = SparkCep.matchPatternExec(df, q, globalSpec).collect()
       .map(r => (r.getSeq[Long](0).mkString("+"),
         r.getSeq[Long](1).mkString("+"))).toSet
     val ordered = events.sortBy(_._2).map { case (_, id, t, v) =>
@@ -152,7 +152,7 @@ class PushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = CepQuery(
       Pattern.Combine(Contiguity.Relaxed, Pattern.spat("x", "a", "True"),
         Pattern.spat("y", "b", "True")), schema)
-    val got = SparkCep.matchPattern(df, q, spec).collect().map { r =>
+    val got = SparkCep.matchPatternExec(df, q, spec).collect().map { r =>
       (r.getString(0), r.getSeq[Long](1).mkString("+"),
         r.getSeq[Long](2).mkString("+"))
     }
@@ -174,7 +174,7 @@ class PushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the null-value event passes the prefilter (condition is NULL → kept)
     // and the NFA raises name-not-defined, exactly like the unpushed path
     val ex = intercept[Exception] {
-      SparkCep.matchPattern(df, q, spec).collect()
+      SparkCep.matchPatternExec(df, q, spec).collect()
     }
     def rootMsg(t: Throwable): String =
       if (t.getCause != null) rootMsg(t.getCause)

@@ -7,8 +7,8 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 /** Spark-layer differential sampling: every 500th corpus case runs through
-  * the full `SparkCep.matchPattern` path (DataFrame → prefilter →
-  * repartition → sort → NFA → match rows) in global mode and must produce
+  * the full `SparkCep.matchPatternExec` path (DataFrame → prefilter →
+  * exchange → sort → NFA → match rows) in global mode and must produce
   * the in-memory operator's matches — same bindings, same order. Guards
   * the Spark integration (column mapping, pushdown, ordering) against the
   * whole shape cross-product, not just hand-picked patterns.
@@ -91,11 +91,6 @@ class SparkDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
     info(s"$checked sampled cases matched through $label")
   }
 
-  test("sampled corpus cases match through the full Spark operator") {
-    checkSampledGlobal("Spark (typed)",
-      (df, q, spec) => SparkCep.matchPattern(df, q, spec))
-  }
-
   test("sampled corpus cases match through the Catalyst-planned operator") {
     checkSampledGlobal("CepMatchExec",
       (df, q, spec) => SparkCep.matchPatternExec(df, q, spec))
@@ -136,7 +131,7 @@ class SparkDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
       val df = rows.toDF("k", "id", "type", "name", "price")
       val spec = SparkCep.CepSpec(Some("k"), "id", "type",
         Seq("name", "price"))
-      val got = SparkCep.matchPattern(df, q, spec).collect().toVector
+      val got = SparkCep.matchPatternExec(df, q, spec).collect().toVector
         .groupBy(_.getLong(0))
         .map { case (k, rs) =>
           k -> rs.map(r =>

@@ -94,7 +94,7 @@ class StateGcSpec extends AnyFunSuite with BeforeAndAfterAll {
     val streamed = s.sql("SELECT * FROM gc2").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toVector,
         r.getSeq[Long](2).toVector)).toSet
-    val batch = SparkCep.matchPattern(
+    val batch = SparkCep.matchPatternExec(
       (batch1 ++ batch2 ++ batch3).toDF(), pairQ, spec)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector,
         r.getSeq[Long](2).toVector)).toSet

@@ -66,7 +66,7 @@ class StreamingCepNavSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def batchMatches(q: CepQuery, evs: Seq[Ev]): Matches = {
     val s = spark
     import s.implicits._
-    SparkCep.matchPattern(evs.toDF(), q, spec).collect()
+    SparkCep.matchPatternExec(evs.toDF(), q, spec).collect()
       .map(r => (r.getLong(0),
         (1 until r.length).map(i => r.getSeq[Long](i).toVector).toVector))
       .toSet

@@ -68,7 +68,7 @@ class StreamingCepSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getSeq[Long](1).toVector,
         r.getSeq[Long](2).toVector)).toSet
 
-    val batchDf = SparkCep.matchPattern(
+    val batchDf = SparkCep.matchPatternExec(
       (batch1 ++ batch2).toDF(), query, spec)
     val batch = batchDf.collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toVector,
@@ -117,7 +117,7 @@ class StreamingCepSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val streamed = s.sql("SELECT * FROM cep_anchor_stream").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toSet
-    val batch = SparkCep.matchPattern((batch1 ++ batch2).toDF(), query, spec)
+    val batch = SparkCep.matchPatternExec((batch1 ++ batch2).toDF(), query, spec)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toSet
 
     assert(streamed == batch)

@@ -15,7 +15,7 @@ import org.scalatest.BeforeAndAfterAll
   *
   * Randomized differential on top: pseudo-random subsets of the registry
   * patterns (seeded — deterministic across runs) compare the BATCH shared
-  * operator against per-query `matchPattern`, so the shared path is
+  * operator against per-query `matchPatternExec`, so the shared path is
   * exercised over mixed strict/relaxed/negated/windowed member sets, not
   * just the two hand-picked registry trios.
   */
@@ -199,7 +199,7 @@ class StreamingMultiSharedSpec extends AnyFunSuite with BeforeAndAfterAll {
       val qs = rnd.shuffle(pool).take(k)
       val exp = qs.flatMap { case (name, q) =>
         val piNames = SparkCep.patternNames(q.patseq)
-        SparkCep.matchPattern(events, q, spec).collect().map { row =>
+        SparkCep.matchPatternExec(events, q, spec).collect().map { row =>
           val binding = piNames.map(n =>
             row.getAs[scala.collection.Seq[Long]](n).mkString(","))
             .mkString(";")

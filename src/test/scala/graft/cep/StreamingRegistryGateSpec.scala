@@ -54,7 +54,7 @@ class StreamingRegistryGateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   for ((name, query) <- graft.Queries.cepRegistryQueries.toSeq.sortBy(_._1))
     test(s"stream == batch on registry query $name") {
-      val batch = SparkCep.matchPattern(
+      val batch = SparkCep.matchPatternExec(
         spark.read.parquet(s"$sfDir/events.parquet"), query,
         graft.Queries.eventSpec)
         .collect().map(_.toString).sorted.toVector

@@ -67,16 +67,18 @@ class UnkeyedCepGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset(CepRuntimeWarnings.UnkeyedWarnRowsKey)
   }
 
-  test("unkeyed typed path fires at the configured threshold") {
+  test("unkeyed gauge and timeout entry points fire at the threshold") {
     spark.conf.set(CepRuntimeWarnings.UnkeyedWarnRowsKey, "100")
+    val spec = SparkCep.CepSpec(None, "event_id", "event_type", Seq("value"))
     try {
-      val fired = capture {
-        SparkCep.matchPattern(events(5000), query,
-          SparkCep.CepSpec(None, "event_id", "event_type",
-            Seq("value"))).count()
+      for (run <- Seq(
+          () => SparkCep.shedGauge(events(5000), query, spec, cap = 1),
+          () => SparkCep.timedOutPartials(events(5000),
+            query.copy(within = Some(3)), spec))) {
+        val fired = capture(run().count())
+        assert(fired == Vector((100L, 100L)),
+          s"expected exactly one firing at row 100, got $fired")
       }
-      assert(fired == Vector((100L, 100L)),
-        s"expected exactly one firing at row 100, got $fired")
     } finally spark.conf.unset(CepRuntimeWarnings.UnkeyedWarnRowsKey)
   }
 

@@ -49,7 +49,7 @@ class EventSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.write.json(s"$dir/json")
 
     def matches(in: org.apache.spark.sql.DataFrame) =
-      SparkCep.matchPattern(in, q, spec).collect()
+      SparkCep.matchPatternExec(in, q, spec).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).head,
           r.getSeq[Long](2).head)).toSet
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.cep._
 
 /** Scale probe for the multi-query shared-scan CEP exec path
-  * (`matchPatternsShared` → `CepMultiMatchExec`): k patterns over one
+  * (`matchPatternsShared` → `CepMatchExec`): k patterns over one
   * PARQUET-backed stream, shared pass vs the same patterns run separately
   * through `matchPatternExec`.
   *

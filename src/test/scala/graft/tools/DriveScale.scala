@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cep._
 
-/** Scale probe: 4M synthetic events over 40 keys (100k events/key) through
+/** Scale probe: 4M synthetic events over 400 keys (10k events/key) through
   * the batch CEP operator — validates the streaming-NFA memory claim and
-  * measures throughput on a selective strict pattern.
+  * measures throughput on a selective strict pattern, with and without
+  * the skew gauge.
   */
 object DriveScale {
   def main(args: Array[String]): Unit = {
@@ -37,19 +38,20 @@ object DriveScale {
     val skew = CepSkewAccumulator.registered(spark, "cep_skew")
     val t0 = System.nanoTime()
     val matches =
-      SparkCep.matchPattern(df, q, spec, skewAcc = Some(skew)).count()
+      SparkCep.matchPatternExec(df, q, spec, skewAcc = Some(skew)).count()
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"SCALE_MATCHES=$matches SECONDS=$sec%.1f EVENTS_PER_SEC=${(n / sec).toLong}")
     val st = skew.value
     println(s"SCALE_SKEW max_runs=${st.maxRuns} hottest_key=${st.hottestKey} " +
       s"events_fed=${st.events}")
-    // the Catalyst-planned operator (InternalRow end-to-end, declared
-    // distribution) on the identical input + pattern
+    // the same operator without the gauge, on the identical input +
+    // pattern: the gauge's cost, and a check that it changes no match
     val t1 = System.nanoTime()
-    val matchesExec = SparkCep.matchPatternExec(df, q, spec).count()
-    val secExec = (System.nanoTime() - t1) / 1e9
-    require(matchesExec == matches, s"exec diverged: $matchesExec vs $matches")
-    println(f"SCALE_EXEC SECONDS=$secExec%.1f EVENTS_PER_SEC=${(n / secExec).toLong}")
+    val matchesPlain = SparkCep.matchPatternExec(df, q, spec).count()
+    val secPlain = (System.nanoTime() - t1) / 1e9
+    require(matchesPlain == matches,
+      s"the gauge changed the matches: $matchesPlain vs $matches")
+    println(f"SCALE_NO_GAUGE SECONDS=$secPlain%.1f EVENTS_PER_SEC=${(n / secPlain).toLong}")
     spark.stop()
   }
 }
