@@ -357,8 +357,8 @@ object Queries {
   /** MEASURED statements on the shared scan (`CepMeasures.runShared` /
     * `CepSql.parseStatements`): three adjacent-pair statements with a
     * COMMON measure schema, matched in ONE operator pass (one scan, one
-    * union pushdown, one key exchange, one state sweep) and projected
-    * per member downstream — the text form of "k funnels, one pass,
+    * union pushdown, one key exchange, one state sweep) and rendered
+    * per member in the operator — the text form of "k funnels, one pass,
     * flat measure rows out". Members are union'd under `qname` for the
     * gate; the oracle is one LEAD pass classified three ways.
     * Solo-vs-shared equality is differential-pinned in
@@ -405,9 +405,8 @@ object Queries {
   /** `ALL ROWS PER MATCH` members on the SHARED scan
     * (`CepMeasures.runShared` now admits every rows-per-match mode):
     * two adjacent-pair statements matched in ONE operator pass, each
-    * emitting one row PER BOUND EVENT with running measures — order ids
-    * suffice, since `allRows` reconstructs the per-event rows from the
-    * shared frame's binding arrays plus the events table. Under the
+    * emitting one row PER BOUND EVENT with running measures, rendered
+    * in the operator from the matches' bound events. Under the
     * strict pairs the running SUM is NULL on the head row and the
     * purchase value on the pair row, `match_no` is the per-user pair
     * sequence, and the oracle is one LEAD pass expanded two-rows-per-
@@ -948,13 +947,12 @@ object Queries {
   /** The MEASURES clause end-to-end (`CepMeasures` — MATCH_RECOGNIZE's
     * per-match aggregate projection): the funnel pattern emitting ONE
     * FLAT ROW PER MATCH of scalar measures instead of binding arrays.
-    * Exercises both evaluation tiers — positional (`FIRST(s)`,
-    * `COUNT(c)`, `LAST(p)`: pure codegen over the id arrays, no join)
-    * and attribute (`SUM/MIN/LAST(c.value)`, `FIRST(p.value)`: explode
-    * the bindings, join events on (key, order), re-aggregate per match
-    * with `sum`/`min`/`min_by`/`max_by`). The oracle recomputes every
-    * measure from the funnel CTEs' bound positions, certifying the
-    * join-back path value-exactly (`value` truncates to long on both
+    * Exercises both measure tiers — positional (`FIRST(s)`,
+    * `COUNT(c)`, `LAST(p)`: bound order ids) and attribute
+    * (`SUM/MIN/LAST(c.value)`, `FIRST(p.value)`: the bound events'
+    * attributes), folded inside the CEP operator. The oracle recomputes
+    * every measure from the funnel CTEs' bound positions, certifying
+    * the fold value-exactly (`value` truncates to long on both
     * engines: CAST(FLOOR(...)), the conditions' convention).
     */
   val cepSqlMeasuresStatement: CepSql.CepSqlStatement = CepSql.parseStatement(
@@ -1769,18 +1767,17 @@ object Queries {
       |  AND es.seq = m.s_seq - 1
       |ORDER BY 1, 2, 3""".stripMargin
 
-  /** `ALL ROWS PER MATCH` (`CepMeasures.allRows`): the other
+  /** `ALL ROWS PER MATCH` (`CepMeasures.run`): the other
     * MATCH_RECOGNIZE output shape — ONE ROW PER BOUND EVENT with the
     * per-key `match_no` sequence, the `classifier` (which pattern name
     * bound the event), the event's order id, and RUNNING measures (each
     * row aggregates the match's rows up to itself). `match_no` is
-    * DETERMINISTIC and temporal: `row_number` per key ordered by the
-    * match's earliest bound ordinal, binding arrays as tiebreaker
-    * (never `monotonically_increasing_id` — see
-    * `CepMeasuresDeterminismSpec`); the oracle reproduces the sequence
-    * by ordering the funnel's bound positions the same way — `s_id`
-    * (the start ordinal, since `s` always binds) first, then the
-    * shorter-prefix-first array comparison (`c2 NULLS FIRST`).
+    * DETERMINISTIC and temporal: per key, ordered by the match's
+    * earliest bound ordinal, binding arrays as tiebreaker; the oracle
+    * reproduces the sequence by ordering the funnel's bound positions
+    * the same way — `s_id` (the start ordinal, since `s` always binds)
+    * first, then the shorter-prefix-first array comparison (`c2 NULLS
+    * FIRST`).
     */
   val cepSqlAllRowsStatement: CepSql.CepSqlStatement =
     CepSql.parseStatement(
@@ -1856,14 +1853,12 @@ object Queries {
       |  FROM m)
       |ORDER BY user_id, match_no, event_id""".stripMargin
 
-  /** ALL ROWS offset navigation (round 17; RUNNING LAST round 18 —
-    * `CepMeasures.allRows` FINAL/RUNNING FIRST/LAST offsets via
-    * nth_value over the per-match windows, LAST forms over descending
-    * twins): the same funnel measured with `FINAL FIRST(c.value, 1)`
-    * (the SECOND bound click's value, NULL on one-click matches —
-    * constant per match), `FINAL LAST(c, 1)` (the second-from-the-end
-    * click's ORDINAL), RUNNING `FIRST(c.value, 1)` (NULL until two
-    * clicks bound SO FAR) and RUNNING `LAST(c.value, 1)` (the
+  /** ALL ROWS offset navigation (`CepMeasures.run` FINAL/RUNNING
+    * FIRST/LAST offsets): the same funnel measured with
+    * `FINAL FIRST(c.value, 1)` (the SECOND bound click's value, NULL on
+    * one-click matches — constant per match), `FINAL LAST(c, 1)` (the
+    * second-from-the-end click's ORDINAL), RUNNING `FIRST(c.value, 1)`
+    * (NULL until two clicks bound SO FAR) and RUNNING `LAST(c.value, 1)` (the
     * second-from-the-end take SO FAR — NULL until two clicks bound,
     * then the first click's value). Oracle: the `cep_sql_all_rows`
     * closed form with the offset values stated per arm in closed form.
@@ -1947,7 +1942,7 @@ object Queries {
       |ORDER BY user_id, match_no, event_id""".stripMargin
 
   /** SQL:2016 `{- x -}` output exclusion over the same `ALL ROWS`
-    * funnel (`CepSql` exclusion unit + `CepMeasures.allRows`): the
+    * funnel (`CepSql` exclusion unit + `CepMeasures.run`): the
     * clicks are excluded from the OUTPUT but still match and still feed
     * the running measures — the surviving `p` row carries the full
     * click count/sum, which is exactly what distinguishes exclusion
@@ -2023,12 +2018,11 @@ object Queries {
       |ORDER BY user_id, match_no, event_id""".stripMargin
 
   /** SQL:2016 `WITH UNMATCHED ROWS` over the `ALL ROWS` funnel
-    * (`CepMeasures.allRows(withUnmatched = true)`): every input row
-    * bound by NO match joins the output with NULL
-    * match_no/classifier/measures — the MATCH_RECOGNIZE way to keep the
-    * full partition in view (lineage/debugging: which events never
-    * participated). The anti-join's bound side is the small one
-    * (distinct bound (key, order) pairs), so AQE broadcasts it. Oracle:
+    * (`CepMeasures.run`): every input row bound by NO match joins the
+    * output with NULL match_no/classifier/measures — the
+    * MATCH_RECOGNIZE way to keep the full partition in view
+    * (lineage/debugging: which events never participated). The CEP
+    * operator renders them once no live run can still bind them. Oracle:
     * the `cep_sql_all_rows` closed form plus a NOT-IN-bound arm.
     */
   val cepSqlUnmatchedStatement: CepSql.CepSqlStatement =
@@ -2118,7 +2112,7 @@ object Queries {
       |ORDER BY user_id, match_no, event_id""".stripMargin
 
   /** SQL:2016 `ALL ROWS PER MATCH SHOW EMPTY MATCHES`
-    * (`CepMeasures.allRows(showEmpty = true)`): the pattern `c{0,3}` is
+    * (`CepMeasures.run`): the pattern `c{0,3}` is
     * NULLABLE, so every event where the attempt yields only the empty
     * match emits one NULL-classifier row with empty-set measures
     * (COUNT 0, SUM NULL), numbered in sequence with the real matches.
@@ -2127,9 +2121,8 @@ object Queries {
     * site, so the output is a TOTAL relabeling of the events table —
     * `match_no` (and the `MATCH_NUMBER()` measure) is exactly the
     * per-user event sequence number, which is the closed form the
-    * oracle states directly. The sites pass is one anti-join/coverage
-    * join over the (key, order) projection; the empty rows ride the
-    * classifier-guarded measure windows with no extra pass.
+    * oracle states directly. The CEP operator finds the sites in one
+    * sorted sweep of the key's match spans.
     */
   val cepSqlShowEmptyStatement: CepSql.CepSqlStatement =
     CepSql.parseStatement(
@@ -2161,14 +2154,13 @@ object Queries {
 
   /** `ONE ROW PER MATCH SHOW EMPTY MATCHES` (engine extension spelling
     * of the SQL:2016 default ONE-ROW behavior, where empty matches are
-    * always output — [[graft.cep.CepMeasures.project]] `showEmpty`):
+    * always output — [[graft.cep.CepMeasures.run]]):
     * same nullable `c{0,3}` matcher as `cep_sql_show_empty`, projected
     * to one SUMMARY row per match — real singleton clicks carry COUNT 1
     * and the click's value, empty matches COUNT 0 / NULL, and
     * `MATCH_NUMBER()` interleaves both by site ordinal, so `mn` is
     * again the per-user event sequence number. Exercises the
-    * positional tier AND the sentinel explode_outer + LEFT-join
-    * attribute tier over a frame with synthetic empty seeds.
+    * positional AND attribute tiers over empty matches.
     */
   val cepSqlOneRowEmptyStatement: CepSql.CepSqlStatement =
     CepSql.parseStatement(
@@ -2646,7 +2638,7 @@ object Queries {
     * window's key exchange is the one the NFA needs anyway); at a
     * partition's first row `PREV` is NULL and the guarded atom is
     * not-true, so runs simply cannot start there. `SUM(y.value)`
-    * exercises the measures join-back over a navigation query.
+    * exercises an attribute measure over a navigation query.
     */
   val cepSqlPrevAscendingStatement: CepSql.CepSqlStatement =
     CepSql.parseStatement(
@@ -2906,9 +2898,8 @@ object Queries {
     * branches, so `SUM(u.value)` reads whichever branch bound — the
     * MATCH_RECOGNIZE way to project "the outcome's value" without
     * knowing the branch — and the per-branch COUNTs classify the match.
-    * Every alternation name is possibly-empty by construction
-    * (`CepMeasures.possiblyEmptyNames`), so this row exercises the
-    * sentinel explode_outer + LEFT-join measures path end-to-end.
+    * Every alternation name is possibly-empty by construction, so this
+    * row exercises measures over empty bindings end-to-end.
     * Self-contained statement (PARTITION BY / ORDER BY / TYPE in-text).
     */
   val cepSqlAltSubsetValueStatement: CepSql.CepSqlStatement =

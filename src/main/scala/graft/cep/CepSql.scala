@@ -949,7 +949,7 @@ object CepSql {
     */
   /** MATCH_RECOGNIZE output mode: one flat row of measures per match
     * (the default), one row per bound event with running measures
-    * (`ALL ROWS PER MATCH` — [[CepMeasures.allRows]]), or the latter
+    * (`ALL ROWS PER MATCH`), or the latter
     * plus every input row bound by NO match with NULL
     * match_no/classifier/measures (`... WITH UNMATCHED ROWS`).
     */
@@ -962,7 +962,7 @@ object CepSql {
       * default is OMIT — documented deviation). The explicit spelling
       * opts into the standard behavior: one summary row per empty
       * match with COUNT 0 / NULL measures and interleaved
-      * `MATCH_NUMBER()` ([[CepMeasures.project]] `showEmpty`).
+      * `MATCH_NUMBER()` ([[CepMeasures.run]]).
       */
     case object OneRowShowEmpty extends RowsPerMatch
     /** `ALL ROWS PER MATCH` — the engine's fixed default is SQL:2016's
@@ -974,8 +974,8 @@ object CepSql {
     /** `ALL ROWS PER MATCH SHOW EMPTY MATCHES` (SQL:2016) — zero-width
       * matches of a NULLABLE pattern surface as one NULL-classifier row
       * each, numbered in sequence with the real matches
-      * ([[CepMeasures.allRows]] `showEmpty`; batch-only like the mode's
-      * other variants).
+      * ([[CepMeasures.run]]; batch-only like the mode's other
+      * variants).
       */
     case object AllRowsShowEmpty extends RowsPerMatch
   }
@@ -985,9 +985,8 @@ object CepSql {
     * (`ONE ROW PER MATCH` / `ALL ROWS PER MATCH`), and the optional
     * in-statement spec sections (`PARTITION BY key`, `ORDER BY ord`,
     * `TYPE typecol`) that make the statement self-contained the way real
-    * MATCH_RECOGNIZE is. Execute with [[CepMeasures.run]] (which
-    * dispatches on the output mode), or match `query` yourself and
-    * project via [[CepMeasures.project]]/[[CepMeasures.allRows]].
+    * MATCH_RECOGNIZE is. Execute with [[CepMeasures.run]], which
+    * renders the output mode inside the CEP operator.
     */
   final case class CepSqlStatement(query: CepQuery,
       measures: Vector[CepMeasures.MeasureItem],

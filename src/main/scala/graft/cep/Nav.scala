@@ -3,7 +3,7 @@ package graft.cep
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** SQL:2016 MATCH_RECOGNIZE row navigation — `PREV(attr[, k])` /
   * `NEXT(attr[, k])` inside DEFINE `WHERE`/`UNTIL` conditions.
@@ -162,11 +162,14 @@ object Nav {
   // ---------------------------------------------------------- Spark columns
 
   /** Materialize the navigation columns on the raw input frame:
-    * `lag`/`lead` of the (long-cast) base attribute over the key
-    * partition in input order, plus the 0/1 has-indicator. Must run on
+    * `lag`/`lead` of the base attribute (long-cast; a STRING base keeps
+    * its type, like `SparkCep.attrProj`) over the key partition in input
+    * order, plus the 0/1 has-indicator. Must run on
     * the UN-pushed-down frame (navigation observes rows the pre-NFA
     * filter drops) but after the null-key drop (null-key rows are not
-    * part of any sequence — the engine's input excludes them).
+    * part of any sequence — the engine's input excludes them). Every
+    * value column is one window expression of the SAME projection, so
+    * all navigations share one Window node: one per-key sort pass.
     */
   def addColumns(df: DataFrame, partKey: Option[Column], orderCol: String,
       navs: Seq[Nav]): DataFrame = {
@@ -174,17 +177,19 @@ object Nav {
       case Some(k) => Window.partitionBy(k).orderBy(col(orderCol))
       case None    => Window.orderBy(col(orderCol))
     }
-    navs.foldLeft(df) { (d, nv) =>
-      require(d.columns.contains(nv.base),
+    val values = navs.map { nv =>
+      require(df.columns.contains(nv.base),
         s"CEP navigation ${nv.sqlForm}: no column '${nv.base}' in the " +
           "input")
-      val base = col(nv.base).cast(LongType)
-      val v =
-        if (nv.prev) lag(base, nv.k).over(w) else lead(base, nv.k).over(w)
-      d.withColumn(nv.valueName, v)
-        .withColumn(nv.hasName,
-          col(nv.valueName).isNotNull.cast(LongType))
+      val base =
+        if (df.schema(nv.base).dataType == StringType) col(nv.base)
+        else col(nv.base).cast(LongType)
+      (if (nv.prev) lag(base, nv.k).over(w) else lead(base, nv.k).over(w))
+        .as(nv.valueName)
     }
+    df.select(col("*") +: values: _*)
+      .select(col("*") +: navs.map(nv =>
+        col(nv.valueName).isNotNull.cast(LongType).as(nv.hasName)): _*)
   }
 
   /** Streaming-side navigation: augment ONE event from its key's

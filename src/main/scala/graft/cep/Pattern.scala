@@ -176,9 +176,7 @@ object Pattern {
     * units (same DEFINEs, same initials), a run walks exactly one
     * branch, and every name binds in every match — so the compiler
     * skips the disjoint-branch check it imposes on `Alt` (where shared
-    * names would be an authoring mistake), and MEASURES over the names
-    * keep the inner, broadcast-eligible join shape (no possibly-empty
-    * sentinel — see `CepMeasures.possiblyEmptyNames`).
+    * names would be an authoring mistake).
     *
     * COMPILED as a subset lattice, not the k! union: one junction per
     * set of already-matched units, a copy of each remaining unit's
@@ -410,7 +408,7 @@ object Pattern {
 
   /** Whether the pattern can match the EMPTY event sequence — SQL:2016
     * "nullability", the gate for `SHOW EMPTY MATCHES` sites
-    * (`CepMeasures.allRows(showEmpty = true)`): an empty match can
+    * (`CepMeasures.run`): an empty match can
     * occur only when the whole pattern accepts zero events.
     *
     *  - a single event (`Spat`) never does; a loop does iff its lower
@@ -425,9 +423,8 @@ object Pattern {
     *    produce empty matches (documented deviation; the engine's
     *    negatives are beyond SQL:2016 anyway).
     *
-    * NOTE this is the can-match-ZERO-EVENTS predicate, not
-    * `CepMeasures.possiblyEmptyNames` (which asks which NAMES can be
-    * unbound inside a NON-empty match). `DstCompiler` keeps a private
+    * NOTE this is the can-match-ZERO-EVENTS predicate, not which NAMES
+    * can be unbound inside a NON-empty match. `DstCompiler` keeps a private
     * variant for its chain-head analysis that propagates through
     * `CombineNot` as left && right — the two agree on every
     * constructible pattern (an ε-accepting `CombineNot.left` is

@@ -353,6 +353,42 @@ object SparkCep {
       CepEmission.Bindings, effMaxRuns, skewAcc)
   }
 
+  /** MATCH_RECOGNIZE MEASURES rendered inside the operator
+    * (`CepMeasures.run`, `runAllRows`, `runShared`): one member per
+    * measured statement on one scan, one key exchange and one NFA pass,
+    * each member's rows rendered inside the feed loop
+    * (`CepEmission.Measures`). The feed takes the members' union
+    * prefilter unless a member renders rows the NFA never binds (SHOW
+    * EMPTY sites, unmatched rows). `PREV/NEXT(FIRST/LAST(..))` measures
+    * ride the DEFINE-side navigation columns (`CepMeasures.navsOf`).
+    * `shared` outputs `qname`, the key, then every member's block.
+    */
+  private[graft] def matchMeasures(df: DataFrame,
+      members: Seq[(String, CepMeasures.Rendering)], spec: CepSpec,
+      maxRunsPerKey: Option[Int], skewAcc: Option[CepSkewAccumulator],
+      shared: Boolean): DataFrame = {
+    val queries = members.map { case (n, r) => n -> r.st.query }
+    queries.foreach { case (_, q) =>
+      checkWithinStateBound(q, maxRunsPerKey, streaming = false)
+      checkStrTyping(df, q, spec)
+    }
+    val effMaxRuns =
+      resolveMaxRuns(df.sparkSession, queries.map(_._2), maxRunsPerKey)
+    val filter =
+      if (members.exists(_._2.seesEveryRow)) None
+      else unionPrefilter(queries, spec)
+    val navs = (queries.flatMap { case (_, q) => Nav.ofQuery(q) } ++
+      members.flatMap(m => CepMeasures.navsOf(m._2.st.measures)))
+      .distinct.sortBy(_.valueName)
+    val (prepared, attrNames) = prepareWithFilter(df, filter, spec, navs)
+    cepExec(df, spec, prepared, attrNames,
+      queries.map { case (n, q) =>
+        CepMember(n, q, memberFeedTypes(q, spec).orNull)
+      },
+      CepEmission.Measures(members.map(_._2).toVector, shared), effMaxRuns,
+      skewAcc)
+  }
+
   /** A single-query entry point's one member, fed every event. */
   private def single(query: CepQuery): Seq[CepMember] =
     Seq(CepMember("", query, null))

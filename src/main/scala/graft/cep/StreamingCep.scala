@@ -316,9 +316,10 @@ object StreamingCep {
 
   /** Streaming `ONE ROW PER MATCH SHOW EMPTY MATCHES` (round 17): the
     * per-key empty-match site tracker. Batch derives sites from the
-    * COMPLETE reported match set ([[CepMeasures.emptySites]]); a stream
-    * cannot close that set — but a WINDOWED query (within/withinTime)
-    * makes each site's status final in bounded feed distance: a match
+    * key's reported matches once no live run can cover them
+    * (`CepMeasures.KeyMatches`); a stream cannot close that set — but a
+    * WINDOWED query (within/withinTime) makes each site's status final
+    * in bounded feed distance: a match
     * STARTING at position p takes its first event AT p, and the
     * executor's accept guard (`i - firstTake < w`,
     * `tsAttr - firstTakeTs < span`) kills every run started at p once
@@ -329,10 +330,8 @@ object StreamingCep {
     *  - every fed event enters the pending set (under the `^` anchor:
     *    only the key's FIRST event — the only attempt site);
     *  - every reported match removes the pending ordinals its
-    *    prune-adjusted span covers: `[start, start]` for
-    *    NoSkip/SkipToNext, `[start, last bound]` for SkipPastLastEvent,
-    *    `[start, max(start, anchor-1)]` for SkipToFirst/Last (anchor
-    *    unbound → start alone), everything for `^`;
+    *    prune-adjusted span covers ([[CepMeasures.siteSpan]], the rule
+    *    batch shares), everything for `^`;
     *  - `flush` emits (and drops) every pending site whose window
     *    provably closed — by EITHER bound when both are declared.
     *
@@ -371,21 +370,10 @@ object StreamingCep {
     def onMatch(byName: Map[String, Vector[Event]],
         orderName: String): Unit = if (active && pend.nonEmpty) {
       if (anchorStart) { pend = Vector.empty; return }
-      val ords = byName.valuesIterator.flatten.map(_(orderName)).toVector
-      if (ords.isEmpty) return
-      val start = ords.min
-      def anchorEnd(a: String, first: Boolean): Long = {
-        val bound = byName.getOrElse(a, Vector.empty).map(_(orderName))
-        if (bound.isEmpty) start
-        else math.max(start, (if (first) bound.min else bound.max) - 1)
+      CepMeasures.siteSpan(byName, orderName, strategy).foreach {
+        case (start, end) =>
+          pend = pend.filterNot(p => p.ord >= start && p.ord <= end)
       }
-      val end = strategy match {
-        case AfterMatchStrategy.SkipPastLastEvent => ords.max
-        case AfterMatchStrategy.SkipToFirst(a) => anchorEnd(a, first = true)
-        case AfterMatchStrategy.SkipToLast(a) => anchorEnd(a, first = false)
-        case _ => start // NoSkip / SkipToNext: non-starts host empties
-      }
-      pend = pend.filterNot(p => p.ord >= start && p.ord <= end)
     }
     /** Sites whose window closed, removed from the set — one empty
       * summary row each. `stepNow` = total events fed, `clock` = the
@@ -1204,22 +1192,17 @@ object StreamingCep {
     * scalar measures per match, emitted the micro-batch the match
     * completes.
     *
-    * Unlike the batch tier (`CepMeasures.project`, which joins the match
-    * frame back to the event table because the relational frame keeps
-    * order ids alone), the streaming operator folds every measure AT
-    * EMISSION over the match's own bound events, which still carry all
-    * their attributes inside the executor (`CepMeasures.evalMeasure`).
-    * That sidesteps both streaming hazards of the relational
-    * formulation: no stream-stream join-back (the event table IS the
-    * stream) and no cross-batch streaming aggregation whose `__mid`
-    * grouping state would grow without a watermark. Cost is O(match) per
+    * Every measure folds AT EMISSION over the match's own bound events,
+    * which still carry all their attributes inside the executor — the
+    * one evaluator batch uses too (`CepMeasures.evalItemBoxed`). No
+    * stream-stream join-back (the event table IS the stream) and no
+    * cross-batch aggregation state. Cost is O(match) per
     * match, state is exactly `matchPattern`'s (same codec, same
     * `VariantArrival` tag — a checkpoint written by either operator
     * restores into the other; only the projection differs).
     *
     * Semantics gate: `StreamingCepMeasuresSpec` pins batch==stream
-    * across micro-batch boundaries — the fold here must equal the batch
-    * join-back tier row-for-row — plus a checkpoint restart.
+    * across micro-batch boundaries, plus a checkpoint restart.
     */
   def matchPatternMeasures(df: DataFrame, st: CepSql.CepSqlStatement,
       spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame =

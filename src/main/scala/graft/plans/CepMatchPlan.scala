@@ -12,15 +12,16 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.cep.{CepQuery, CepRuntimeWarnings, CepSkewAccumulator, DstCompiler, Event, Executor, Match, Pattern}
+import graft.cep.{CepMeasures, CepQuery, CepRuntimeWarnings, CepSkewAccumulator, DstCompiler, Event, Executor, Match, Pattern}
 
 /** The CEP pattern-match operator as a first-class Catalyst plan — the
   * prompt's extension path (c): a custom `LogicalPlan` + `SparkStrategy` +
   * `SparkPlan`, planned through the session's planner. Every batch entry
   * point (`SparkCep.matchPatternExec`, `matchPatternsShared`,
-  * `timedOutPartials`, `shedGauge`) is this one node: a list of member
-  * queries fed side by side in one key-grouped loop, and an emission
-  * (`CepEmission`) that fixes what the node outputs.
+  * `timedOutPartials`, `shedGauge`, and the MEASURES entry points of
+  * `CepMeasures` via `SparkCep.matchMeasures`) is this one node: a
+  * list of member queries fed side by side in one key-grouped loop, and
+  * an emission (`CepEmission`) that fixes what the node outputs.
   *
   * The physical node *declares* its needs — `requiredChildDistribution =
   * ClusteredDistribution(key)` at a pinned partition count and
@@ -117,6 +118,28 @@ private[graft] object CepEmission {
         : Seq[Attribute] =
       key +: Seq("n_matches", "shed_runs", "cap").map(n =>
         AttributeReference(n, LongType, nullable = false)())
+  }
+
+  /** MATCH_RECOGNIZE MEASURES rows, rendered by `CepMeasuresSink` as
+    * each key is fed (`SparkCep.matchMeasures`): one column block per member
+    * (`CepMeasures.Rendering.fields`). A single statement outputs the
+    * key, then its block; `shared` outputs `qname`, the key, then every
+    * member's block under `CepMeasures.sharedName`, a row filling only
+    * its own member's block.
+    */
+  final case class Measures(renderings: Vector[CepMeasures.Rendering],
+      shared: Boolean) extends CepEmission {
+    override def keyIndex: Int = if (shared) 1 else 0
+    override def output(key: Attribute, members: Seq[CepMember])
+        : Seq[Attribute] = {
+      def attrs(fs: Seq[(String, DataType)], name: String => String) =
+        fs.map { case (f, dt) => AttributeReference(name(f), dt)() }
+      if (!shared) key +: attrs(renderings.head.fields, identity)
+      else AttributeReference("qname", StringType, nullable = false)() +:
+        key +: renderings.zipWithIndex.flatMap { case (r, i) =>
+          attrs(r.fields, CepMeasures.sharedName(i, _))
+        }
+    }
   }
 }
 
@@ -357,10 +380,15 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
   private val names = ms.map(m => Pattern.names(m.query.patseq)).toArray
   // qname as UTF8String once per task, not per match
   private val qnames = ms.map(m => UTF8String.fromString(m.name)).toArray
+  private val sink = em match {
+    case m: CepEmission.Measures =>
+      new CepMeasuresSink(m, proj, qnames, executors)
+    case _ => null
+  }
   // `$` on any member needs the last-event-of-key flag (per KEY, so one
-  // peek serves every member); the gauge emits at key end
+  // peek serves every member); the gauge and MEASURES emit at key end
   private val flagLast = !timeouts && ms.exists(_.query.anchorEnd)
-  private val peek = flagLast || gauge
+  private val peek = flagLast || gauge || sink != null
   // per-event scratch: this row's output per member (reused — safe, the
   // row's output iterator is drained before the next row starts)
   private val found = new Array[Vector[Match]](executors.length)
@@ -432,7 +460,8 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
       else Iterator.single(proj(new GenericInternalRow(Array[Any](curKey,
         keyMatches, shedCount,
         em.asInstanceOf[CepEmission.ShedGauge].cap.toLong))))
-    } else if (!any) Iterator.empty
+    } else if (sink != null) sink.step(ev, found, last, curKey)
+    else if (!any) Iterator.empty
     else found.indices.iterator.flatMap { q =>
       found(q).iterator.map { m =>
         proj(
@@ -441,6 +470,115 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
       }
     }
   }
+}
+
+/** The `Measures` emission's task state: each member's kept matches of
+  * the current key (`CepMeasures.KeyMatches`), and the key's fed
+  * ordinals not yet rendered when a member renders rows the NFA never
+  * binds (`CepMeasures.Rendering.seesEveryRow`). Once the kept matches
+  * and ordinals reach `flushAt`, the earliest order id any live run has
+  * bound (or this event's) is a watermark no later match starts before:
+  * everything before it is rendered and dropped, so a key keeps matches
+  * only while a run that started before them is alive. The key's last
+  * event renders the rest.
+  */
+private final class CepMeasuresSink(em: CepEmission.Measures,
+    proj: UnsafeProjection, qnames: Array[UTF8String],
+    executors: Array[Executor]) {
+  private val keyMatches =
+    em.renderings.map(new CepMeasures.KeyMatches(_)).toArray
+  private val recordOrds = em.renderings.exists(_.seesEveryRow)
+  private var ords = new Array[Long](64)
+  private var nOrds = 0
+  private var first = 0L
+  private var fresh = true
+  private var flushAt = CepMeasuresSink.FlushMin
+  // this event's output blocks by member (drained before the next step)
+  private val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Any])]
+  private val emit = Array.tabulate(keyMatches.length)(q =>
+    (b: Array[Any]) => { out += q -> b; () })
+  // where each member's block starts in a shared row
+  private val offsets =
+    em.renderings.scanLeft(2)(_ + _.fields.length).toArray
+
+  def step(ev: Event, found: Array[Vector[Match]], last: Boolean,
+      key: Any): Iterator[InternalRow] = {
+    val o = CepRowDecode.orderId(ev)
+    if (fresh) { first = o; fresh = false }
+    if (recordOrds) {
+      if (nOrds == ords.length)
+        ords = java.util.Arrays.copyOf(ords, nOrds * 2)
+      ords(nOrds) = o
+      nOrds += 1
+    }
+    out.clear()
+    var q = 0
+    while (q < found.length) {
+      if (found(q).nonEmpty) found(q).foreach(keyMatches(q).add(_, emit(q)))
+      q += 1
+    }
+    if (last) {
+      flush(Long.MaxValue, keyEnd = true, nOrds)
+      nOrds = 0; fresh = true; flushAt = CepMeasuresSink.FlushMin
+    } else if (kept >= flushAt) {
+      val w = watermark(o)
+      var n = 0
+      while (n < nOrds && ords(n) < w) n += 1
+      flush(w, keyEnd = false, n)
+      System.arraycopy(ords, n, ords, 0, nOrds - n)
+      nOrds -= n
+      flushAt = math.max(CepMeasuresSink.FlushMin, 2 * kept)
+    }
+    if (out.isEmpty) Iterator.empty
+    else out.iterator.map { case (q, b) =>
+      proj(new GenericInternalRow(row(q, key, b)))
+    }
+  }
+
+  private def flush(w: Long, keyEnd: Boolean, n: Int): Unit = {
+    var q = 0
+    while (q < keyMatches.length) {
+      keyMatches(q).flush(w, keyEnd, ords, n, first, emit(q)); q += 1
+    }
+  }
+
+  /** Matches and ordinals the sink holds. */
+  private def kept: Int = {
+    var s = nOrds
+    var q = 0
+    while (q < keyMatches.length) { s += keyMatches(q).size; q += 1 }
+    s
+  }
+
+  /** No later match of the key starts before the earliest event a live
+    * run has bound, nor before the current event.
+    */
+  private def watermark(cur: Long): Long = {
+    var w = cur
+    executors.foreach(_.snapshot._2.foreach { case (_, c) =>
+      c.ctx.valuesIterator.foreach(evs =>
+        if (evs.nonEmpty) w = math.min(w, CepRowDecode.orderId(evs.head)))
+    })
+    w
+  }
+
+  private def row(q: Int, key: Any, block: Array[Any]): Array[Any] =
+    if (!em.shared) key +: block
+    else {
+      val vals = new Array[Any](offsets.last)
+      vals(0) = qnames(q)
+      vals(1) = key
+      System.arraycopy(block, 0, vals, offsets(q), block.length)
+      vals
+    }
+}
+
+private object CepMeasuresSink {
+  /** Held matches and ordinals before the first mid-key flush; each
+    * flush moves the bar to twice what it could not render, so a key
+    * whose oldest run stays alive costs O(log) watermark scans.
+    */
+  val FlushMin = 1024
 }
 
 /** The per-match row shapes of `CepMatchExec`. */

@@ -7,12 +7,10 @@ import org.scalatest.BeforeAndAfterAll
 import SparkCep.CepSpec
 
 /** SQL:2016 `{- x -}` output exclusion (`CepSql` unit production +
-  * `CepMeasures.allRows`): the excluded unit matches, binds and feeds
+  * `CepMeasures.run`): the excluded unit matches, binds and feeds
   * MEASURES normally — only its rows are omitted from `ALL ROWS PER
   * MATCH` output. Pinned: the running/final aggregates on SURVIVING
-  * rows still include the excluded rows' contributions (the filter sits
-  * ABOVE the window computation and Catalyst cannot push a classifier
-  * predicate below a window partitioned by (key, match_no)).
+  * rows still include the excluded rows' contributions.
   */
 class CepExclusionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -102,9 +100,7 @@ class CepExclusionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val st = CepSql.parseStatement(exclSql, schema)
     val df = eventsDf((1L, 1L, "S", 0L))
     val e = intercept[IllegalArgumentException] {
-      CepMeasures.allRows(
-        SparkCep.matchPatternExec(df, st.query, spec), df, st.query,
-        spec, st.measures, excluded = Set("nope"))
+      CepMeasures.run(df, st.copy(excluded = Vector("nope")), spec)
     }
     assert(e.getMessage.contains("not a pattern name"))
   }
@@ -136,6 +132,27 @@ class CepExclusionSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, 1L, 1L, "s", 0L), (1L, 2L, 1L, "c", 1L),
       (1L, 3L, 1L, "p", 1L), (1L, 4L, -1L, "-", -1L),
       (2L, 10L, -1L, "-", -1L)))
+  }
+
+  test("WITH UNMATCHED ROWS: a NULL-keyed row belongs to no partition " +
+    "and is never output") {
+    val st = CepSql.parseStatement(
+      "PATTERN (s -> c{1,1} -> p) " +
+        "MEASURES COUNT(c) AS n_c " +
+        "ALL ROWS PER MATCH WITH UNMATCHED ROWS " +
+        "PARTITION BY k ORDER BY id TYPE t " +
+        "DEFINE s AS S; c AS C; p AS P", schema)
+    val s = spark
+    import s.implicits._
+    val df = Seq[(Option[Long], Long, String, Long)](
+      (Some(1L), 1L, "S", 0L), (Some(1L), 2L, "C", 5L),
+      (Some(1L), 3L, "P", 2L), (Some(1L), 4L, "C", 7L),
+      (None, 5L, "S", 0L)).toDF("k", "id", "t", "v")
+    val out = CepMeasures.run(df, st).collect()
+    assert(out.length == 4, out.mkString("\n"))
+    assert(!out.exists(_.isNullAt(0)),
+      "a NULL-keyed row surfaced as an unmatched row:\n" +
+        out.mkString("\n"))
   }
 
   test("WITH UNMATCHED ROWS x exclusion: an excluded row is matched, " +

@@ -24,10 +24,10 @@ import SparkCep.CepSpec
   * RDD that reverses its row order on every other evaluation (an
   * `AtomicInteger` in the partition closure — local mode, one JVM). The
   * legacy self-join formulation (embedded below, verbatim shape)
-  * mis-attaches measures on it; the shipped single-pass formulation
-  * (`CepMeasures.project` — id generated once, consumed by ONE
-  * downstream pipeline) stays correct, and its analyzed plan reads the
-  * match frame exactly once.
+  * mis-attaches measures on it. The shipped formulation has no match
+  * identity to disagree on: `CepMeasures.run` folds every measure over
+  * the match's own bound events inside the CEP operator, and stays
+  * correct on an event source that flips its row order the same way.
   */
 object CepMeasuresDeterminismSpec {
   // executor-JVM evaluation counter (local mode: same JVM as the test)
@@ -90,13 +90,37 @@ class CepMeasuresDeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
     (matches, events)
   }
 
+  /** `n` strict `s c c` runs for key 1 from a source whose row order
+    * reverses on every other evaluation: run i binds S(3i) and the
+    * clicks C(3i+1), C(3i+2) with values 10i and 10i+1, so its correct
+    * SUM(c.v) is `20*i + 1` and FIRST(s) / 3 is i.
+    */
+  private def flippingEvents(n: Int): DataFrame = {
+    val rows = (0 until n).flatMap { i =>
+      Seq(Row(1L, 3L * i, "S", 0L), Row(1L, 3L * i + 1, "C", 10L * i),
+        Row(1L, 3L * i + 2, "C", 10L * i + 1))
+    }
+    val flipping = spark.sparkContext.parallelize(rows, 1).mapPartitions {
+      it =>
+        val v = it.toVector
+        val flip =
+          CepMeasuresDeterminismSpec.evals.getAndIncrement() % 2 == 1
+        (if (flip) v.reverse else v).iterator
+    }
+    spark.createDataFrame(flipping, StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("id", LongType, nullable = false),
+      StructField("t", StringType, nullable = false),
+      StructField("v", LongType, nullable = false))))
+  }
+
   private val spec = CepSpec(Some("k"), "id", "t", Seq("v"))
-  private val query = CepSql.parse(
-    "PATTERN (s -> c{2,2}~) DEFINE s AS S; c AS C",
-    Vector("S" -> Vector("id", "v"), "C" -> Vector("id", "v")))
   private val measures = Vector(
     CepMeasures.Measure(CepMeasures.Fn.First, "s", None, "s_id"),
     CepMeasures.Measure(CepMeasures.Fn.Sum, "c", Some("v"), "c_sum"))
+  private val statement = CepSql.CepSqlStatement(CepSql.parse(
+    "PATTERN (s c{2,2}) DEFINE s AS S; c AS C",
+    Vector("S" -> Vector("id", "v"), "C" -> Vector("id", "v"))), measures)
 
   /** The round-12 formulation, verbatim shape: tag with
     * monotonically_increasing_id, explode/aggregate one side, LEFT
@@ -137,26 +161,14 @@ class CepMeasuresDeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
       "expected the legacy self-join formulation to mis-attach measures " +
         "on the order-flipping source — the hazard this spec pins")
 
-    // shipped formulation: correct on the same adversarial source, every
-    // trial
+    // the operator's formulation: correct on an adversarial event source
+    // whose row order flips between evaluations, every trial
     for (trial <- 0 until 3) {
-      val (matches, events) = fixtures(n)
-      val out = CepMeasures.project(matches, events, query, spec, measures)
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toVector
+      val out = CepMeasures.run(flippingEvents(n), statement, spec)
+        .collect().map(r => (r.getLong(1) / 3, r.getLong(2))).toVector
       assert(out.length == n, s"trial $trial: lost/duplicated matches")
       assert(violations(out) == 0,
-        s"trial $trial: shipped project() mis-attached measures: $out")
+        s"trial $trial: CepMeasures.run mis-attached measures: $out")
     }
-  }
-
-  test("shipped plan reads the match frame exactly once (no self-join)") {
-    val (matches, events) = fixtures(4)
-    val out = CepMeasures.project(matches, events, query, spec, measures)
-    // one leaf for the match frame + one for the event table: the frame
-    // is never evaluated twice, so id nondeterminism cannot split a match
-    val leaves = out.queryExecution.analyzed.collectLeaves()
-    assert(leaves.length == 2,
-      s"expected 2 leaves (matches, events), got ${leaves.length}:\n" +
-        leaves.mkString("\n"))
   }
 }

@@ -6,16 +6,15 @@ import org.scalatest.BeforeAndAfterAll
 
 import SparkCep.CepSpec
 
-/** Interaction differential: the MEASURES tiers consume match frames
-  * under EVERY after-match skip strategy and BOTH window kinds, so the
-  * coverage the surface opened is closed the `SkipToAnchorSpec` way — an
-  * independent in-memory recomputation (pure `CepOperator.run` per key,
-  * measures folded straight off the bound events) checked against the
-  * relational tier (`CepMeasures.project` over `matchPatternExec`
-  * frames) for every (strategy × window) cell over seeded random
-  * streams. A second invariant ties `allRows` to `project`: each
-  * match's LAST row carries the running aggregates at completion, which
-  * must equal the one-row-per-match projection as a multiset.
+/** Interaction differential: MEASURES under EVERY after-match skip
+  * strategy and BOTH window kinds, closed the `SkipToAnchorSpec` way — an
+  * in-memory recomputation (pure `CepOperator.run` per key, measures
+  * folded straight off the bound events) checked against the Spark
+  * operator (`CepMeasures.run`) for every (strategy × window) cell over
+  * seeded random streams. A second invariant ties ALL ROWS to ONE ROW
+  * (`CepMeasures.runAllRows`): each match's LAST row carries the running
+  * aggregates at completion, which must equal the one-row-per-match
+  * projection as a multiset.
   */
 class CepMeasuresInteractionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -115,18 +114,17 @@ class CepMeasuresInteractionSpec extends AnyFunSuite with BeforeAndAfterAll {
             rnd.nextInt(10).toLong, ts)
         }
         val df = evs.toDF("k", "id", "t", "v", "ts")
-        val frames = SparkCep.matchPatternExec(df, query, spec)
-        val got = collectRows(
-          CepMeasures.project(frames, df, query, spec, measures))
+        val st = CepSql.CepSqlStatement(query, measures)
+        val got = collectRows(CepMeasures.run(df, st, spec))
         val want = model(evs, query)
         assert(got == want,
-          s"[$sname / $wname] trial $trial: project() diverged from " +
+          s"[$sname / $wname] trial $trial: run() diverged from " +
             s"the independent model\n got=$got\nwant=$want")
         matched += got.length
 
-        // allRows: the last row of each match carries the completed
+        // ALL ROWS: the last row of each match carries the completed
         // running aggregates == the one-row-per-match projection
-        val ar = CepMeasures.allRows(frames, df, query, spec, measures)
+        val ar = CepMeasures.runAllRows(df, st, spec)
         val lastRows = ar.collect()
           .groupBy(r => (r.getLong(0), r.getLong(1)))
           .iterator.map { case (_, rows) =>
@@ -136,8 +134,8 @@ class CepMeasuresInteractionSpec extends AnyFunSuite with BeforeAndAfterAll {
               .toVector)
           }.toVector.sortBy(_.toString)
         assert(lastRows == want,
-          s"[$sname / $wname] trial $trial: allRows' final running " +
-            "measures diverged from project()")
+          s"[$sname / $wname] trial $trial: ALL ROWS' final running " +
+            "measures diverged from ONE ROW")
       }
       assert(matched > 0,
         s"[$sname / $wname] degenerate: no matches in any trial")

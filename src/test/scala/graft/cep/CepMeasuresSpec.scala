@@ -1,10 +1,15 @@
 package graft.cep
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join,
+  LogicalPlan, Window}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import SparkCep.CepSpec
+
+/** A (key, id, type, v) event whose `v` may be NULL. */
+case class EvNullV(k: Long, id: Long, t: String, v: Option[Long])
 
 /** The MEASURES projection (`CepMeasures`): per-match scalar aggregates
   * over a match frame — positional tier (size/get over the binding
@@ -277,47 +282,86 @@ class CepMeasuresSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("parseStatement"))
   }
 
+  private def planOf(sql: String): LogicalPlan = {
+    val st = CepSql.parseStatement(sql, schema)
+    val df = eventsDf((1L, 1L, "S", 0L), (1L, 2L, "C", 1L),
+      (1L, 3L, "P", 2L))
+    CepMeasures.run(df, st, spec).queryExecution.optimizedPlan
+  }
+  private def cepNodes(p: LogicalPlan) =
+    p.collect { case c: graft.plans.CepMatchPlan => c }
+  private def relational(p: LogicalPlan) = p.collect {
+    case j: Join => j
+    case a: Aggregate => a
+    case w: Window => w
+  }
+  private def nodeNames(p: LogicalPlan): Seq[String] =
+    p.collect { case n => n.nodeName }
+
   test("join shape is static: inner (broadcast-eligible) unless a " +
     "measured name can bind empty") {
-    def planOf(sql: String): String = {
-      val st = CepSql.parseStatement(sql, schema)
-      val df = eventsDf((1L, 1L, "S", 0L), (1L, 2L, "C", 1L),
-        (1L, 3L, "P", 2L))
-      CepMeasures.run(df, st, spec).queryExecution.optimizedPlan.toString
+    // measures fold inside the match pass, so no events join exists whose
+    // type could hinge on an empty binding: a name that always binds, one
+    // that can bind empty, and names under a {0,n} group plan alike
+    val shapes = Seq(
+      "PATTERN (s -> c{1,2} -> p) " +
+        "MEASURES SUM(c.v) AS c_sum DEFINE s AS S; c AS C; p AS P",
+      "PATTERN (s c? -> p) " +
+        "MEASURES SUM(c.v) AS c_sum DEFINE s AS S; c AS C; p AS P",
+      "PATTERN (s (c p){0,2}) " +
+        "MEASURES SUM(c.v) AS c_sum DEFINE s AS S; c AS C; p AS P"
+    ).map { sql =>
+      val plan = planOf(sql)
+      assert(cepNodes(plan).length == 1, s"expected one CEP node:\n$plan")
+      assert(relational(plan).isEmpty,
+        s"expected no Join/Aggregate/Window:\n$plan")
+      nodeNames(plan)
     }
-    // c{1,2} always binds — inner join, AQE may broadcast the match side
-    val inner = planOf("PATTERN (s -> c{1,2} -> p) " +
-      "MEASURES SUM(c.v) AS c_sum DEFINE s AS S; c AS C; p AS P")
-    assert(inner.contains("Join Inner") && !inner.contains("LeftOuter"),
-      s"expected inner join:\n$inner")
-    // c? can bind empty — sentinel explode_outer + left join required
-    val outer = planOf("PATTERN (s c? -> p) " +
-      "MEASURES SUM(c.v) AS c_sum DEFINE s AS S; c AS C; p AS P")
-    assert(outer.contains("Join LeftOuter"),
-      s"expected left-outer join:\n$outer")
-    // a never-empty name under a {0,n} group counts as possibly empty
-    val pe = CepMeasures.possiblyEmptyNames(CepSql.parse(
-      "PATTERN (a (b c){0,2}) DEFINE a AS S; b AS C; c AS P",
-      schema).patseq)
-    assert(pe == Set("b", "c"))
+    assert(shapes.distinct.length == 1, s"plan shapes differ: $shapes")
   }
 
   test("expression and offset lowering keep ONE events join — hidden " +
     "atoms ride the same explode/join/aggregate pass") {
-    val st = CepSql.parseStatement(
-      "PATTERN (s -> c{1,2} -> p) " +
-        "MEASURES SUM(c.v) - MIN(c.v) AS above_min, " +
-        "LAST(c.v) * 2 + FIRST(p.v) AS combo, " +
-        "FIRST(c.v, 1) AS c2_v, SUM(c.v) AS plain " +
-        "DEFINE s AS S; c AS C; p AS P", schema)
-    val df = eventsDf((1L, 1L, "S", 0L), (1L, 2L, "C", 1L),
-      (1L, 3L, "P", 2L))
-    val plan = CepMeasures.run(df, st, spec).queryExecution.optimizedPlan
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    assert(plan.collect { case j: Join => j }.length == 1,
-      s"expected exactly one events join:\n$plan")
-    assert(plan.collect { case a: Aggregate => a }.length == 1,
-      s"expected exactly one aggregation:\n$plan")
+    // the hidden atoms behind expressions and offsets are read by the one
+    // CEP pass too: the plan is node for node that of a plain measure
+    val plain = planOf("PATTERN (s -> c{1,2} -> p) " +
+      "MEASURES SUM(c.v) AS plain DEFINE s AS S; c AS C; p AS P")
+    val plan = planOf("PATTERN (s -> c{1,2} -> p) " +
+      "MEASURES SUM(c.v) - MIN(c.v) AS above_min, " +
+      "LAST(c.v) * 2 + FIRST(p.v) AS combo, " +
+      "FIRST(c.v, 1) AS c2_v, SUM(c.v) AS plain, " +
+      "MATCH_NUMBER() AS mn DEFINE s AS S; c AS C; p AS P")
+    assert(cepNodes(plan).length == 1, s"expected one CEP node:\n$plan")
+    assert(relational(plan).isEmpty,
+      s"expected no Join/Aggregate/Window:\n$plan")
+    assert(nodeNames(plan) == nodeNames(plain),
+      s"expected the plain measure's plan shape:\n$plan\nvs\n$plain")
+  }
+
+  test("a measured statement plans one CepMatchExec with nothing " +
+    "relational above it; navigation windows sit below it") {
+    // every row-rendering mode
+    for (sql <- Seq(
+        "PATTERN (c{0,2}) MEASURES COUNT(c) AS n_c ONE ROW PER MATCH " +
+          "SHOW EMPTY MATCHES DEFINE c AS C",
+        "PATTERN (s -> c{1,2}) MEASURES SUM(c.v) AS sv ALL ROWS PER " +
+          "MATCH WITH UNMATCHED ROWS DEFINE s AS S; c AS C")) {
+      val plan = planOf(sql)
+      val cep = cepNodes(plan)
+      assert(cep.length == 1, s"expected one CEP node:\n$plan")
+      assert(relational(plan).isEmpty,
+        s"expected no Join/Aggregate/Window:\n$plan")
+    }
+    // PREV/NEXT(FIRST/LAST(..)) read the DEFINE-side navigation columns:
+    // one Window, below the CEP node
+    val nav = planOf("PATTERN (s -> c{1,2} -> p) " +
+      "MEASURES PREV(LAST(c.v)) AS pl, NEXT(FIRST(c.v), 2) AS nf " +
+      "DEFINE s AS S; c AS C; p AS P")
+    val cep = cepNodes(nav)
+    assert(cep.length == 1, s"expected one CEP node:\n$nav")
+    assert(relational(nav).length == 1 &&
+      relational(cep.head.child).length == 1,
+      s"expected one Window, below the CEP node:\n$nav")
   }
 
   test("statement render round-trips measures") {
@@ -822,16 +866,6 @@ class CepMeasuresSpec extends AnyFunSuite with BeforeAndAfterAll {
     // render round-trips, with and without explicit steps
     val again = CepSql.parseStatement(CepSql.render(st), schema)
     assert(again == st, CepSql.render(st))
-    // plan shape: ALL shifts collapse into ONE Window node on the event
-    // side (same partition, same order — CollapseWindow), so physical
-    // navigation costs a single per-key sort pass however many measures
-    // navigate
-    val winNodes = CepMeasures.run(df, st, spec)
-      .queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-      }
-    assert(winNodes.length == 1, s"expected 1 Window node, got " +
-      s"${winNodes.length}")
     // rejections: ALL ROWS, streaming fold, bad nesting shapes
     val stAll = CepSql.parseStatement(
       "PATTERN (s -> c{1,2} -> p) " +
@@ -1030,5 +1064,51 @@ class CepMeasuresSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out == Vector(
       (1L, "s", -1L, 5L, -1L),
       (4L, "p", 5L, 5L, 5L)), out.mkString(", "))
+  }
+
+  test("ALL ROWS FIRST/LAST read the first/last bound event's value even " +
+    "when it is NULL; a match's last row equals ONE ROW and streaming") {
+    val s = spark
+    import s.implicits._
+    val st = CepSql.parseStatement(
+      "PATTERN (s -> c{2,2} -> p) MEASURES FIRST(c.v) AS fc, " +
+        "LAST(c.v) AS lc, FIRST(p.v) AS pv " +
+        "DEFINE s AS S; c AS C; p AS P", schema)
+    // key 1 binds clicks v = NULL, 4; key 2 binds clicks v = 4, NULL
+    val evs = Seq(
+      EvNullV(1L, 1L, "S", Some(5L)), EvNullV(1L, 2L, "C", None),
+      EvNullV(1L, 3L, "C", Some(4L)), EvNullV(1L, 4L, "P", None),
+      EvNullV(2L, 5L, "S", Some(5L)), EvNullV(2L, 6L, "C", Some(4L)),
+      EvNullV(2L, 7L, "C", None), EvNullV(2L, 8L, "P", Some(7L)))
+    def opt(r: Row, f: String): Option[Long] =
+      if (r.isNullAt(r.fieldIndex(f))) None else Some(r.getAs[Long](f))
+    def measures(r: Row) = (r.getAs[Long]("k"), opt(r, "fc"), opt(r, "lc"),
+      opt(r, "pv"))
+    val oneRow = CepMeasures.run(evs.toDF(), st, spec).collect()
+      .map(measures).toVector.sortBy(_._1)
+    assert(oneRow == Vector((1L, None, Some(4L), None),
+      (2L, Some(4L), None, Some(7L))))
+    val allRows = CepMeasures.runAllRows(evs.toDF(), st, spec)
+      .orderBy("id").collect().map(r =>
+        (r.getAs[Long]("id"), measures(r))).toVector
+    assert(allRows.map(r => r._1 -> r._2.productIterator.drop(1).toVector)
+      == Vector(
+        1L -> Vector(None, None, None), 2L -> Vector(None, None, None),
+        3L -> Vector(None, Some(4L), None), 4L -> Vector(None, Some(4L), None),
+        5L -> Vector(None, None, None), 6L -> Vector(Some(4L), Some(4L), None),
+        7L -> Vector(Some(4L), None, None),
+        8L -> Vector(Some(4L), None, Some(7L))))
+    assert(Vector(allRows(3)._2, allRows(7)._2) == oneRow)
+
+    implicit val sqlCtx = s.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[EvNullV]
+    val q = StreamingCep.matchPatternMeasures(mem.toDF(), st, spec)
+      .writeStream.format("memory").queryName("cep_meas_null_first_last")
+      .outputMode("append").start()
+    try { mem.addData(evs: _*); q.processAllAvailable() } finally q.stop()
+    val streamed = s.table("cep_meas_null_first_last").collect()
+      .map(measures).toVector.sortBy(_._1)
+    assert(streamed == oneRow)
   }
 }

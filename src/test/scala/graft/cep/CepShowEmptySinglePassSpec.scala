@@ -1,18 +1,19 @@
 package graft.cep
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import SparkCep.CepSpec
+import graft.plans.CepMatchExec
 
-/** SHOW EMPTY MATCHES and WITH UNMATCHED ROWS consume the match frame
-  * twice (seed union + site derivation / output + bound set); without
-  * the eager localCheckpoint in `CepMeasures.allRows`/`project` each
-  * consumer would re-run the whole NFA sweep below it. Pinned the same
-  * way `CepSharedSinglePassSpec` pins `runShared`: the skew gauge fires
-  * once per event fed to `CepMatchExec`, so fed events must equal ONE
-  * pass however often the result is consumed.
+/** SHOW EMPTY MATCHES and WITH UNMATCHED ROWS render rows the NFA never
+  * binds (empty-match sites, unmatched rows). The CEP operator renders
+  * them itself at each key's last event, so an executed plan holds
+  * exactly one `CepMatchExec` — one NFA sweep per execution, with no
+  * second consumer of a match frame.
   */
 class CepShowEmptySinglePassSpec extends AnyFunSuite
     with BeforeAndAfterAll {
@@ -45,70 +46,51 @@ class CepShowEmptySinglePassSpec extends AnyFunSuite
 
   private val spec = CepSpec(Some("k"), "id", "t", Seq("v"))
 
-  private def onePass(df: DataFrame, st: CepSql.CepSqlStatement): Long = {
-    val acc = CepSkewAccumulator.registered(spark, "se_probe_base")
-    SparkCep.matchPatternExec(df, st.query, spec,
-      skewAcc = Some(acc)).count()
-    val e = acc.value.events
-    assert(e > 0L, "probe stream fed no events — probe is vacuous")
-    e
+  /** Every node of an executed plan, descending into AQE's final plan
+    * and its query stages.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec        => s +: nodes(s.plan)
+    case _                        => p +: p.children.flatMap(nodes)
+  }
+
+  /** Execute `sql` twice and count the CEP nodes of each executed plan. */
+  private def cepNodesPerRun(sql: String): Seq[Int] = {
+    val st = CepSql.parseStatement(sql, schema)
+    (1 to 2).map { _ =>
+      val out = CepMeasures.run(events(), st, spec)
+      assert(out.collect().nonEmpty, "probe stream rendered no rows")
+      nodes(out.queryExecution.executedPlan)
+        .count(_.isInstanceOf[CepMatchExec])
+    }
   }
 
   test("SHOW EMPTY (ALL ROWS): one NFA sweep however often the " +
     "result is consumed") {
-    val df = events()
-    val st = CepSql.parseStatement(
+    val counts = cepNodesPerRun(
       "PATTERN (c{0,2}) MEASURES COUNT(c) AS n_c, SUM(c.v) AS sv " +
         "ALL ROWS PER MATCH SHOW EMPTY MATCHES " +
         "PARTITION BY k ORDER BY id TYPE t " +
-        "DEFINE c AS C AFTER MATCH SKIP PAST LAST ROW", schema)
-    val base = onePass(df, st)
-    val acc = CepSkewAccumulator.registered(spark, "se_probe_show")
-    val frames = SparkCep.matchPatternExec(df, st.query, spec,
-      skewAcc = Some(acc))
-    val out = CepMeasures.allRows(frames, df, st.query, spec,
-      st.measures, showEmpty = true)
-    out.collect(); out.collect()
-    assert(acc.value.events == base,
-      s"show-empty fed ${acc.value.events} events, expected $base " +
-        "(one sweep)")
+        "DEFINE c AS C AFTER MATCH SKIP PAST LAST ROW")
+    assert(counts == Seq(1, 1), s"CEP nodes per executed plan: $counts")
   }
 
   test("SHOW EMPTY (ONE ROW): one NFA sweep") {
-    val df = events()
-    val st = CepSql.parseStatement(
+    val counts = cepNodesPerRun(
       "PATTERN (c{0,2}) MEASURES COUNT(c) AS n_c, SUM(c.v) AS sv " +
         "ONE ROW PER MATCH SHOW EMPTY MATCHES " +
         "PARTITION BY k ORDER BY id TYPE t " +
-        "DEFINE c AS C AFTER MATCH SKIP PAST LAST ROW", schema)
-    val base = onePass(df, st)
-    val acc = CepSkewAccumulator.registered(spark, "se_probe_one")
-    val frames = SparkCep.matchPatternExec(df, st.query, spec,
-      skewAcc = Some(acc))
-    val out = CepMeasures.project(frames, df, st.query, spec,
-      st.measures, showEmpty = true)
-    out.collect(); out.collect()
-    assert(acc.value.events == base,
-      s"one-row show-empty fed ${acc.value.events} events, expected " +
-        s"$base (one sweep)")
+        "DEFINE c AS C AFTER MATCH SKIP PAST LAST ROW")
+    assert(counts == Seq(1, 1), s"CEP nodes per executed plan: $counts")
   }
 
   test("WITH UNMATCHED ROWS: one NFA sweep (output + bound set share " +
     "the materialized frame)") {
-    val df = events()
-    val st = CepSql.parseStatement(
+    val counts = cepNodesPerRun(
       "PATTERN (c{1,2}) MEASURES COUNT(c) AS n_c " +
         "ALL ROWS PER MATCH WITH UNMATCHED ROWS " +
-        "PARTITION BY k ORDER BY id TYPE t DEFINE c AS C", schema)
-    val base = onePass(df, st)
-    val acc = CepSkewAccumulator.registered(spark, "se_probe_unm")
-    val frames = SparkCep.matchPatternExec(df, st.query, spec,
-      skewAcc = Some(acc))
-    val out = CepMeasures.allRows(frames, df, st.query, spec,
-      st.measures, withUnmatched = true)
-    out.collect(); out.collect()
-    assert(acc.value.events == base,
-      s"unmatched fed ${acc.value.events} events, expected $base " +
-        "(one sweep)")
+        "PARTITION BY k ORDER BY id TYPE t DEFINE c AS C")
+    assert(counts == Seq(1, 1), s"CEP nodes per executed plan: $counts")
   }
 }

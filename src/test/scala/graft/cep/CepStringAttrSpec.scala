@@ -297,6 +297,33 @@ class CepStringAttrSpec extends AnyFunSuite with BeforeAndAfterAll {
       "DEFINE s AS signup; c AS click WITHIN 4")
   }
 
+  test("batch: PREV/NEXT around FIRST/LAST of a string attribute read " +
+    "the navigated row's string, NULL past the edge or on a NULL value; " +
+    "hand-computed") {
+    val st = CepSql.parseStatement(
+      "PATTERN (s -> c) MEASURES FIRST(s) AS s_id, " +
+        "PREV(LAST(c.host)) AS before_c, PREV(LAST(c.host), 2) AS c_back2, " +
+        "NEXT(LAST(c.host)) AS after_c, NEXT(LAST(c.host), 2) AS c_fwd2, " +
+        "PREV(FIRST(s.host)) AS before_s, NEXT(FIRST(s.host), 2) AS s_fwd2 " +
+        "DEFINE s AS signup; c AS click WITHIN 6", schema)
+    // key 1: view(1, x.com) signup(2, a.com) view(3, NULL) click(4, b.com)
+    // purchase(5, c.com); key 2: signup(10, k.com) click(11, m.com)
+    val evs = Vector(
+      EvS(1L, 1L, "view", 0L, "x.com"), EvS(1L, 2L, "signup", 0L, "a.com"),
+      EvS(1L, 3L, "view", 0L, null), EvS(1L, 4L, "click", 0L, "b.com"),
+      EvS(1L, 5L, "purchase", 0L, "c.com"),
+      EvS(2L, 10L, "signup", 0L, "k.com"), EvS(2L, 11L, "click", 0L, "m.com"))
+    val got = CepMeasures.run(df(evs), st, spec)
+    assert(got.schema.fields.drop(2).forall(
+      _.dataType == org.apache.spark.sql.types.StringType))
+    val rows = got.orderBy("user_id").collect().map(r =>
+      (0 until r.length).map(i => if (r.isNullAt(i)) null else r.get(i))
+        .toVector).toVector
+    assert(rows == Vector(
+      Vector(1L, 2L, null, "a.com", "c.com", null, "x.com", "b.com"),
+      Vector(2L, 10L, "k.com", null, null, null, null, null)))
+  }
+
   test("CepSql render round-trips a statement with string condition") {
     val st = CepSql.parseStatement(stSql, schema)
     assert(CepSql.parseStatement(CepSql.render(st), schema) == st)

@@ -334,18 +334,4 @@ class PermuteSpec extends AnyFunSuite {
       CepSql.parse("PATTERN (PERMUTE(a, nope)) DEFINE a AS S", sqlSchema)
     }
   }
-
-  test("MEASURES over PERMUTE keep the inner (broadcast-eligible) join " +
-    "and every name binds") {
-    // no unit can bind empty → no possibly-empty sentinel
-    val pe = CepMeasures.possiblyEmptyNames(
-      CepSql.parse("PATTERN (PERMUTE(a, b)) DEFINE a AS S; b AS C",
-        sqlSchema).patseq)
-    assert(pe.isEmpty)
-    // an optional-quantified unit IS possibly empty — its own affair
-    val pe2 = CepMeasures.possiblyEmptyNames(
-      CepSql.parse("PATTERN (PERMUTE(a{0,1}, b) c) " +
-        "DEFINE a AS S; b AS C; c AS P", sqlSchema).patseq)
-    assert(pe2 == Set("a"))
-  }
 }
