@@ -1077,7 +1077,7 @@ object CepMeasures {
   def run(df: DataFrame, st: CepSql.CepSqlStatement,
       spec: CepSpec): DataFrame =
     SparkCep.matchMeasures(df, Seq("" -> rendering(df, st, spec)), spec,
-      None, None, shared = false)
+      None, shared = false)
 
   /** Self-contained form: the statement carries its own `PARTITION BY` /
     * `ORDER BY` / `TYPE` spec sections. A multi-column `PARTITION BY`
@@ -1145,16 +1145,12 @@ object CepMeasures {
     * ContextCleaner on GC and by `CacheScope.withCaches` at harness
     * boundaries) at the cost of cut lineage, the right default for
     * one-shot jobs. Single execution is pinned by
-    * `CepSharedSinglePassSpec` via the skew gauge's event count.
-    *
-    * @param skewAcc passed through to the shared operator (fires once
-    *   per fed event — with the materialization above, exactly once).
+    * `CepSharedSinglePassSpec` via the operator's `numEvents` metric.
     */
   def runShared(df: DataFrame,
       stmts: Seq[(String, CepSql.CepSqlStatement)], spec: CepSpec,
       maxRunsPerKey: Option[Int] = None,
-      lease: Option[graft.ops.CacheLease] = None,
-      skewAcc: Option[CepSkewAccumulator] = None)
+      lease: Option[graft.ops.CacheLease] = None)
       : Seq[(String, DataFrame)] = {
     require(stmts.nonEmpty, "runShared: empty member set")
     stmts.foreach { case (n, st) =>
@@ -1166,7 +1162,7 @@ object CepMeasures {
     }
     val members = stmts.map { case (n, st) => n -> rendering(df, st, spec) }
     val sharedPlan = SparkCep.matchMeasures(df, members, spec,
-      maxRunsPerKey, skewAcc, shared = true)
+      maxRunsPerKey, shared = true)
     val shared = lease match {
       case Some(l) => l.track(sharedPlan.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))

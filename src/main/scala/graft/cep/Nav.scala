@@ -202,27 +202,39 @@ object Nav {
     * equals the batch window path row-for-row.
     */
   def augmentFromHistory(ev: Event, hist: Vector[Event],
-      navs: Seq[Nav]): Event = {
-    val extra = Vector.newBuilder[(String, Long)]
-    navs.foreach { nv =>
+      navs: Seq[Nav]): Event =
+    withValues(ev, navs, { nv =>
       require(nv.prev, s"augmentFromHistory: ${nv.sqlForm} is not PREV")
       val j = hist.length - nv.k
-      val v: Option[Long] =
-        if (j < 0) None
-        else hist(j).attrs.collectFirst {
-          case (n, x) if n == nv.base => x
-        }
-      v match {
+      if (j < 0) None else Some(hist(j))
+    })
+
+  /** `ev` plus each navigation's value read from the row `at` returns:
+    * a long base into `attrs`, a STRING base into `strs` (the batch
+    * decode of an [[addColumns]] column), and the 0/1 indicator. No
+    * row, or an absent/NULL base on it, leaves the value attribute
+    * absent and the indicator 0.
+    */
+  private[cep] def withValues(ev: Event, navs: Seq[Nav],
+      at: Nav => Option[Event]): Event = {
+    val extra = Vector.newBuilder[(String, Long)]
+    var strs = ev.strs
+    navs.foreach { nv =>
+      val row = at(nv)
+      row.flatMap(_.get(nv.base)) match {
         case Some(x) =>
           extra += nv.valueName -> x
           extra += nv.hasName -> 1L
-        case None =>
-          extra += nv.hasName -> 0L
+        case None => row.flatMap(_.getStr(nv.base)) match {
+          case Some(x) =>
+            strs :+= nv.valueName -> x
+            extra += nv.hasName -> 1L
+          case None =>
+            extra += nv.hasName -> 0L
+        }
       }
     }
-    // keep the string attributes (round 17 — a nav query with a string
-    // DEFINE condition used to lose `Event.strs` here)
-    Event(ev.tpe, ev.attrs ++ extra.result(), ev.strs)
+    Event(ev.tpe, ev.attrs ++ extra.result(), strs)
   }
 
   /** Project an event to the attributes the navigation history needs —
@@ -230,7 +242,8 @@ object Nav {
     * The type is dropped too (navigation reads attributes only).
     */
   def historyEntry(ev: Event, bases: Set[String]): Event =
-    Event("", ev.attrs.filter(a => bases.contains(a._1)))
+    Event("", ev.attrs.filter(a => bases.contains(a._1)),
+      ev.strs.filter(a => bases.contains(a._1)))
 
   /** Pure-Scala twin of [[addColumns]] for the executor-level
     * differentials: augment an ordered event vector (ONE key's
@@ -242,22 +255,9 @@ object Nav {
   def augmentEvents(events: Vector[Event], navs: Seq[Nav])
       : Vector[Event] =
     events.zipWithIndex.map { case (ev, i) =>
-      val extra = Vector.newBuilder[(String, Long)]
-      navs.foreach { nv =>
+      withValues(ev, navs, { nv =>
         val j = if (nv.prev) i - nv.k else i + nv.k
-        val v: Option[Long] =
-          if (j < 0 || j >= events.length) None
-          else events(j).attrs.collectFirst {
-            case (n, x) if n == nv.base => x
-          }
-        v match {
-          case Some(x) =>
-            extra += nv.valueName -> x
-            extra += nv.hasName -> 1L
-          case None =>
-            extra += nv.hasName -> 0L
-        }
-      }
-      Event(ev.tpe, ev.attrs ++ extra.result(), ev.strs)
+        if (j < 0 || j >= events.length) None else Some(events(j))
+      })
     }
 }

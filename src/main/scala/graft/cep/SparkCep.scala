@@ -199,10 +199,12 @@ object SparkCep {
     * shed-oldest salvage at `cap` live runs and emit ONE ROW PER KEY —
     * `(key, n_matches, shed_runs, cap)` — instead of the matches. This
     * is the registry-row face of the salvage mode (`cep_shed_gauge`):
-    * `Executor.shedCount` is driver-accumulator telemetry on the match
-    * operators, which a data pipeline cannot join or alert on; the gauge
-    * makes the mode's cost a first-class, oracle-checkable table, the
-    * way `dedup_index_gauge` does for index bucket drops.
+    * the match operators report only task totals (`CepMatchExec`'s
+    * `runsShed` and `peakLiveRuns` SQL metrics), which name no key and
+    * which a data pipeline cannot join or alert on; the gauge is the
+    * per-key surface that names the hot keys, a first-class,
+    * oracle-checkable table, the way `dedup_index_gauge` does for index
+    * bucket drops.
     *
     * Shedding is deterministic (spec-pinned in `CepRunCapShedSpec`), so
     * both columns are exact per key: `n_matches` counts the salvage
@@ -220,7 +222,7 @@ object SparkCep {
     checkWithinStateBound(query, Some(-cap), streaming = false)
     val (prepared, attrNames) = prepare(df, query, spec)
     cepExec(df, spec, prepared, attrNames, single(query),
-      CepEmission.ShedGauge(cap), Some(-cap), None)
+      CepEmission.ShedGauge(cap), Some(-cap))
   }
 
   /** The TIMEOUT side output (beyond-parity — FlinkCEP's
@@ -259,7 +261,7 @@ object SparkCep {
     val (prepared, attrNames) =
       prepareWithFilter(df, None, spec, Nav.ofQuery(query))
     cepExec(df, spec, prepared, attrNames, single(query),
-      CepEmission.Timeouts, effMaxRuns, None)
+      CepEmission.Timeouts, effMaxRuns)
   }
 
   /** The CEP match as a first-class Catalyst plan (`graft.plans.
@@ -277,26 +279,26 @@ object SparkCep {
     * by `GraftExtensions` via `spark.sql.extensions`).
     *
     * {{{
-    *   val skew = CepSkewAccumulator.registered(spark, "cep_skew")
     *   val out = SparkCep.matchPatternExec(df, query, spec,
-    *     maxRunsPerKey = Some(10000), skewAcc = Some(skew))
+    *     maxRunsPerKey = Some(10000))
     * }}}
+    *
+    * The operator reports SQL metrics (`CepMatchExec`: events fed, keys,
+    * matches, runs shed, peak live runs) in the SQL UI and on the
+    * executed plan after an action: read them to find pathological input
+    * before it hits the valve. `shedGauge` names the keys.
     *
     * @param maxRunsPerKey hard valve: fail the task if any key's live-run
     *   set exceeds the cap (state explosion beats a silent OOM); a
     *   negative cap sheds the oldest runs instead
-    * @param skewAcc optional gauge: records max live-run count, the key it
-    *   occurred on, and total events fed — read it driver-side after an
-    *   action to find pathological keys before they hit the valve
     */
   def matchPatternExec(df: DataFrame, query: CepQuery, spec: CepSpec,
-      maxRunsPerKey: Option[Int] = None,
-      skewAcc: Option[CepSkewAccumulator] = None): DataFrame = {
+      maxRunsPerKey: Option[Int] = None): DataFrame = {
     checkWithinStateBound(query, maxRunsPerKey, streaming = false)
     val effMaxRuns = resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
     val (prepared, attrNames) = prepare(df, query, spec)
     cepExec(df, spec, prepared, attrNames, single(query),
-      CepEmission.OrderIds, effMaxRuns, skewAcc)
+      CepEmission.OrderIds, effMaxRuns)
   }
 
   /** Multi-query shared-scan CEP: run `queries` (name → pattern) over ONE
@@ -324,14 +326,11 @@ object SparkCep {
     * Physical form: the same Catalyst node as the single-pattern path
     * (`CepMatchPlan`/`CepStrategy`/`CepMatchExec`), with one member per
     * query — InternalRow end-to-end with declared distribution/ordering.
-    * Skew gauge: `skewAcc.add` fires ONCE per event with the MAX live-run
-    * count across the member DSTs (the hottest pattern on that key), so
-    * `Stats.events` counts events fed — not (event × query) — and
-    * `maxRuns` still finds the pathological key.
+    * Its `numEvents` metric counts events fed — not (event × query) —
+    * and `peakLiveRuns` is the hottest member's peak on the hottest key.
     */
   def matchPatternsShared(df: DataFrame, queries: Seq[(String, CepQuery)],
-      spec: CepSpec, maxRunsPerKey: Option[Int] = None,
-      skewAcc: Option[CepSkewAccumulator] = None): DataFrame = {
+      spec: CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame = {
     require(queries.nonEmpty, "matchPatternsShared needs >= 1 query")
     queries.foreach { case (_, q) =>
       checkWithinStateBound(q, maxRunsPerKey, streaming = false)
@@ -350,7 +349,7 @@ object SparkCep {
       queries.map { case (n, q) =>
         CepMember(n, q, memberFeedTypes(q, spec).orNull)
       },
-      CepEmission.Bindings, effMaxRuns, skewAcc)
+      CepEmission.Bindings, effMaxRuns)
   }
 
   /** MATCH_RECOGNIZE MEASURES rendered inside the operator
@@ -365,8 +364,7 @@ object SparkCep {
     */
   private[graft] def matchMeasures(df: DataFrame,
       members: Seq[(String, CepMeasures.Rendering)], spec: CepSpec,
-      maxRunsPerKey: Option[Int], skewAcc: Option[CepSkewAccumulator],
-      shared: Boolean): DataFrame = {
+      maxRunsPerKey: Option[Int], shared: Boolean): DataFrame = {
     val queries = members.map { case (n, r) => n -> r.st.query }
     queries.foreach { case (_, q) =>
       checkWithinStateBound(q, maxRunsPerKey, streaming = false)
@@ -385,8 +383,7 @@ object SparkCep {
       queries.map { case (n, q) =>
         CepMember(n, q, memberFeedTypes(q, spec).orNull)
       },
-      CepEmission.Measures(members.map(_._2).toVector, shared), effMaxRuns,
-      skewAcc)
+      CepEmission.Measures(members.map(_._2).toVector, shared), effMaxRuns)
   }
 
   /** A single-query entry point's one member, fed every event. */
@@ -399,8 +396,7 @@ object SparkCep {
     */
   private def cepExec(df: DataFrame, spec: CepSpec, prepared: DataFrame,
       attrNames: Vector[String], members: Seq[CepMember],
-      emission: CepEmission, maxRuns: Option[Int],
-      skewAcc: Option[CepSkewAccumulator]): DataFrame = {
+      emission: CepEmission, maxRuns: Option[Int]): DataFrame = {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     val keyName = spec.keyCol.getOrElse("__global")
@@ -408,7 +404,7 @@ object SparkCep {
     GraftColumnBridge.addStrategy(spark, graft.plans.CepStrategy)
     val key = AttributeReference(keyName, keyType(df, spec), nullable = false)()
     val plan = CepMatchPlan(members.toVector, emission, spec.keyCol.isDefined,
-      attrNames, maxRuns, skewAcc, emission.output(key, members),
+      attrNames, maxRuns, emission.output(key, members),
       prepared.queryExecution.analyzed)
     val out = GraftColumnBridge.ofRows(spark, plan)
     if (spec.keyCol.isEmpty) out.drop(keyName) else out
@@ -445,10 +441,9 @@ object SparkCep {
     prefilter(query, spec).map(_ => alphabet(unwrapGpat(query.patseq)))
 
   /** Default per-key state valve for UNBOUNDED-loop patterns
-    * (`lpat-inf`/`gpat-inf`), the skew mitigation the gauge
-    * (`CepSkewAccumulator`) pointed at but nothing acted on: a hot key
-    * under a permissive unbounded pattern grows its live-run set without
-    * limit and OOMs an executor at corpus scale. When the caller passes
+    * (`lpat-inf`/`gpat-inf`), the valve the operator's `peakLiveRuns`
+    * metric sizes: a hot key under a permissive unbounded pattern grows
+    * its live-run set without limit and OOMs an executor at corpus scale. When the caller passes
     * no explicit `maxRunsPerKey`, every entry point now applies this
     * default to queries containing an unbounded loop — the valve FAILS
     * the query loudly at the cap (state explosion beats a silent OOM;
@@ -467,7 +462,8 @@ object SparkCep {
     * while `"shedOldest"` switches the default cap to the documented
     * salvage mode (negative cap to the `Executor`): the longest-lived
     * partial runs are dropped until the cap holds, the job survives the
-    * hot key, and `Executor.shedCount`/the skew gauge say it happened.
+    * hot key, and the operator's `runsShed` metric and `shedGauge` say
+    * it happened.
     * Shedding semantics (spec-pinned in `CepRunCapShedSpec`):
     * deterministic; NoSkip output is a sub-multiset of the uncapped
     * output; keys that never exceed the cap — in particular every key
@@ -568,17 +564,6 @@ object SparkCep {
         }
       case None => LongType
     }
-
-  /** Long surrogate of a key value for the skew gauge (telemetry only —
-    * never used for identity): the value itself for long keys, a
-    * deterministic hashCode otherwise. Two keys sharing a surrogate
-    * merely share a gauge label; match semantics are exact regardless.
-    */
-  private[graft] def keyGaugeId(key: Any): Long = key match {
-    case l: java.lang.Long => l.longValue()
-    case null              => 0L
-    case other             => other.hashCode.toLong
-  }
 
   /** Pre-NFA filter pushdown (SURVEY.md §4): a predicate applied *before*
     * the key shuffle, reaching the parquet scan — at corpus scale this cuts

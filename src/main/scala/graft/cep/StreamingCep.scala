@@ -264,25 +264,13 @@ object StreamingCep {
   /** NEXT augmentation over a watermark-release slice: event `i` of
     * `sortedReady` reads each `NEXT(base, k)` value from slice position
     * `i + k`, which the hold-back (only the first `length - maxK` events
-    * feed the NEXT members) guarantees exists and is final. Last
-    * occurrence of the base wins — parity with the generic attribute
-    * lookup.
+    * feed the NEXT members) guarantees exists and is final.
     */
   private def withNextFromSlice(nextNavs: Vector[Nav],
-      sortedReady: Vector[BufEvent], ev: Event, i: Int): Event =
-    if (nextNavs.isEmpty) ev
-    else {
-      val extra = Vector.newBuilder[(String, Long)]
-      nextNavs.foreach { nv =>
-        val f = sortedReady(i + nv.k)
-        val idx = f.names.lastIndexOf(nv.base)
-        if (idx >= 0) {
-          extra += nv.valueName -> f.vals(idx)
-          extra += nv.hasName -> 1L
-        } else extra += nv.hasName -> 0L
-      }
-      Event(ev.tpe, ev.attrs ++ extra.result(), ev.strs)
-    }
+      sortedReady: Vector[Event], i: Int): Event =
+    if (nextNavs.isEmpty) sortedReady(i)
+    else Nav.withValues(sortedReady(i), nextNavs,
+      nv => Some(sortedReady(i + nv.k)))
 
   /** Per-key navigation feed state: ONE history per key over the union
     * of the members' `PREV` navigations (the physical rows are common to
@@ -904,8 +892,8 @@ object StreamingCep {
               // history only for events some member is fed
               lazy val ev =
                 if (!layout.augmentsTail)
-                  nf.augment(withNextFromSlice(nextNavs, sorted, pre(i), i))
-                else if (toNext) withNextFromSlice(nextNavs, sorted, pre(i), i)
+                  nf.augment(withNextFromSlice(nextNavs, pre, i))
+                else if (toNext) withNextFromSlice(nextNavs, pre, i)
                 else pre(i)
               ms.indices.foreach { m =>
                 if (if (holdsNext(m)) toNext else toPlain) feed(m, ev)

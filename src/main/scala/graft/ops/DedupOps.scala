@@ -386,44 +386,19 @@ object DedupOps {
     * from the index entirely before the join. Cap-is-part-of-semantics,
     * exactly like `maxShingleFreq`: a saturated bucket carries ~zero
     * discriminative signal (it pairs everything with everything), and the
-    * oracle mirrors the drop with a HAVING-count CTE. `dropCounter`
-    * (optional) tallies the dropped index rows — the observability hook
-    * for sizing the cap, same role as the CEP skew gauge. Accumulator
-    * semantics are AT-LEAST-ONCE: task retries/speculation, or the two
-    * self-join consumers racing a cold cache, can tick a drop more than
-    * once — treat it as a gauge, not an exact count (the FILTERING
-    * itself is exact either way; only the telemetry is approximate).
+    * oracle mirrors the drop with a HAVING-count CTE. The kept index
+    * rows show as the cap `Filter`'s `numOutputRows` SQL metric.
     *
     * Expects a frame with `band`/`bucket` columns; emits it filtered,
     * schema unchanged.
     */
-  private[ops] def capBuckets(banded: DataFrame, maxBucketSize: Long,
-      dropCounter: Option[org.apache.spark.util.LongAccumulator])
+  private[ops] def capBuckets(banded: DataFrame, maxBucketSize: Long)
       : DataFrame = {
     if (maxBucketSize == Long.MaxValue) return banded
     import org.apache.spark.sql.expressions.Window
-    val counted = banded.withColumn("__bsz", count(lit(1)).over(
+    banded.withColumn("__bsz", count(lit(1)).over(
       Window.partitionBy(col("band"), col("bucket"))))
-    dropCounter match {
-      case None =>
-        counted.filter(col("__bsz") <= maxBucketSize).drop("__bsz")
-      case Some(acc) =>
-        // iterator-based filter so drops can tick the accumulator; sits
-        // right above the window exec node, which is not codegen-fused
-        // anyway, so nothing is lost from the fast path. Cached so the
-        // band self-join's two consumers don't re-run the filter and
-        // double-count every drop (released by the caller's CacheScope /
-        // clearCache like the other op-level caches).
-        val bszIdx = counted.schema.fieldIndex("__bsz")
-        val outSchema = StructType(counted.schema.filterNot(_.name == "__bsz"))
-        counted.mapPartitions { rows =>
-          rows.flatMap { r =>
-            if (r.getLong(bszIdx) <= maxBucketSize)
-              Iterator.single(Row.fromSeq(r.toSeq.patch(bszIdx, Nil, 1)))
-            else { acc.add(1L); Iterator.empty }
-          }
-        }(Encoders.row(outSchema)).cache()
-    }
+      .filter(col("__bsz") <= maxBucketSize).drop("__bsz")
   }
 
   /** LSH candidate pairs: docs sharing any band bucket. Output
@@ -431,13 +406,11 @@ object DedupOps {
     * components × 1000. Band keys and the agreement estimate are computed
     * in tight JVM passes; only the (band, bucket) candidate join and the
     * two signature joins (AQE-broadcast while small) shuffle.
-    * `maxBucketSize`/`dropCounter`: see `capBuckets`.
+    * `maxBucketSize`: see `capBuckets`.
     */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
       params: MinHashParams = MinHashParams(), n: Int = 3,
-      maxBucketSize: Long = Long.MaxValue,
-      dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
+      maxBucketSize: Long = Long.MaxValue): DataFrame = {
     val bands = params.bands
     val rows_ = params.rows
     val k = params.k
@@ -456,7 +429,7 @@ object DedupOps {
           Row(id, b, bucketKeyJvm(mhs, b * rows_, (b + 1) * rows_)))
       }
     }(Encoders.row(bandSchema))
-    val banded = capBuckets(banded0, maxBucketSize, dropCounter)
+    val banded = capBuckets(banded0, maxBucketSize)
     val cand = banded.select(col("band"), col("bucket"), col(idCol).as("id1"))
       .join(banded.select(col("band"), col("bucket"), col(idCol).as("id2")),
         Seq("band", "bucket"))
@@ -669,11 +642,10 @@ object DedupOps {
     * divisor-of-64 count above maxHamming.
     */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucketSize: Long = Long.MaxValue,
-      dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
+      maxHamming: Int = 3, maxBucketSize: Long = Long.MaxValue)
       : DataFrame =
     hammingPairs(simHash(df, idCol, textCol), idCol, "simhash",
-      maxHamming, maxBucketSize, dropCounter)
+      maxHamming, maxBucketSize)
 
   /** Hamming-band pair join over ANY 64-bit hash column (SimHash text
     * signatures, image dHashes, …): pairs at hamming distance ≤
@@ -684,8 +656,7 @@ object DedupOps {
     * are capped by the shared `capBuckets` valve.
     */
   def hammingPairs(hashed: DataFrame, idCol: String, hashCol: String,
-      maxHamming: Int = 3, maxBucketSize: Long = Long.MaxValue,
-      dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
+      maxHamming: Int = 3, maxBucketSize: Long = Long.MaxValue)
       : DataFrame = {
     require(maxHamming < 32, s"maxHamming=$maxHamming needs >32 bands")
     val bands = Seq(1, 2, 4, 8, 16, 32).find(_ > maxHamming).get
@@ -701,7 +672,7 @@ object DedupOps {
           shiftright(col(hashCol), b * width).bitwiseAND(mask)
             .as("bucket"))): _*)).as("bk"))
       .select(col(idCol), col(hashCol), col("bk.band"), col("bk.bucket")),
-      maxBucketSize, dropCounter)
+      maxBucketSize)
     banded.select(col("band"), col("bucket"), col(idCol).as("id1"),
         col(hashCol).as("h1"))
       .join(banded.select(col("band"), col("bucket"), col(idCol).as("id2"),

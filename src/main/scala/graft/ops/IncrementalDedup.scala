@@ -104,7 +104,7 @@ object IncrementalDedup {
       .withColumnRenamed(idCol, "id").cache()
     try {
       truncSigs(sigs).write.mode(mode).parquet(s"$path/sigs")
-      capBuckets(explodeBands(sigs, params), maxBucketSize, None)
+      capBuckets(explodeBands(sigs, params), maxBucketSize)
         .write.partitionBy("band").mode(mode).parquet(s"$path/bands")
     } finally sigs.unpersist()
   }
@@ -318,7 +318,7 @@ object IncrementalDedup {
         spark.read.schema(idxSigsSchema).parquet(s"$p/sigs"))
       .reduce(_ union _)
     sigs.write.mode("overwrite").parquet(s"$out/sigs")
-    capBuckets(bands, maxBucketSize, None)
+    capBuckets(bands, maxBucketSize)
       .write.partitionBy("band").mode("overwrite").parquet(s"$out/bands")
   }
 
@@ -357,7 +357,7 @@ object IncrementalDedup {
     fs.delete(old, true)
     val bands = spark.read.schema(idxBandsSchema).parquet(cur.toString)
       .select(col("id"), col("band"), col("bucket"))
-    capBuckets(bands, maxBucketSize, None)
+    capBuckets(bands, maxBucketSize)
       .write.partitionBy("band").mode("overwrite")
       .parquet(next.toString)
     if (!fs.rename(cur, old) || !fs.rename(next, cur))

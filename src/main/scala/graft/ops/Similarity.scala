@@ -1288,8 +1288,7 @@ object Similarity extends Serializable {
     */
   def lshNearNeighbors(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, simMicro: Long = 950000L, seed: Long = 42L,
-      bandBits: Int = 16, maxBucketSize: Long = Long.MaxValue,
-      dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
+      bandBits: Int = 16, maxBucketSize: Long = Long.MaxValue)
       : DataFrame = {
     val nBands = 64 / bandBits
     val mask = (1L << bandBits) - 1
@@ -1298,7 +1297,7 @@ object Similarity extends Serializable {
       .cache()
     // per doc the nBands (band, bucket) keys are distinct by construction
     // (band is part of the key) — no dedup needed on the exploded index.
-    // maxBucketSize/dropCounter: the hot-bucket valve, see
+    // maxBucketSize: the hot-bucket valve, see
     // DedupOps.capBuckets
     val banded = DedupOps.capBuckets(sigs.select(col(idCol),
       explode(array((0 until nBands).map(b =>
@@ -1306,7 +1305,7 @@ object Similarity extends Serializable {
           shiftright(col("sig"), b * bandBits).bitwiseAND(mask)
             .as("bucket"))): _*)).as("bk"))
       .select(col(idCol), col("bk.band"), col("bk.bucket")),
-      maxBucketSize, dropCounter)
+      maxBucketSize)
     val cand = banded.select(col("band"), col("bucket"), col(idCol).as("id1"))
       .join(banded.select(col("band"), col("bucket"), col(idCol).as("id2")),
         Seq("band", "bucket"))

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, SortOrder, UnsafeProjection}
@@ -7,12 +8,15 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, HashPartitioning, Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.AccumulatorV2
 
-import graft.cep.{CepMeasures, CepQuery, CepRuntimeWarnings, CepSkewAccumulator, DstCompiler, Event, Executor, Match, Pattern}
+import graft.cep.{CepMeasures, CepQuery, CepRuntimeWarnings, DstCompiler, Event, Executor, Match, Pattern}
 
 /** The CEP pattern-match operator as a first-class Catalyst plan — the
   * prompt's extension path (c): a custom `LogicalPlan` + `SparkStrategy` +
@@ -45,7 +49,6 @@ private[graft] final case class CepMatchPlan(
     keyed: Boolean,
     attrNames: Seq[String],
     maxRunsPerKey: Option[Int],
-    skewAcc: Option[CepSkewAccumulator],
     output: Seq[Attribute],
     child: LogicalPlan) extends UnaryNode {
   // the NFA consumes every child column — claim them all so ColumnPruning
@@ -61,7 +64,7 @@ object CepStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: CepMatchPlan =>
       CepMatchExec(p.members, p.emission, p.keyed, p.attrNames,
-        p.maxRunsPerKey, p.skewAcc, p.output, planLater(p.child)) :: Nil
+        p.maxRunsPerKey, p.output, planLater(p.child)) :: Nil
     case _ => Nil
   }
 }
@@ -284,17 +287,20 @@ private[plans] object CepChildContract {
 
 /** The physical CEP operator: one key-grouped feed loop (`CepFeedLoop`)
   * for every entry point. Per row it switches key, decodes the event
-  * once, peeks for the key's last event when `$` or the gauge needs it,
-  * feeds each member whose gate admits the event type, and renders what
-  * `emission` asks for. An event outside a member's gate is invisible to
-  * it (the prefilter proof), so skipping the feed leaves its state, and
-  * hence its run count, exactly as feeding would. An anchored member
-  * never has a gate (`SparkCep.prefilter` declines anchored queries), so
-  * the flagged last event always reaches it.
+  * once, peeks for the key's last event when `$`, the shed gauge or
+  * MEASURES need it, feeds each member whose gate admits the event type,
+  * and renders what `emission` asks for. An event outside a member's
+  * gate is invisible to it (the prefilter proof), so skipping the feed
+  * leaves its state, and hence its run count, exactly as feeding would.
+  * An anchored member never has a gate (`SparkCep.prefilter` declines
+  * anchored queries), so the flagged last event always reaches it.
   *
-  * Skew gauge: `acc.add` once per EVENT with the MAX live-run count
-  * across the members, so `Stats.events` counts events fed and
-  * `maxRuns` finds the hottest pattern on the hottest key.
+  * SQL metrics: `numEvents` counts events fed (once per event, however
+  * many members), `numKeys` the keys, `numMatches` the members' matches,
+  * `runsShed` the partial runs the shed-oldest valve dropped, and
+  * `peakLiveRuns` is the largest live-run set any member held on any key
+  * after any event (merged by max, `CepMaxMetric`). The loop counts in
+  * task-local fields and publishes them when its task completes.
   */
 private[graft] final case class CepMatchExec(
     members: Vector[CepMember],
@@ -302,9 +308,14 @@ private[graft] final case class CepMatchExec(
     keyed: Boolean,
     attrNames: Seq[String],
     maxRunsPerKey: Option[Int],
-    skewAcc: Option[CepSkewAccumulator],
     output: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
+
+  override lazy val metrics: Map[String, SQLMetric] =
+    CepMatchExec.MetricNames.map { case (k, name) =>
+      k -> (if (k == "peakLiveRuns") CepMaxMetric(sparkContext, name)
+        else SQLMetrics.createMetric(sparkContext, name))
+    }.toMap
 
   /** See `CepChildContract`. */
   override def requiredChildDistribution: Seq[Distribution] =
@@ -337,7 +348,7 @@ private[graft] final case class CepMatchExec(
     val strFlags = CepRowDecode.flagsOf(child.output)
     val maxRuns = maxRunsPerKey
     val outTypes = output.map(_.dataType).toArray
-    val skew = skewAcc
+    val m = metrics
     // unkeyed = single task by construction; the guard makes a
     // table-scale feed loud instead of silently serial (see
     // CepRuntimeWarnings). Resolved driver-side so the conf travels.
@@ -349,7 +360,8 @@ private[graft] final case class CepMatchExec(
     child.execute().mapPartitions({ iter0 =>
       val iter = iter0.buffered
       val loop = new CepFeedLoop(ms, em, maxRuns, aNames, strFlags,
-        outTypes, skew.orNull, unkeyedWarnRows, keyDt, iter)
+        outTypes, unkeyedWarnRows, keyDt, iter)
+      TaskContext.get().addTaskCompletionListener[Unit](_ => loop.publish(m))
       iter.flatMap(loop.step)
     }, preservesPartitioning = true)
   }
@@ -358,13 +370,53 @@ private[graft] final case class CepMatchExec(
       : CepMatchExec = copy(child = newChild)
 }
 
+private[graft] object CepMatchExec {
+  /** Each metric's key and the name the SQL UI and status store show. */
+  val MetricNames: Seq[(String, String)] = Seq(
+    "numOutputRows" -> "number of output rows",
+    "numEvents" -> "number of events",
+    "numKeys" -> "number of keys",
+    "numMatches" -> "number of matches",
+    "runsShed" -> "runs shed",
+    "peakLiveRuns" -> "peak live runs")
+}
+
+/** A SQL metric merged by max, not sum (`peakLiveRuns`): its driver-side
+  * `value` is the largest value any task set. Its type names `TaskMax`,
+  * so the SQL status store and UI aggregate the task values by max too.
+  */
+private[graft] final class CepMaxMetric
+    extends SQLMetric(CepMaxMetric.MetricType) {
+  override def copy(): CepMaxMetric = {
+    val c = new CepMaxMetric; c.set(value); c
+  }
+  override def merge(other: AccumulatorV2[Long, Long]): Unit =
+    set(math.max(value, other.value))
+}
+
+private[graft] object CepMaxMetric {
+  /** The status store's aggregation of a `CepMaxMetric`'s task values. */
+  final class TaskMax extends CustomMetric {
+    override def name: String = "max"
+    override def description: String = "max over tasks"
+    override def aggregateTaskMetrics(values: Array[Long]): String =
+      values.foldLeft(0L)(math.max).toString
+  }
+
+  /** Spark's type tag for a metric a `CustomMetric` class aggregates. */
+  val MetricType: String = "v2Custom_" + classOf[TaskMax].getName
+
+  def apply(sc: SparkContext, name: String): CepMaxMetric = {
+    val m = new CepMaxMetric; sc.register(m, name); m
+  }
+}
+
 /** One task's state of the `CepMatchExec` feed loop: `step` takes the
   * task's rows in order, the next one readable as `iter.head`.
   */
 private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
     maxRuns: Option[Int], aNames: Vector[String], strFlags: Array[Boolean],
-    outTypes: Array[DataType], acc: CepSkewAccumulator,
-    unkeyedWarnRows: Long, keyDt: DataType,
+    outTypes: Array[DataType], unkeyedWarnRows: Long, keyDt: DataType,
     iter: BufferedIterator[InternalRow]) {
   private val proj = UnsafeProjection.create(outTypes)
   private val timeouts = em == CepEmission.Timeouts
@@ -400,8 +452,10 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
   // transient reads are only ever compared against it, never held
   private var curKey: Any = null
   private var started = false
-  private var prevShed = 0L
-  private var keyMatches = 0L
+  // the metrics, counted task-locally (see `publish`); the current
+  // key's matches and sheds join `matches`/`shed` when the key ends
+  private var events, keys, matches, rows, shed, keyMatches = 0L
+  private var peak = 0
 
   private def shedCount: Long = {
     var sc = 0L
@@ -410,11 +464,23 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
     sc
   }
 
+  /** Add this task's counts to the operator's metrics. */
+  def publish(m: Map[String, SQLMetric]): Unit = {
+    m("numEvents") += events
+    m("numKeys") += keys
+    m("numMatches") += matches + keyMatches
+    m("numOutputRows") += rows
+    m("runsShed") += shed + shedCount
+    m("peakLiveRuns").set(peak.toLong)
+  }
+
   def step(row: InternalRow): Iterator[InternalRow] = {
     guard.tick()
+    events += 1
     val k0 = keyGet(row)
     if (!started || !keyEq(k0, curKey)) {
-      executors.foreach(_.reset()); prevShed = 0L; keyMatches = 0L
+      if (started) { matches += keyMatches; shed += shedCount }
+      executors.foreach(_.reset()); keyMatches = 0L; keys += 1
       curKey = keyCopy(k0); started = true
     }
     val ev = CepRowDecode.decode(row, curKey, aNames, strFlags)
@@ -423,50 +489,47 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
     // AFTER the row is fully decoded (key copy + Event copy)
     val last = peek && (!iter.hasNext || !keyEq(keyGet(iter.head), curKey))
     val tpe = ev.tpe
-    var any = false
+    var n = 0
     var qi = 0
     while (qi < executors.length) {
       val gate = gates(qi)
       val ex = executors(qi)
       val out =
         if (gate == null || (tpe != null && gate.contains(tpe))) {
-          val matches = ex.feed(ev, flagLast && last)
-          if (!timeouts) matches
+          val hits = ex.feed(ev, flagLast && last)
+          keyMatches += hits.size
+          val runs = ex.runCount
+          if (runs > peak) peak = runs
+          if (!timeouts) hits
           else ex.drainTimedOut().map(ex.partialOutput(_, names(qi)))
         } else Vector.empty
-      if (out.nonEmpty) { any = true; keyMatches += out.size }
+      n += out.size
       found(qi) = out
       qi += 1
-    }
-    if (acc != null) {
-      // the hottest member's POST-feed run count
-      var maxRunCount = 0L
-      qi = 0
-      while (qi < executors.length) {
-        maxRunCount = math.max(maxRunCount, executors(qi).runCount.toLong)
-        qi += 1
-      }
-      acc.add((graft.cep.SparkCep.keyGaugeId(curKey), maxRunCount))
-      // shed telemetry: delta since the last event (reset() zeroes the
-      // executors' counters at each key switch)
-      val sc = shedCount
-      if (sc != prevShed) { acc.addShed(sc - prevShed); prevShed = sc }
     }
     // PROJECTION stays lazy — proj reuses one UnsafeRow buffer, so each
     // projected row must be consumed downstream before the next one is
     // projected (standard operator contract, as ProjectExec)
     if (gauge) {
-      if (!last) Iterator.empty
-      else Iterator.single(proj(new GenericInternalRow(Array[Any](curKey,
-        keyMatches, shedCount,
-        em.asInstanceOf[CepEmission.ShedGauge].cap.toLong))))
-    } else if (sink != null) sink.step(ev, found, last, curKey)
-    else if (!any) Iterator.empty
-    else found.indices.iterator.flatMap { q =>
-      found(q).iterator.map { m =>
-        proj(
-          if (bindings) CepRender.binding(qnames(q), curKey, names(q), m)
-          else CepRender.orderIds(curKey, names(q), m))
+      if (last) {
+        rows += 1
+        Iterator.single(proj(new GenericInternalRow(Array[Any](curKey,
+          keyMatches, shedCount,
+          em.asInstanceOf[CepEmission.ShedGauge].cap.toLong))))
+      } else Iterator.empty
+    } else if (sink != null) {
+      val out = sink.step(ev, found, last, curKey)
+      rows += sink.rendered
+      out
+    } else if (n == 0) Iterator.empty
+    else {
+      rows += n
+      found.indices.iterator.flatMap { q =>
+        found(q).iterator.map { m =>
+          proj(
+            if (bindings) CepRender.binding(qnames(q), curKey, names(q), m)
+            else CepRender.orderIds(curKey, names(q), m))
+        }
       }
     }
   }
@@ -500,6 +563,9 @@ private final class CepMeasuresSink(em: CepEmission.Measures,
   // where each member's block starts in a shared row
   private val offsets =
     em.renderings.scanLeft(2)(_ + _.fields.length).toArray
+
+  /** Rows the last `step` rendered. */
+  def rendered: Int = out.length
 
   def step(ev: Event, found: Array[Vector[Match]], last: Boolean,
       key: Any): Iterator[InternalRow] = {

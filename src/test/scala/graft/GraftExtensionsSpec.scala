@@ -59,7 +59,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       }
       val plan = graft.plans.CepMatchPlan(members,
         graft.plans.CepEmission.Bindings, keyed = true, attrNames, None,
-        None, output, prepared.queryExecution.analyzed)
+        output, prepared.queryExecution.analyzed)
       val n = GraftColumnBridge.ofRows(s, plan).count()
       assert(n > 0, "extension-planned multi CEP produced no matches")
     } finally s.stop()

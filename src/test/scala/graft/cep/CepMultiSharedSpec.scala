@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.plans.CepExecMetrics
+
 /** `matchPatternsShared` contract (ADVICE r7: the shared path had no unit
   * test and its OR-pushdown branch was never exercised):
   *
@@ -13,8 +15,9 @@ import org.scalatest.BeforeAndAfterAll
   *     (a strict member needs the full stream);
   *  2. the union filter itself — engaged iff all members carry one, and
   *     when engaged it reaches the parquet scan with ONE exchange above;
-  *  3. skew-gauge semantics — `Stats.events` counts EVENTS fed (not
-  *     event × query), `maxRuns` the hottest member on any key.
+  *  3. skew-gauge semantics — the operator's `numEvents` metric counts
+  *     EVENTS fed (not event × query), `peakLiveRuns` the hottest member
+  *     on any key.
   */
 class CepMultiSharedSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -65,10 +68,11 @@ class CepMultiSharedSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }.toVector.sorted
 
-  private def shared(qs: Seq[(String, CepQuery)],
-      acc: Option[CepSkewAccumulator] = None): Vector[String] =
-    SparkCep.matchPatternsShared(events, qs, spec, skewAcc = acc)
-      .collect()
+  private def shared(qs: Seq[(String, CepQuery)]): Vector[String] =
+    rendered(SparkCep.matchPatternsShared(events, qs, spec))
+
+  private def rendered(df: org.apache.spark.sql.DataFrame): Vector[String] =
+    df.collect()
       .map(r => s"${r.getString(0)}|${r.getLong(1)}|${r.getString(2)}")
       .toVector.sorted
 
@@ -158,25 +162,24 @@ class CepMultiSharedSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("skew gauge counts events once, not once per member query") {
-    val acc = new CepSkewAccumulator
-    spark.sparkContext.register(acc, "cepSkewShared")
-    shared(pushdownSet, acc = Some(acc))
-    val stats = acc.value
+    val out = SparkCep.matchPatternsShared(events, pushdownSet, spec)
+    rendered(out)
+    val numEvents = CepExecMetrics.of(out, "numEvents").sum
     // events that actually reach the NFA: union-filtered, non-null key
     val fed = events.filter(SparkCep.unionPrefilter(pushdownSet, spec).get)
       .filter("user_id IS NOT NULL").count()
-    assert(stats.events == fed,
-      s"gauge saw ${stats.events} events, stream has $fed " +
-        "(inflated => add() fires per query, not per event)")
-    // maxRuns = the hottest member's per-key max — equals the max over
-    // the members run individually
+    assert(numEvents == fed,
+      s"operator saw $numEvents events, stream has $fed " +
+        "(inflated => counted per query, not per event)")
+    // peakLiveRuns = the hottest member's per-key max — equals the max
+    // over the members run individually
+    val sharedPeak = CepExecMetrics.of(out, "peakLiveRuns").max
     val perQueryMax = pushdownSet.map { case (_, q) =>
-      val a = new CepSkewAccumulator
-      spark.sparkContext.register(a)
-      SparkCep.matchPatternExec(events, q, spec, skewAcc = Some(a)).count()
-      a.value.maxRuns
+      val solo = SparkCep.matchPatternExec(events, q, spec)
+      solo.collect()
+      CepExecMetrics.of(solo, "peakLiveRuns").max
     }.max
-    assert(stats.maxRuns == perQueryMax,
-      s"shared maxRuns ${stats.maxRuns} != per-query max $perQueryMax")
+    assert(sharedPeak == perQueryMax,
+      s"shared peakLiveRuns $sharedPeak != per-query max $perQueryMax")
   }
 }

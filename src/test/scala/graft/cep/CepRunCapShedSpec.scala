@@ -3,6 +3,7 @@ package graft.cep
 import org.scalatest.funsuite.AnyFunSuite
 import GoldenUtil._
 import Pattern._
+import graft.plans.CepExecMetrics
 
 /** The shed-oldest run-cap salvage (VERDICT r9 #7): a NEGATIVE maxRuns
   * survives the hot key that the positive cap fails on, with the
@@ -173,13 +174,11 @@ class CepRunCapShedSparkSpec extends AnyFunSuite
       intercept[Exception] {
         SparkCep.matchPatternExec(events, unbounded, spec).count()
       }
-      // shedOldest: completes, and the gauge reports the sheds
+      // shedOldest: completes, and the operator reports the sheds
       spark.conf.set(SparkCep.RunCapPolicyKey, "shedOldest")
-      val gauge = CepSkewAccumulator.registered(spark, "shed_gauge")
-      val out = SparkCep.matchPatternExec(events, unbounded, spec,
-        skewAcc = Some(gauge))
+      val out = SparkCep.matchPatternExec(events, unbounded, spec)
       val shedRows = rows(out)
-      assert(gauge.value.shedRuns > 0L,
+      assert(CepExecMetrics.of(out, "runsShed").sum > 0L,
         "shed telemetry must report the dropped runs")
       assert(shedRows.forall { case (k, n) => uncapped.getOrElse(k, 0) >= n })
       assert(shedRows.values.sum < uncapped.values.sum)

@@ -6,6 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 
 import SparkCep.CepSpec
 import graft.ops.CacheLease
+import graft.plans.CepExecMetrics
 
 /** `CepMeasures.runShared` executes the shared NFA sweep exactly ONCE,
   * however many members there are and however the caller consumes the
@@ -16,11 +17,12 @@ import graft.ops.CacheLease
   * key shuffle BELOW the operator, but the sweep itself re-runs k times,
   * each time matching all k patterns — k× the cost of one shared pass,
   * invisible on small data, a scale-killer at 100×. The probe is the
-  * skew gauge: the shared `CepMatchExec` fires `skewAcc.add` once per event
-  * fed (never per (event × query)), so `Stats.events` after consuming
-  * every member equals the single-pass feed count iff the sweep ran
-  * once. Accumulators only over-count on task retries, which a healthy
-  * local run has none of — an exact-equality probe here, not a bound.
+  * shared `CepMatchExec`'s `numEvents` metric, which counts each event
+  * fed once (never per (event × query)): summed over every execution of
+  * the operator while every member is consumed, it equals the
+  * single-pass feed count iff the sweep ran once. Metrics only
+  * over-count on task retries, which a healthy local run has none of —
+  * an exact-equality probe here, not a bound.
   */
 class CepSharedSinglePassSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -65,49 +67,56 @@ class CepSharedSinglePassSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Events one shared pass feeds (post-pushdown), measured directly on
     * the shared operator with no measure projection above it.
     */
-  private def singlePassEvents(df: DataFrame): Long = {
-    val acc = CepSkewAccumulator.registered(spark, "probe_base")
-    SparkCep.matchPatternsShared(df,
-      stmts.map { case (n, st) => n -> st.query }, spec,
-      skewAcc = Some(acc)).count()
-    val e = acc.value.events
+  private def singlePassEvents(df: DataFrame,
+      sts: Seq[(String, CepSql.CepSqlStatement)] = stmts): Long = {
+    val out = SparkCep.matchPatternsShared(df,
+      sts.map { case (n, st) => n -> st.query }, spec)
+    out.collect()
+    val e = CepExecMetrics.of(out, "numEvents").sum
     assert(e > 0L, "probe stream fed no events — probe is vacuous")
     e
+  }
+
+  /** `body`'s result and the events the operators it ran fed. */
+  private def swept[T](body: => T): (T, Long) = {
+    val (r, ms) = CepExecMetrics.ran(spark)(body)
+    r -> ms.map(_("numEvents")).sum
   }
 
   test("default (localCheckpoint): one sweep total, consumed as a " +
     "union and re-consumed per member") {
     val df = events()
     val onePass = singlePassEvents(df)
-    val acc = CepSkewAccumulator.registered(spark, "probe_lc")
-    val members =
-      CepMeasures.runShared(df, stmts, spec, skewAcc = Some(acc))
-    // eager localCheckpoint: the sweep already ran, exactly once
-    assert(acc.value.events == onePass,
-      s"materialization ran ${acc.value.events} events, expected $onePass")
+    // eager localCheckpoint: the sweep runs here, exactly once
+    val (members, built) = swept(CepMeasures.runShared(df, stmts, spec))
+    assert(built == onePass,
+      s"materialization ran $built events, expected $onePass")
     // consuming every member — unioned AND individually — adds nothing
-    members.map(_._2).reduce(_ unionByName _).collect()
-    members.foreach(_._2.collect())
-    assert(acc.value.events == onePass,
-      s"consumption re-ran the sweep: ${acc.value.events} != $onePass")
+    val (_, consumed) = swept {
+      members.map(_._2).reduce(_ unionByName _).collect()
+      members.foreach(_._2.collect())
+    }
+    assert(consumed == 0L, s"consumption re-ran the sweep: $consumed events")
   }
 
   test("lease (persist): one sweep total across separate per-member " +
     "actions, zero after release until re-consumed") {
     val df = events()
     val onePass = singlePassEvents(df)
-    val acc = CepSkewAccumulator.registered(spark, "probe_lease")
     val lease = new CacheLease
     try {
-      val members = CepMeasures.runShared(df, stmts, spec,
-        lease = Some(lease), skewAcc = Some(acc))
       // persist is lazy: nothing ran yet
-      assert(acc.value.events == 0L, "lease path executed eagerly")
-      // first consumer materializes the cache — one sweep; the rest hit it
+      val (members, built) = swept(CepMeasures.runShared(df, stmts, spec,
+        lease = Some(lease)))
+      assert(built == 0L, "lease path executed eagerly")
+      // first consumer materializes the cache — one sweep; the rest hit
+      // it (each member reads the one cached operator)
       members.foreach(_._2.collect())
       members.map(_._2).reduce(_ unionByName _).collect()
-      assert(acc.value.events == onePass,
-        s"lease path swept ${acc.value.events} events, expected $onePass")
+      for ((name, m) <- members)
+        assert(CepExecMetrics.of(m, "numEvents") == Seq(onePass),
+          s"lease path swept ${CepExecMetrics.of(m, "numEvents")} " +
+            s"events for $name, expected $onePass")
     } finally lease.close()
   }
 
@@ -153,18 +162,14 @@ class CepSharedSinglePassSpec extends AnyFunSuite with BeforeAndAfterAll {
     // their slices (UNMATCHED reads its slice twice, SHOW EMPTY three
     // times — all behind the shared materialization + their own
     // localCheckpoint)
-    val accBase = CepSkewAccumulator.registered(spark, "probe_mix_base")
-    SparkCep.matchPatternsShared(df,
-      mixed.map { case (n, st) => n -> st.query }, spec,
-      skewAcc = Some(accBase)).count()
-    val onePass = accBase.value.events
-    assert(onePass > 0L)
-    val acc = CepSkewAccumulator.registered(spark, "probe_mix")
-    val members = CepMeasures.runShared(df, mixed, spec,
-      skewAcc = Some(acc))
-    members.foreach(_._2.collect())
-    assert(acc.value.events == onePass,
-      s"mixed set swept ${acc.value.events} events, expected $onePass")
+    val onePass = singlePassEvents(df, mixed)
+    val (members, fed) = swept {
+      val ms = CepMeasures.runShared(df, mixed, spec)
+      ms.foreach(_._2.collect())
+      ms
+    }
+    assert(fed == onePass,
+      s"mixed set swept $fed events, expected $onePass")
     def canon(d: DataFrame): Vector[String] =
       d.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
         .toVector.sorted

@@ -4,9 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** The skew gauge: `CepSkewAccumulator` must surface the hottest key (the
-  * one holding the largest live-run set) and total events fed, without
-  * changing the match output.
+import graft.plans.{CepExecMetrics, CepMatchExec}
+
+/** The operator's skew metrics: `CepMatchExec` must report events fed,
+  * keys, matches and the peak live-run set without changing the match
+  * output, and `SparkCep.shedGauge` must name the hottest key (the one
+  * holding the largest live-run set).
   */
 class CepSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -39,27 +42,49 @@ class CepSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
     val spec = SparkCep.CepSpec(Some("user_id"), "event_id", "event_type",
       Seq("value"))
 
-    val skew = CepSkewAccumulator.registered(s, "cep_skew_test")
-    val out = SparkCep.matchPatternExec(df, query, spec, skewAcc = Some(skew))
-    val matches = out.count()
+    val out = SparkCep.matchPatternExec(df, query, spec)
+    val (matches, perExecution) =
+      CepExecMetrics.ran(s)(out.collect().length.toLong)
     assert(matches == (11L * 12L / 2L) + 1L) // all ordered pairs per key
+    def metric(n: String): Long = CepExecMetrics.of(out, n).sum
+    assert(metric("numEvents") == rows.length.toLong)
+    assert(metric("numKeys") == 2L)
+    assert(metric("numMatches") == matches)
+    assert(metric("numOutputRows") == matches)
+    val peak = metric("peakLiveRuns")
+    assert(peak > 2L) // nd-relaxed run set grows on the hot key
+    // the status store holds the same values (peakLiveRuns: by max too)
+    assert(perExecution == Seq(CepMatchExec.MetricNames.map(m =>
+      m._1 -> metric(m._1)).toMap))
 
-    val stats = skew.value
-    assert(stats.hottestKey == 7L)
-    assert(stats.maxRuns > 2L) // nd-relaxed run set grows on the hot key
-    assert(stats.events == rows.length.toLong)
+    // shedGauge at a cap the cold key never exceeds names the hot key
+    val coldOnly = SparkCep.matchPatternExec(df.where("user_id = 1"),
+      query, spec)
+    coldOnly.collect()
+    val cap = CepExecMetrics.of(coldOnly, "peakLiveRuns").sum.toInt
+    assert(cap < peak)
+    val shed = SparkCep.shedGauge(df, query, spec, cap).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(shed(1L) == 0L && shed(7L) > 0L)
+    assert(shed.maxBy(_._2)._1 == 7L)
+  }
 
-    // the gauge must not perturb results: identical output without it
-    val plain = SparkCep.matchPatternExec(df, query, spec).count()
-    assert(plain == matches)
-
-    // the Catalyst-planned operator carries the same gauge
-    val skew2 = CepSkewAccumulator.registered(s, "cep_skew_exec")
-    val execMatches = SparkCep.matchPatternExec(df, query, spec,
-      skewAcc = Some(skew2)).count()
-    assert(execMatches == matches)
-    val st2 = skew2.value
-    assert(st2.hottestKey == 7L && st2.events == rows.length.toLong)
-    assert(st2.maxRuns == stats.maxRuns)
+  test("registry row cep_ndrelaxed_click_pairs reports its metrics") {
+    val dir = "/root/testdata/sf0.001"
+    val row = graft.Queries.cepNdRelaxedClickPairs(spark, dir)
+    val n = row.collect().length.toLong
+    assert(n > 0L)
+    def metric(df: org.apache.spark.sql.DataFrame, m: String): Long =
+      CepExecMetrics.of(df, m).sum
+    for (m <- Seq("numEvents", "numKeys", "numMatches", "peakLiveRuns"))
+      assert(metric(row, m) > 0L, s"$m is 0")
+    // one row per match; the row's ORDER BY samples its input for the
+    // range exchange, which runs the operator a second time
+    assert(metric(row, "numOutputRows") == metric(row, "numMatches"))
+    val matches = SparkCep.matchPatternExec(
+      graft.Queries.table(spark, dir, "events"),
+      graft.Queries.cepNdRelaxedClickPairsQuery, graft.Queries.eventSpec)
+    assert(matches.collect().length == n)
+    assert(CepExecMetrics.of(matches, "numOutputRows") == Seq(n))
   }
 }

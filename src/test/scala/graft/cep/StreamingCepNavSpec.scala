@@ -782,4 +782,77 @@ class StreamingCepNavSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("nxt", 1L, Map("x_id" -> 1L, "x_v" -> 3L)),
       ("plain", 1L, Map("a_id" -> 3L, "b_id" -> 4L))), s"got $rows")
   }
+
+  test("PREV and NEXT over a STRING column: streaming == batch (arrival " +
+    "order across a micro-batch boundary, and event-time NEXT)") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val strSchema = Vector("signup", "click", "view").map(t =>
+      t -> Vector("event_id", "value", "host"))
+    val strSpec = spec.copy(attrCols = Seq("value", "host"))
+    def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
+    def ev(k: Long, id: Long, tpe: String, host: String) =
+      TsEvS(k, id, tpe, 0L, host, t(id))
+    def rows(df: org.apache.spark.sql.DataFrame): Matches =
+      df.collect().map(r => (r.getLong(0),
+        (1 until r.length).map(i => r.getSeq[Long](i).toVector).toVector))
+        .toSet
+    def batch(q: CepQuery, evs: Seq[TsEvS]): Matches =
+      rows(SparkCep.matchPatternExec(evs.toDF().drop("ts"), q, strSpec))
+
+    // arrival order: click@4's PREV is the view's 'a.com'; click@7's
+    // PREV is click@6, read from the history of the first micro-batch
+    val prev = CepSql.parse("PATTERN (s -> c) DEFINE s AS signup; " +
+      "c AS click WHERE PREV(host) == 'a.com'", strSchema)
+    val batch1 = Seq(ev(1, 1, "signup", "b.com"), ev(1, 2, "view", "a.com"),
+      ev(1, 4, "click", "b.com"), ev(2, 5, "signup", "b.com"),
+      ev(2, 6, "click", "a.com"))
+    val batch2 = Seq(ev(2, 7, "click", "c.com"))
+    val mem = MemoryStream[TsEvS]
+    val sq = StreamingCep.matchPattern(mem.toDF().drop("ts"), prev, strSpec)
+      .writeStream.format("memory").queryName("nav_str_prev")
+      .outputMode("append").start()
+    try Seq(batch1, batch2).foreach { b =>
+      mem.addData(b: _*)
+      sq.processAllAvailable()
+    } finally sq.stop()
+    val streamed = rows(s.sql("SELECT * FROM nav_str_prev"))
+    assert(streamed == batch(prev, batch1 ++ batch2))
+    assert(streamed == Set((1L, Vector(Vector(1L), Vector(4L))),
+      (2L, Vector(Vector(5L), Vector(7L)))), s"got $streamed")
+
+    // event-time NEXT: a click followed by an 'a.com' row; trailing
+    // views make every click's follower final
+    val next = CepSql.parse("PATTERN (x y) DEFINE x AS click; " +
+      "y AS click WHERE NEXT(host) == 'a.com'", strSchema)
+    val hosts = Vector("a.com", "b.com")
+    val rnd = new scala.util.Random(20261019L)
+    val evs = (1 to 40).map(i => ev(1L + (i % 2), i.toLong,
+      if (rnd.nextInt(3) == 0) "view" else "click",
+      hosts(rnd.nextInt(2)))) ++
+      (41 to 44).map(i => ev(1L + (i % 2), i.toLong, "view", "b.com"))
+    val mem2 = MemoryStream[TsEvS]
+    val sq2 = StreamingCep.matchPatternEventTime(mem2.toDF(), next, strSpec,
+      "ts", "5 seconds").writeStream.format("memory")
+      .queryName("nav_str_next").outputMode("append").start()
+    try {
+      evs.grouped(15).foreach { b =>
+        mem2.addData(b: _*)
+        sq2.processAllAvailable()
+      }
+      // drain: push the watermark far past the tail
+      mem2.addData(TsEvS(9, 999, "view", 0, "b.com", t(1000)))
+      sq2.processAllAvailable()
+      mem2.addData(TsEvS(9, 1000, "view", 0, "b.com", t(2000)))
+      sq2.processAllAvailable()
+    } finally sq2.stop()
+    val streamedNext = rows(s.sql("SELECT * FROM nav_str_next")
+      .where($"user_id" =!= 9L))
+    assert(streamedNext == batch(next, evs))
+    assert(streamedNext.nonEmpty)
+  }
 }
+
+case class TsEvS(user_id: Long, event_id: Long, event_type: String,
+    value: Long, host: String, ts: java.sql.Timestamp)

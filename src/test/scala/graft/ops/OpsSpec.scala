@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.plans.CepExecMetrics
+
 /** Correctness pins for the pipeline ops whose queries are rows-only in the
   * driver gate (MinHash/SimHash/LSH internals), plus hand-computed cases for
   * the oracle-backed ones.
@@ -280,26 +282,33 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         (12L, "a genuinely distinct pair doc")))
       .toDF("doc_id", "text")
 
-    val acc = spark.sparkContext.longAccumulator("mhDrops")
-    val mh = DedupOps.minHashLshPairs(docs, "doc_id", "text",
-      maxBucketSize = 4L, dropCounter = Some(acc))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the cap Filter keeps the 2 distinct docs' index rows, drops the
+    // 10 degenerate docs' rows (read from every cap Filter of the plan)
+    def kept(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      CepExecMetrics.nodes(df.queryExecution.executedPlan).collect {
+        case f: org.apache.spark.sql.execution.FilterExec
+            if f.condition.references.exists(_.name == "__bsz") =>
+          f.metrics("numOutputRows").value
+      }
+    val mhDf = DedupOps.minHashLshPairs(docs, "doc_id", "text",
+      maxBucketSize = 4L)
+    val mh = mhDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(mh == Set((11L, 12L)), s"capped minhash pairs: $mh")
     val bands = DedupOps.MinHashParams().bands
-    assert(acc.value == 10L * bands,
-      s"drop counter ${acc.value} != 10 docs x $bands bands")
+    assert(kept(mhDf).nonEmpty && kept(mhDf).forall(_ == 2L * bands),
+      s"cap kept ${kept(mhDf)} index rows, not 2 docs x $bands bands")
     // uncapped control: the degenerate clique is all there
     val un = DedupOps.minHashLshPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(un.size == 45 + 1)
     spark.catalog.clearCache()
 
-    val acc2 = spark.sparkContext.longAccumulator("shDrops")
-    val sh = DedupOps.simHashPairs(docs, "doc_id", "text", maxHamming = 3,
-      maxBucketSize = 4L, dropCounter = Some(acc2))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val shDf = DedupOps.simHashPairs(docs, "doc_id", "text", maxHamming = 3,
+      maxBucketSize = 4L)
+    val sh = shDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sh == Set((11L, 12L)), s"capped simhash pairs: $sh")
-    assert(acc2.value == 10L * 4, "simhash: 10 docs x 4 bands dropped")
+    assert(kept(shDf).nonEmpty && kept(shDf).forall(_ == 2L * 4),
+      s"simhash: cap kept ${kept(shDf)} index rows, not 2 docs x 4 bands")
     spark.catalog.clearCache()
 
     // RHP LSH over identical vectors: same valve, same outcome

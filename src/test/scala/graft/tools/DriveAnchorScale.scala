@@ -3,14 +3,15 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cep._
+import graft.plans.CepExecMetrics
 
 /** Scale probe for the `^` partition-start anchor: the anchored funnel
   * seeds ONE run per key (seed-at-step-1 + firstTake==1 emit gate)
   * where the unanchored form seeds at every event — on dense keys that
   * is the difference between O(1) and O(events-in-flight) live runs per
   * key. The probe feeds the same parquet-backed stream through both
-  * forms and reports seconds, matches, and the skew gauge's max
-  * live-run count (the per-key state bound the anchor buys). Note the
+  * forms and reports seconds, matches, and the operator's
+  * `peakLiveRuns` metric (the per-key state bound the anchor buys). Note the
   * anchored form also declines the alphabet pushdown (it must observe
   * the true partition edge), so its scan is the FULL stream — the probe
   * shows the state win surviving that handicap.
@@ -51,15 +52,14 @@ object DriveAnchorScale {
     SparkCep.matchPatternExec(df, q(anchored = false), spec).count() // warm
 
     for (anchored <- Vector(false, true)) {
-      val acc = CepSkewAccumulator.registered(spark, s"anchor_$anchored")
       val t0 = System.nanoTime()
-      val m = SparkCep.matchPatternExec(df, q(anchored), spec,
-        skewAcc = Some(acc)).count()
+      val (m, st) = CepExecMetrics.ran(spark)(
+        SparkCep.matchPatternExec(df, q(anchored), spec).count())
       val sec = (System.nanoTime() - t0) / 1e9
+      val fed = st.map(_("numEvents")).sum
       println(f"ANCHOR=$anchored MATCHES=$m SECONDS=$sec%.2f " +
-        f"MAX_LIVE_RUNS=${acc.value.maxRuns} " +
-        f"FED=${acc.value.events} " +
-        f"EVENTS_PER_SEC=${(acc.value.events / sec).toLong}")
+        f"MAX_LIVE_RUNS=${st.map(_("peakLiveRuns")).max} " +
+        f"FED=$fed EVENTS_PER_SEC=${(fed / sec).toLong}")
     }
     spark.stop()
   }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cep._
+import graft.plans.CepExecMetrics
 
 /** Hot-key probe for keyed CEP (VERDICT r8 #4): the same shared-scan
   * pattern set over the same parquet-backed event volume, keyed once
@@ -14,7 +15,8 @@ import graft.cep._
   *  - the RUN-SET bound holds on the hot key: the member set contains an
   *    unbounded loop (`lpat-inf` with until), so the default state valve
   *    (`SparkCep.resolveMaxRuns`, no explicit cap passed) is engaged, and
-  *    the skew gauge reports the max live-run count actually reached —
+  *    the operator's `peakLiveRuns` metric reports the max live-run
+  *    count actually reached —
   *    orders of magnitude below the cap, because until/skip keep runs
   *    mortal even on a key with ~18% of the stream;
   *  - the WALL-CLOCK bound: per-key NFA work is inherently serial (the
@@ -108,16 +110,15 @@ object DriveCepSkew {
 
     def timed(path: String, label: String): (Double, Long) = {
       val df = spark.read.parquet(path)
-      val skew = CepSkewAccumulator.registered(spark, s"skew_$label")
       val t0 = System.nanoTime()
-      val matches = SparkCep.matchPatternsShared(df, queries, spec,
-        skewAcc = Some(skew)).count()
+      val (matches, st) = CepExecMetrics.ran(spark)(
+        SparkCep.matchPatternsShared(df, queries, spec).count())
       val sec = (System.nanoTime() - t0) / 1e9
-      val st = skew.value
+      val maxRuns = st.map(_("peakLiveRuns")).max
       println(f"CEP_SKEW $label%-7s MATCHES=$matches SECONDS=$sec%.1f " +
-        f"EVENTS_PER_SEC=${(n / sec).toLong} MAX_LIVE_RUNS=${st.maxRuns} " +
-        f"HOT_KEY=${st.hottestKey} FED=${st.events}")
-      (sec, st.maxRuns)
+        f"EVENTS_PER_SEC=${(n / sec).toLong} MAX_LIVE_RUNS=$maxRuns " +
+        f"FED=${st.map(_("numEvents")).sum}")
+      (sec, maxRuns)
     }
 
     // warm-up (JVM/codegen) before any timed pass
@@ -144,18 +145,17 @@ object DriveCepSkew {
         false
       } catch { case _: Throwable => true }
     spark.conf.set(SparkCep.RunCapPolicyKey, "shedOldest")
-    val shedAcc = CepSkewAccumulator.registered(spark, "skew_shed")
     val tShed = System.nanoTime()
-    val shedMatches = SparkCep.matchPatternsShared(
-      spark.read.parquet(zipfPath), queries, spec,
-      skewAcc = Some(shedAcc)).count()
+    val (shedMatches, shedSt) = CepExecMetrics.ran(spark)(
+      SparkCep.matchPatternsShared(
+        spark.read.parquet(zipfPath), queries, spec).count())
     val shedSec = (System.nanoTime() - tShed) / 1e9
     spark.conf.unset(SparkCep.DefaultUnboundedMaxRunsKey)
     spark.conf.unset(SparkCep.RunCapPolicyKey)
     println(f"CEP_SKEW SHED cap=$lowCap fail_mode_died=$failDied " +
       f"matches=$shedMatches secs=$shedSec%.1f " +
       f"events/s=${(n / shedSec).toLong} " +
-      f"shed_runs=${shedAcc.value.shedRuns} " +
+      f"shed_runs=${shedSt.map(_("runsShed")).sum} " +
       f"vs_uncapped_secs=$zipfSec%.1f")
     spark.stop()
   }

@@ -3,11 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cep._
+import graft.plans.CepExecMetrics
 
 /** Scale probe: 4M synthetic events over 400 keys (10k events/key) through
   * the batch CEP operator — validates the streaming-NFA memory claim and
-  * measures throughput on a selective strict pattern, with and without
-  * the skew gauge.
+  * measures throughput on a selective strict pattern, with the
+  * operator's peak live-run and fed-event metrics.
   */
 object DriveScale {
   def main(args: Array[String]): Unit = {
@@ -35,23 +36,13 @@ object DriveScale {
         "signup" -> Vector("event_id", "value")))
     val spec = SparkCep.CepSpec(Some("user_id"), "event_id", "event_type",
       Seq("value"))
-    val skew = CepSkewAccumulator.registered(spark, "cep_skew")
     val t0 = System.nanoTime()
-    val matches =
-      SparkCep.matchPatternExec(df, q, spec, skewAcc = Some(skew)).count()
+    val (matches, st) = CepExecMetrics.ran(spark)(
+      SparkCep.matchPatternExec(df, q, spec).count())
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"SCALE_MATCHES=$matches SECONDS=$sec%.1f EVENTS_PER_SEC=${(n / sec).toLong}")
-    val st = skew.value
-    println(s"SCALE_SKEW max_runs=${st.maxRuns} hottest_key=${st.hottestKey} " +
-      s"events_fed=${st.events}")
-    // the same operator without the gauge, on the identical input +
-    // pattern: the gauge's cost, and a check that it changes no match
-    val t1 = System.nanoTime()
-    val matchesPlain = SparkCep.matchPatternExec(df, q, spec).count()
-    val secPlain = (System.nanoTime() - t1) / 1e9
-    require(matchesPlain == matches,
-      s"the gauge changed the matches: $matchesPlain vs $matches")
-    println(f"SCALE_NO_GAUGE SECONDS=$secPlain%.1f EVENTS_PER_SEC=${(n / secPlain).toLong}")
+    println(s"SCALE_SKEW max_runs=${st.map(_("peakLiveRuns")).max} " +
+      s"events_fed=${st.map(_("numEvents")).sum}")
     spark.stop()
   }
 }

@@ -3,15 +3,16 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cep._
+import graft.plans.CepExecMetrics
 
 /** Scale probe for ALL ROWS PER MATCH members on the shared scan
   * (round 16 — `CepMeasures.runShared` admits every rows-per-match
   * mode): k ALL-ROWS statements on ONE operator pass vs the same k run
   * SOLO. The claim under test: the shared formulation pays one scan +
-  * one NFA sweep (the skew gauge's fed-event count stays flat in k)
+  * one NFA sweep (the operator's `numEvents` metric stays flat in k)
   * plus k per-member explode + event joins — which the members would
   * pay solo too — so shared wall-clock grows sub-linearly while solo
-  * grows ~linearly, and the gauge reads exactly one pass however many
+  * grows ~linearly, and the metric reads exactly one pass however many
   * ALL-ROWS members consume their slices.
   *
   * Usage: DriveSharedAllRowsScale [threads] [nEvents] [kMax]
@@ -52,10 +53,9 @@ object DriveSharedAllRowsScale {
     val spec = SparkCep.CepSpec(Some("user_id"), "event_id", "event_type",
       Seq("value"))
 
-    def sharedAll(k: Int, acc: Option[CepSkewAccumulator]): Long =
+    def sharedAll(k: Int): Long =
       CepMeasures.runShared(df,
-        CepSql.parseStatements(pool.take(k), schema), spec,
-        skewAcc = acc)
+        CepSql.parseStatements(pool.take(k), schema), spec)
         .map(_._2.count()).sum
 
     def soloAll(k: Int): Long =
@@ -63,20 +63,20 @@ object DriveSharedAllRowsScale {
         .map { case (_, st) => CepMeasures.run(df, st, spec).count() }.sum
 
     // warm-up (codegen, page cache)
-    sharedAll(1, None); soloAll(1)
+    sharedAll(1); soloAll(1)
     println(f"${"k"}%3s ${"shared_s"}%9s ${"solo_s"}%8s " +
       f"${"fed_events"}%11s ${"rows"}%10s")
     for (k <- 1 to kMax) {
-      val acc = CepSkewAccumulator.registered(spark, s"probe_ar_$k")
       val t0 = System.nanoTime()
-      val rows = sharedAll(k, Some(acc))
+      val (rows, st) = CepExecMetrics.ran(spark)(sharedAll(k))
+      val fed = st.map(_("numEvents")).sum
       val tShared = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val rowsSolo = soloAll(k)
       val tSolo = (System.nanoTime() - t1) / 1e9
       require(rows == rowsSolo, s"shared/solo row counts diverge at k=$k")
       println(f"$k%3d $tShared%9.2f $tSolo%8.2f " +
-        f"${acc.value.events}%11d $rows%10d")
+        f"$fed%11d $rows%10d")
     }
     spark.stop()
   }

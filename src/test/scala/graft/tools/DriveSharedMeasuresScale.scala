@@ -3,13 +3,14 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cep._
+import graft.plans.CepExecMetrics
 
 /** Scale probe for `CepMeasures.runShared` after the single-pass fix:
   * consume ALL members' measures for k = 1..kMax member sets over one
-  * parquet-backed stream and report seconds plus the skew gauge's fed-
-  * event count. Before the fix, consuming k members re-ran the shared
-  * sweep k times (each matching all k patterns): quadratic in k and the
-  * gauge read k× the feed. After it, the gauge reads one pass and the
+  * parquet-backed stream and report seconds plus the operator's
+  * `numEvents` metric. Before the fix, consuming k members re-ran the
+  * shared sweep k times (each matching all k patterns): quadratic in k
+  * and the count read k× the feed. After it, it reads one pass and the
   * time curve is one sweep + k cheap projections over the SMALL match
   * frame — near-flat in k.
   *
@@ -52,21 +53,19 @@ object DriveSharedMeasuresScale {
     val spec = SparkCep.CepSpec(Some("user_id"), "event_id", "event_type",
       Seq("value"))
 
-    def consumeAll(k: Int, acc: Option[CepSkewAccumulator]): Long =
+    def consumeAll(k: Int): Long =
       CepMeasures.runShared(df,
-        CepSql.parseStatements(pool.take(k), schema), spec,
-        skewAcc = acc)
+        CepSql.parseStatements(pool.take(k), schema), spec)
         .map(_._2.count()).sum
 
-    consumeAll(1, None) // warm-up: JVM + codegen, untimed
+    consumeAll(1) // warm-up: JVM + codegen, untimed
     for (k <- 1 to kMax) {
-      val acc = CepSkewAccumulator.registered(spark, s"probe_k$k")
       val t0 = System.nanoTime()
-      val rows = consumeAll(k, Some(acc))
+      val (rows, st) = CepExecMetrics.ran(spark)(consumeAll(k))
+      val fed = st.map(_("numEvents")).sum
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"SHARED_MEASURES k=$k MATCHES=$rows SECONDS=$sec%.2f " +
-        f"FED_EVENTS=${acc.value.events} " +
-        f"EVENTS_PER_SEC=${(acc.value.events / sec).toLong}")
+        f"FED_EVENTS=$fed EVENTS_PER_SEC=${(fed / sec).toLong}")
     }
     spark.stop()
   }

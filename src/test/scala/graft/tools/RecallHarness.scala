@@ -1,10 +1,7 @@
 package graft.tools
 import org.apache.spark.sql.DataFrame
 
-/** Shared recall@k measurement for the ANN drive tools: one definition so
-  * `DriveRecall` and `DriveRecallSweep` can never report non-comparable
-  * numbers.
-  */
+/** Recall@k measurement for the ANN drive tools (`DriveRecall`). */
 object RecallHarness {
   /** (query → neighbor-id set) from a (query_id, neighbor_id, …) frame. */
   def topSet(df: DataFrame): Map[Long, Set[Long]] =
