@@ -300,7 +300,10 @@ private[plans] object CepChildContract {
   * `runsShed` the partial runs the shed-oldest valve dropped, and
   * `peakLiveRuns` is the largest live-run set any member held on any key
   * after any event (merged by max, `CepMaxMetric`). The loop counts in
-  * task-local fields and publishes them when its task completes.
+  * task-local fields and publishes them when its task completes. A
+  * range exchange downstream (an ORDER BY) samples its input with a
+  * separate job that re-executes this operator, so there the summed
+  * metrics, `numOutputRows` included, count both executions.
   */
 private[graft] final case class CepMatchExec(
     members: Vector[CepMember],

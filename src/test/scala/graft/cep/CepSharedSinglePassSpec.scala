@@ -109,10 +109,15 @@ class CepSharedSinglePassSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (members, built) = swept(CepMeasures.runShared(df, stmts, spec,
         lease = Some(lease)))
       assert(built == 0L, "lease path executed eagerly")
-      // first consumer materializes the cache — one sweep; the rest hit
-      // it (each member reads the one cached operator)
-      members.foreach(_._2.collect())
-      members.map(_._2).reduce(_ unionByName _).collect()
+      // first consumer materializes the cache — one sweep; the rest,
+      // and the union after them, hit it
+      val (_, fed) = swept {
+        members.foreach(_._2.collect())
+        members.map(_._2).reduce(_ unionByName _).collect()
+      }
+      assert(fed == onePass,
+        s"lease path swept $fed events over every action, expected $onePass")
+      // each member reads the one cached operator
       for ((name, m) <- members)
         assert(CepExecMetrics.of(m, "numEvents") == Seq(onePass),
           s"lease path swept ${CepExecMetrics.of(m, "numEvents")} " +

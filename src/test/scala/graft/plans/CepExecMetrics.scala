@@ -25,7 +25,9 @@ object CepExecMetrics {
 
   /** `body`'s result, and the metrics, by key, of each `CepMatchExec`
     * the SQL executions `body` started ran, from the session's SQL status
-    * store: for plans no frame holds, such as an eager checkpoint's.
+    * store: for plans no frame holds, such as an eager checkpoint's. An
+    * operator drawn more than once in one execution's graph (a cache
+    * scanned twice) is counted once; its metrics are per execution.
     */
   def ran[T](spark: SparkSession)(body: => T)
       : (T, Seq[Map[String, Long]]) = {
@@ -38,11 +40,25 @@ object CepExecMetrics {
     val ids = store.executionsList().map(_.executionId).filterNot(before)
     result -> ids.flatMap { id =>
       val values = store.executionMetrics(id)
-      store.planGraph(id).allNodes.filter(_.name == "CepMatch").map(
-        _.metrics.map(m => keys(m.name) ->
+      store.planGraph(id).allNodes.filter(_.name == "CepMatch")
+        .map(_.metrics).distinctBy(_.map(_.accumulatorId).toSet)
+        .map(_.map(m => keys(m.name) ->
           values.get(m.accumulatorId).fold(0L)(_.replace(",", "").toLong))
           .toMap[String, Long])
     }.toSeq
+  }
+
+  /** `ran`, with the seconds `body` alone took: the listener drains and
+    * status-store reads stay outside the timed window.
+    */
+  def timedRan[T](spark: SparkSession)(body: => T)
+      : (T, Double, Seq[Map[String, Long]]) = {
+    val ((result, sec), metrics) = ran(spark) {
+      val t0 = System.nanoTime()
+      val r = body
+      r -> (System.nanoTime() - t0) / 1e9
+    }
+    (result, sec, metrics)
   }
 
   /** Every node of `plan`: through AQE stages, reused exchanges, cached

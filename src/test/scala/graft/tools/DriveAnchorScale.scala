@@ -52,10 +52,8 @@ object DriveAnchorScale {
     SparkCep.matchPatternExec(df, q(anchored = false), spec).count() // warm
 
     for (anchored <- Vector(false, true)) {
-      val t0 = System.nanoTime()
-      val (m, st) = CepExecMetrics.ran(spark)(
+      val (m, sec, st) = CepExecMetrics.timedRan(spark)(
         SparkCep.matchPatternExec(df, q(anchored), spec).count())
-      val sec = (System.nanoTime() - t0) / 1e9
       val fed = st.map(_("numEvents")).sum
       println(f"ANCHOR=$anchored MATCHES=$m SECONDS=$sec%.2f " +
         f"MAX_LIVE_RUNS=${st.map(_("peakLiveRuns")).max} " +

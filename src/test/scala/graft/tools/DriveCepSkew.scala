@@ -110,10 +110,8 @@ object DriveCepSkew {
 
     def timed(path: String, label: String): (Double, Long) = {
       val df = spark.read.parquet(path)
-      val t0 = System.nanoTime()
-      val (matches, st) = CepExecMetrics.ran(spark)(
+      val (matches, sec, st) = CepExecMetrics.timedRan(spark)(
         SparkCep.matchPatternsShared(df, queries, spec).count())
-      val sec = (System.nanoTime() - t0) / 1e9
       val maxRuns = st.map(_("peakLiveRuns")).max
       println(f"CEP_SKEW $label%-7s MATCHES=$matches SECONDS=$sec%.1f " +
         f"EVENTS_PER_SEC=${(n / sec).toLong} MAX_LIVE_RUNS=$maxRuns " +
@@ -145,11 +143,9 @@ object DriveCepSkew {
         false
       } catch { case _: Throwable => true }
     spark.conf.set(SparkCep.RunCapPolicyKey, "shedOldest")
-    val tShed = System.nanoTime()
-    val (shedMatches, shedSt) = CepExecMetrics.ran(spark)(
+    val (shedMatches, shedSec, shedSt) = CepExecMetrics.timedRan(spark)(
       SparkCep.matchPatternsShared(
         spark.read.parquet(zipfPath), queries, spec).count())
-    val shedSec = (System.nanoTime() - tShed) / 1e9
     spark.conf.unset(SparkCep.DefaultUnboundedMaxRunsKey)
     spark.conf.unset(SparkCep.RunCapPolicyKey)
     println(f"CEP_SKEW SHED cap=$lowCap fail_mode_died=$failDied " +

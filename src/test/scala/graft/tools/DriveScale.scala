@@ -36,10 +36,8 @@ object DriveScale {
         "signup" -> Vector("event_id", "value")))
     val spec = SparkCep.CepSpec(Some("user_id"), "event_id", "event_type",
       Seq("value"))
-    val t0 = System.nanoTime()
-    val (matches, st) = CepExecMetrics.ran(spark)(
+    val (matches, sec, st) = CepExecMetrics.timedRan(spark)(
       SparkCep.matchPatternExec(df, q, spec).count())
-    val sec = (System.nanoTime() - t0) / 1e9
     println(f"SCALE_MATCHES=$matches SECONDS=$sec%.1f EVENTS_PER_SEC=${(n / sec).toLong}")
     println(s"SCALE_SKEW max_runs=${st.map(_("peakLiveRuns")).max} " +
       s"events_fed=${st.map(_("numEvents")).sum}")

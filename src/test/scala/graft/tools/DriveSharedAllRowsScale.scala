@@ -67,10 +67,8 @@ object DriveSharedAllRowsScale {
     println(f"${"k"}%3s ${"shared_s"}%9s ${"solo_s"}%8s " +
       f"${"fed_events"}%11s ${"rows"}%10s")
     for (k <- 1 to kMax) {
-      val t0 = System.nanoTime()
-      val (rows, st) = CepExecMetrics.ran(spark)(sharedAll(k))
+      val (rows, tShared, st) = CepExecMetrics.timedRan(spark)(sharedAll(k))
       val fed = st.map(_("numEvents")).sum
-      val tShared = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val rowsSolo = soloAll(k)
       val tSolo = (System.nanoTime() - t1) / 1e9

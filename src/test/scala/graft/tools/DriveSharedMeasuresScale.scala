@@ -60,10 +60,8 @@ object DriveSharedMeasuresScale {
 
     consumeAll(1) // warm-up: JVM + codegen, untimed
     for (k <- 1 to kMax) {
-      val t0 = System.nanoTime()
-      val (rows, st) = CepExecMetrics.ran(spark)(consumeAll(k))
+      val (rows, sec, st) = CepExecMetrics.timedRan(spark)(consumeAll(k))
       val fed = st.map(_("numEvents")).sum
-      val sec = (System.nanoTime() - t0) / 1e9
       println(f"SHARED_MEASURES k=$k MATCHES=$rows SECONDS=$sec%.2f " +
         f"FED_EVENTS=$fed EVENTS_PER_SEC=${(fed / sec).toLong}")
     }
