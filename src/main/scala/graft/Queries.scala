@@ -17,25 +17,13 @@ import graft.cep.SparkCep.CepSpec
   */
 object Queries {
 
-  /** Reads `dir/name.parquet` with its `ts` column normalized to long
-    * epoch micros (`normalizeTs`).
-    *
-    * Session contract: every call sets
-    * `spark.sql.legacy.parquet.nanosAsLong=true` on the CALLER's session
-    * (Spark has no per-reader option for it) and never resets it. The
-    * conf then also applies to every other parquet read of that session:
-    * a timestamp[ns] column anywhere reads as long instead of failing the
-    * scan. The current fixtures carry timestamp[us], for which the flag
-    * is a no-op; it keeps a ns-typed fixture readable (the ns column
-    * lands in `normalizeTs`'s LongType branch). `EventSource.parquet`
-    * sets the same conf.
+  /** Reads `dir/name.parquet` through `EventSource.parquet` (whose
+    * scaladoc states the session contract) with its `ts` column
+    * normalized to long epoch micros (`normalizeTs`).
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // driver-side footer schema: skips the per-read inference JOB
-    // (~110 ms/build at sf0.1 — ReadOverheadLab; ParquetSchema scaladoc)
-    normalizeTs(graft.ops.ParquetSchema.read(spark, s"$dir/$name.parquet"),
-      s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    normalizeTs(graft.sources.EventSource.parquet(spark, path), path)
   }
 
   /** Canonical event-time: `ts` is always LONG EPOCH MICROS after this —

@@ -167,6 +167,9 @@ final class Executor(val dst: Dst, val strategy: AfterMatchStrategy,
   /** Live-run count (for state-size accounting in streaming). */
   def runCount: Int = S.size
 
+  /** Events fed since construction/reset or the restored `step`. */
+  def step: Int = i
+
   /** Runs that can still FIRE — excludes terminally-dead configurations
     * (post-accept states with no ε-reachable consuming edge), which
     * linger in the run set until the next feed sweeps them. The
@@ -471,6 +474,17 @@ final class Executor(val dst: Dst, val strategy: AfterMatchStrategy,
   }
 }
 
+object Executor {
+  /** The executor of `query` over its compiled automaton `dst`: the
+    * query's strategy, windows and anchors, with the live-run valve
+    * `maxRuns`. Every operator builds its executors here.
+    */
+  def forQuery(query: CepQuery, dst: Dst, maxRuns: Option[Int],
+      captureTimeouts: Boolean): Executor =
+    new Executor(dst, query.strategy, maxRuns, query.within,
+      query.withinTime, captureTimeouts, query.anchorStart, query.anchorEnd)
+}
+
 /** The stream-application operator: reset, feed events in order, concatenate
   * emitted matches (`/root/reference/reflinkcep/operator.py:15-20`).
   */
@@ -491,12 +505,9 @@ final class CepOperator(val executor: Executor) {
 }
 
 object CepOperator {
-  def fromQuery(query: CepQuery,
-      captureTimeouts: Boolean = false): CepOperator =
-    new CepOperator(new Executor(DstCompiler.compile(query), query.strategy,
-      within = query.within, withinTime = query.withinTime,
-      captureTimeouts = captureTimeouts,
-      anchorStart = query.anchorStart, anchorEnd = query.anchorEnd))
+  def fromQuery(query: CepQuery): CepOperator =
+    new CepOperator(Executor.forQuery(query, DstCompiler.compile(query),
+      None, captureTimeouts = false))
 
   /** One-shot convenience: run `query` over an ordered event sequence. */
   def run(query: CepQuery, input: IterableOnce[Event]): Vector[Match] =
@@ -509,20 +520,14 @@ object CepOperator {
     */
   def runWithTimeouts(query: CepQuery, input: IterableOnce[Event])
       : (Vector[Match], Vector[Match]) = {
-    require(query.within.isDefined || query.withinTime.isDefined,
-      "runWithTimeouts needs a windowed query (within/withinTime) — " +
-        "an unwindowed run never times out")
-    val op = fromQuery(query, captureTimeouts = true)
-    // pattern-name order, derived from the AST (the projection order
-    // match rows use)
-    val names = Pattern.names(query.patseq)
-    op.executor.reset()
+    CepMemberFeed.requireWindowed(query, "runWithTimeouts")
+    val feed = new CepMemberFeed(Seq(CepMember.single(query)), None,
+      captureTimeouts = true)
     val ms = Vector.newBuilder[Match]
     val ts = Vector.newBuilder[Match]
     input.iterator.foreach { ev =>
-      ms ++= op.executor.feed(ev)
-      ts ++= op.executor.drainTimedOut()
-        .map(op.executor.partialOutput(_, names))
+      ms ++= feed.feed(0, ev, isLast = false)
+      ts ++= feed.timedOut(0)
     }
     (ms.result(), ts.result())
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.plans.{CepEmission, CepMatchPlan, CepMember}
+import graft.plans.{CepEmission, CepMatchPlan}
 
 /** DataFrame-level CEP: apply a pattern query to an event table.
   *
@@ -51,16 +51,6 @@ object SparkCep {
       attrCols: Seq[String]
   )
 
-  /** Shared front half of every physical formulation: semantics-preserving
-    * pre-NFA pushdown, null-key drop, key derivation, and the canonical
-    * `(__key, __ord, __type, attr…)` projection.
-    */
-  private[graft] def prepare(df: DataFrame, query: CepQuery, spec: CepSpec)
-      : (DataFrame, Vector[String]) = {
-    checkStrTyping(df, query, spec)
-    prepareWithFilter(df, prefilter(query, spec), spec, Nav.ofQuery(query))
-  }
-
   /** BUILD-TIME typing audit of the string tier (round 17): every name a
     * condition reads in a STRING position (`Expr.strRefs` — compared to
     * a string literal, matched with `like`, or in an IN set) must be a
@@ -99,11 +89,12 @@ object SparkCep {
     }
   }
 
-  /** `prepare` with the pre-NFA filter supplied by the caller — the
-    * single-query path passes its own `prefilter`, the shared multi-query
-    * path passes the OR of its members' prefilters. One implementation so
-    * the projection/null-key/key-derivation logic cannot drift between
-    * formulations.
+  /** Shared front half of every physical formulation: the pre-NFA
+    * filter supplied by the caller (`unionPrefilter`, which for one
+    * query is its own `prefilter`), null-key drop, key derivation, and
+    * the canonical `(__key, __ord, __type, attr…)` projection. One
+    * implementation so the projection/null-key/key-derivation logic
+    * cannot drift between formulations.
     */
   private[graft] def prepareWithFilter(df: DataFrame, filter: Option[Column],
       spec: CepSpec, navs: Seq[Nav] = Nil): (DataFrame, Vector[String]) = {
@@ -219,9 +210,7 @@ object SparkCep {
       cap: Int): DataFrame = {
     require(cap > 0 && cap != Int.MaxValue,
       s"shedGauge cap must be a positive live-run bound, got $cap")
-    checkWithinStateBound(query, Some(-cap), streaming = false)
-    val (prepared, attrNames) = prepare(df, query, spec)
-    cepExec(df, spec, prepared, attrNames, single(query),
+    cepExec(df, spec, Seq(CepMember.single(query)),
       CepEmission.ShedGauge(cap), Some(-cap))
   }
 
@@ -246,22 +235,9 @@ object SparkCep {
     */
   def timedOutPartials(df: DataFrame, query: CepQuery,
       spec: CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame = {
-    require(query.within.isDefined || query.withinTime.isDefined,
-      "timedOutPartials needs a windowed query (within/withinTime) — " +
-        "an unwindowed run never times out")
-    checkWithinStateBound(query, maxRunsPerKey, streaming = false)
-    val effMaxRuns = resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
-    // NO pre-NFA filter here, ever: the timeout OUTPUT observes sweep
-    // moments, and a dropped ignorable event can be the only one whose
-    // arrival closes a window (clearest with `withinTime` at the tail
-    // of a stream: the filtered stream ends before any event advances
-    // the clock past the deadline, and the timeout is silently lost —
-    // the match operators are immune because pruned runs emit nothing).
-    checkStrTyping(df, query, spec)
-    val (prepared, attrNames) =
-      prepareWithFilter(df, None, spec, Nav.ofQuery(query))
-    cepExec(df, spec, prepared, attrNames, single(query),
-      CepEmission.Timeouts, effMaxRuns)
+    CepMemberFeed.requireWindowed(query, "timedOutPartials")
+    cepExec(df, spec, Seq(CepMember.single(query)), CepEmission.Timeouts,
+      maxRunsPerKey)
   }
 
   /** The CEP match as a first-class Catalyst plan (`graft.plans.
@@ -293,13 +269,9 @@ object SparkCep {
     *   negative cap sheds the oldest runs instead
     */
   def matchPatternExec(df: DataFrame, query: CepQuery, spec: CepSpec,
-      maxRunsPerKey: Option[Int] = None): DataFrame = {
-    checkWithinStateBound(query, maxRunsPerKey, streaming = false)
-    val effMaxRuns = resolveMaxRuns(df.sparkSession, Seq(query), maxRunsPerKey)
-    val (prepared, attrNames) = prepare(df, query, spec)
-    cepExec(df, spec, prepared, attrNames, single(query),
-      CepEmission.OrderIds, effMaxRuns)
-  }
+      maxRunsPerKey: Option[Int] = None): DataFrame =
+    cepExec(df, spec, Seq(CepMember.single(query)), CepEmission.OrderIds,
+      maxRunsPerKey)
 
   /** Multi-query shared-scan CEP: run `queries` (name → pattern) over ONE
     * scan, ONE pre-NFA filter, ONE key shuffle and ONE in-partition sort,
@@ -332,24 +304,8 @@ object SparkCep {
   def matchPatternsShared(df: DataFrame, queries: Seq[(String, CepQuery)],
       spec: CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame = {
     require(queries.nonEmpty, "matchPatternsShared needs >= 1 query")
-    queries.foreach { case (_, q) =>
-      checkWithinStateBound(q, maxRunsPerKey, streaming = false)
-    }
-    // one valve for the whole member set: explicit wins; otherwise the
-    // default engages if ANY member has an unbounded loop (capping a
-    // bounded member too is harmless — its run set never nears the cap)
-    val effMaxRuns =
-      resolveMaxRuns(df.sparkSession, queries.map(_._2), maxRunsPerKey)
-    queries.foreach { case (_, q) => checkStrTyping(df, q, spec) }
-    val (prepared, attrNames) =
-      prepareWithFilter(df, unionPrefilter(queries, spec), spec,
-        queries.flatMap { case (_, q) => Nav.ofQuery(q) }
-          .distinct.sortBy(_.valueName))
-    cepExec(df, spec, prepared, attrNames,
-      queries.map { case (n, q) =>
-        CepMember(n, q, memberFeedTypes(q, spec).orNull)
-      },
-      CepEmission.Bindings, effMaxRuns)
+    cepExec(df, spec, sharedMembers(queries, spec), CepEmission.Bindings,
+      maxRunsPerKey)
   }
 
   /** MATCH_RECOGNIZE MEASURES rendered inside the operator
@@ -364,41 +320,71 @@ object SparkCep {
     */
   private[graft] def matchMeasures(df: DataFrame,
       members: Seq[(String, CepMeasures.Rendering)], spec: CepSpec,
-      maxRunsPerKey: Option[Int], shared: Boolean): DataFrame = {
-    val queries = members.map { case (n, r) => n -> r.st.query }
-    queries.foreach { case (_, q) =>
-      checkWithinStateBound(q, maxRunsPerKey, streaming = false)
-      checkStrTyping(df, q, spec)
+      maxRunsPerKey: Option[Int], shared: Boolean): DataFrame =
+    cepExec(df, spec,
+      sharedMembers(members.map { case (n, r) => n -> r.st.query }, spec),
+      CepEmission.Measures(members.map(_._2).toVector, shared), maxRunsPerKey)
+
+  /** The members of a shared scan, each gated to its own alphabet
+    * (`memberFeedTypes`) unless `ungated` marks it.
+    */
+  private[cep] def sharedMembers(queries: Seq[(String, CepQuery)],
+      spec: CepSpec, ungated: Seq[Boolean] = Nil): Vector[CepMember] =
+    queries.toVector.zipWithIndex.map { case ((n, q), i) =>
+      CepMember(n, q,
+        if (ungated.lift(i).contains(true)) null
+        else memberFeedTypes(q, spec).orNull)
     }
-    val effMaxRuns =
-      resolveMaxRuns(df.sparkSession, queries.map(_._2), maxRunsPerKey)
-    val filter =
-      if (members.exists(_._2.seesEveryRow)) None
-      else unionPrefilter(queries, spec)
-    val navs = (queries.flatMap { case (_, q) => Nav.ofQuery(q) } ++
-      members.flatMap(m => CepMeasures.navsOf(m._2.st.measures)))
-      .distinct.sortBy(_.valueName)
-    val (prepared, attrNames) = prepareWithFilter(df, filter, spec, navs)
-    cepExec(df, spec, prepared, attrNames,
-      queries.map { case (n, q) =>
-        CepMember(n, q, memberFeedTypes(q, spec).orNull)
-      },
-      CepEmission.Measures(members.map(_._2).toVector, shared), effMaxRuns)
+
+  /** The driver-side member checks every operator makes before it is
+    * built: each query's window/anchor contract
+    * (`checkWithinStateBound`) and string typing (`checkStrTyping`).
+    * Returns the valve for the whole member set: `maxRunsPerKey` when
+    * given, otherwise the default if ANY member has an unbounded loop
+    * (capping a bounded member too is harmless — its run set never
+    * nears the cap).
+    */
+  private[cep] def checkMembers(df: DataFrame, spec: CepSpec,
+      queries: Seq[CepQuery], maxRunsPerKey: Option[Int],
+      streaming: Boolean): Option[Int] = {
+    queries.foreach(checkWithinStateBound(_, maxRunsPerKey, streaming))
+    queries.foreach(checkStrTyping(df, _, spec))
+    resolveMaxRuns(df.sparkSession, queries, maxRunsPerKey)
   }
 
-  /** A single-query entry point's one member, fed every event. */
-  private def single(query: CepQuery): Seq[CepMember] =
-    Seq(CepMember("", query, null))
-
-  /** The tail every batch entry point shares: plan `members` over the
-    * prepared frame as one `CepMatchPlan` node rendered as `emission`,
-    * and drop the `__global` key column of an unkeyed spec.
+  /** The path every batch entry point shares: check the members, prepare
+    * the frame, plan `members` over it as one `CepMatchPlan` node
+    * rendered as `emission`, and drop the `__global` key column of an
+    * unkeyed spec. The frame takes the members' union prefilter, except
+    * for timeouts and for MEASURES that render rows the NFA never binds
+    * (SHOW EMPTY sites, unmatched rows), and the navigation columns of
+    * the members' DEFINEs and measures.
     */
-  private def cepExec(df: DataFrame, spec: CepSpec, prepared: DataFrame,
-      attrNames: Vector[String], members: Seq[CepMember],
-      emission: CepEmission, maxRuns: Option[Int]): DataFrame = {
+  private def cepExec(df: DataFrame, spec: CepSpec, members: Seq[CepMember],
+      emission: CepEmission, maxRunsPerKey: Option[Int]): DataFrame = {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    val queries = members.map(m => m.name -> m.query)
+    val maxRuns = checkMembers(df, spec, queries.map(_._2), maxRunsPerKey,
+      streaming = false)
+    val (filter, measureNavs) = emission match {
+      // NO pre-NFA filter for timeouts, ever: the timeout OUTPUT observes
+      // sweep moments, and a dropped ignorable event can be the only one
+      // whose arrival closes a window (clearest with `withinTime` at the
+      // tail of a stream: the filtered stream ends before any event
+      // advances the clock past the deadline, and the timeout is
+      // silently lost — the match operators are immune because pruned
+      // runs emit nothing)
+      case CepEmission.Timeouts => (None, Nil)
+      case CepEmission.Measures(rs, _) =>
+        (if (rs.exists(_.seesEveryRow)) None
+        else unionPrefilter(queries, spec),
+          rs.flatMap(r => CepMeasures.navsOf(r.st.measures)))
+      case _ => (unionPrefilter(queries, spec), Nil)
+    }
+    val navs = (queries.flatMap { case (_, q) => Nav.ofQuery(q) } ++
+      measureNavs).distinct.sortBy(_.valueName)
+    val (prepared, attrNames) = prepareWithFilter(df, filter, spec, navs)
     val keyName = spec.keyCol.getOrElse("__global")
     val spark = df.sparkSession
     GraftColumnBridge.addStrategy(spark, graft.plans.CepStrategy)

@@ -19,12 +19,15 @@ import org.apache.spark.sql.types._
   * runs resolve stably across batches and restarts).
   *
   * All ten public operators are thin wrappers over ONE private per-key
-  * core (`perKey`): a member list (k = 1 for the single-query
-  * operators), a feed order (arrival, or watermark release with the
-  * NEXT hold-back) and an emission (rendered matches, or drained
-  * timeouts). Decode, cross-variant refusal, nav/SHOW EMPTY restore,
-  * feed, idle-key GC and encode exist once; the four on-disk shapes
-  * hide behind `StateLayout`.
+  * core (`perKey`): a member list (`CepMember`s, k = 1 for the
+  * single-query operators), a feed order (arrival, or watermark release
+  * with the NEXT hold-back) and a renderer of matches, or of drained
+  * timeouts. Decode, cross-variant refusal, nav/SHOW EMPTY
+  * restore, idle-key GC and encode exist once; the four on-disk shapes
+  * hide behind `StateLayout`. The member step itself (executors, gates,
+  * timeout drain) is `CepMemberFeed`, the one the batch operator runs,
+  * and the driver-side member checks are `SparkCep.checkMembers`, the
+  * ones every batch entry point makes.
   */
 object StreamingCep {
 
@@ -107,19 +110,20 @@ object StreamingCep {
       firstTake: Int = 0, firstTakeTs: Long = 0L,
       anchorFirst: Int = 0, anchorLast: Int = 0)
 
-  /** Decode an event from a projected row: `ordIdx`/`typeIdx` locate the
-    * order and type columns, attrs start at `attrStart` (shared by both
-    * streaming variants, whose projections differ only by the ts column).
-    * A null order value fails loudly, matching the batch exec path
-    * (`CepRowDecode`) — `getLong` on a null unboxes to 0, which would
-    * silently corrupt match ids and `(ts, ord)` release order.
+  /** Decode key `key`'s event from a projected row: `ordIdx`/`typeIdx`
+    * locate the order and type columns, attrs start at `attrStart`
+    * (shared by both streaming variants, whose projections differ only
+    * by the ts column). A null order value fails loudly, matching the
+    * batch exec path (`CepRowDecode`) — `getLong` on a null unboxes to
+    * 0, which would silently corrupt match ids and `(ts, ord)` release
+    * order.
     */
-  private def rowToEvent(row: Row, ordIdx: Int, typeIdx: Int, attrStart: Int,
-      attrNames: Vector[String], orderName: String,
+  private def rowToEvent(row: Row, key: Any, ordIdx: Int, typeIdx: Int,
+      attrStart: Int, attrNames: Vector[String], orderName: String,
       strFlags: Array[Boolean]): Event = {
     if (row.isNullAt(ordIdx)) throw new IllegalArgumentException(
-      "CEP order column is null — order values must be non-null and " +
-        "unique per key")
+      s"CEP order column is null for key $key — order values must be " +
+        "non-null and unique per key")
     val attrs = Vector.newBuilder[(String, Long)]
     var strs: scala.collection.mutable.Builder[(String, String),
       Vector[(String, String)]] = null
@@ -137,12 +141,6 @@ object StreamingCep {
     Event(row.getString(typeIdx), attrs.result(),
       if (strs == null) Vector.empty else strs.result())
   }
-
-  /** `(key, one array<bigint> of order ids per pattern name)`. */
-  private def orderIdsRow(key: Any, byName: Map[String, Vector[Event]],
-      piNames: Vector[String], orderName: String): Row =
-    Row.fromSeq(key +: piNames.map(n =>
-      byName.getOrElse(n, Vector.empty).map(_(orderName))))
 
   /** The per-key stateful dispatch: group the prepared frame by its key
     * column (ordinal 0) under the key's EXACT type and run `f` per key
@@ -541,37 +539,6 @@ object StreamingCep {
 
   // ------------------------------------------------------ the per-key core
 
-  /** One query of the core's member list: its compiled DST, its feed
-    * gate (`null` = feed every event; the shared operators' alphabet
-    * gate, proven at `SparkCep.memberFeedTypes`) and whether it tracks
-    * SHOW EMPTY sites.
-    */
-  private final case class Member(name: String, query: CepQuery, dst: Dst,
-      gate: Set[String], trackEmpty: Boolean)
-
-  /** The member list: `shared` selects the shared state layouts (which
-    * carry member names) even for a single member.
-    */
-  private final case class Members(all: Vector[Member], shared: Boolean)
-
-  /** k = 1 member list of the single-query operators (no feed gate). */
-  private def single(query: CepQuery, trackEmpty: Boolean = false): Members =
-    Members(Vector(Member("", query, DstCompiler.compile(query), null,
-      trackEmpty)), shared = false)
-
-  /** Member list of the shared operators. A SHOW EMPTY member runs
-    * GATE-LESS: its sites are the full feed, and its executor's
-    * step/clock must advance on the site events themselves (the gate is
-    * an optimization the prefilter proof makes invisible, so dropping
-    * it only costs ignored feeds).
-    */
-  private def shared(queries: Seq[(String, CepQuery)], spec: SparkCep.CepSpec,
-      trackFlags: Seq[Boolean]): Members =
-    Members(queries.toVector.zip(trackFlags).map { case ((n, q), track) =>
-      Member(n, q, DstCompiler.compile(q),
-        if (track) null else SparkCep.memberFeedTypes(q, spec).orNull, track)
-    }, shared = true)
-
   private sealed trait FeedOrder
   /** Micro-batch arrival order per key (the reference's processing-time
     * order): rows sort by the order column.
@@ -583,18 +550,12 @@ object StreamingCep {
   private final case class WatermarkOrder(tsCol: String, delay: String)
       extends FeedOrder
 
-  /** A per-match output renderer: `(member index, key, bound events by
-    * pattern name, order attr)` → one output Row. An empty match (a
-    * final SHOW EMPTY site) renders with an empty binding.
+  /** A per-match output renderer: `(member index, key, match, order
+    * attr)` → one output Row. An empty match (a final SHOW EMPTY site)
+    * renders with an empty binding, and a timed-out partial run renders
+    * like a match.
     */
-  private type Render = (Int, Any, Map[String, Vector[Event]], String) => Row
-
-  private sealed trait Emission
-  private final case class Matches(render: Render) extends Emission
-  /** The timeout side output: after every feed, the partial runs whose
-    * window closed, as `(key, order ids per pattern name)`.
-    */
-  private final case class Timeouts(piNames: Vector[String]) extends Emission
+  private type Render = (Int, Any, Match, String) => Row
 
   /** What a key's stored state restores to: one payload per member, and
     * the payload common to all members, holding the nav signature/history
@@ -724,10 +685,16 @@ object StreamingCep {
         members.map(CepStateCodec.encode))
   }
 
-  /** The per-key core behind every streaming operator: validation and
-    * the source policy on the driver, then one `flatMapGroupsWithState`
-    * that restores the members' executors, feeds them in `order`, emits
-    * per `emit`, and writes the state back (or drops an idle key).
+  /** The per-key core behind every streaming operator: validation
+    * (`SparkCep.checkMembers`, then the navigation contract) and the
+    * source policy on the driver, then one `flatMapGroupsWithState` that
+    * restores the members' executors into a `CepMemberFeed`, feeds them
+    * in `order`, renders each match (with `timeouts`, each timed-out
+    * partial run instead) with `render`, and writes the state back (or
+    * drops an idle key). `shared` selects the shared state layouts (which
+    * carry member names) even for a single member; `trackEmpty` marks
+    * the members that track SHOW EMPTY sites (none when empty). The
+    * executors' own step counters are the SHOW EMPTY feed indices.
     *
     * Source policy: the union pre-NFA filter (for k = 1 exactly the
     * query's own `SparkCep.prefilter`) applies to rendered matches in
@@ -758,14 +725,14 @@ object StreamingCep {
     */
   private def perKey(df: DataFrame, spec: SparkCep.CepSpec,
       maxRunsPerKey: Option[Int], outSchema: StructType)(
-      members: Members, order: FeedOrder, emit: Emission): DataFrame = {
-    val ms = members.all
+      ms: Vector[CepMember], shared: Boolean, order: FeedOrder,
+      render: Render, timeouts: Boolean = false,
+      trackEmpty: Seq[Boolean] = Nil): DataFrame = {
     val queries = ms.map(m => m.name -> m.query)
-    ms.foreach(m =>
-      SparkCep.checkWithinStateBound(m.query, maxRunsPerKey, streaming = true))
-    val effMaxRuns =
-      SparkCep.resolveMaxRuns(df.sparkSession, queries.map(_._2), maxRunsPerKey)
-    val layout: StateLayout[_] = (order, members.shared) match {
+    val effMaxRuns = SparkCep.checkMembers(df, spec, ms.map(_.query),
+      maxRunsPerKey, streaming = true)
+    val tracks = trackEmpty.toVector.padTo(ms.length, false)
+    val layout: StateLayout[_] = (order, shared) match {
       case (ArrivalOrder, false) => ArrivalSingle
       case (ArrivalOrder, true) => SharedArrival
       case (_: WatermarkOrder, false) => EventTimeSingle
@@ -774,11 +741,9 @@ object StreamingCep {
     val memberNavs = ms.map(m =>
       streamingNavs(m.query, spec, allowNext = layout.eventTime))
     val navs = memberNavs.flatten.distinct.sortBy(_.valueName)
-    ms.foreach(m => SparkCep.checkStrTyping(df, m.query, spec))
-    val timeouts = emit.isInstanceOf[Timeouts]
     val filter =
       if (timeouts || layout == EventTimeSingle || navs.nonEmpty ||
-          ms.exists(_.trackEmpty)) None
+          tracks.contains(true)) None
       else SparkCep.unionPrefilter(queries, spec)
     val (prepared, attrNames) = order match {
       case ArrivalOrder => SparkCep.prepareWithFilter(df, filter, spec)
@@ -805,6 +770,9 @@ object StreamingCep {
     val gcEligible = prevNavs.isEmpty &&
       ms.forall(m => m.query.withinTime.isEmpty && !m.query.anchorStart)
     val names = ms.map(_.name)
+    // compiled once on the driver: the task closure ships them, and
+    // compilation is deterministic, so stored state names resolve
+    val dsts = ms.map(m => DstCompiler.compile(m.query))
     val variant =
       if (layout.eventTime) CepStateCodec.VariantEventTime
       else CepStateCodec.VariantArrival
@@ -814,59 +782,49 @@ object StreamingCep {
     def run[S](layout: StateLayout[S]): Dataset[Row] =
       groupedFlatMap[S](prepared, SparkCep.keyType(df, spec), timeout,
         layout.encoder, Encoders.row(outSchema)) { (key, rows, state) =>
-        val exs = ms.map(m => new Executor(m.dst, m.query.strategy,
-          effMaxRuns, m.query.within, m.query.withinTime,
-          captureTimeouts = timeouts, anchorStart = m.query.anchorStart))
-        val trackers = ms.map(m => new EmptySiteTracker(m.trackEmpty,
-          m.query.strategy, m.query.anchorStart, m.query.within,
-          m.query.withinTime.map(_.span)))
+        val members = new CepMemberFeed(ms, effMaxRuns, timeouts, dsts)
+        val exs = members.executors
+        val trackers = ms.zip(tracks).map { case (m, t) =>
+          new EmptySiteTracker(t, m.query.strategy, m.query.anchorStart,
+            m.query.within, m.query.withinTime.map(_.span))
+        }
         val nf = new NavFeed(prevNavs)
-        val steps = new Array[Int](ms.length)
         val restored =
           if (state.exists) Some(layout.read(state.get, names)) else None
         restored.foreach { r =>
           r.members.zipWithIndex.foreach { case (st, i) =>
             restoreState(exs(i), st)
             trackers(i).restore(st)
-            steps(i) = st.step
           }
           nf.restore(r.common)
         }
         val out = Vector.newBuilder[Row]
         def feed(i: Int, ev: Event): Unit = {
-          val g = ms(i).gate
-          if (g == null || (ev.tpe != null && g.contains(ev.tpe))) {
-            val ex = exs(i)
-            val found = ex.feed(ev)
-            steps(i) += 1
-            if (trackers(i).tracking)
-              trackers(i).onFeed(ev(orderName), ex.clock, steps(i))
-            emit match {
-              case Matches(render) => found.foreach { m =>
-                val byName = m.toMap
-                trackers(i).onMatch(byName, orderName)
-                out += render(i, key, byName, orderName)
-              }
-              case Timeouts(piNames) => ex.drainTimedOut().foreach { c =>
-                out += orderIdsRow(key, ex.partialOutput(c, piNames).toMap,
-                  piNames, orderName)
-              }
-            }
+          val hits = members.feed(i, ev, isLast = false)
+          val t = trackers(i)
+          // a tracking member has no gate, so `ev` reached its executor
+          if (t.tracking) t.onFeed(ev(orderName), exs(i).clock, exs(i).step)
+          (if (timeouts) members.timedOut(i) else hits).foreach { m =>
+            if (t.tracking) t.onMatch(m.toMap, orderName)
+            out += render(i, key, m, orderName)
           }
         }
         // (released events held back from the NEXT members, arrivals
         // still waiting for the watermark)
         val (tail, waiting) = order match {
           case ArrivalOrder =>
-            rows.toVector.sortBy(_.getLong(1)).foreach { row =>
-              val ev = nf.augment(
-                rowToEvent(row, 1, 2, 3, attrNames, orderName, strFlags))
+            // decoded before the sort, so a null order value fails in
+            // `rowToEvent`, naming the key
+            rows.map(rowToEvent(_, key, 1, 2, 3, attrNames, orderName,
+              strFlags)).toVector.sortBy(CepMatchIds.orderId).foreach { e =>
+              val ev = nf.augment(e)
               ms.indices.foreach(feed(_, ev))
             }
             (Vector.empty[BufEvent], Vector.empty[BufEvent])
           case _: WatermarkOrder =>
             val incoming = rows.map { row =>
-              val ev = rowToEvent(row, 2, 3, 4, attrNames, orderName, strFlags)
+              val ev =
+                rowToEvent(row, key, 2, 3, 4, attrNames, orderName, strFlags)
               // millisecond precision — sub-second out-of-order events
               // must still sort by true event time
               BufEvent(row.getTimestamp(1).getTime, row.getLong(2), ev.tpe,
@@ -908,13 +866,10 @@ object StreamingCep {
               }.toVector
             (tail, waiting)
         }
-        emit match {
-          case Matches(render) => ms.indices.foreach { i =>
-            trackers(i).flush(steps(i), exs(i).clock).foreach { _ =>
-              out += render(i, key, Map.empty[String, Vector[Event]], orderName)
-            }
+        ms.indices.foreach { i =>
+          trackers(i).flush(exs(i).step, exs(i).clock).foreach { _ =>
+            out += render(i, key, Vector.empty, orderName)
           }
-          case _: Timeouts => ()
         }
         if (gcEligible && exs.forall(_.liveRunCount == 0) &&
             trackers.forall(_.pending.isEmpty) && tail.isEmpty &&
@@ -922,7 +877,7 @@ object StreamingCep {
           state.remove()
         else {
           state.update(layout.write(names,
-            exs.zip(trackers).map { case (ex, t) =>
+            exs.toVector.zip(trackers).map { case (ex, t) =>
               snapshotState(ex, variant, t) },
             CepStateEt(tail.length, Nil, tail ++ waiting, variant = variant,
               navSig = nf.sig, navHist = nf.serHist)))
@@ -950,36 +905,36 @@ object StreamingCep {
     StructField(spec.keyCol.getOrElse("__global"), SparkCep.keyType(df, spec),
       nullable = false)
 
-  /** `(key, one array<bigint> of order ids per pattern name)`. */
-  private def orderIdsSchema(df: DataFrame, spec: SparkCep.CepSpec,
-      piNames: Vector[String]): StructType =
-    StructType(keyField(df, spec) +: piNames.map(n =>
+  /** A single-query operator whose rows are `(key, one array<bigint> of
+    * order ids per pattern name)` (`CepMatchIds.of`): its matches, or
+    * with `timeouts` its timed-out partial runs.
+    */
+  private def singleOrderIds(df: DataFrame, query: CepQuery,
+      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int], order: FeedOrder,
+      timeouts: Boolean): DataFrame = {
+    val piNames = SparkCep.patternNames(query.patseq)
+    val schema = StructType(keyField(df, spec) +: piNames.map(n =>
       StructField(n, ArrayType(LongType, containsNull = false),
         nullable = false)))
+    perKey(df, spec, maxRunsPerKey, schema)(Vector(CepMember.single(query)),
+      shared = false, order, (_, key, m, _) => Row.fromSeq(key +: piNames.map(
+        n => scala.collection.immutable.ArraySeq.unsafeWrapArray(
+          CepMatchIds.of(m, n)))), timeouts)
+  }
 
-  private def orderIdsRender(piNames: Vector[String]): Render =
-    (_, key, byName, orderName) => orderIdsRow(key, byName, piNames, orderName)
-
-  /** `(qname, key, binding)`: the classic shared reporting shape. */
-  private def bindingSchema(df: DataFrame, spec: SparkCep.CepSpec)
-      : StructType =
-    StructType(Seq(StructField("qname", StringType, nullable = false),
-      keyField(df, spec),
-      StructField("binding", StringType, nullable = false)))
-
-  /** The classic shared reporting shape `(qname, key, binding)`: order
-    * ids comma-joined per pattern name, ';'-joined across names in
-    * declared order.
+  /** A shared operator whose rows are the classic shared reporting shape
+    * `(qname, key, binding)` (`CepMatchIds.binding`).
     */
-  private def bindingRender(queries: Seq[(String, CepQuery)]): Render = {
-    val names = queries.toVector.map(_._1)
-    val piNamesByQ = queries.toVector.map { case (_, q) =>
-      SparkCep.patternNames(q.patseq) }
-    (i, key, byName, orderName) =>
-      Row(names(i), key, piNamesByQ(i).map { n =>
-        byName.getOrElse(n, Vector.empty)
-          .map(_(orderName)).mkString(",")
-      }.mkString(";"))
+  private def sharedBindings(df: DataFrame, queries: Seq[(String, CepQuery)],
+      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int], order: FeedOrder)
+      : DataFrame = {
+    val ms = SparkCep.sharedMembers(queries, spec)
+    val schema = StructType(Seq(StructField("qname", StringType,
+      nullable = false), keyField(df, spec),
+      StructField("binding", StringType, nullable = false)))
+    val piNames = ms.map(m => SparkCep.patternNames(m.query.patseq))
+    perKey(df, spec, maxRunsPerKey, schema)(ms, shared = true, order,
+      (i, key, m, _) => Row(ms(i).name, key, CepMatchIds.binding(m, piNames(i))))
   }
 
   /** The measured shared shape `(qname, key, measures, smeasures)` —
@@ -998,7 +953,8 @@ object StreamingCep {
     val sVec = stmts.toVector.map(_._2)
     val isStrItem = stmts.toVector.map(_._2.measures.map(it =>
       CepMeasures.itemDataType(it, strAttrs) == StringType))
-    (i, key, byName, orderName) => {
+    (i, key, m, orderName) => {
+      val byName = m.toMap
       val st = sVec(i)
       val longs = Map.newBuilder[String, Any]
       val strs = Map.newBuilder[String, Any]
@@ -1032,11 +988,6 @@ object StreamingCep {
   private def tracksEmpty(st: CepSql.CepSqlStatement): Boolean =
     st.rowsPerMatch == CepSql.RowsPerMatch.OneRowShowEmpty &&
       Pattern.canMatchEmpty(st.query.patseq)
-
-  private def requireWindowed(query: CepQuery, opName: String): Unit =
-    require(query.within.isDefined || query.withinTime.isDefined,
-      s"$opName needs a windowed query (within/withinTime) — an " +
-        "unwindowed run never times out")
 
   /** The `ONE ROW PER MATCH` + non-nullary-measures contract shared by
     * every streaming measures operator (SHOW EMPTY on windowed queries
@@ -1124,11 +1075,13 @@ object StreamingCep {
         StructField(m.alias, CepMeasures.itemDataType(m, strAttrs),
           nullable = true)))
       perKey(df, spec, maxRunsPerKey, outSchema)(
-        single(st.query, tracksEmpty(st)), order,
-        Matches((_, key, byName, orderName) =>
+        Vector(CepMember.single(st.query)), shared = false, order,
+        { (_, key, m, orderName) =>
+          val byName = m.toMap
           Row.fromSeq(key +: st.measures.map(ms =>
             CepMeasures.evalItemBoxed(ms, byName, orderName, st.subsetMap,
-              strAttrs)))))
+              strAttrs)))
+        }, trackEmpty = Seq(tracksEmpty(st)))
     }
 
   /** The shared measures operators (arrival and event time): every
@@ -1148,10 +1101,16 @@ object StreamingCep {
       validateStreamingMeasures(st, spec, s"$opName: member '$n'")
       CepMeasures.requireStrMeasuresSupported(st.measures, strAttrs)
     }
+    // a SHOW EMPTY member runs GATE-LESS: its sites are the full feed,
+    // and its executor's step/clock must advance on the site events
+    // themselves (the gate is an optimization the prefilter proof makes
+    // invisible, so dropping it only costs ignored feeds)
+    val track = stmts.map(s => tracksEmpty(s._2))
     perKey(df, spec, maxRunsPerKey, sharedMeasuresSchema(df, spec))(
-      shared(stmts.map { case (n, st) => n -> st.query }, spec,
-        stmts.map(s => tracksEmpty(s._2))),
-      order, Matches(measuresRender(stmts, strAttrs)))
+      SparkCep.sharedMembers(stmts.map { case (n, st) => n -> st.query },
+        spec, ungated = track),
+      shared = true, order, measuresRender(stmts, strAttrs),
+      trackEmpty = track)
   }
 
   // ------------------------------------------------ public operators
@@ -1169,11 +1128,9 @@ object StreamingCep {
     * .writeStream.outputMode("append")...`
     */
   def matchPattern(df: DataFrame, query: CepQuery,
-      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame = {
-    val piNames = SparkCep.patternNames(query.patseq)
-    perKey(df, spec, maxRunsPerKey, orderIdsSchema(df, spec, piNames))(
-      single(query), ArrivalOrder, Matches(orderIdsRender(piNames)))
-  }
+      spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None): DataFrame =
+    singleOrderIds(df, query, spec, maxRunsPerKey, ArrivalOrder,
+      timeouts = false)
 
   /** Streaming MEASURES: `matchPattern` + the MATCH_RECOGNIZE `MEASURES`
     * projection in ONE stateful operator — output is one flat row of
@@ -1215,10 +1172,9 @@ object StreamingCep {
   def timedOutPartials(df: DataFrame, query: CepQuery,
       spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None)
       : DataFrame = {
-    requireWindowed(query, "timedOutPartials")
-    val piNames = SparkCep.patternNames(query.patseq)
-    perKey(df, spec, maxRunsPerKey, orderIdsSchema(df, spec, piNames))(
-      single(query), ArrivalOrder, Timeouts(piNames))
+    CepMemberFeed.requireWindowed(query, "timedOutPartials")
+    singleOrderIds(df, query, spec, maxRunsPerKey, ArrivalOrder,
+      timeouts = true)
   }
 
   /** Streaming multi-query shared-scan CEP: the streaming form of
@@ -1251,9 +1207,7 @@ object StreamingCep {
       spec: SparkCep.CepSpec, maxRunsPerKey: Option[Int] = None)
       : DataFrame = {
     require(queries.nonEmpty, "matchPatternsShared needs >= 1 query")
-    perKey(df, spec, maxRunsPerKey, bindingSchema(df, spec))(
-      shared(queries, spec, queries.map(_ => false)), ArrivalOrder,
-      Matches(bindingRender(queries)))
+    sharedBindings(df, queries, spec, maxRunsPerKey, ArrivalOrder)
   }
 
   /** Streaming MEASURES over the SHARED multi-pattern scan — the
@@ -1302,12 +1256,9 @@ object StreamingCep {
     */
   def matchPatternEventTime(df: DataFrame, query: CepQuery,
       spec: SparkCep.CepSpec, tsCol: String, delay: String,
-      maxRunsPerKey: Option[Int] = None): DataFrame = {
-    val piNames = SparkCep.patternNames(query.patseq)
-    perKey(df, spec, maxRunsPerKey, orderIdsSchema(df, spec, piNames))(
-      single(query), WatermarkOrder(tsCol, delay),
-      Matches(orderIdsRender(piNames)))
-  }
+      maxRunsPerKey: Option[Int] = None): DataFrame =
+    singleOrderIds(df, query, spec, maxRunsPerKey,
+      WatermarkOrder(tsCol, delay), timeouts = false)
 
   /** Event-time MEASURES: `matchPatternEventTime`'s reorder buffer +
     * `matchPatternMeasures`' emission-time fold in one operator — the
@@ -1340,10 +1291,9 @@ object StreamingCep {
   def timedOutPartialsEventTime(df: DataFrame, query: CepQuery,
       spec: SparkCep.CepSpec, tsCol: String, delay: String,
       maxRunsPerKey: Option[Int] = None): DataFrame = {
-    requireWindowed(query, "timedOutPartialsEventTime")
-    val piNames = SparkCep.patternNames(query.patseq)
-    perKey(df, spec, maxRunsPerKey, orderIdsSchema(df, spec, piNames))(
-      single(query), WatermarkOrder(tsCol, delay), Timeouts(piNames))
+    CepMemberFeed.requireWindowed(query, "timedOutPartialsEventTime")
+    singleOrderIds(df, query, spec, maxRunsPerKey,
+      WatermarkOrder(tsCol, delay), timeouts = true)
   }
 
   /** Event-time multi-query shared-scan CEP: k patterns, ONE source
@@ -1384,9 +1334,8 @@ object StreamingCep {
       tsCol: String, delay: String, maxRunsPerKey: Option[Int] = None)
       : DataFrame = {
     require(queries.nonEmpty, "matchPatternsSharedEventTime needs >= 1 query")
-    perKey(df, spec, maxRunsPerKey, bindingSchema(df, spec))(
-      shared(queries, spec, queries.map(_ => false)),
-      WatermarkOrder(tsCol, delay), Matches(bindingRender(queries)))
+    sharedBindings(df, queries, spec, maxRunsPerKey,
+      WatermarkOrder(tsCol, delay))
   }
 
   /** Event-time MEASURED shared scan: k measured statements, ONE source

@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, PrimitiveType, Type}
 import org.apache.spark.sql.{Row, SparkSession}
@@ -22,8 +23,8 @@ import org.apache.spark.sql.{Row, SparkSession}
   *
   * Supported layouts (everything the committed artifacts use): flat
   * schemas of int64, utf8 string, double, and `array<double>`
-  * (Spark-written 3-level lists). Anything else — or any decode surprise
-  * — returns None and the caller falls back to the cluster read, so this
+  * (Spark-written 3-level lists), in part files that share one schema.
+  * Anything else — or any decode surprise — returns None and the caller falls back to the cluster read, so this
   * is a fast path, never a new failure mode. Size-capped: artifacts past
   * `maxBytes` (default 32 MB) are refused (they belong on the cluster).
   * Value-identity with `spark.read.parquet().collect()` is spec-pinned
@@ -54,6 +55,13 @@ object LocalParquet {
           }.sortBy(_.getPath.getName)
         }
       if (files.isEmpty || files.map(_.getLen).sum > maxBytes) return None
+      // part files of different schemas (appends that add or drop a
+      // column): Spark reads every file under ONE footer's schema, while
+      // each file here would decode under its own — a row-shape mismatch
+      // that must fall back, not be returned
+      if (files.length > 1 && files.map(f => ParquetFileReader.readFooter(
+          conf, f.getPath, ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          .getFileMetaData.getSchema).distinct.length > 1) return None
       val out = Array.newBuilder[Row]
       for (f <- files) {
         val reader = ParquetReader

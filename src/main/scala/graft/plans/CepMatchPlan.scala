@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.AccumulatorV2
 
-import graft.cep.{CepMeasures, CepQuery, CepRuntimeWarnings, DstCompiler, Event, Executor, Match, Pattern}
+import graft.cep.{CepMatchIds, CepMeasures, CepMember, CepMemberFeed, CepRuntimeWarnings, Event, Executor, Match, Pattern}
 
 /** The CEP pattern-match operator as a first-class Catalyst plan — the
   * prompt's extension path (c): a custom `LogicalPlan` + `SparkStrategy` +
@@ -68,13 +68,6 @@ object CepStrategy extends SparkStrategy {
     case _ => Nil
   }
 }
-
-/** One query the CEP operator runs: `name` labels its rows in the
-  * `Bindings` emission, and `gate` is the set of event types it is fed
-  * (`SparkCep.memberFeedTypes`); `null` feeds it every event.
-  */
-private[graft] final case class CepMember(name: String, query: CepQuery,
-    gate: Set[String])
 
 /** What the CEP operator emits. Each case fixes the node's output shape
   * (`output`) and the output column that holds the key (`keyIndex`).
@@ -148,13 +141,14 @@ private[graft] object CepEmission {
 
 /** Typed access to the child's key column (ordinal 0) for the exec
   * loop — EXACT for every key type. `read` returns a TRANSIENT value
-  * for var-length types (a `UTF8String`/struct view into the child's
-  * reused UnsafeRow buffer): `copy` it before holding it across rows
-  * (the per-key `curKey`), and only ever compare a fresh read against a
-  * held COPY (`UTF8String`/`UnsafeRow` equality is value/byte equality,
-  * and both sides of a comparison come from the same child projection,
-  * so byte equality is value equality). Long keys read primitively and
-  * box — immutable, no copy needed.
+  * for var-length types (a `UTF8String`, struct or array view into the
+  * child's reused row buffer, which a spilling sort rewrites under the
+  * loop): copy it with `InternalRow.copyValue` before holding it across
+  * rows (the per-key `curKey`), and only ever compare a fresh read
+  * against a held COPY (`UTF8String`/`UnsafeRow`/`UnsafeArrayData`
+  * equality is value/byte equality, and both sides of a comparison come
+  * from the same child projection, so byte equality is value equality).
+  * Long keys read primitively and box — immutable, no copy needed.
   */
 private[plans] object CepKeyAccess {
   def reader(dt: org.apache.spark.sql.types.DataType)
@@ -165,16 +159,6 @@ private[plans] object CepKeyAccess {
       r => r.getStruct(0, st.size)
     case other => r => r.get(0, other)
   }
-  def copier(dt: org.apache.spark.sql.types.DataType): Any => Any =
-    dt match {
-      case org.apache.spark.sql.types.StringType =>
-        v => v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].clone()
-      case _: org.apache.spark.sql.types.StructType =>
-        v => v.asInstanceOf[InternalRow].copy()
-      case org.apache.spark.sql.types.BinaryType =>
-        v => v.asInstanceOf[Array[Byte]].clone()
-      case _ => identity
-    }
   /** Value equality; binary keys need content comparison. */
   def eq(dt: org.apache.spark.sql.types.DataType)
       : (Any, Any) => Boolean = dt match {
@@ -193,12 +177,9 @@ private[plans] object CepKeyAccess {
   *    contiguity), never an NPE;
   *  - the order value is always the event's FIRST long attribute
   *    (`attrs(0)`), so the renderers read a bound event's order id by
-  *    position (`orderId`) instead of a name scan.
+  *    position (`CepMatchIds.orderId`) instead of a name scan.
   */
 private[plans] object CepRowDecode {
-  /** The order id of an event built by `decode`. */
-  def orderId(ev: Event): Long = ev.attrs(0)._2
-
   /** `strFlags(i)` marks position `i` as a STRING attribute (round 16
     * type-driven projection, `SparkCep.attrProj`) — decoded into
     * `Event.strs`; everything else stays the long tier. The UTF8String
@@ -288,22 +269,22 @@ private[plans] object CepChildContract {
 /** The physical CEP operator: one key-grouped feed loop (`CepFeedLoop`)
   * for every entry point. Per row it switches key, decodes the event
   * once, peeks for the key's last event when `$`, the shed gauge or
-  * MEASURES need it, feeds each member whose gate admits the event type,
-  * and renders what `emission` asks for. An event outside a member's
-  * gate is invisible to it (the prefilter proof), so skipping the feed
-  * leaves its state, and hence its run count, exactly as feeding would.
-  * An anchored member never has a gate (`SparkCep.prefilter` declines
-  * anchored queries), so the flagged last event always reaches it.
+  * MEASURES need it, feeds every member through the member step the
+  * streaming operators share (`graft.cep.CepMemberFeed`: gate, feed,
+  * counts), and renders what `emission` asks for. An anchored member
+  * never has a gate (`SparkCep.prefilter` declines anchored queries), so
+  * the flagged last event always reaches it.
   *
   * SQL metrics: `numEvents` counts events fed (once per event, however
   * many members), `numKeys` the keys, `numMatches` the members' matches,
   * `runsShed` the partial runs the shed-oldest valve dropped, and
   * `peakLiveRuns` is the largest live-run set any member held on any key
-  * after any event (merged by max, `CepMaxMetric`). The loop counts in
-  * task-local fields and publishes them when its task completes. A
-  * range exchange downstream (an ORDER BY) samples its input with a
-  * separate job that re-executes this operator, so there the summed
-  * metrics, `numOutputRows` included, count both executions.
+  * after any event (merged by max, `CepMaxMetric`). The loop and its
+  * member feed count in task-local fields and publish them when the
+  * task completes. A range exchange downstream (an ORDER BY) samples
+  * its input with a separate job that re-executes this operator, so
+  * there the summed metrics, `numOutputRows` included, count both
+  * executions.
   */
 private[graft] final case class CepMatchExec(
     members: Vector[CepMember],
@@ -415,7 +396,11 @@ private[graft] object CepMaxMetric {
 }
 
 /** One task's state of the `CepMatchExec` feed loop: `step` takes the
-  * task's rows in order, the next one readable as `iter.head`.
+  * task's rows in order, the next one readable as `iter.head`. The key
+  * switch, decode and last-event peek are the loop's own; the member
+  * step (executors, gates, counts) is `CepMemberFeed`'s, and its
+  * executors are compiled here, in the task, so the plan's case-class
+  * fields never hold a `Dst`.
   */
 private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
     maxRuns: Option[Int], aNames: Vector[String], strFlags: Array[Boolean],
@@ -425,19 +410,13 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
   private val timeouts = em == CepEmission.Timeouts
   private val bindings = em == CepEmission.Bindings
   private val gauge = em.isInstanceOf[CepEmission.ShedGauge]
-  private val executors = ms.map { m =>
-    val q = m.query
-    new Executor(DstCompiler.compile(q), q.strategy, maxRuns, q.within,
-      q.withinTime, captureTimeouts = timeouts,
-      anchorStart = q.anchorStart, anchorEnd = q.anchorEnd)
-  }.toArray
-  private val gates = ms.map(_.gate).toArray
-  private val names = ms.map(m => Pattern.names(m.query.patseq)).toArray
+  private val feed = new CepMemberFeed(ms, maxRuns, timeouts)
+  private val nMembers = ms.length
   // qname as UTF8String once per task, not per match
   private val qnames = ms.map(m => UTF8String.fromString(m.name)).toArray
   private val sink = em match {
     case m: CepEmission.Measures =>
-      new CepMeasuresSink(m, proj, qnames, executors)
+      new CepMeasuresSink(m, proj, qnames, feed.executors)
     case _ => null
   }
   // `$` on any member needs the last-event-of-key flag (per KEY, so one
@@ -446,35 +425,26 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
   private val peek = flagLast || gauge || sink != null
   // per-event scratch: this row's output per member (reused — safe, the
   // row's output iterator is drained before the next row starts)
-  private val found = new Array[Vector[Match]](executors.length)
+  private val found = new Array[Vector[Match]](nMembers)
   private val guard = new CepRuntimeWarnings.UnkeyedCounter(unkeyedWarnRows)
   private val keyGet = CepKeyAccess.reader(keyDt)
-  private val keyCopy = CepKeyAccess.copier(keyDt)
   private val keyEq = CepKeyAccess.eq(keyDt)
   // curKey always holds a COPY (safe across the row-buffer reuse);
   // transient reads are only ever compared against it, never held
   private var curKey: Any = null
   private var started = false
-  // the metrics, counted task-locally (see `publish`); the current
-  // key's matches and sheds join `matches`/`shed` when the key ends
-  private var events, keys, matches, rows, shed, keyMatches = 0L
-  private var peak = 0
-
-  private def shedCount: Long = {
-    var sc = 0L
-    var qi = 0
-    while (qi < executors.length) { sc += executors(qi).shedCount; qi += 1 }
-    sc
-  }
+  // the metrics, counted task-locally (see `publish`); `keyStart` is
+  // the feed's match count when the current key started
+  private var events, keys, rows, keyStart = 0L
 
   /** Add this task's counts to the operator's metrics. */
   def publish(m: Map[String, SQLMetric]): Unit = {
     m("numEvents") += events
     m("numKeys") += keys
-    m("numMatches") += matches + keyMatches
+    m("numMatches") += feed.matchCount
     m("numOutputRows") += rows
-    m("runsShed") += shed + shedCount
-    m("peakLiveRuns").set(peak.toLong)
+    m("runsShed") += feed.shedCount
+    m("peakLiveRuns").set(feed.peakLiveRuns.toLong)
   }
 
   def step(row: InternalRow): Iterator[InternalRow] = {
@@ -482,30 +452,19 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
     events += 1
     val k0 = keyGet(row)
     if (!started || !keyEq(k0, curKey)) {
-      if (started) { matches += keyMatches; shed += shedCount }
-      executors.foreach(_.reset()); keyMatches = 0L; keys += 1
-      curKey = keyCopy(k0); started = true
+      feed.reset(); keys += 1; keyStart = feed.matchCount
+      curKey = InternalRow.copyValue(k0); started = true
     }
     val ev = CepRowDecode.decode(row, curKey, aNames, strFlags)
     // UNSAFE-ROW CAUTION: the child iterator reuses its row buffer, so
     // `iter.head` invalidates the current row — the peek happens only
     // AFTER the row is fully decoded (key copy + Event copy)
     val last = peek && (!iter.hasNext || !keyEq(keyGet(iter.head), curKey))
-    val tpe = ev.tpe
     var n = 0
     var qi = 0
-    while (qi < executors.length) {
-      val gate = gates(qi)
-      val ex = executors(qi)
-      val out =
-        if (gate == null || (tpe != null && gate.contains(tpe))) {
-          val hits = ex.feed(ev, flagLast && last)
-          keyMatches += hits.size
-          val runs = ex.runCount
-          if (runs > peak) peak = runs
-          if (!timeouts) hits
-          else ex.drainTimedOut().map(ex.partialOutput(_, names(qi)))
-        } else Vector.empty
+    while (qi < nMembers) {
+      val hits = feed.feed(qi, ev, flagLast && last)
+      val out = if (timeouts) feed.timedOut(qi) else hits
       n += out.size
       found(qi) = out
       qi += 1
@@ -517,7 +476,7 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
       if (last) {
         rows += 1
         Iterator.single(proj(new GenericInternalRow(Array[Any](curKey,
-          keyMatches, shedCount,
+          feed.matchCount - keyStart, feed.keyShed,
           em.asInstanceOf[CepEmission.ShedGauge].cap.toLong))))
       } else Iterator.empty
     } else if (sink != null) {
@@ -528,13 +487,27 @@ private final class CepFeedLoop(ms: Vector[CepMember], em: CepEmission,
     else {
       rows += n
       found.indices.iterator.flatMap { q =>
+        val names = feed.names(q)
         found(q).iterator.map { m =>
           proj(
-            if (bindings) CepRender.binding(qnames(q), curKey, names(q), m)
-            else CepRender.orderIds(curKey, names(q), m))
+            if (bindings) new GenericInternalRow(Array[Any](qnames(q), curKey,
+              UTF8String.fromString(CepMatchIds.binding(m, names))))
+            else orderIds(names, m))
         }
       }
     }
+  }
+
+  /** The key, then each name's bound order ids (`OrderIds`, `Timeouts`). */
+  private def orderIds(names: Vector[String], m: Match): InternalRow = {
+    val vals = new Array[Any](names.length + 1)
+    vals(0) = curKey
+    var j = 0
+    while (j < names.length) {
+      vals(j + 1) = new GenericArrayData(CepMatchIds.of(m, names(j)))
+      j += 1
+    }
+    new GenericInternalRow(vals)
   }
 }
 
@@ -572,7 +545,7 @@ private final class CepMeasuresSink(em: CepEmission.Measures,
 
   def step(ev: Event, found: Array[Vector[Match]], last: Boolean,
       key: Any): Iterator[InternalRow] = {
-    val o = CepRowDecode.orderId(ev)
+    val o = CepMatchIds.orderId(ev)
     if (fresh) { first = o; fresh = false }
     if (recordOrds) {
       if (nOrds == ords.length)
@@ -626,7 +599,7 @@ private final class CepMeasuresSink(em: CepEmission.Measures,
     var w = cur
     executors.foreach(_.snapshot._2.foreach { case (_, c) =>
       c.ctx.valuesIterator.foreach(evs =>
-        if (evs.nonEmpty) w = math.min(w, CepRowDecode.orderId(evs.head)))
+        if (evs.nonEmpty) w = math.min(w, CepMatchIds.orderId(evs.head)))
     })
     w
   }
@@ -648,57 +621,4 @@ private object CepMeasuresSink {
     * whose oldest run stays alive costs O(log) watermark scans.
     */
   val FlushMin = 1024
-}
-
-/** The per-match row shapes of `CepMatchExec`. */
-private[plans] object CepRender {
-  /** The key, then each name's bound order ids (`OrderIds`, `Timeouts`). */
-  def orderIds(key: Any, names: Vector[String], m: Match): InternalRow = {
-    val byName = m.toMap
-    val vals = new Array[Any](names.length + 1)
-    vals(0) = key
-    var j = 0
-    while (j < names.length) {
-      val ids = byName.getOrElse(names(j), Vector.empty)
-      val arr = new Array[Long](ids.length)
-      var e = 0
-      while (e < arr.length) {
-        arr(e) = CepRowDecode.orderId(ids(e)); e += 1
-      }
-      vals(j + 1) = new GenericArrayData(arr)
-      j += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  /** `(qname, key, binding)` with the bound order ids `','`-joined within
-    * a pattern name and `';'`-joined across names in declared order.
-    */
-  def binding(qname: UTF8String, key: Any, names: Vector[String],
-      m: Match): InternalRow = {
-    val sb = new java.lang.StringBuilder
-    var j = 0
-    while (j < names.length) {
-      if (j > 0) sb.append(';')
-      val n = names(j)
-      // linear scan: a Match holds 1-3 tiny components — beats building
-      // a map per match
-      var i = 0
-      while (i < m.length) {
-        if (m(i)._1 == n) {
-          val evs = m(i)._2
-          var e = 0
-          while (e < evs.length) {
-            if (e > 0) sb.append(',')
-            sb.append(CepRowDecode.orderId(evs(e)))
-            e += 1
-          }
-          i = m.length
-        } else i += 1
-      }
-      j += 1
-    }
-    new GenericInternalRow(Array[Any](qname, key,
-      UTF8String.fromString(sb.toString)))
-  }
 }

@@ -55,7 +55,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         AttributeReference("user_id", LongType, nullable = false)(),
         AttributeReference("binding", StringType, nullable = false)())
       val members = qs.map { case (n, q) =>
-        graft.plans.CepMember(n, q, SparkCep.memberFeedTypes(q, spec).orNull)
+        graft.cep.CepMember(n, q, SparkCep.memberFeedTypes(q, spec).orNull)
       }
       val plan = graft.plans.CepMatchPlan(members,
         graft.plans.CepEmission.Bindings, keyed = true, attrNames, None,

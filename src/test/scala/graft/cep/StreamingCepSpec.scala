@@ -6,6 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 case class Ev(user_id: Long, event_id: Long, event_type: String, value: Long)
+/** An event whose order value may be null (the decoder's refusal). */
+case class NullOrdEv(user_id: Long, event_id: Option[Long],
+    event_type: String, value: Long, ts: java.sql.Timestamp)
 
 /** Streaming CEP must produce exactly the batch operator's matches when the
   * same events arrive across multiple micro-batches — state carries the NFA
@@ -125,5 +128,39 @@ class StreamingCepSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, Vector(1L, 2L)),
       (1L, Vector(2L, 4L)), // anchor + partial run crossed the boundary
       (1L, Vector(4L, 5L))))
+  }
+
+  test("streaming operators refuse a null order value, naming the key") {
+    val s = spark
+    import s.implicits._
+    val query = CepQuery(
+      Pattern.Combine(Contiguity.Relaxed,
+        Pattern.spat("a", "signup", "True"),
+        Pattern.spat("b", "purchase", "True")),
+      Vector("signup" -> Vector("event_id", "value"),
+        "purchase" -> Vector("event_id", "value")))
+    val spec = SparkCep.CepSpec(Some("user_id"), "event_id", "event_type",
+      Seq("value"))
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "matchPattern" -> (df => StreamingCep.matchPattern(df, query, spec)),
+      "matchPatternEventTime" -> (df => StreamingCep.matchPatternEventTime(
+        df, query, spec, "ts", "0 seconds")))
+    implicit val sqlCtx = s.sqlContext
+    for (((opName, op), i) <- ops.zipWithIndex) {
+      val mem = MemoryStream[NullOrdEv]
+      val q = op(mem.toDF()).writeStream.format("memory")
+        .queryName(s"cep_null_ord_$i").outputMode("append").start()
+      val e = try {
+        mem.addData(
+          NullOrdEv(7, Some(1L), "signup", 0, new java.sql.Timestamp(1000)),
+          NullOrdEv(7, None, "purchase", 0, new java.sql.Timestamp(2000)))
+        intercept[Exception](q.processAllAvailable())
+      } finally q.stop()
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).flatMap(c => Option(c.getMessage)).toVector
+      assert(msgs.exists(_.contains("CEP order column is null for key 7")),
+        s"$opName: ${msgs.mkString(" | ")}")
+    }
   }
 }

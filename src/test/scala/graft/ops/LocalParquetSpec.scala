@@ -79,4 +79,22 @@ class LocalParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pqLocal = Codebooks.loadPq(spark, Codebooks.pqPath)
     assert(pqLocal.length > 0 && pqLocal.head.length > 0)
   }
+
+  test("fuzz: Spark-written layouts collect exactly or fall back") {
+    val root = java.nio.file.Files.createTempDirectory("local-parquet-fuzz")
+    for (seed <- Seq(1L, 2L, 3L);
+         (name, p) <- ParquetLayouts.write(spark, root, seed)) {
+      val viaSpark = scala.util.Try(spark.read.parquet(p).collect())
+      LocalParquet.collect(spark, p).foreach { local =>
+        assert(viaSpark.isSuccess,
+          s"$name/$seed: local rows where Spark's read fails")
+        assert(canon(local.toSeq) === canon(viaSpark.get.toSeq),
+          s"$name/$seed: values")
+      }
+    }
+    // the layouts the fast path exists for must still take it
+    for ((name, p) <- ParquetLayouts.write(spark, root, 4L)
+         if Set("flat", "lists", "two-parts")(name))
+      assert(LocalParquet.collect(spark, p).isDefined, s"$name: fell back")
+  }
 }

@@ -113,4 +113,17 @@ class ParquetSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a.count() === b.count())
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
+
+  test("fuzz: Spark-written layouts resolve to the inferred schema or " +
+    "fall back") {
+    val root = java.nio.file.Files.createTempDirectory("parquet-schema-fuzz")
+    for (seed <- Seq(1L, 2L, 3L);
+         (name, p) <- ParquetLayouts.write(spark, root, seed)) {
+      val inferred = spark.read.parquet(p).schema
+      ParquetSchema.of(spark, p).foreach(fast =>
+        assert(fast === inferred, s"$name/$seed: schema"))
+      if (name != "mixed")
+        assert(ParquetSchema.of(spark, p).isDefined, s"$name/$seed: fell back")
+    }
+  }
 }
