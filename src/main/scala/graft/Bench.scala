@@ -320,14 +320,14 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"BENCH: could not update $benchMd: ${e.getMessage}") }
     }
-    // COMPACT totals-only summary as the LAST stdout line (round-19,
-    // judge demand): the full per-query line above is ~34 KB and the
-    // driver keeps only a bounded stdout TAIL, so for five rounds no
-    // artifact contained one complete JSON object (`BENCH_r14..r18` all
-    // `parsed: null`). A few-hundred-byte second line always fits any
-    // tail capture. Additive only — the full line and `bench_out.json`
-    // are unchanged, and no timing methodology moved.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total_median":$totalMedian,"total_lo":$totalLo,"n_queries":${results.size},"extra_warm_runs":$extraWarmRuns,"contaminated":$contaminated,"load1_start":$load1Start,"load5_start":$load5Start,"bench_wall_sec":$wallSec,"queries_file":${jstr(outPath)},"sf":${jstr(sfDir)}}""")
+    // COMPACT totals-only summary as the LAST stdout line: the full
+    // per-query line above is ~34 KB, and a reader that keeps only a
+    // bounded stdout tail never sees one complete JSON object
+    // (`BENCH_r14..r18` all `parsed: null`). A few-hundred-byte second
+    // line always fits any tail capture. Its metric is `bench_total`, not
+    // the full line's `total`, so a reader that matches lines by their
+    // prefix cannot take one for the other.
+    println(s"""{"metric":"bench_total","value":$total,"unit":"sec","total_median":$totalMedian,"total_lo":$totalLo,"n_queries":${results.size},"extra_warm_runs":$extraWarmRuns,"contaminated":$contaminated,"load1_start":$load1Start,"load5_start":$load5Start,"bench_wall_sec":$wallSec,"queries_file":${jstr(outPath)},"sf":${jstr(sfDir)}}""")
     spark.stop()
   }
 }

@@ -1496,7 +1496,7 @@ object Queries {
       |ORDER BY 1, 2, 4""".stripMargin
 
   /** Aggregate-ARGUMENT expressions (SQL:2016 <value expression> inside
-    * a measure aggregate — `CepMeasures.AExpr`): per-event arithmetic
+    * a measure aggregate — `CepMeasures.Arith`): per-event arithmetic
     * over ONE variable's attributes feeds SUM/MIN/MAX/AVG/FIRST/LAST,
     * e.g. `SUM(c.value * c.value)`. The lowered plan is IDENTICAL to
     * plain attribute measures — the same single explode→join→aggregate
@@ -4578,11 +4578,10 @@ object Queries {
     * the corpus-scale posting-list cap ON (`maxShingleFreq=64`: shingles in
     * more than 64 docs leave the index, the sets, and the counts — the
     * oracle reproduces the cap exactly). The benched plan is the shipped
-    * plan: measured at t=0.5 the capped inverted-index join beats the
-    * PPJoin-style prefix variant ~2.5× here, because a 0.5 threshold makes
-    * prefixes ≈ half of each doc (weak filtering) while verification
-    * shuffles full shingle arrays; `ngramJaccardPairsPrefix` is the right
-    * plan at t ≥ 0.8 where prefixes shrink to a sliver.
+    * plan: measured at t=0.5 the capped inverted-index join beat a
+    * PPJoin-style prefix-filtered join ~2.5× here, because a 0.5
+    * threshold makes prefixes ≈ half of each doc (weak filtering) while
+    * verification shuffles full shingle arrays.
     */
   def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame =
     DedupOps.ngramJaccardPairs(table(spark, dir, "documents"),

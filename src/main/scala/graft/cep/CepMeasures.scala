@@ -79,7 +79,7 @@ object CepMeasures {
     /** Every atom the item evaluates — itself for a plain measure. */
     def atomsOf(i: MeasureItem): Vector[Measure] = i match {
       case m: Measure     => Vector(m)
-      case e: ExprMeasure => MExpr.atoms(e.expr)
+      case e: ExprMeasure => Arith.leaves(e.expr)
     }
   }
 
@@ -122,7 +122,7 @@ object CepMeasures {
 
   final case class Measure(fn: Fn, name: String, attr: Option[String],
       alias: String, isFinal: Boolean = false, offset: Int = 0,
-      argExpr: Option[AExpr] = None, phys: Option[PhysNav] = None,
+      argExpr: Option[Arith[String]] = None, phys: Option[PhysNav] = None,
       distinct: Boolean = false)
       extends MeasureItem {
     if (distinct) {
@@ -154,11 +154,11 @@ object CepMeasures {
       require(!Fn.isNullary(fn),
         s"MEASURES: ${fn.sqlName} takes no argument expression " +
           "(FIRST/LAST/COUNT/SUM/MIN/MAX/AVG only)")
-      require(AExpr.refs(ae).nonEmpty,
+      require(Arith.leaves(ae).nonEmpty,
         s"MEASURES: ${fn.sqlName}($name) argument expression references " +
           "no attribute — a constant aggregate argument is positional " +
           s"(${fn.sqlName}($name)) or a literal in the outer expression")
-      require(!ae.isInstanceOf[AExpr.Ref],
+      require(!ae.isInstanceOf[Arith.Leaf[_]],
         s"MEASURES: a bare attribute ref is the plain " +
           s"${fn.sqlName}($name.attr) form, not an argument expression " +
           "(canonical representation — parse∘render identity)")
@@ -239,7 +239,7 @@ object CepMeasures {
   /** Every event attribute the measure reads at its bound events. */
   private[cep] def attrsOf(m: Measure): Vector[String] =
     m.attr.map(Vector(_)).getOrElse(m.argExpr.fold(Vector.empty[String])(
-      AExpr.refs))
+      Arith.leaves))
 
   /** The navigations a measure set's `PREV/NEXT(FIRST/LAST(..))` atoms
     * read: one [[Nav]] per (attribute, signed steps), materialized on
@@ -257,40 +257,48 @@ object CepMeasures {
   def matchNumber(alias: String): Measure =
     Measure(Fn.MatchNo, "", None, alias)
 
-  /** Aggregate-ARGUMENT expression — SQL:2016's <value expression>
-    * inside a measure aggregate (`SUM(a.price * a.qty)`), integer
-    * fragment: long arithmetic over ONE pattern (or SUBSET) variable's
-    * attributes and non-negative integer literals, evaluated PER BOUND
-    * EVENT before the aggregate folds. [[Ref]] leaves are attribute
-    * names; the owning [[Measure]]'s `name` qualifies every ref (the
-    * standard requires all refs inside one aggregate to share a
-    * variable, and so do we — the parser rejects mixed names).
+  /** Integer arithmetic over leaves of type `L` — SQL:2016's <value
+    * expression>, integer fragment: `+ - * /` over leaves and
+    * non-negative integer literals. One tree serves both places the
+    * MEASURES grammar admits arithmetic:
     *
-    * Semantics mirror the outer <measure expression> ([[MExpr]])
-    * operator-for-operator: `+ - *` are non-ANSI 64-bit (silent wrap on
-    * overflow — DuckDB, the oracle, errors instead; keep magnitudes in
-    * long range), `/` is DuckDB-`//`-exact integer division (truncation
-    * toward zero, NULL on a zero divisor), and a NULL attribute poisons
-    * the EVENT's value — SUM/MIN/MAX/AVG then skip that event (SQL
-    * aggregate-over-expression), while FIRST/LAST read their target
-    * event's possibly-NULL value as-is. Batch and stream share the one
-    * fold ([[AExpr.eval]]).
+    *  - a measure ARGUMENT (`Measure.argExpr`, `Arith[String]`):
+    *    `SUM(a.price * a.qty)`, leaves are attribute names of the one
+    *    pattern (or SUBSET) variable the owning [[Measure]] names (the
+    *    standard requires all refs inside one aggregate to share a
+    *    variable, and the parser rejects mixed names), folded PER BOUND
+    *    EVENT before the aggregate: a NULL attribute poisons that
+    *    event's value, so SUM/MIN/MAX/AVG skip it (SQL
+    *    aggregate-over-expression) while FIRST/LAST read their target
+    *    event's possibly-NULL value as-is;
+    *  - a measure EXPRESSION (`ExprMeasure.expr`, `Arith[Measure]`):
+    *    `LAST(a.v) - FIRST(a.v)`, `100 * COUNT(c) + COUNT(p)`, leaves
+    *    are measure atoms folded over the whole match; a NULL atom
+    *    (measure-over-missing) poisons the whole expression, exactly SQL.
+    *
+    * `/` is DuckDB `//` exactly: truncation toward zero (`7 / -2 = -3`,
+    * unlike Python's floored `//`), NULL on a zero divisor, long-exact
+    * (JVM `/`). AVG keeps its separate FLOORED exact-mean convention.
+    *
+    * OVERFLOW: `+ - *` are non-ANSI 64-bit and silently WRAP. DuckDB —
+    * the oracle the correctness gate replays — ERRORS on BIGINT overflow
+    * instead, so a magnitude outside long range surfaces as an oracle
+    * failure, not a silent mismatch; keep measured products inside long
+    * range.
     */
-  sealed trait AExpr extends Serializable
-  object AExpr {
-    /** Attribute `attr` of the bound event under evaluation. */
-    final case class Ref(attr: String) extends AExpr
-    final case class Lit(v: Long) extends AExpr
-    final case class Add(l: AExpr, r: AExpr) extends AExpr
-    final case class Sub(l: AExpr, r: AExpr) extends AExpr
-    final case class Mul(l: AExpr, r: AExpr) extends AExpr
-    /** Integer `/` — DuckDB-`//` semantics like [[MExpr.Div]]. */
-    final case class Div(l: AExpr, r: AExpr) extends AExpr
+  sealed trait Arith[+L] extends Serializable
+  object Arith {
+    final case class Leaf[+L](l: L) extends Arith[L]
+    final case class Lit(v: Long) extends Arith[Nothing]
+    final case class Add[+L](l: Arith[L], r: Arith[L]) extends Arith[L]
+    final case class Sub[+L](l: Arith[L], r: Arith[L]) extends Arith[L]
+    final case class Mul[+L](l: Arith[L], r: Arith[L]) extends Arith[L]
+    final case class Div[+L](l: Arith[L], r: Arith[L]) extends Arith[L]
 
-    /** Distinct referenced attributes, first-occurrence order. */
-    def refs(e: AExpr): Vector[String] = {
-      def walk(e: AExpr): Vector[String] = e match {
-        case Ref(a)    => Vector(a)
+    /** The distinct leaves, in first-occurrence order. */
+    def leaves[L](e: Arith[L]): Vector[L] = {
+      def walk(e: Arith[L]): Vector[L] = e match {
+        case Leaf(l)   => Vector(l)
         case Lit(_)    => Vector.empty
         case Add(l, r) => walk(l) ++ walk(r)
         case Sub(l, r) => walk(l) ++ walk(r)
@@ -300,50 +308,63 @@ object CepMeasures {
       walk(e).distinct
     }
 
-    /** Emission-time fold over one bound event: `ref` resolves an
-      * attribute (None = missing → poisons the value). JVM `/`
-      * truncates toward zero like IntegralDivide and DuckDB `//`; a
-      * zero divisor yields None.
+    /** The long value, `leaf` resolving each leaf (None = NULL, which
+      * poisons the result); a zero divisor yields None.
       */
-    def eval(e: AExpr, ref: String => Option[Long]): Option[Long] =
-      e match {
-        case Ref(a)    => ref(a)
+    def eval[L](e: Arith[L], leaf: L => Option[Long]): Option[Long] = {
+      def go(e: Arith[L]): Option[Long] = e match {
+        case Leaf(l)   => leaf(l)
         case Lit(v)    => Some(v)
-        case Add(l, r) =>
-          for (a <- eval(l, ref); b <- eval(r, ref)) yield a + b
-        case Sub(l, r) =>
-          for (a <- eval(l, ref); b <- eval(r, ref)) yield a - b
-        case Mul(l, r) =>
-          for (a <- eval(l, ref); b <- eval(r, ref)) yield a * b
-        case Div(l, r) =>
-          for (a <- eval(l, ref); b <- eval(r, ref) if b != 0L) yield a / b
+        case Add(l, r) => for (a <- go(l); b <- go(r)) yield a + b
+        case Sub(l, r) => for (a <- go(l); b <- go(r)) yield a - b
+        case Mul(l, r) => for (a <- go(l); b <- go(r)) yield a * b
+        case Div(l, r) => for (a <- go(l); b <- go(r) if b != 0L) yield a / b
       }
+      go(e)
+    }
+
+    /** The text form, `leaf` printing each leaf: `+ -` bind at level 1,
+      * `* /` at 2, leaves and literals at 3. The parser is
+      * left-associative, so a LEFT child at its parent's level needs no
+      * parentheses but a RIGHT one does (it could not have been parsed
+      * unparenthesized) — parse∘render is the identity.
+      */
+    def render[L](e: Arith[L], leaf: L => String): String = {
+      def lvl(e: Arith[L]): Int = e match {
+        case _: Add[_] | _: Sub[_] => 1
+        case _: Mul[_] | _: Div[_] => 2
+        case _                     => 3
+      }
+      def go(e: Arith[L]): String = {
+        def sub(c: Arith[L], minLvl: Int): String =
+          if (lvl(c) < minLvl) s"(${go(c)})" else go(c)
+        e match {
+          case Leaf(l)   => leaf(l)
+          case Lit(v)    => v.toString
+          case Add(l, r) => s"${sub(l, 1)} + ${sub(r, 2)}"
+          case Sub(l, r) => s"${sub(l, 1)} - ${sub(r, 2)}"
+          case Mul(l, r) => s"${sub(l, 2)} * ${sub(r, 3)}"
+          case Div(l, r) => s"${sub(l, 2)} / ${sub(r, 3)}"
+        }
+      }
+      go(e)
+    }
   }
 
-  /** A measure VALUE EXPRESSION tree — SQL:2016's <measure expression>,
-    * integer fragment: `+`/`-`/`*` over measure atoms and non-negative
-    * integer literals, e.g. `LAST(a.v) - FIRST(a.v)` or
-    * `100 * COUNT(c) + COUNT(p)`. All-long arithmetic; a NULL atom
-    * (measure-over-missing) propagates NULL through the whole
-    * expression, exactly SQL. `/` is the one [[Div]] documents: DuckDB
-    * `//` exact (truncation toward zero, NULL on a zero divisor); `AVG`
-    * keeps its separate FLOORED exact-mean convention.
-    *
-    * OVERFLOW: `+ - *` are non-ANSI 64-bit and silently WRAP
-    * (`evalItem`'s long fold). DuckDB — the oracle the correctness gate
-    * replays — ERRORS on BIGINT overflow instead, so a measured
-    * magnitude outside long range surfaces as an oracle failure, not a
-    * silent mismatch; keep measured products inside long range.
+  /** A compound measure: `expr AS alias` where `expr` combines ≥1 atom
+    * with long arithmetic ([[Arith]]). Evaluates by folding each atom
+    * exactly as a plain [[Measure]] would over the same match and
+    * combining the results ([[evalItem]]). An atom carries no alias (the
+    * item names the output column) and no FINAL flag (the item's
+    * RUNNING/FINAL applies to every atom). `CLASSIFIER()` is STRING-typed
+    * and cannot enter arithmetic; `MATCH_NUMBER()` can (it is a long).
     */
-  sealed trait MExpr extends Serializable
-  object MExpr {
-    /** A leaf `fn(name[.attr][, k])`. The wrapped [[Measure]] carries no
-      * alias (the enclosing [[ExprMeasure]] names the column) and no
-      * FINAL flag (the item's applies to every atom). `CLASSIFIER()` is
-      * STRING-typed and cannot enter arithmetic; `MATCH_NUMBER()` can
-      * (it is a long).
-      */
-    final case class Atom(m: Measure) extends MExpr {
+  final case class ExprMeasure(expr: Arith[Measure], alias: String,
+      isFinal: Boolean = false) extends MeasureItem {
+    require(Arith.leaves(expr).nonEmpty,
+      s"MEASURES: expression '$alias' references no measure atom — a " +
+        "constant column is a SELECT concern, not a measure")
+    Arith.leaves(expr).foreach { m =>
       require(m.alias.isEmpty,
         "measure-expression atoms carry no alias (the item names the " +
           "output column)")
@@ -354,43 +375,6 @@ object CepMeasures {
         "MEASURES: CLASSIFIER() is STRING-typed — not usable in " +
           "measure arithmetic")
     }
-    final case class Lit(v: Long) extends MExpr
-    final case class Add(l: MExpr, r: MExpr) extends MExpr
-    final case class Sub(l: MExpr, r: MExpr) extends MExpr
-    final case class Mul(l: MExpr, r: MExpr) extends MExpr
-    /** Integer division `/` — DuckDB `//` semantics EXACTLY: truncation
-      * toward zero (`7 / -2 = -3`, unlike Python's floored `//`), NULL
-      * on a zero divisor, long-exact (JVM `/`). Note AVG is the one
-      * deliberate exception: it keeps the FLOORED quotient (the
-      * documented exact-integer-mean convention, visible only on
-      * negative sums).
-      */
-    final case class Div(l: MExpr, r: MExpr) extends MExpr
-
-    /** The distinct atoms of an expression, in first-occurrence order. */
-    def atoms(e: MExpr): Vector[Measure] = {
-      def walk(e: MExpr): Vector[Measure] = e match {
-        case Atom(m)   => Vector(m)
-        case Lit(_)    => Vector.empty
-        case Add(l, r) => walk(l) ++ walk(r)
-        case Sub(l, r) => walk(l) ++ walk(r)
-        case Mul(l, r) => walk(l) ++ walk(r)
-        case Div(l, r) => walk(l) ++ walk(r)
-      }
-      walk(e).distinct
-    }
-  }
-
-  /** A compound measure: `expr AS alias` where `expr` combines ≥1 atom
-    * with long arithmetic. Evaluates by folding each atom exactly as a
-    * plain [[Measure]] would over the same match and combining the
-    * results ([[evalItem]]).
-    */
-  final case class ExprMeasure(expr: MExpr, alias: String,
-      isFinal: Boolean = false) extends MeasureItem {
-    require(MExpr.atoms(expr).nonEmpty,
-      s"MEASURES: expression '$alias' references no measure atom — a " +
-        "constant column is a SELECT concern, not a measure")
   }
 
   /** Shared validation for both output modes. `reserved` = output-shape
@@ -422,8 +406,7 @@ object CepMeasures {
           require(names.contains(m.name) || subsets.contains(m.name),
             s"MEASURES: '${m.name}' is not a pattern or SUBSET name " +
               s"(have ${(names ++ subsets.keys).mkString(", ")})")
-        (m.attr.toVector ++ m.argExpr.fold(Vector.empty[String])(
-          AExpr.refs)).foreach(a => require(
+        attrsOf(m).foreach(a => require(
           a == spec.orderCol || spec.attrCols.contains(a),
           s"MEASURES: attribute '$a' is not in the CEP spec " +
             s"(order '${spec.orderCol}', attrs " +
@@ -550,7 +533,7 @@ object CepMeasures {
   /** An attribute-tier measure's long value at one bound event: the
     * attribute (of the row `steps` rows away under PREV/NEXT), or the
     * argument expression folded over the event's attributes
-    * ([[AExpr.eval]] — None poisons the event).
+    * ([[Arith.eval]] — None poisons the event).
     */
   private def valueOf(m: Measure)(ev: Event): Option[Long] = {
     def ref(a: String): Option[Long] = m.phys match {
@@ -559,7 +542,7 @@ object CepMeasures {
     }
     (m.attr, m.argExpr) match {
       case (Some(a), _)    => ref(a)
-      case (None, Some(e)) => AExpr.eval(e, ref)
+      case (None, Some(e)) => Arith.eval(e, ref)
       case (None, None)    => throw new IllegalStateException(
         "positional measure reached the attribute fold") // unreachable
     }
@@ -665,7 +648,7 @@ object CepMeasures {
   /** The Spark-SQL type of one measure item's output column:
     * `CLASSIFIER()` is STRING, as is a `FIRST`/`LAST` over a
     * string-typed attribute (`strAttrs` — round 16); everything else
-    * long. (A classifier inside arithmetic is rejected at `MExpr.Atom`
+    * long. (A classifier inside arithmetic is rejected at [[ExprMeasure]]
     * construction, so a classifier atom is always a plain [[Measure]];
     * string atoms in arithmetic are rejected by
     * `requireStrMeasuresSupported` / `validateStreamingMeasures`.)
@@ -724,21 +707,9 @@ object CepMeasures {
 
   /** A measure item's long value from its atoms' values (`atom`). */
   private def combine(item: MeasureItem, atom: Measure => Option[Long])
-      : Option[Long] = {
-    def eval(e: MExpr): Option[Long] = e match {
-      case MExpr.Atom(m)   => atom(m)
-      case MExpr.Lit(v)    => Some(v)
-      case MExpr.Add(l, r) => for (a <- eval(l); b <- eval(r)) yield a + b
-      case MExpr.Sub(l, r) => for (a <- eval(l); b <- eval(r)) yield a - b
-      case MExpr.Mul(l, r) => for (a <- eval(l); b <- eval(r)) yield a * b
-      case MExpr.Div(l, r) => // JVM `/` truncates toward zero, like
-        // DuckDB `//`; zero divisor -> NULL
-        for (a <- eval(l); b <- eval(r) if b != 0L) yield a / b
-    }
-    item match {
-      case m: Measure     => atom(m)
-      case e: ExprMeasure => eval(e.expr)
-    }
+      : Option[Long] = item match {
+    case m: Measure     => atom(m)
+    case e: ExprMeasure => Arith.eval(e.expr, atom)
   }
 
   /** A validated measured statement as the batch CEP operator renders it

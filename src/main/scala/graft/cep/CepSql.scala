@@ -109,41 +109,76 @@ package graft.cep
   *            = `300 ON ts`; unit SECOND|MINUTE|HOUR|DAY, the ts
   *            attribute is in seconds; render prints the plain form)
   *           [AFTER MATCH SKIP skip]
-  * meas   := [RUNNING | FINAL] mexpr AS alias
-  *         | [RUNNING | FINAL] 'COUNT' '(' '*' ')' AS alias
-  *         | [RUNNING | FINAL] 'COUNT' '(' name '.' '*' ')' AS alias
+  * meas   := [RUNNING | FINAL] arith(atom) AS alias
+  *           (SQL:2016 <measure expression>, integer fragment: long
+  *           arithmetic over measure atoms — `LAST(c.v) - FIRST(c.v)
+  *           AS spread`. A NULL atom (measure-over-missing) propagates
+  *           NULL through the whole expression; a lone atom, also a
+  *           parenthesized one, is a plain measure. CLASSIFIER() is
+  *           STRING-typed and rejected in arithmetic; MATCH_NUMBER()
+  *           participates, batch-only. RUNNING/FINAL only differ in
+  *           ALL ROWS PER MATCH (running = up to the current row, the
+  *           default; final = the whole match on every row).
+  *           `parse` rejects MEASURES —
+  *           use `parseStatement`, whose result carries them.
+  *           PARTITION BY / ORDER BY / TYPE make the statement
+  *           self-contained: `CepSqlStatement.spec` derives the full
+  *           CepSpec, with attrCols = the attributes the statement
+  *           references)
+  * arith(leaf) := term (('+' | '-') term)*
+  *           (the ONE integer arithmetic of MEASURES, over two kinds of
+  *           leaf: measure atoms in a measure expression, and one
+  *           variable's attributes in an aggregate argument. Literals
+  *           are non-negative integers; operators are left-associative.
+  *           `+ - *` are non-ANSI 64-bit and silently WRAP on overflow
+  *           (DuckDB, the oracle, errors on BIGINT overflow instead —
+  *           keep measured magnitudes inside long range). '/' is
+  *           integer division with DuckDB-`//` semantics EXACTLY:
+  *           truncation toward zero, NULL on a zero divisor. AVG
+  *           remains the FLOORED exact mean, visible only on negative
+  *           sums. See [[CepMeasures.Arith]].)
+  * term   := factor (('*' | '/') factor)*
+  * factor := INT | '(' arith(leaf) ')' | leaf
+  * atom   := FN '(' ['DISTINCT'] arg [',' k] ')'
+  *           (FN := COUNT|FIRST|LAST|SUM|MIN|MAX|AVG; see
+  *            [[CepMeasures]]. AVG is exact integer mean: floored
+  *            quotient, DuckDB's `//`. DISTINCT — COUNT/SUM only —
+  *            collapses duplicate per-event values before the
+  *            aggregate: COUNT(DISTINCT c.v) distinct non-NULL values,
+  *            SUM(DISTINCT c.v) sum of distinct values. Attributed
+  *            COUNT(name.attr) without DISTINCT is SQL's non-NULL
+  *            count. ONE ROW PER MATCH only — window functions take no
+  *            DISTINCT, so ALL ROWS rejects it. The `,k` logical offset
+  *            is SQL:2016's optional second argument to FIRST/LAST:
+  *            FIRST(a.v, k) reads the (k+1)-th bound event from the
+  *            start, LAST(a.v, k) from the end; NULL when the binding
+  *            is shorter. ONE ROW PER MATCH and streaming only — ALL
+  *            ROWS PER MATCH rejects a non-zero offset, a documented
+  *            deviation)
+  *         | 'COUNT' '(' [name '.'] '*' ')'
   *           (SQL:2016 row counts — WHOLE-MEASURE forms only, not
-  *            arithmetic atoms: `COUNT(name.*)` ≡ the positional
+  *            arithmetic operands: `COUNT(name.*)` ≡ the positional
   *            `COUNT(name)`; `COUNT(*)` desugars to
   *            `COUNT(n1) + … + COUNT(nk)` over the EVENT-BINDING
   *            pattern names in declaration order (GROUP labels bind no
   *            events and are excluded; plain `COUNT(n)` when one name
   *            binds), riding every tier — batch, ALL ROWS running,
   *            streaming fold. `render` prints the desugared form.)
-  * mexpr  := mterm (('+' | '-') mterm)*      (SQL:2016 <measure
-  *           expression>, integer fragment: long arithmetic over
-  *           measure atoms and non-negative integer literals —
-  *           `LAST(c.v) - FIRST(c.v) AS spread`. A NULL atom
-  *           (measure-over-missing) propagates NULL through the whole
-  *           expression. '/' is integer division with DuckDB-`//`
-  *           semantics EXACTLY: truncation toward zero, NULL on a zero
-  *           divisor (Catalyst IntegralDivide — long-exact). AVG
-  *           remains the FLOORED exact mean, visible only on negative
-  *           sums. Arithmetic is non-ANSI 64-bit: + - * silently WRAP
-  *           on overflow (DuckDB, the oracle, errors on BIGINT
-  *           overflow instead — keep measured magnitudes inside long
-  *           range). CLASSIFIER() is STRING-typed and rejected in
-  *           arithmetic; MATCH_NUMBER() participates, batch-only.)
-  * mterm  := mfact (('*' | '/') mfact)*
-  * mfact  := INT | '(' mexpr ')'
-  *         | FN '(' ['DISTINCT'] aarg [',' k] ')'
-  *           (DISTINCT — COUNT/SUM only — collapses duplicate per-event
-  *            values before the aggregate: COUNT(DISTINCT c.v) distinct
-  *            non-NULL values, SUM(DISTINCT c.v) sum of distinct
-  *            values. Attributed COUNT(name.attr) without DISTINCT is
-  *            SQL's non-NULL count. ONE ROW PER MATCH only — window
-  *            functions take no DISTINCT, so ALL ROWS rejects it.)
-  *         | ('PREV' | 'NEXT') '(' FL '(' aarg [',' k] ')' [',' steps] ')'
+  *         | 'CLASSIFIER' '(' [name] ')'
+  *           (the last bound event's pattern name — under an
+  *           alternation, which branch matched; STRING-typed; FINAL in
+  *           ALL ROWS = last row's. SQL:2016's optional TARGET — a
+  *           variable or SUBSET name — restricts the pick to the last
+  *           row mapped to (a member of) it: ONE ROW = its last bound
+  *           member's name, ALL ROWS RUNNING = the target's variable
+  *           among the rows so far (NULL until one binds), FINAL = over
+  *           the whole match; streams via the emission fold)
+  *         | 'MATCH_NUMBER' '(' ')'   (deterministic per-key match
+  *           sequence in temporal order-found order — row_number by the
+  *           match's earliest bound ordinal, binding arrays as
+  *           tiebreaker, never monotonically_increasing_id; batch-only
+  *           in streaming)
+  *         | ('PREV' | 'NEXT') '(' FL '(' arg [',' k] ')' [',' steps] ')'
   *           (SQL:2016 NESTED PHYSICAL NAVIGATION, FL := FIRST | LAST:
   *            resolve the logical target event, then read the
   *            attribute/argument from the row `steps` (default 1)
@@ -159,51 +194,16 @@ package graft.cep
   *            [, steps])` is accepted as sugar for
   *            `PREV(LAST(name.attr)[, steps])` — the standard's
   *            implicit-LAST reading under final semantics.)
-  * aarg   := name                         (positional — order ids)
-  *         | aexpr                        (SQL:2016 aggregate over a
+  * arg    := name                         (positional — order ids)
+  *         | arith(name '.' attr)         (SQL:2016 aggregate over a
   *           VALUE EXPRESSION of one variable's attributes —
-  *           `SUM(a.price * a.qty)`, `AVG(2 * c.v + 1)`. Same integer
-  *           fragment and semantics as the outer mexpr: `+ - *` wrap,
-  *           `/` is DuckDB-`//`-exact, a NULL attribute poisons the
-  *           EVENT's value and the aggregate skips that event
-  *           (FIRST/LAST read the target event's possibly-NULL value).
-  *           Every ref must be qualified (`name.attr`) and all refs
-  *           must share ONE pattern or SUBSET name — SQL:2016's
-  *           one-variable rule. COUNT takes no expression.)
-  * aexpr  := aterm (('+' | '-') aterm)*
-  * aterm  := afact (('*' | '/') afact)*
-  * afact  := INT | '(' aexpr ')' | name '.' attr
-  *           (the `,k` logical offset is SQL:2016's optional
-  *           second argument to FIRST/LAST: FIRST(a.v, k) reads the
-  *           (k+1)-th bound event from the start, LAST(a.v, k) from the
-  *           end; NULL when the binding is shorter. ONE ROW PER MATCH
-  *           and streaming only — ALL ROWS PER MATCH rejects a non-zero
-  *           offset, a documented deviation)
-  *         | [RUNNING | FINAL] 'CLASSIFIER' '(' [name] ')' AS alias
-  *           (the last bound event's pattern name — under an
-  *           alternation, which branch matched; STRING-typed; FINAL in
-  *           ALL ROWS = last row's. SQL:2016's optional TARGET — a
-  *           variable or SUBSET name — restricts the pick to the last
-  *           row mapped to (a member of) it: ONE ROW = its last bound
-  *           member's name, ALL ROWS RUNNING = the target's variable
-  *           among the rows so far (NULL until one binds), FINAL = over
-  *           the whole match; streams via the emission fold)
-  *         | 'MATCH_NUMBER()' AS alias   (deterministic per-key match
-  *           sequence in temporal order-found order — row_number by the
-  *           match's earliest bound ordinal, binding arrays as
-  *           tiebreaker, never monotonically_increasing_id; batch-only
-  *           in streaming)
-  *           (FN := COUNT|FIRST|LAST|SUM|MIN|MAX|AVG; see
-  *            [[CepMeasures]]. AVG is exact integer mean: floored
-  *            quotient, DuckDB's `//`. RUNNING/FINAL only differ in
-  *            ALL ROWS PER MATCH (running = up to the current row,
-  *            the default; final = the whole match on every row).
-  *            `parse` rejects MEASURES —
-  *            use `parseStatement`, whose result carries them.
-  *            PARTITION BY / ORDER BY / TYPE make the statement
-  *            self-contained: `CepSqlStatement.spec` derives the full
-  *            CepSpec, with attrCols = the attributes the statement
-  *            references)
+  *           `SUM(a.price * a.qty)`, `AVG(2 * c.v + 1)` — folded per
+  *           bound event: a NULL attribute poisons the EVENT's value
+  *           and the aggregate skips that event (FIRST/LAST read the
+  *           target event's possibly-NULL value). Every ref must be
+  *           qualified (`name.attr`) and all refs must share ONE
+  *           pattern or SUBSET name — SQL:2016's one-variable rule. A
+  *           lone `name.attr` is the plain attribute form.)
   * alt    := seq ('|' seq)*     (alternation, SQL:2016 `a | b`: match
   *           either branch; binds LOOSER than concatenation, so
   *           `a b | c` = `(a b) | c`. A match binds only the names of
@@ -1156,35 +1156,6 @@ object CepSql {
     st.query
   }
 
-  // NOT PREV/NEXT: the physical-navigation wrappers (incl. the
-  // un-nested `PREV(a.v)` sugar) go through the recursive parser
-  private val MeasureRe =
-    """^(?:(RUNNING|FINAL)\s+)?(?!PREV\b|NEXT\b)([A-Z]+)\s*\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*(?:\.\s*([A-Za-z_][A-Za-z0-9_]*))?\s*(?:,\s*(\d+)\s*)?\)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$""".r
-
-  /** SQL:2016 nullary match-level measures: `CLASSIFIER()` (the last
-    * bound event's pattern name — "which branch matched" under an
-    * alternation; the TARGETED `CLASSIFIER(u)` form parses through the
-    * general MeasureRe) and `MATCH_NUMBER()` (the deterministic per-key
-    * match sequence; batch-only — the classifier streams via the
-    * emission fold).
-    */
-  private val NullaryMeasureRe =
-    """^(?:(RUNNING|FINAL)\s+)?(CLASSIFIER|MATCH_NUMBER)\s*\(\s*\)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$""".r
-
-  /** SQL:2016 `COUNT(*)` (every row of the match) and `COUNT(name.*)`
-    * (every row mapped to `name` — ≡ the positional `COUNT(name)`).
-    * Parse-side sugar: `COUNT(*)` desugars once the pattern names are
-    * known — to plain `COUNT(n)` for a one-name pattern, else to the
-    * measure expression `COUNT(n1) + … + COUNT(nk)` (each bound event
-    * maps to exactly one name, so the sum IS the row count; under ALL
-    * ROWS the running sums compose the same way). `render` prints the
-    * desugared form, like the grammar's other sugar.
-    */
-  private val CountStarRe =
-    """^(?:(RUNNING|FINAL)\s+)?COUNT\s*\(\s*\*\s*\)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$""".r
-  private val CountNameStarRe =
-    """^(?:(RUNNING|FINAL)\s+)?COUNT\s*\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\.\s*\*\s*\)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$""".r
-
   /** Split at commas OUTSIDE parentheses — the item separator of the
     * MEASURES and SUBSET sections, whose items carry nested commas
     * (`FIRST(a.v, 2)`, `u = (a, b)`).
@@ -1237,61 +1208,31 @@ object CepSql {
     out
   }
 
-  private def parseMeasure(text: String): CepMeasures.MeasureItem =
-    text.trim match {
-      // COUNT(name.*) ≡ COUNT(name); COUNT(*) parses to a '*'-named
-      // placeholder the statement assembler desugars once the pattern
-      // names are known (see CountStarRe)
-      case CountNameStarRe(sem, name, alias) =>
-        CepMeasures.Measure(CepMeasures.Fn.Count, name, None, alias,
-          isFinal = sem == "FINAL")
-      case CountStarRe(sem, alias) =>
-        CepMeasures.Measure(CepMeasures.Fn.Count, "*", None, alias,
-          isFinal = sem == "FINAL")
-      case NullaryMeasureRe(sem, fn, alias) =>
-        CepMeasures.Measure(CepMeasures.Fn.fromName(fn), "", None, alias,
-          isFinal = sem == "FINAL")
-      case MeasureRe(sem, fn, name, attr, off, alias) =>
-        // \d+ can still overflow Int — fail with the parser's voice
-        val offset = Option(off).fold(0)(o =>
-          try o.toInt catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"CEP SQL MEASURES: offset '$o' out of range") })
-        CepMeasures.Measure(CepMeasures.Fn.fromName(fn), name,
-          Option(attr), alias, isFinal = sem == "FINAL", offset = offset)
-      case t => parseMeasureExpr(t)
-    }
-
-  private val MeasureExprRe =
+  private val MeasureItemRe =
     """(?s)^(?:(RUNNING|FINAL)\s+)?(.*\S)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$""".r
 
-  /** The general measure-item form: `[RUNNING|FINAL] expr AS alias`
-    * where `expr` is integer arithmetic over measure atoms —
-    * SQL:2016's <measure expression> (integer fragment):
+  /** One MEASURES item, `[RUNNING|FINAL] expr AS alias` (the `meas`
+    * production of the grammar above). One recursive descent parses the
+    * one arithmetic, `arith(leaf)`, for both kinds of leaf: a measure
+    * atom at the item level, and a qualified `name.attr` inside an
+    * aggregate argument, where every ref must name the same pattern
+    * (or SUBSET) variable.
     *
-    *   expr   := term (('+' | '-') term)*      (left-associative)
-    *   term   := factor ('*' factor)*
-    *   factor := INT | '(' expr ')' | FN '(' aarg [',' k] ')'
-    *           | 'MATCH_NUMBER()'              (CLASSIFIER() is STRING —
-    *                                            rejected in arithmetic)
-    *   aarg   := name | name '.' attr
-    *           | <aexpr over one name's attrs> (aggregate-argument
-    *             expression — `SUM(a.price * a.qty)`; see the grammar
-    *             doc's `aexpr` production)
-    *
-    * A bare single atom parses through the fast-path regexes above and
-    * yields a plain [[CepMeasures.Measure]]; this path produces an
-    * [[CepMeasures.ExprMeasure]] unless the expression collapses to one
-    * atom (`(FIRST(a)) AS x`), which is canonicalized back to the plain
-    * form so parse∘render is identity.
+    * A lone atom, parenthesized or not, yields a plain
+    * [[CepMeasures.Measure]], anything else an
+    * [[CepMeasures.ExprMeasure]]; likewise a lone `name.attr` argument
+    * is the plain attribute form. So parse∘render is the identity.
+    * `COUNT(*)` parses to a '*'-named placeholder that the statement
+    * assembler desugars once the pattern names are known.
     */
-  private def parseMeasureExpr(text: String): CepMeasures.MeasureItem = {
+  private def parseMeasure(text: String): CepMeasures.MeasureItem = {
+    import CepMeasures.{Arith, Fn, Measure}
     def fail(why: String): Nothing = throw new IllegalArgumentException(
       "CEP SQL MEASURES: expected '[RUNNING|FINAL] FN(name[.attr]" +
         "[, offset]) AS alias', 'CLASSIFIER() / MATCH_NUMBER() AS " +
-        s"alias', or arithmetic over them — $why in '$text'")
-    val (sem, body, alias) = text match {
-      case MeasureExprRe(s, b, a) => (s, b, a)
+        s"alias', or arithmetic over them — $why in '${text.trim}'")
+    val (sem, body, alias) = text.trim match {
+      case MeasureItemRe(s, b, a) => (s, b, a)
       case _ => fail("no 'AS alias' suffix")
     }
     var i = 0
@@ -1316,207 +1257,138 @@ object CepSql {
       catch { case _: NumberFormatException =>
         fail(s"integer literal out of range at offset $start") }
     }
-    def atom(fnName: String): CepMeasures.MExpr.Atom =
+    // an optional `, n` argument in [min, Int.MaxValue], else `default`
+    def intArg(default: Int, min: Int, why: String): Int = {
+      ws()
+      if (peek == ',') { i += 1
+        val n = number()
+        if (n < min || n > Int.MaxValue) fail(why)
+        n.toInt
+      } else default
+    }
+    // the one arithmetic descent, over any leaf parser
+    def factor[L](leaf: () => Arith[L]): Arith[L] = {
+      ws()
+      if (peek == '(') { i += 1
+        val e = arith(leaf); ws(); eat(')'); e
+      } else if (peek.isDigit) Arith.Lit(number())
+      else leaf()
+    }
+    def term[L](leaf: () => Arith[L]): Arith[L] = {
+      var e = factor(leaf)
+      ws()
+      while (peek == '*' || peek == '/') {
+        val op = peek; i += 1
+        e = if (op == '*') Arith.Mul(e, factor(leaf))
+            else Arith.Div(e, factor(leaf))
+        ws()
+      }
+      e
+    }
+    def arith[L](leaf: () => Arith[L]): Arith[L] = {
+      var e = term(leaf)
+      ws()
+      while (peek == '+' || peek == '-') {
+        val op = peek; i += 1
+        e = if (op == '+') Arith.Add(e, term(leaf))
+            else Arith.Sub(e, term(leaf))
+        ws()
+      }
+      e
+    }
+    // the aggregate argument after `FN(`: (name, attr, argument expr)
+    def argument(fn: Fn)
+        : (String, Option[String], Option[Arith[String]]) = {
+      val start = i
+      val name = if (peek.isDigit || peek == '(') "" else ident()
+      ws()
+      val afterDot = body.indexWhere(!_.isWhitespace, i + 1)
+      if (name.nonEmpty && (peek == ',' || peek == ')'))
+        (name, None, None) // positional fn(name[, k])
+      else if (fn == Fn.Count && peek == '.' && afterDot > 0 &&
+          body(afterDot) == '*') {
+        i = afterDot + 1 // COUNT(name.*) ≡ COUNT(name)
+        (name, None, None)
+      } else {
+        i = start
+        val names = scala.collection.mutable.LinkedHashSet.empty[String]
+        val e = arith { () =>
+          val n = ident()
+          ws()
+          if (peek != '.') fail(
+            s"aggregate-argument refs must be qualified ('$n.attr')")
+          i += 1
+          names += n
+          Arith.Leaf(ident())
+        }
+        if (names.size != 1) fail(
+          "an aggregate argument must reference exactly one pattern " +
+            s"(or SUBSET) name, got {${names.mkString(", ")}}")
+        e match {
+          case Arith.Leaf(attr) => (names.head, Some(attr), None)
+          case other            => (names.head, None, Some(other))
+        }
+      }
+    }
+    def atom(fnName: String): Measure =
       if (fnName == "PREV" || fnName == "NEXT") {
         // SQL:2016 nested physical navigation:
         //   PREV(FIRST/LAST(name.attr[, k])[, steps])
         // the navigated row is `steps` PHYSICAL rows before/after the
         // logical target (default 1); batch-only downstream
-        val isNext = fnName == "NEXT"
         ws(); eat('(')
-        val innerName = ident()
-        if (innerName == "PREV" || innerName == "NEXT")
+        val inner = ident()
+        if (inner == "PREV" || inner == "NEXT")
           fail("PREV/NEXT do not nest in each other — one physical " +
             "hop around one FIRST/LAST")
-        def steps(): Int = {
-          ws()
-          if (peek == ',') { i += 1
-            val n = number()
-            if (n < 1 || n > Int.MaxValue)
-              fail("PREV/NEXT steps must be a positive integer")
-            n.toInt
-          } else 1
-        }
         ws()
-        val m = if (peek == '.') {
-          // un-nested SQL:2016 form `PREV(name.attr[, steps])` — in
-          // ONE ROW PER MATCH's final semantics this is sugar for
-          // `PREV(LAST(name.attr)[, steps])`; canonicalized to the
-          // nested AST (render prints the nested form)
-          i += 1
-          val attr = ident()
-          val s = steps()
-          ws(); eat(')')
-          CepMeasures.Measure(CepMeasures.Fn.Last, innerName, Some(attr),
-            "", phys = Some(CepMeasures.PhysNav(isNext, s)))
-        } else {
-          val innerAtom = atom(innerName).m
-          val s = steps()
-          ws(); eat(')')
-          innerAtom.copy(phys = Some(CepMeasures.PhysNav(isNext, s)))
-        }
-        CepMeasures.MExpr.Atom(m)
-      } else atomFn(fnName)
-    def atomFn(fnName: String): CepMeasures.MExpr.Atom = {
-      val fn = CepMeasures.Fn.fromName(fnName)
-      ws(); eat('(')
-      def parseOff(): Int = {
-        ws()
-        if (peek == ',') { i += 1
-          val n = number()
-          if (n > Int.MaxValue) fail("offset out of range")
-          n.toInt
-        } else 0
-      }
-      if (CepMeasures.Fn.isNullary(fn)) { ws(); eat(')')
-        CepMeasures.MExpr.Atom(CepMeasures.Measure(fn, "", None, ""))
+        // the un-nested SQL:2016 form `PREV(name.attr[, steps])` is, in
+        // ONE ROW PER MATCH's final semantics, sugar for
+        // `PREV(LAST(name.attr)[, steps])` (render prints the nested form)
+        val m =
+          if (peek == '.') { i += 1
+            Measure(Fn.Last, inner, Some(ident()), "")
+          } else atom(inner)
+        val steps = intArg(1, 1, "PREV/NEXT steps must be a positive integer")
+        ws(); eat(')')
+        m.copy(phys = Some(CepMeasures.PhysNav(fnName == "NEXT", steps)))
       } else {
-        // the aggregate ARGUMENT: a bare `name` (positional) or
-        // `name.attr` with no arithmetic keeps the plain-atom shape;
-        // a literal, a parenthesis, or an operator after the first ref
-        // parses as an aggregate-argument expression (SQL:2016 value
-        // expression, integer fragment — `SUM(a.price * a.qty)`) whose
-        // qualified refs must all share ONE pattern (or SUBSET) name
-        val argNames = scala.collection.mutable.LinkedHashSet.empty[String]
-        def aFact(): CepMeasures.AExpr = {
-          ws()
-          if (peek == '(') { i += 1; val e = aExpr(); ws(); eat(')'); e }
-          else if (peek.isDigit) CepMeasures.AExpr.Lit(number())
-          else {
-            val n = ident()
-            ws()
-            if (peek != '.') fail(
-              s"aggregate-argument refs must be qualified ('$n.attr')")
-            i += 1
-            argNames += n
-            CepMeasures.AExpr.Ref(ident())
-          }
-        }
-        def aTermTail(first: CepMeasures.AExpr): CepMeasures.AExpr = {
-          var e = first
-          ws()
-          while (peek == '*' || peek == '/') {
-            val op = peek; i += 1
-            e = if (op == '*') CepMeasures.AExpr.Mul(e, aFact())
-                else CepMeasures.AExpr.Div(e, aFact())
-            ws()
-          }
-          e
-        }
-        def aExprTail(first: CepMeasures.AExpr): CepMeasures.AExpr = {
-          var e = aTermTail(first)
-          ws()
-          while (peek == '+' || peek == '-') {
-            val op = peek; i += 1
-            e = if (op == '+') CepMeasures.AExpr.Add(e, aTermTail(aFact()))
-                else CepMeasures.AExpr.Sub(e, aTermTail(aFact()))
-            ws()
-          }
-          e
-        }
-        def aExpr(): CepMeasures.AExpr = aExprTail(aFact())
-        def oneName(): String = {
-          if (argNames.size != 1) fail(
-            "an aggregate argument must reference exactly one pattern " +
-              s"(or SUBSET) name, got {${argNames.mkString(", ")}}")
-          argNames.head
-        }
-        ws()
-        // SQL DISTINCT set quantifier — COUNT/SUM over the distinct
-        // per-event values (word-bounded so a ref named "DISTINCTx"
-        // still parses as a ref)
-        val distinct =
-          if (body.regionMatches(i, "DISTINCT", 0, 8) &&
-              (i + 8 >= body.length ||
-                (!body(i + 8).isLetterOrDigit && body(i + 8) != '_'))) {
-            i += 8; ws(); true
-          } else false
-        if (peek.isDigit || peek == '(') {
-          val e = aExpr()
-          val off = parseOff()
-          ws(); eat(')')
-          e match {
-            // a parenthesized bare ref collapses to the plain atom, so
-            // parse∘render stays the identity (render never emits it)
-            case CepMeasures.AExpr.Ref(attr) =>
-              CepMeasures.MExpr.Atom(CepMeasures.Measure(fn, oneName(),
-                Some(attr), "", offset = off, distinct = distinct))
-            case other =>
-              CepMeasures.MExpr.Atom(CepMeasures.Measure(fn, oneName(),
-                None, "", offset = off, argExpr = Some(other),
-                distinct = distinct))
-          }
+        val fn = Fn.fromName(fnName)
+        ws(); eat('('); ws()
+        if (fn == Fn.MatchNo || (fn == Fn.Classifier && peek == ')')) {
+          eat(')')
+          Measure(fn, "", None, "")
+        } else if (fn == Fn.Count && peek == '*') {
+          i += 1; ws(); eat(')')
+          Measure(fn, "*", None, "")
         } else {
-          val name = ident()
-          ws()
-          if (peek == '.') {
-            i += 1
-            argNames += name
-            val e = aExprTail(CepMeasures.AExpr.Ref(ident()))
-            val off = parseOff()
-            ws(); eat(')')
-            e match {
-              // no arithmetic — the plain fn(name.attr) atom
-              case CepMeasures.AExpr.Ref(attr) =>
-                CepMeasures.MExpr.Atom(
-                  CepMeasures.Measure(fn, name, Some(attr), "",
-                    offset = off, distinct = distinct))
-              case other =>
-                CepMeasures.MExpr.Atom(CepMeasures.Measure(fn, oneName(),
-                  None, "", offset = off, argExpr = Some(other),
-                  distinct = distinct))
-            }
-          } else if (peek == ',' || peek == ')') {
-            // positional fn(name[, k]) — DISTINCT over order ids is the
-            // plain form; the ctor rejects the marker loudly
-            val off = parseOff()
-            ws(); eat(')')
-            CepMeasures.MExpr.Atom(
-              CepMeasures.Measure(fn, name, None, "", offset = off,
-                distinct = distinct))
-          } else fail(
-            s"aggregate-argument refs must be qualified ('$name.attr')")
+          // SQL DISTINCT set quantifier — COUNT/SUM over the distinct
+          // per-event values (word-bounded so a ref named "DISTINCTx"
+          // still parses as a ref); positional DISTINCT is rejected by
+          // the Measure ctor
+          val distinct =
+            if (body.regionMatches(i, "DISTINCT", 0, 8) &&
+                (i + 8 >= body.length ||
+                  (!body(i + 8).isLetterOrDigit && body(i + 8) != '_'))) {
+              i += 8; ws(); true
+            } else false
+          val (name, attr, argExpr) = argument(fn)
+          val offset = intArg(0, 0, "offset out of range")
+          ws(); eat(')')
+          Measure(fn, name, attr, "", offset = offset, argExpr = argExpr,
+            distinct = distinct)
         }
       }
-    }
-    def factor(): CepMeasures.MExpr = {
-      ws()
-      if (peek == '(') { i += 1
-        val e = expr(); ws(); eat(')'); e
-      } else if (peek.isDigit) CepMeasures.MExpr.Lit(number())
-      else atom(ident())
-    }
-    def term(): CepMeasures.MExpr = {
-      var e = factor()
-      ws()
-      while (peek == '*' || peek == '/') {
-        val op = peek; i += 1
-        e = if (op == '*') CepMeasures.MExpr.Mul(e, factor())
-            else CepMeasures.MExpr.Div(e, factor())
-        ws()
-      }
-      e
-    }
-    def expr(): CepMeasures.MExpr = {
-      var e = term()
-      ws()
-      while (peek == '+' || peek == '-') {
-        val op = peek; i += 1
-        e = if (op == '+') CepMeasures.MExpr.Add(e, term())
-            else CepMeasures.MExpr.Sub(e, term())
-        ws()
-      }
-      e
-    }
-    val e = expr()
+    val e = arith(() => Arith.Leaf(atom(ident())))
     ws()
     if (i != body.length) fail(s"trailing input at offset $i")
     val isFinal = sem == "FINAL"
     e match {
-      // a parenthesized single atom collapses to the plain measure form
-      case CepMeasures.MExpr.Atom(m) =>
-        m.copy(alias = alias, isFinal = isFinal)
-      case other => CepMeasures.ExprMeasure(other, alias, isFinal)
+      case Arith.Leaf(m) => m.copy(alias = alias, isFinal = isFinal)
+      case other =>
+        if (Arith.leaves(other).exists(_.name == "*"))
+          fail("COUNT(*) is a whole measure, not an arithmetic operand")
+        CepMeasures.ExprMeasure(other, alias, isFinal)
     }
   }
 
@@ -2009,7 +1881,7 @@ object CepSql {
         val attrs = refAttrs.toVector.sorted
         ts.map(_ -> attrs)
     }
-    // COUNT(*) desugar (see CountStarRe): one-name pattern → plain
+    // COUNT(*) desugar (see the grammar): one-name pattern → plain
     // COUNT(n); else COUNT(n1) + … + COUNT(nk) over the names in
     // declaration order (each bound event maps to exactly one name).
     // GROUP labels bind no events — they contribute nothing to the row
@@ -2023,9 +1895,10 @@ object CepSql {
           .filterNot(n => defMap.get(n).exists(_.event == GroupEvent))
         if (ordered.size == 1) m.copy(name = ordered.head)
         else CepMeasures.ExprMeasure(
-          ordered.map(n => CepMeasures.MExpr.Atom(
+          ordered.map(n => CepMeasures.Arith.Leaf(
             CepMeasures.Measure(CepMeasures.Fn.Count, n, None, "")))
-            .reduceLeft[CepMeasures.MExpr](CepMeasures.MExpr.Add(_, _)),
+            .reduceLeft[CepMeasures.Arith[CepMeasures.Measure]](
+              CepMeasures.Arith.Add(_, _)),
           m.alias, m.isFinal)
       case other => other
     }
@@ -2048,8 +1921,7 @@ object CepSql {
               "bind no events to measure")
           Vector(d.event)
       }
-      (m.attr.toVector ++ m.argExpr.fold(Vector.empty[String])(
-        CepMeasures.AExpr.refs)).foreach { a =>
+      CepMeasures.attrsOf(m).foreach { a =>
         events.foreach { ev =>
           val attrs = schema.collectFirst { case (e, as) if e == ev => as }
             .getOrElse(Vector.empty)
@@ -2290,29 +2162,9 @@ object CepSql {
     }
     val body = (if (q.anchorStart) "^ " else "") + topS(q.patseq) +
       (if (q.anchorEnd) " $" else "")
-    // aggregate-argument expression render — same precedence scheme as
-    // the outer measure expression below (leaves print as `name.attr`)
-    def aLvl(e: CepMeasures.AExpr): Int = e match {
-      case _: CepMeasures.AExpr.Add | _: CepMeasures.AExpr.Sub => 1
-      case _: CepMeasures.AExpr.Mul | _: CepMeasures.AExpr.Div => 2
-      case _                                                   => 3
-    }
-    def argExprS(e: CepMeasures.AExpr, name: String): String = {
-      def sub(c: CepMeasures.AExpr, minLvl: Int): String =
-        if (aLvl(c) < minLvl) s"(${argExprS(c, name)})"
-        else argExprS(c, name)
-      e match {
-        case CepMeasures.AExpr.Ref(a)    => s"$name.$a"
-        case CepMeasures.AExpr.Lit(v)    => v.toString
-        case CepMeasures.AExpr.Add(l, r) => s"${sub(l, 1)} + ${sub(r, 2)}"
-        case CepMeasures.AExpr.Sub(l, r) => s"${sub(l, 1)} - ${sub(r, 2)}"
-        case CepMeasures.AExpr.Mul(l, r) => s"${sub(l, 2)} * ${sub(r, 3)}"
-        case CepMeasures.AExpr.Div(l, r) => s"${sub(l, 2)} / ${sub(r, 3)}"
-      }
-    }
     def atomS(m: CepMeasures.Measure): String = {
       val arg = m.argExpr match {
-        case Some(ae) => argExprS(ae, m.name)
+        case Some(ae) => CepMeasures.Arith.render(ae, (a: String) => s"${m.name}.$a")
         case None     => s"${m.name}${m.attr.fold("")("." + _)}"
       }
       val base = s"${m.fn.sqlName}(" +
@@ -2325,34 +2177,13 @@ object CepSql {
         case None => base
       }
     }
-    // precedence-aware expression render: + and - at level 1, * at 2,
-    // leaves at 3. The parser is left-associative, so a LEFT child at
-    // the same level needs no parentheses but a RIGHT one does (it could
-    // not have been produced unparenthesized) — this makes parse∘render
-    // the identity on parser-producible trees.
-    def lvl(e: CepMeasures.MExpr): Int = e match {
-      case _: CepMeasures.MExpr.Add | _: CepMeasures.MExpr.Sub => 1
-      case _: CepMeasures.MExpr.Mul | _: CepMeasures.MExpr.Div => 2
-      case _                                                   => 3
-    }
-    def measExprS(e: CepMeasures.MExpr): String = {
-      def sub(c: CepMeasures.MExpr, minLvl: Int): String =
-        if (lvl(c) < minLvl) s"(${measExprS(c)})" else measExprS(c)
-      e match {
-        case CepMeasures.MExpr.Atom(m)   => atomS(m)
-        case CepMeasures.MExpr.Lit(v)    => v.toString
-        case CepMeasures.MExpr.Add(l, r) => s"${sub(l, 1)} + ${sub(r, 2)}"
-        case CepMeasures.MExpr.Sub(l, r) => s"${sub(l, 1)} - ${sub(r, 2)}"
-        case CepMeasures.MExpr.Mul(l, r) => s"${sub(l, 2)} * ${sub(r, 3)}"
-        case CepMeasures.MExpr.Div(l, r) => s"${sub(l, 2)} / ${sub(r, 3)}"
-      }
-    }
     val measS =
       if (measures.isEmpty) ""
       else "\nMEASURES " + measures.map { item =>
         (if (item.isFinal) "FINAL " else "") + (item match {
           case m: CepMeasures.Measure     => atomS(m)
-          case e: CepMeasures.ExprMeasure => measExprS(e.expr)
+          case e: CepMeasures.ExprMeasure =>
+            CepMeasures.Arith.render(e.expr, atomS)
         }) + s" AS ${item.alias}"
       }.mkString(", ") + "\n"
     val subS =

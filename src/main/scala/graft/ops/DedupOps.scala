@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   *     banding then joins 16-byte band keys, never documents.
   *
   * Cache contract: the pair-join operators (`ngramJaccardPairs`,
-  * `ngramJaccardPairsPrefix`, `minHashLshPairs`, `simHashPairs`) `cache()`
+  * `minHashLshPairs`, `simHashPairs`) `cache()`
   * or `persist()` an intermediate that both join sides read. The cache is
   * lazy — building the returned frame runs no job; its first action fills
   * the cache. The blocks persist (storage level spills, never OOMs) until
@@ -150,98 +150,6 @@ object DedupOps {
       .withColumn("uni", col("n1") + col("n2") - col("inter"))
       .filter(col("inter") * 1000 >= col("uni") * simMilli)
       .select(col("id1"), col("id2"), col("inter"), col("uni"))
-  }
-
-  /** Prefix-filtered Jaccard pair join (AllPairs/PPJoin-style) — the
-    * corpus-scale variant of `ngramJaccardPairs` with identical output.
-    *
-    * Shingles get a global canonical order (ascending frequency, then
-    * hash); for Jaccard ≥ t a qualifying pair must share its *smallest*
-    * common shingle inside both docs' prefixes of length
-    * `|d| − ⌈t·|d|⌉ + 1` (if the smallest common shingle sat outside a
-    * doc's prefix, the overlap would fit inside the suffix of length
-    * `⌈t·|d|⌉ − 1 < t·|d| ≤ overlap` — contradiction). Only prefixes are
-    * self-joined — rare shingles first, so posting lists are short where
-    * the join is quadratic — and the surviving candidates are verified
-    * exactly with a sorted-merge intersection of the full hash lists.
-    *
-    * The join workload drops from Σ|posting|² over *all* shingles to the
-    * prefix fraction (1−t of each doc), concentrated on rare shingles; at
-    * t = 0.8 that is a ~25× candidate reduction on uniform corpora.
-    * `maxShingleFreq` additionally drops over-frequent shingles from the
-    * index before anything else (same semantics as `ngramJaccardPairs`:
-    * filtered shingles leave both the candidate join and the per-doc
-    * sets/counts) — the corpus-scale valve against ubiquitous shingles.
-    *
-    * Soundness caveat: the prefix bound reasons over per-doc *distinct*
-    * shingles. Shingle strings are distinct per doc by construction, but
-    * the prefix arithmetic runs on their 60-bit `tokenHash60` values — an
-    * in-doc hash collision merges two distinct shingles into one list
-    * entry for the bound while verification product-counts the collision
-    * (mirroring the plain variant's hash equi-join). A qualifying pair
-    * could in principle be missed then; at 2⁻⁶⁰ per shingle pair this is
-    * astronomically rare, and the failure mode is one lost candidate, not
-    * a wrong score.
-    */
-  def ngramJaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, simMilli: Int = 500,
-      maxShingleFreq: Long = Long.MaxValue): DataFrame = {
-    val idx = shingleIndex(df, idCol, textCol, n)
-    val freq = idx.groupBy(col("sh")).agg(count(lit(1)).as("freq"))
-    // per-doc shingle hashes in global canonical order (rarest first);
-    // the freq join feeds both the canonical order and the frequency cap
-    val docsArr = idx.join(freq, "sh")
-      .filter(col("freq") <= maxShingleFreq)
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("freq"), col("sh"))))
-        .as("fs"))
-      .select(col(idCol), transform(col("fs"), x => x("sh")).as("shs"))
-      .cache()
-    // prefix length |d| - ceil(t*|d|) + 1, integer-exact:
-    // ceil(size*simMilli/1000) = (size*simMilli + 999) div 1000
-    val prefixLen =
-      size(col("shs")) - ((size(col("shs")) * simMilli + 999) / 1000)
-        .cast(IntegerType) + 1
-    val pref = docsArr.select(col(idCol),
-      explode(slice(col("shs"), lit(1), prefixLen)).as("sh"))
-    val cand = pref.select(col(idCol).as("id1"), col("sh"))
-      .join(pref.select(col(idCol).as("id2"), col("sh")), "sh")
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    val outSchema = StructType(Seq(
-      StructField("id1", LongType, nullable = false),
-      StructField("id2", LongType, nullable = false),
-      StructField("inter", LongType, nullable = false),
-      StructField("uni", LongType, nullable = false)))
-    cand
-      .join(docsArr.select(col(idCol).as("id1"), col("shs").as("s1")), "id1")
-      .join(docsArr.select(col(idCol).as("id2"), col("shs").as("s2")), "id2")
-      .select(col("id1"), col("id2"), col("s1"), col("s2"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val a = r.getSeq[Long](2).toArray
-          val b = r.getSeq[Long](3).toArray
-          java.util.Arrays.sort(a); java.util.Arrays.sort(b)
-          // product-count equal-hash runs: identical to the hash equi-join
-          // semantics of the plain variant (collisions counted c1·c2)
-          var i = 0; var j = 0; var inter = 0L
-          while (i < a.length && j < b.length) {
-            if (a(i) < b(j)) i += 1
-            else if (a(i) > b(j)) j += 1
-            else {
-              val v = a(i)
-              var ca = 0L; var cb = 0L
-              while (i < a.length && a(i) == v) { ca += 1; i += 1 }
-              while (j < b.length && b(j) == v) { cb += 1; j += 1 }
-              inter += ca * cb
-            }
-          }
-          val uni = a.length.toLong + b.length - inter
-          if (inter * 1000 >= uni * simMilli)
-            Iterator.single(Row(r.getLong(0), r.getLong(1), inter, uni))
-          else Iterator.empty
-        }
-      }(Encoders.row(outSchema))
   }
 
   /** MinHash parameters: k independent hash functions over shingle hashes,

@@ -437,17 +437,17 @@ class CepMeasuresSpec extends AnyFunSuite with BeforeAndAfterAll {
       (5L, -5L, true, 5L), (7L, -3L, true, 7L)))
     // streaming/eval fold agrees on the truncated quotient and the
     // zero-divisor NULL
-    import CepMeasures.MExpr._
+    import CepMeasures.Arith._
     val cnt = CepMeasures.Measure(CepMeasures.Fn.Count, "c", None, "")
     val sumv = CepMeasures.Measure(CepMeasures.Fn.Sum, "c", Some("v"), "")
     val byName = Map("s" -> Vector(Event("S", Vector("id" -> 1L))),
       "c" -> Vector(Event("C", Vector("id" -> 2L, "v" -> 7L)),
         Event("C", Vector("id" -> 3L, "v" -> 4L))))
-    def ev(e: CepMeasures.MExpr) = CepMeasures.evalItem(
+    def ev(e: CepMeasures.Arith[CepMeasures.Measure]) = CepMeasures.evalItem(
       CepMeasures.ExprMeasure(e, "x"), byName, "id", Map.empty)
-    assert(ev(Div(Sub(Lit(0), Atom(sumv)), Lit(2))) == Some(-5L))
-    assert(ev(Div(Atom(sumv), Atom(cnt))) == Some(5L))
-    assert(ev(Div(Atom(cnt), Sub(Atom(cnt), Atom(cnt)))) == None)
+    assert(ev(Div(Sub(Lit(0), Leaf(sumv)), Lit(2))) == Some(-5L))
+    assert(ev(Div(Leaf(sumv), Leaf(cnt))) == Some(5L))
+    assert(ev(Div(Leaf(cnt), Sub(Leaf(cnt), Leaf(cnt)))) == None)
   }
 
   test("measure expressions: long arithmetic over atoms, hand-computed; " +
@@ -826,8 +826,8 @@ class CepMeasuresSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rejects the paren shape first)
     val eNul = intercept[IllegalArgumentException] {
       CepMeasures.Measure(CepMeasures.Fn.MatchNo, "", None, "x",
-        argExpr = Some(CepMeasures.AExpr.Mul(
-          CepMeasures.AExpr.Ref("v"), CepMeasures.AExpr.Lit(2L))))
+        argExpr = Some(CepMeasures.Arith.Mul(
+          CepMeasures.Arith.Leaf("v"), CepMeasures.Arith.Lit(2L))))
     }
     assert(eNul.getMessage.contains("takes no argument expression"))
     bad("SUM(1 + 2) AS x", "exactly one pattern")

@@ -202,46 +202,46 @@ class CepSqlFuzzSpec extends AnyFunSuite {
       // aggregate-argument tree: refs over the shared attrs v/w plus
       // literals; rndArg forces an operator top with a ref on the left
       // so the tree is compound and references ≥1 attribute
-      def rndAExpr(depth: Int): CepMeasures.AExpr =
+      def rndAExpr(depth: Int): CepMeasures.Arith[String] =
         if (depth == 0) {
           if (rnd.nextInt(3) == 0)
-            CepMeasures.AExpr.Lit(rnd.nextInt(50).toLong)
-          else CepMeasures.AExpr.Ref(if (rnd.nextBoolean()) "v" else "w")
+            CepMeasures.Arith.Lit(rnd.nextInt(50).toLong)
+          else CepMeasures.Arith.Leaf(if (rnd.nextBoolean()) "v" else "w")
         } else rnd.nextInt(4) match {
-          case 0 => CepMeasures.AExpr.Add(rndAExpr(depth - 1),
+          case 0 => CepMeasures.Arith.Add(rndAExpr(depth - 1),
             rndAExpr(rnd.nextInt(depth)))
-          case 1 => CepMeasures.AExpr.Sub(rndAExpr(depth - 1),
+          case 1 => CepMeasures.Arith.Sub(rndAExpr(depth - 1),
             rndAExpr(rnd.nextInt(depth)))
-          case 2 => CepMeasures.AExpr.Mul(rndAExpr(depth - 1),
+          case 2 => CepMeasures.Arith.Mul(rndAExpr(depth - 1),
             rndAExpr(rnd.nextInt(depth)))
-          case 3 => CepMeasures.AExpr.Div(rndAExpr(depth - 1),
+          case 3 => CepMeasures.Arith.Div(rndAExpr(depth - 1),
             rndAExpr(rnd.nextInt(depth)))
         }
-      def rndArg(): CepMeasures.AExpr = {
-        val l = CepMeasures.AExpr.Ref(if (rnd.nextBoolean()) "v" else "w")
+      def rndArg(): CepMeasures.Arith[String] = {
+        val l = CepMeasures.Arith.Leaf(if (rnd.nextBoolean()) "v" else "w")
         val r = rndAExpr(rnd.nextInt(2))
         rnd.nextInt(4) match {
-          case 0 => CepMeasures.AExpr.Add(l, r)
-          case 1 => CepMeasures.AExpr.Sub(l, r)
-          case 2 => CepMeasures.AExpr.Mul(l, r)
-          case 3 => CepMeasures.AExpr.Div(l, r)
+          case 0 => CepMeasures.Arith.Add(l, r)
+          case 1 => CepMeasures.Arith.Sub(l, r)
+          case 2 => CepMeasures.Arith.Mul(l, r)
+          case 3 => CepMeasures.Arith.Div(l, r)
         }
       }
       // random expression tree; any shape round-trips (the renderer
       // parenthesizes exactly where the left-assoc parser needs it)
-      def rndExpr(depth: Int): CepMeasures.MExpr =
+      def rndExpr(depth: Int): CepMeasures.Arith[CepMeasures.Measure] =
         if (depth == 0) {
           if (rnd.nextInt(4) == 0)
-            CepMeasures.MExpr.Lit(rnd.nextInt(100).toLong)
-          else CepMeasures.MExpr.Atom(rndMeasure("", allowNullary = false))
+            CepMeasures.Arith.Lit(rnd.nextInt(100).toLong)
+          else CepMeasures.Arith.Leaf(rndMeasure("", allowNullary = false))
         } else rnd.nextInt(4) match {
-          case 0 => CepMeasures.MExpr.Add(rndExpr(depth - 1),
+          case 0 => CepMeasures.Arith.Add(rndExpr(depth - 1),
             rndExpr(rnd.nextInt(depth)))
-          case 1 => CepMeasures.MExpr.Sub(rndExpr(depth - 1),
+          case 1 => CepMeasures.Arith.Sub(rndExpr(depth - 1),
             rndExpr(rnd.nextInt(depth)))
-          case 2 => CepMeasures.MExpr.Mul(rndExpr(depth - 1),
+          case 2 => CepMeasures.Arith.Mul(rndExpr(depth - 1),
             rndExpr(rnd.nextInt(depth)))
-          case 3 => CepMeasures.MExpr.Div(rndExpr(depth - 1),
+          case 3 => CepMeasures.Arith.Div(rndExpr(depth - 1),
             rndExpr(rnd.nextInt(depth)))
         }
       val measures: Vector[CepMeasures.MeasureItem] =
@@ -250,14 +250,14 @@ class CepSqlFuzzSpec extends AnyFunSuite {
             // top is an operator with an atom forced on the left, so the
             // tree never collapses to a bare (plain-measure) atom and
             // always references ≥1 atom
-            val l = CepMeasures.MExpr.Atom(
+            val l = CepMeasures.Arith.Leaf(
               rndMeasure("", allowNullary = false))
             val r = rndExpr(rnd.nextInt(3))
             val top = rnd.nextInt(4) match {
-              case 0 => CepMeasures.MExpr.Add(l, r)
-              case 1 => CepMeasures.MExpr.Sub(l, r)
-              case 2 => CepMeasures.MExpr.Mul(l, r)
-              case 3 => CepMeasures.MExpr.Div(l, r)
+              case 0 => CepMeasures.Arith.Add(l, r)
+              case 1 => CepMeasures.Arith.Sub(l, r)
+              case 2 => CepMeasures.Arith.Mul(l, r)
+              case 3 => CepMeasures.Arith.Div(l, r)
             }
             CepMeasures.ExprMeasure(top, s"m$i", rnd.nextBoolean())
           } else rndMeasure(s"m$i", allowNullary = true)

@@ -97,4 +97,23 @@ class LocalParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
          if Set("flat", "lists", "two-parts")(name))
       assert(LocalParquet.collect(spark, p).isDefined, s"$name: fell back")
   }
+
+  test("fuzz: map, decimal and timestamp layouts collect exactly or fall " +
+    "back") {
+    // the value's class joins its text, so a decimal or a timestamp that
+    // decodes as its raw long cannot pass for the real thing
+    def typed(rows: Seq[org.apache.spark.sql.Row]): Seq[String] =
+      rows.map(_.toSeq.map(v =>
+        if (v == null) "null" else s"${v.getClass.getName}:$v")
+        .mkString("|")).sorted
+    val root = java.nio.file.Files.createTempDirectory("local-parquet-typed")
+    for (seed <- Seq(1L, 2L, 3L);
+         (name, p) <- ParquetLayouts.writeTyped(spark, root, seed)) {
+      val viaSpark = spark.read.parquet(p).collect()
+      LocalParquet.collect(spark, p).foreach { local =>
+        assert(typed(local.toSeq) === typed(viaSpark.toSeq),
+          s"$name/$seed: values")
+      }
+    }
+  }
 }

@@ -151,28 +151,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.toSeq == Seq((1L, 2L, 2L, 4L)))
   }
 
-  test("prefix-filtered jaccard equals the plain inverted-index join") {
-    val rnd = new scala.util.Random(7)
-    val vocab = Vector("aa", "bb", "cc", "dd", "ee", "ff", "gg", "hh")
-    def doc() = Vector.fill(6 + rnd.nextInt(10))(
-      vocab(rnd.nextInt(vocab.length))).mkString(" ")
-    val base = (1L to 30L).map(i => i -> doc())
-    // inject guaranteed near-dups: copies and one-token edits
-    val docsAll = base ++ Seq(31L -> base(0)._2, 32L -> (base(1)._2 + " zz"))
-    val df = docs(docsAll: _*)
-    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    for (thresh <- Seq(300, 500, 800);
-        cap <- Seq(Long.MaxValue, 8L)) {
-      val plain = rows(DedupOps.ngramJaccardPairs(df, "doc_id", "text", 3,
-        thresh, cap))
-      val prefix = rows(DedupOps.ngramJaccardPairsPrefix(df, "doc_id",
-        "text", 3, thresh, cap))
-      assert(prefix == plain, s"thresh=$thresh cap=$cap")
-    }
-  }
-
   test("connected components: chains collapse to min id, singletons kept") {
     val s = spark
     import s.implicits._

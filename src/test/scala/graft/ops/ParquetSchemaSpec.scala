@@ -126,4 +126,21 @@ class ParquetSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(ParquetSchema.of(spark, p).isDefined, s"$name/$seed: fell back")
     }
   }
+
+  test("fuzz: map, decimal and timestamp layouts resolve to the inferred " +
+    "schema, and read the same rows") {
+    val root = java.nio.file.Files.createTempDirectory("parquet-schema-typed")
+    for (seed <- Seq(1L, 2L, 3L);
+         (name, p) <- ParquetLayouts.writeTyped(spark, root, seed)) {
+      val viaSpark = spark.read.parquet(p)
+      val fast = ParquetSchema.of(spark, p)
+      assert(fast.isDefined, s"$name/$seed: fell back")
+      assert(fast.get === viaSpark.schema, s"$name/$seed: schema")
+      val read = ParquetSchema.read(spark, p)
+      assert(read.schema === viaSpark.schema, s"$name/$seed: read schema")
+      assert(read.collect().map(_.toString).sorted.toSeq ===
+        viaSpark.collect().map(_.toString).sorted.toSeq,
+        s"$name/$seed: read rows")
+    }
+  }
 }

@@ -163,8 +163,6 @@ object JaccardLab {
         joinFreq2 = true)),
       "v6_eager_ckpt" -> (() => tailEager(idxMapPartitions,
         joinFreq2 = false)),
-      "v7_prefix" -> (() => graft.ops.DedupOps.ngramJaccardPairsPrefix(
-        docs, idCol, textCol, n, simMilli, maxShingleFreq)),
       "v8_posting_runs" -> (() => tailPostings(idxMapPartitions)),
       "v9_eager_freq2" -> (() => tailEager(idxMapPartitions,
         joinFreq2 = true)),
