@@ -2164,7 +2164,8 @@ object CepSql {
       (if (q.anchorEnd) " $" else "")
     def atomS(m: CepMeasures.Measure): String = {
       val arg = m.argExpr match {
-        case Some(ae) => CepMeasures.Arith.render(ae, (a: String) => s"${m.name}.$a")
+        case Some(ae) =>
+          CepMeasures.Arith.render(ae, (a: String) => s"${m.name}.$a")
         case None     => s"${m.name}${m.attr.fold("")("." + _)}"
       }
       val base = s"${m.fn.sqlName}(" +
