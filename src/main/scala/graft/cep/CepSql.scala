@@ -156,9 +156,9 @@ package graft.cep
   *            ROWS PER MATCH rejects a non-zero offset, a documented
   *            deviation)
   *         | 'COUNT' '(' [name '.'] '*' ')'
-  *           (SQL:2016 row counts — WHOLE-MEASURE forms only, not
-  *            arithmetic operands: `COUNT(name.*)` ≡ the positional
-  *            `COUNT(name)`; `COUNT(*)` desugars to
+  *           (SQL:2016 row counts: `COUNT(name.*)` ≡ the positional
+  *            `COUNT(name)`; `COUNT(*)` — a whole measure, not an
+  *            arithmetic operand — desugars to
   *            `COUNT(n1) + … + COUNT(nk)` over the EVENT-BINDING
   *            pattern names in declaration order (GROUP labels bind no
   *            events and are excluded; plain `COUNT(n)` when one name
@@ -1258,11 +1258,11 @@ object CepSql {
         fail(s"integer literal out of range at offset $start") }
     }
     // an optional `, n` argument in [min, Int.MaxValue], else `default`
-    def intArg(default: Int, min: Int, why: String): Int = {
+    def intArg(default: Int, min: Int, why: Long => String): Int = {
       ws()
       if (peek == ',') { i += 1
         val n = number()
-        if (n < min || n > Int.MaxValue) fail(why)
+        if (n < min || n > Int.MaxValue) fail(why(n))
         n.toInt
       } else default
     }
@@ -1349,7 +1349,8 @@ object CepSql {
           if (peek == '.') { i += 1
             Measure(Fn.Last, inner, Some(ident()), "")
           } else atom(inner)
-        val steps = intArg(1, 1, "PREV/NEXT steps must be a positive integer")
+        val steps =
+          intArg(1, 1, _ => "PREV/NEXT steps must be a positive integer")
         ws(); eat(')')
         m.copy(phys = Some(CepMeasures.PhysNav(fnName == "NEXT", steps)))
       } else {
@@ -1373,7 +1374,7 @@ object CepSql {
               i += 8; ws(); true
             } else false
           val (name, attr, argExpr) = argument(fn)
-          val offset = intArg(0, 0, "offset out of range")
+          val offset = intArg(0, 0, n => s"offset '$n' out of range")
           ws(); eat(')')
           Measure(fn, name, attr, "", offset = offset, argExpr = argExpr,
             distinct = distinct)
