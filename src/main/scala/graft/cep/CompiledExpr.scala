@@ -1,44 +1,49 @@
 package graft.cep
 
-/** Slot-compiled form of [[Expr]] for the NFA hot loop.
+/** The one evaluator of the condition language ([[Expr]]): every DEFINE
+  * condition and LET update runs through `eval`, and the semantics in
+  * the `Expr` header are this fold's.
   *
-  * The interpreter in `Expr.evalNumIn` resolves every `Ref` through a
-  * layered map env (`event.attrMap` shadowing the data registers) and
-  * string-matches the operator of every `Arith`/`Cmp` node on every
-  * evaluation. Both costs sit on the innermost per-(run, edge, event)
-  * loop. BENCH.md's round-11 negative result showed that compiling the
-  * tree to CLOSURES loses (megamorphic call sites), and named the
-  * retry precondition: make `Ref` lookups positional. This is that
-  * retry, keeping the shape that won — a sealed-trait tree walked by a
-  * pattern match (JITs to a tableswitch) — and changing only what the
-  * nodes carry:
+  * `compile` turns the tree into a form for the NFA hot loop, the
+  * innermost per-(run, edge, event) loop. BENCH.md's round-11 negative
+  * result showed that compiling the tree to CLOSURES loses (megamorphic
+  * call sites), and named the retry precondition: make `Ref` lookups
+  * positional. This form keeps the shape that won — a sealed-trait tree
+  * walked by a pattern match (JITs to a tableswitch) — and changes only
+  * what the nodes carry:
   *
   *   - `CAttr(slot, name)`: a ref whose edge's declared event layout
   *     (from `CepQuery.schema`) puts `name` at `slot` — evaluated as a
-  *     guarded array read on `event.attrs` (no per-event `attrMap`
-  *     construction, no hash lookup). The guard re-checks the name at
-  *     the slot, so a binding is an OPTIMIZATION HINT, never a
-  *     soundness assumption: an event that does not match the declared
-  *     layout (hand-built events, shared `Pred` objects bound for a
-  *     different edge) falls back to the generic path below.
+  *     guarded array read on `event.attrs` (no map, no hash lookup).
+  *     The guard re-checks the name at the slot, so a binding is an
+  *     OPTIMIZATION HINT, never a soundness assumption: an event that
+  *     does not match the declared layout (hand-built events, shared
+  *     `Pred` objects bound for a different edge) falls back to the
+  *     generic path below.
   *   - `CRef(name)`: generic resolution — scan `event.attrs`
-  *     LAST-occurrence-first (parity with `attrMap = attrs.toMap`,
-  *     where a duplicated name resolves to its last occurrence), then
+  *     LAST-occurrence-first (a duplicated name resolves to its last
+  *     occurrence, the reference's `{**env, **attrs}` dict merge), then
   *     the data registers, then the reference's NameError.
   *   - `CArith`/`CCmp` carry integer opcodes resolved at compile time.
   *
+  * `compile(e, null)` is the GENERIC form: no layout, every ref a
+  * `CRef`. `DstCompiler.bindSlots` binds every edge of a compiled `Dst`;
+  * a `Pred` or `DataUpdate` built elsewhere compiles the generic form on
+  * first use.
+  *
   * Known (documented) divergence: an event that declares the SAME attr
   * name twice AND matches a bound layout at the slot resolves to that
-  * slot's occurrence, where `attrMap` resolves to the last. Duplicate
-  * attr names in one event are unconstructible through the Spark
-  * operators (schema-driven) and ambiguous already (`Event.apply` is
-  * first-wins vs `attrMap` last-wins); schema layouts with duplicate
-  * names are never bound (see `DstCompiler.bindSlots`).
+  * slot's occurrence, where the generic form resolves to the last.
+  * Duplicate attr names in one event are unconstructible through the
+  * Spark operators (schema-driven) and ambiguous already (`Event.apply`
+  * is first-wins); schema layouts with duplicate names are never bound
+  * (see `DstCompiler.bindSlots`).
   *
-  * Differentially verified against both `Expr` evaluators over the
-  * 5,000-case Python-eval corpus under matched, absent, WRONG, and
-  * split attr/register layouts (`ExprDifferentialSpec`,
-  * `CompiledExprSpec`).
+  * Differentially verified against the CPython-eval corpora (5,000
+  * numeric cases, the string tier, LIKE/ESCAPE) in the generic form and
+  * under matched, absent, WRONG, and split attr/register layouts
+  * (`ExprDifferentialSpec`, `CompiledExprSpec`,
+  * `LikeEscapeDifferentialSpec`).
   */
 object CompiledExpr {
   sealed trait CExpr extends Serializable
@@ -157,9 +162,9 @@ object CompiledExpr {
         s"string attribute '$name' is not defined")
   }
 
-  /** Generic name resolution, exact parity with `Expr.Env`:
-    * event attrs (last occurrence wins, as `attrs.toMap`) shadow the
-    * data registers; an unbound name raises the reference's NameError.
+  /** Generic name resolution: event attrs (last occurrence wins) shadow
+    * the data registers, as the reference's `{**env, **attrs}` merge
+    * does; an unbound name raises the reference's NameError.
     */
   private def lookup(name: String, ev: Event, eta: Map[String, Long]): Long = {
     if (ev != null) {
@@ -175,9 +180,9 @@ object CompiledExpr {
       throw new Expr.EvalException(s"name '$name' is not defined"))
   }
 
-  /** Evaluate to a primitive long (same folding as `Expr.evalNumIn`:
-    * truthiness == nonzero, Python operand-returning `and`/`or`,
-    * floor division/modulo). `ev` is nullable (ε evaluations).
+  /** Evaluate to a primitive long: truthiness == nonzero, Python
+    * operand-returning `and`/`or`, floor division/modulo (the `Expr`
+    * header). `ev` is nullable (ε evaluations).
     */
   def eval(e: CExpr, ev: Event, eta: Map[String, Long]): Long = e match {
     case CLit(v) => v

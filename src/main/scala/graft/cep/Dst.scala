@@ -99,14 +99,17 @@ object Configuration {
 final case class Pred(evType: Option[String], expr: Expr) {
   val isEpsilon: Boolean = evType.isEmpty
 
-  /** Slot-compiled form of `expr` (see [[CompiledExpr]]), bound by
-    * `DstCompiler.bindSlots` after all `until` rewrites. Null until
-    * bound — `evaluate` then takes the original interpreter path, so a
-    * `Pred` constructed outside the compiler (specs, ad-hoc use) is
-    * unchanged. A body var: case-class equality/copy ignore it (a
-    * `copy` drops the binding and falls back, which is correct).
+  /** Compiled form of `expr` (see [[CompiledExpr]]), the one evaluator.
+    * `DstCompiler.bindSlots` binds it to the edge's event layout after
+    * all `until` rewrites. A `Pred` built outside the compiler compiles
+    * the generic form (`layout = null`, every ref resolved by name) on
+    * its first evaluation. A body var: case-class equality/copy ignore
+    * it (a `copy` drops the binding and compiles the generic form).
     */
   private[cep] var compiled: CompiledExpr.CExpr = null
+
+  private[cep] def bind(layout: Vector[String]): Unit =
+    compiled = CompiledExpr.compile(expr, layout)
 
   def neg: Pred = Pred(evType, Expr.Not(expr))
 
@@ -123,58 +126,46 @@ final case class Pred(evType: Option[String], expr: Expr) {
         }
       case None => ()
     }
-    val c = compiled
-    if (c != null)
-      return CompiledExpr.evalBool(c, event.orNull, eta)
-    val attrs = event match {
-      case Some(ev) => ev.attrMap
-      case None     => Pred.emptyAttrs
-    }
-    Expr.evalBoolIn(expr, Expr.env(attrs, eta,
-      event.fold(Pred.emptyStrs)(_.strMap)))
+    if (compiled == null) bind(null)
+    CompiledExpr.evalBool(compiled, event.orNull, eta)
   }
 }
 
 object Pred {
   val AnyType = "*"
   def epsilon: Pred = Pred(None, Expr.True)
-  private[cep] val emptyAttrs = Map.empty[String, Long]
-  private[cep] val emptyStrs = Map.empty[String, String]
 }
 
 /** Data-register update α: every expression reads the *pre-update* η
   * (`DST.py:139-144` evaluates all updates against the original `eta`).
   */
 final case class DataUpdate(alpha: Vector[(String, Expr)]) {
-  /** Slot-compiled updates (see [[Pred.compiled]]); same binding and
-    * fallback contract. Every expression reads the PRE-update η in both
-    * paths (the compiled loop passes the original `eta` to each eval
-    * and accumulates into a separate map).
+  /** Compiled updates (see [[Pred.compiled]]); same binding, and the
+    * same generic form on first use when unbound. Every expression reads
+    * the PRE-update η: the loop passes the original `eta` to each eval
+    * and accumulates into a separate map.
     */
   private[cep] var compiled: Array[(String, CompiledExpr.CExpr)] = null
+
+  private[cep] def bind(layout: Vector[String]): Unit =
+    compiled = alpha.iterator.map { case (k, e) =>
+      (k, CompiledExpr.compile(e, layout))
+    }.toArray
 
   def update(eta: Map[String, Long], event: Option[Event]): Map[String, Long] =
     if (alpha.isEmpty) eta
     else {
+      if (compiled == null) bind(null)
       val c = compiled
-      if (c != null) {
-        val ev = event.orNull
-        var m = eta
-        var i = 0
-        while (i < c.length) {
-          val kv = c(i)
-          m = m.updated(kv._1, CompiledExpr.eval(kv._2, ev, eta))
-          i += 1
-        }
-        m
-      } else {
-        val env =
-          Expr.env(event.map(_.attrMap).getOrElse(Pred.emptyAttrs), eta,
-            event.fold(Pred.emptyStrs)(_.strMap))
-        eta ++ alpha.map { case (k, e) =>
-          k -> Expr.evalNumIn(e, env)
-        }
+      val ev = event.orNull
+      var m = eta
+      var i = 0
+      while (i < c.length) {
+        val kv = c(i)
+        m = m.updated(kv._1, CompiledExpr.eval(kv._2, ev, eta))
+        i += 1
       }
+      m
     }
   def isId: Boolean = alpha.isEmpty
 }

@@ -53,11 +53,8 @@ final class DstCompiler(query: CepQuery) {
     }
     dst.delta.foreach { t =>
       val layout = layoutFor(t.p.evType)
-      t.p.compiled = CompiledExpr.compile(t.p.expr, layout)
-      if (!t.alpha.isId)
-        t.alpha.compiled = t.alpha.alpha.iterator.map { case (k, e) =>
-          (k, CompiledExpr.compile(e, layout))
-        }.toArray
+      t.p.bind(layout)
+      if (!t.alpha.isId) t.alpha.bind(layout)
     }
   }
 
@@ -96,7 +93,10 @@ final class DstCompiler(query: CepQuery) {
   /** First (event, condition) of a pattern — used by combine's relaxed
     * boundary ignore edges, which read `right_ast["event"]/["cndt"]`
     * (`compile.py:414-424`). Group nodes have no head event; the reference
-    * would KeyError there, we reject explicitly.
+    * would KeyError there, we reject explicitly. Every caller compiles
+    * `p` first, and compiling rejects a `CombineNot` whose left or right
+    * can match empty; so `Pattern.canMatchEmpty`'s `false` for a
+    * `CombineNot` is exact here.
     */
   private def headEventCndt(p: Pattern): (String, Expr) = p match {
     case s: Pattern.Spat       => (s.event, s.cndt)
@@ -107,35 +107,11 @@ final class DstCompiler(query: CepQuery) {
     // cannot match EMPTY (else the chain's first consumed event could be
     // a later unit's). Permutation branches take this path: their units
     // are chained strictly and never empty-headed in practice.
-    case c: Pattern.Combine if !canMatchEmpty(c.left) =>
+    case c: Pattern.Combine if !Pattern.canMatchEmpty(c.left) =>
       headEventCndt(c.left)
     case other =>
       throw new IllegalArgumentException(
         s"relaxed combine boundary needs an event-headed right pattern, got $other")
-  }
-
-  /** Can the pattern match ZERO events? (`{0,n}` quantifiers and their
-    * compositions.) Decides whether a chain's head unit is its first
-    * CONSUMED unit — see [[headEventCndt]]. The user-facing nullability
-    * contract is [[Pattern.canMatchEmpty]] (SHOW EMPTY MATCHES); it
-    * differs only on `CombineNot` (conservative false there), which is
-    * unreachable — an ε-accepting `CombineNot.left` is rejected at
-    * compile time.
-    */
-  private def canMatchEmpty(p: Pattern): Boolean = p match {
-    case _: Pattern.Spat       => false
-    case l: Pattern.Lpat       => l.from == 0
-    case l: Pattern.LpatInf    => l.from == 0
-    case c: Pattern.Combine    =>
-      canMatchEmpty(c.left) && canMatchEmpty(c.right)
-    case c: Pattern.CombineNot =>
-      canMatchEmpty(c.left) && canMatchEmpty(c.right)
-    case a: Pattern.Alt        =>
-      canMatchEmpty(a.left) || canMatchEmpty(a.right)
-    case pm: Pattern.Permute   => pm.units.forall(canMatchEmpty)
-    case g: Pattern.Gpat       => canMatchEmpty(g.child)
-    case g: Pattern.GpatTimes  => g.from == 0 || canMatchEmpty(g.child)
-    case g: Pattern.GpatInf    => g.from == 0 || canMatchEmpty(g.child)
   }
 
   /** Leaf branches of an alternation spine, left to right
@@ -149,13 +125,7 @@ final class DstCompiler(query: CepQuery) {
     case other           => Vector(other)
   }
 
-  /** Union branches with their user-level branch index: `altBranches`
-    * order, with each PERMUTE member further expanded into its
-    * permutation sequences UNDER THE SAME INDEX — branches sharing an
-    * index legitimately share names (they are orderings of the same
-    * units) and are exempt from the disjoint-branch check, which
-    * applies pairwise across indices.
-    */
+  /** The register names, the α-update and the initial η of `vars`. */
   private def takeDataUpdate(
       vars: Vector[VarDef]): (Set[String], DataUpdate, Map[String, Long]) = {
     val x = vars.map(_.name).toSet
@@ -537,7 +507,7 @@ final class DstCompiler(query: CepQuery) {
     // real head would be the next unit); reject loudly, as the chain
     // path does via headEventCndt's canMatchEmpty guard
     if (contiguity != Contiguity.Strict)
-      pm.units.foreach(u => require(!canMatchEmpty(u),
+      pm.units.foreach(u => require(!Pattern.canMatchEmpty(u),
         "relaxed combine into PERMUTE needs units that cannot match " +
           "empty (a {0,n} unit makes the ordering's head ambiguous)"))
     contiguity match {
@@ -693,7 +663,7 @@ final class DstCompiler(query: CepQuery) {
         // event — ambiguous if a unit can bind ZERO events (same guard
         // as the lone-lattice path, compileCombinePermuteRight)
         if (contiguity != Contiguity.Strict)
-          pm.units.foreach(u => require(!canMatchEmpty(u),
+          pm.units.foreach(u => require(!Pattern.canMatchEmpty(u),
             "relaxed combine into PERMUTE needs units that cannot " +
               "match empty (a {0,n} unit makes the ordering's head " +
               "ambiguous)"))

@@ -14,6 +14,11 @@ package graft.cep
   * arithmetic or registers (Long-only by design). `strs` defaults
   * empty, so every integer-only path — the reference goldens, the
   * differential corpus, the display format — is unchanged.
+  *
+  * Conditions read both vectors directly ([[CompiledExpr]]): a bound ref
+  * reads its slot, and a generic ref scans for the LAST occurrence of
+  * its name. `apply`/`get`/`getStr` return the FIRST occurrence; the
+  * Spark operators build events from a schema, so a name never repeats.
   */
 final case class Event(tpe: String, attrs: Vector[(String, Long)],
     strs: Vector[(String, String)] = Vector.empty) {
@@ -28,14 +33,6 @@ final case class Event(tpe: String, attrs: Vector[(String, Long)],
 
   def getStr(key: String): Option[String] =
     strs.find(_._1 == key).map(_._2)
-
-  /** Attribute map used as the evaluation environment (cached — predicates
-    * evaluate against it once per transition per event).
-    */
-  @transient lazy val attrMap: Map[String, Long] = attrs.toMap
-
-  /** String-attribute map for the interpreted evaluator fallback. */
-  @transient lazy val strMap: Map[String, String] = strs.toMap
 
   /** Display format pinned by the reference goldens: `type(v1,v2,...)`.
     * String attributes are NOT displayed — the format belongs to the

@@ -6,12 +6,18 @@ package graft.cep
   * data variables (`/root/reference/reflinkcep/DST.py:84-89`). The observed
   * grammar in the corpus is: int literals, identifiers, `== != < <= >= >`,
   * `+ - * % //`, `and or not`, parentheses, `True`/`False`
-  * (SURVEY.md §1.3). We implement that subset as a small AST with
+  * (SURVEY.md §1.3). This object holds that subset's AST, its parser and
+  * its static walks (`refs`, `strRefs`); [[CompiledExpr]] is its one
+  * evaluator. It folds every value to a primitive long with
   * Python-faithful semantics:
+  *   - truthiness is `value != 0`; `True`/`False` are 1/0, so bools
+  *     compare equal to 0/1 and take part in arithmetic;
   *   - `and`/`or` short-circuit and return an *operand* (not a bool);
-  *   - truthiness: nonzero int is true; bools compare equal to 0/1;
+  *   - `%` and `//` are Python's floor modulo and floor division;
   *   - an unknown identifier raises (like Python's NameError) — conditions
-  *     must not silently null-propagate.
+  *     must not silently null-propagate;
+  *   - a string literal outside a string comparison, `in` or `like` is
+  *     rejected when the expression compiles.
   */
 sealed trait Expr extends Serializable
 
@@ -43,14 +49,12 @@ object Expr {
     * ESCAPE` rule, so the prefilter pushdown stays exact. Without
     * ESCAPE there is no escape character at all: backslash is an
     * ordinary literal (the dialect's string literals have no escapes).
-    * `not like` parses to `Not(Like(…))`. The pattern compiles once per
-    * node; matching is anchored (whole-string), as in SQL.
+    * `not like` parses to `Not(Like(…))`. The pattern compiles once, in
+    * `CompiledExpr.compile`; matching is anchored (whole-string), as in
+    * SQL.
     */
   final case class Like(e: Expr, pattern: String,
-      escape: Option[String] = None) extends Expr {
-    @transient private lazy val rx = likeRegex(pattern, escape)
-    def matches(s: String): Boolean = rx.matcher(s).matches()
-  }
+      escape: Option[String] = None) extends Expr
 
   /** LIKE pattern → anchored regex (`%`→`.*`, `_`→`.`, rest quoted),
     * DOTALL so wildcards cross newlines (SQL semantics; Spark's `like`
@@ -125,193 +129,7 @@ object Expr {
   final case class Not(e: Expr) extends Expr
   final case class Neg(e: Expr) extends Expr
 
-  /** Runtime value: Python-style int-or-bool (plus the string tier). */
-  sealed trait Val extends Serializable
-  final case class Num(v: Long) extends Val
-  final case class Bool(v: Boolean) extends Val
-  final case class Str(v: String) extends Val
-
-  def truthy(v: Val): Boolean = v match {
-    case Num(n)  => n != 0L
-    case Bool(b) => b
-    case Str(s) => throw new EvalException(
-      s"string value '$s' has no truthiness here — strings enter " +
-        "conditions only through comparison against a literal, " +
-        "'in', or 'like'")
-  }
-
-  def toNum(v: Val): Long = v match {
-    case Num(n)  => n
-    case Bool(b) => if (b) 1L else 0L
-    case Str(s) => throw new EvalException(
-      s"string value '$s' in arithmetic — string attributes support " +
-        "comparison/in/like only")
-  }
-
   final class EvalException(msg: String) extends RuntimeException(msg)
-
-  /** Layered environment: `primary` shadows `fallback` (the reference's
-    * `{**env, **attrs}` merge) without allocating a merged map per
-    * evaluation — this sits on the NFA's innermost loop. `strs` is the
-    * event's string-attribute map (round 16) — a separate namespace
-    * resolved only inside string comparisons; registers are never
-    * strings.
-    */
-  final class Env(primary: Map[String, Long], fallback: Map[String, Long],
-      val strs: Map[String, String] = Map.empty) {
-    def lookup(n: String): Long =
-      primary.getOrElse(n,
-        fallback.getOrElse(n,
-          throw new EvalException(s"name '$n' is not defined")))
-    def lookupStr(n: String): String =
-      strs.getOrElse(n,
-        throw new EvalException(s"string attribute '$n' is not defined"))
-  }
-
-  private val emptyMap = Map.empty[String, Long]
-
-  def env(primary: Map[String, Long], fallback: Map[String, Long]): Env =
-    new Env(primary, fallback)
-
-  def env(primary: Map[String, Long], fallback: Map[String, Long],
-      strs: Map[String, String]): Env =
-    new Env(primary, fallback, strs)
-
-  /** Whether the expression is STRING-typed — a literal, or a ref
-    * forced string by the comparison context. Only these two shapes
-    * are; everything else is numeric.
-    */
-  private def isStrSide(e: Expr): Boolean = e.isInstanceOf[StrLit]
-
-  /** Evaluate a string-typed side: the literal itself, or a ref
-    * resolved against the event's string attributes.
-    */
-  private def evalStrSide(e: Expr, env: Env): String = e match {
-    case StrLit(s) => s
-    case Ref(n)    => env.lookupStr(n)
-    case other => throw new EvalException(
-      s"expression $other cannot be string-typed — string comparisons " +
-        "take an attribute name or a literal on each side")
-  }
-
-  /** Evaluate against a flat environment (event attrs shadow data vars). */
-  def eval(e: Expr, m: Map[String, Long]): Val = evalIn(e, new Env(m, emptyMap))
-
-  def evalIn(e: Expr, env: Env): Val = e match {
-    case Lit(v)     => Num(v)
-    case BoolLit(b) => Bool(b)
-    case StrLit(s)  => Str(s)
-    case Ref(n)     => Num(env.lookup(n))
-    case InSet(x, vs) => Bool(vs.contains(evalStrSide(x, env)))
-    case Arith(op, l, r) =>
-      val a = toNum(evalIn(l, env)); val b = toNum(evalIn(r, env))
-      Num(op match {
-        case "+" => a + b
-        case "-" => a - b
-        case "*" => a * b
-        case "%" => Math.floorMod(a, b) // Python % semantics
-        case "//" => Math.floorDiv(a, b) // Python floor division
-        case other => throw new EvalException(s"bad arith op $other")
-      })
-    case lk: Like => Bool(lk.matches(evalStrSide(lk.e, env)))
-    case Cmp(op, l, r) if isStrSide(l) || isStrSide(r) =>
-      // the literal side types the comparison: the other side resolves
-      // as a string attribute; ordering is code-point order (round 17
-      // — `strCompare`, the pushdown/oracle-exact collation)
-      val a = evalStrSide(l, env); val b = evalStrSide(r, env)
-      Bool(op match {
-        case "==" => a == b
-        case "!=" => a != b
-        case "<"  => strCompare(a, b) < 0
-        case "<=" => strCompare(a, b) <= 0
-        case ">"  => strCompare(a, b) > 0
-        case ">=" => strCompare(a, b) >= 0
-        case other => throw new EvalException(s"bad cmp op $other")
-      })
-    case Cmp(op, l, r) =>
-      val a = toNum(evalIn(l, env)); val b = toNum(evalIn(r, env))
-      Bool(op match {
-        case "==" => a == b
-        case "!=" => a != b
-        case "<"  => a < b
-        case "<=" => a <= b
-        case ">"  => a > b
-        case ">=" => a >= b
-        case other => throw new EvalException(s"bad cmp op $other")
-      })
-    case And(l, r) =>
-      val a = evalIn(l, env); if (!truthy(a)) a else evalIn(r, env)
-    case Or(l, r) =>
-      val a = evalIn(l, env); if (truthy(a)) a else evalIn(r, env)
-    case Not(x) => Bool(!truthy(evalIn(x, env)))
-    case Neg(x) => Num(-toNum(evalIn(x, env)))
-  }
-
-  def evalBool(e: Expr, env: Map[String, Long]): Boolean = truthy(eval(e, env))
-  def evalNum(e: Expr, env: Map[String, Long]): Long = toNum(eval(e, env))
-
-  /** Allocation-free evaluator for the NFA hot path: every `Val` of the
-    * boxed evaluator maps to a Long with identical truthiness and numeric
-    * value (`toNum` preserves truthiness: truthy(v) == (toNum(v) != 0), and
-    * comparisons/arithmetic read operands through `toNum`), so folding to
-    * primitive longs is semantics-preserving — including Python's
-    * operand-returning `and`/`or` (`a and b` = a when a is falsy, i.e. 0).
-    * Property-tested equal to `evalIn` over the differential corpus.
-    */
-  def evalNumIn(e: Expr, env: Env): Long = e match {
-    case Lit(v)     => v
-    case BoolLit(b) => if (b) 1L else 0L
-    case StrLit(s) => throw new EvalException(
-      s"string literal '$s' in a numeric position — strings are " +
-        "equality/IN-only")
-    case Ref(n)     => env.lookup(n)
-    case InSet(x, vs) =>
-      if (vs.contains(evalStrSide(x, env))) 1L else 0L
-    case Arith(op, l, r) =>
-      val a = evalNumIn(l, env); val b = evalNumIn(r, env)
-      op match {
-        case "+"  => a + b
-        case "-"  => a - b
-        case "*"  => a * b
-        case "%"  => Math.floorMod(a, b)
-        case "//" => Math.floorDiv(a, b)
-        case other => throw new EvalException(s"bad arith op $other")
-      }
-    case lk: Like =>
-      if (lk.matches(evalStrSide(lk.e, env))) 1L else 0L
-    case Cmp(op, l, r) if isStrSide(l) || isStrSide(r) =>
-      val a = evalStrSide(l, env); val b = evalStrSide(r, env)
-      val res = op match {
-        case "==" => a == b
-        case "!=" => a != b
-        case "<"  => strCompare(a, b) < 0
-        case "<=" => strCompare(a, b) <= 0
-        case ">"  => strCompare(a, b) > 0
-        case ">=" => strCompare(a, b) >= 0
-        case other => throw new EvalException(s"bad cmp op $other")
-      }
-      if (res) 1L else 0L
-    case Cmp(op, l, r) =>
-      val a = evalNumIn(l, env); val b = evalNumIn(r, env)
-      val res = op match {
-        case "==" => a == b
-        case "!=" => a != b
-        case "<"  => a < b
-        case "<=" => a <= b
-        case ">"  => a > b
-        case ">=" => a >= b
-        case other => throw new EvalException(s"bad cmp op $other")
-      }
-      if (res) 1L else 0L
-    case And(l, r) =>
-      val a = evalNumIn(l, env); if (a == 0L) a else evalNumIn(r, env)
-    case Or(l, r) =>
-      val a = evalNumIn(l, env); if (a != 0L) a else evalNumIn(r, env)
-    case Not(x) => if (evalNumIn(x, env) == 0L) 1L else 0L
-    case Neg(x) => -evalNumIn(x, env)
-  }
-
-  def evalBoolIn(e: Expr, env: Env): Boolean = evalNumIn(e, env) != 0L
 
   val True: Expr = BoolLit(true)
 

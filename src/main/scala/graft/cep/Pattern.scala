@@ -424,12 +424,10 @@ object Pattern {
     *    negatives are beyond SQL:2016 anyway).
     *
     * NOTE this is the can-match-ZERO-EVENTS predicate, not which NAMES
-    * can be unbound inside a NON-empty match. `DstCompiler` keeps a private
-    * variant for its chain-head analysis that propagates through
-    * `CombineNot` as left && right — the two agree on every
-    * constructible pattern (an ε-accepting `CombineNot.left` is
-    * rejected at compile time), but THIS one is the user-facing
-    * nullability contract.
+    * can be unbound inside a NON-empty match. `DstCompiler`'s chain-head
+    * analysis calls it too, on patterns it has already compiled: a
+    * `CombineNot` whose left or right can match empty is rejected when
+    * it compiles, so the conservative `false` is exact there.
     */
   def canMatchEmpty(p: Pattern): Boolean = p match {
     case _: Spat       => false

@@ -79,9 +79,10 @@ class CepStringAttrSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("eval: equality both ways, in; arithmetic/ordering over strings " +
     "raise; compiled tier agrees") {
-    val env = Expr.env(Map("value" -> 7L), Map.empty,
-      Map("host" -> "a.com"))
-    def num(s: String): Long = Expr.evalNumIn(Expr.parse(s), env)
+    // the generic form (layout = null) over value = 7, host = 'a.com'
+    def num(s: String): Long = CompiledExpr.eval(
+      CompiledExpr.compile(Expr.parse(s), null),
+      Event("T", Vector("value" -> 7L), Vector("host" -> "a.com")), Map.empty)
     assert(num("host == 'a.com'") == 1L)
     assert(num("'b.com' != host") == 1L)
     assert(num("host in ('b.com', 'a.com')") == 1L)
@@ -93,7 +94,7 @@ class CepStringAttrSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a numeric attr compared to a string literal resolves the ref on
     // the STRING side (the literal types the comparison) — NameError
     intercept[Expr.EvalException](num("value == 'a.com'"))
-    // compiled tier: same values through Event.strs resolution
+    // the same values over an operator-shaped event (id + value attrs)
     val ev = Event("click", Vector("event_id" -> 1L, "value" -> 7L),
       Vector("host" -> "a.com"))
     def cnum(s: String): Long = CompiledExpr.eval(
@@ -134,21 +135,17 @@ class CepStringAttrSpec extends AnyFunSuite with BeforeAndAfterAll {
       val e = Expr.parse(src)
       // render → re-parse identity
       assert(Expr.parse(Pattern.ExprRepr(e)) == e, src)
-      // interpreted == compiled on a random event (both layouts)
+      // generic == bound form on a random event
       val ev = Event("T", Vector("v" -> rnd.nextInt(9).toLong),
         Vector("host" -> hosts(rnd.nextInt(4))))
-      val env = Expr.env(ev.attrMap, Map.empty, ev.strMap)
-      val interp =
-        try Right(Expr.evalNumIn(e, env) != 0L)
-        catch { case x: Expr.EvalException => Left(x.getMessage) }
-      val compiled =
+      def run(layout: Vector[String]): Either[String, Boolean] =
         try Right(CompiledExpr.eval(
-          CompiledExpr.compile(e, Vector("v")), ev, Map.empty) != 0L)
+          CompiledExpr.compile(e, layout), ev, Map.empty) != 0L)
         catch { case x: Expr.EvalException => Left(x.getMessage) }
-      (interp, compiled) match {
+      (run(null), run(Vector("v"))) match {
         case (Right(a), Right(b)) => assert(a == b, src)
         case (Left(_), Left(_))   => () // both loud — same class
-        case other => fail(s"tiers disagree on '$src': $other")
+        case other => fail(s"forms disagree on '$src': $other")
       }
     }
   }

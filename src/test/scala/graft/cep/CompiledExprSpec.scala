@@ -1,14 +1,14 @@
 package graft.cep
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
-/** Differential gate for the slot-compiled evaluator ([[CompiledExpr]])
-  * against the interpreter (`Expr.evalNumIn`) over the same 5,000-case
-  * Python-eval corpus as `ExprDifferentialSpec` — value equality AND
-  * error-ness equality (same NameError/arith-error raising), under
-  * every binding scenario the NFA can produce:
+/** Binding gate for the compiled evaluator ([[CompiledExpr]]) over the
+  * CPython-eval corpora (`ExprCorpus`, numeric and string tier; a string
+  * case keeps its string attrs on the event). Under every binding
+  * scenario of the numeric attrs the NFA can produce, the bound form
+  * must give the same value and the same error key as the generic form
+  * (`layout = null`) over the same inputs, and the same value,
+  * truthiness and error-ness as the corpus:
   *
   *   1. registers only (ε evaluations: event = null);
   *   2. event attrs under a MATCHING bound layout (the fast path);
@@ -22,25 +22,6 @@ import org.json4s.jackson.JsonMethods
   */
 class CompiledExprSpec extends AnyFunSuite {
 
-  private def loadCases(): Iterator[(Int, String, Map[String, Long])] = {
-    val in = getClass.getResourceAsStream("/exprdiff/cases.jsonl.gz")
-    require(in != null, "expr corpus missing — run tools/gen_expr_differential.py")
-    val gz = new java.util.zip.GZIPInputStream(in)
-    scala.io.Source.fromInputStream(gz, "UTF-8").getLines().map { line =>
-      val j = JsonMethods.parse(line)
-      val JInt(id) = (j \ "id"): @unchecked
-      val JString(expr) = (j \ "expr"): @unchecked
-      val env = (j \ "env") match {
-        case JObject(fields) => fields.map {
-          case (k, JInt(v)) => k -> v.toLong
-          case other        => fail(s"bad env $other")
-        }.toMap
-        case _ => Map.empty[String, Long]
-      }
-      (id.toInt, expr, env)
-    }
-  }
-
   /** Error key: exact message for the engine's own EvalException
     * (NameError wording must match); class name only for VM-thrown
     * arithmetic errors, whose message the JIT's fast-throw
@@ -52,70 +33,83 @@ class CompiledExprSpec extends AnyFunSuite {
     case other                  => other.getClass.getSimpleName
   }
 
-  /** Interpreter verdict: Right(value) or Left(error key). */
-  private def interp(e: Expr, attrs: Map[String, Long],
+  /** Verdict of `e` compiled against `layout`: Right(value) or
+    * Left(error key), compile errors included.
+    */
+  private def comp(e: Expr, layout: Vector[String], ev: Event,
       eta: Map[String, Long]): Either[String, Long] =
-    try Right(Expr.evalNumIn(e, Expr.env(attrs, eta)))
+    try Right(CompiledExpr.eval(CompiledExpr.compile(e, layout), ev, eta))
     catch { case ex: Exception => Left(errKey(ex)) }
 
-  private def comp(c: CompiledExpr.CExpr, ev: Event,
-      eta: Map[String, Long]): Either[String, Long] =
-    try Right(CompiledExpr.eval(c, ev, eta))
-    catch { case ex: Exception => Left(errKey(ex)) }
-
-  test("compiled == interpreted over the corpus, all binding scenarios") {
+  /** Runs the six scenarios over `cases` of `corpus`; returns (cases,
+    * checks).
+    */
+  private def scenarios(corpus: String,
+      cases: Iterator[ExprCorpus.Case]): (Int, Long) = {
     var n = 0
     var checked = 0L
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    def check(id: Int, tag: String, want: Either[String, Long],
-        got: Either[String, Long]): Unit = {
-      checked += 1
-      if (want != got && failures.length < 5)
-        failures += s"case $id [$tag]: want=$want got=$got"
-    }
-    loadCases().foreach { case (id, exprStr, env) =>
+    def fail1(msg: String): Unit =
+      if (failures.length < 5) failures += s"$corpus $msg"
+    cases.foreach { c =>
       n += 1
       val parsed =
-        try Some(Expr.parse(exprStr)) catch { case _: Exception => None }
+        try Some(Expr.parse(c.expr)) catch { case _: Exception => None }
+      if (parsed.isEmpty && c.expected.nonEmpty)
+        fail1(s"case ${c.id}: '${c.expr}' does not parse, want ${c.expected}")
       parsed.foreach { e =>
-        val names = env.keys.toVector.sorted
-        // 1. registers only, no layout (ε path)
-        check(id, "eta-only", interp(e, Map.empty, env),
-          comp(CompiledExpr.compile(e, null), null, env))
+        // the bound form against the generic form over the same inputs,
+        // and both against the corpus
+        def check(tag: String, layout: Vector[String], ev: Event,
+            eta: Map[String, Long]): Unit = {
+          checked += 1
+          val generic = comp(e, null, ev, eta)
+          val got = comp(e, layout, ev, eta)
+          val corpus = generic.toOption.map(v => (v, v != 0L))
+          if (got != generic)
+            fail1(s"case ${c.id} [$tag]: generic=$generic bound=$got")
+          if (corpus != c.expected)
+            fail1(s"case ${c.id} [$tag]: corpus=${c.expected} got=$generic")
+        }
+        val names = c.env.keys.toVector.sorted
+        val strs = c.strenv.toVector
+        // 1. registers only, no layout (ε path; strings need an event)
+        check("eta-only", null, if (strs.isEmpty) null
+          else Event("t", Vector.empty, strs), c.env)
         // 2. attrs under a matching layout
-        val ev = Event("t", names.map(k => k -> env(k)))
-        check(id, "attrs-matched", interp(e, ev.attrMap, Map.empty),
-          comp(CompiledExpr.compile(e, names), ev, Map.empty))
+        val ev = Event("t", names.map(k => k -> c.env(k)), strs)
+        check("attrs-matched", names, ev, Map.empty)
         // 3. attrs under a WRONG layout (reversed + a bogus head slot)
-        val wrong = ("__bogus__" +: names.reverse)
-        check(id, "attrs-wrong-layout", interp(e, ev.attrMap, Map.empty),
-          comp(CompiledExpr.compile(e, wrong), ev, Map.empty))
+        check("attrs-wrong-layout", "__bogus__" +: names.reverse, ev,
+          Map.empty)
         // 4. layout bound but the event has no attrs — register fallback
-        val bare = Event("t", Vector.empty)
-        check(id, "guard-miss-to-eta", interp(e, Map.empty, env),
-          comp(CompiledExpr.compile(e, names), bare, env))
+        check("guard-miss-to-eta", names, Event("t", Vector.empty, strs),
+          c.env)
         // 5. env split across attrs and registers
         val (aPart, ePart) = names.splitAt(names.length / 2)
-        val evSplit = Event("t", aPart.map(k => k -> env(k)))
-        val etaSplit = ePart.map(k => k -> env(k)).toMap
-        check(id, "split", interp(e, evSplit.attrMap, etaSplit),
-          comp(CompiledExpr.compile(e, aPart), evSplit, etaSplit))
+        check("split", aPart, Event("t", aPart.map(k => k -> c.env(k)), strs),
+          ePart.map(k => k -> c.env(k)).toMap)
         // 6. shadowing: every name also in eta with a different value;
-        // attrs must win in both paths
-        val etaShadow = env.map { case (k, v) => k -> (v + 1000L) }
-        check(id, "shadow", interp(e, ev.attrMap, etaShadow),
-          comp(CompiledExpr.compile(e, names), ev, etaShadow))
+        // attrs must win in both forms
+        check("shadow", names, ev,
+          c.env.map { case (k, v) => k -> (v + 1000L) })
       }
     }
-    assert(failures.isEmpty,
-      s"diverged:\n${failures.mkString("\n")}")
-    info(s"$n corpus cases x 6 scenarios = $checked checks, all equal")
+    assert(failures.isEmpty, s"diverged:\n${failures.mkString("\n")}")
+    (n, checked)
+  }
+
+  test("compiled == interpreted over the corpus, all binding scenarios") {
+    val (n, checked) = scenarios("numeric", ExprCorpus.numeric())
+    val (ns, checkedS) = scenarios("string-tier", ExprCorpus.strings())
+    info(s"$n numeric + $ns string-tier corpus cases x 6 scenarios = " +
+      s"${checked + checkedS} checks, all equal")
   }
 
   test("bound predicates keep exact semantics on layout-mismatched events") {
     // a compiled DST evaluated against events whose layout differs from
     // the declared schema (attrs permuted + an extra attr) must match
-    // the pure interpreter run (Pred falls back through the slot guard)
+    // the generic-form run (Pred falls back through the slot guard)
     val schema = Vector("purchase" -> Vector("event_id", "value"))
     val q = CepQuery(
       Pattern.lpat("a", "purchase", "value < 40", Contiguity.Relaxed, 2, 2),
@@ -126,10 +120,13 @@ class CompiledExprSpec extends AnyFunSuite {
         "event_id" -> i.toLong))
     }
     val got = CepOperator.run(q, events)
-    // reference interpreter result: strip the bindings by rebuilding the
-    // DST and nulling every compiled form
+    // reference run: rebuild the DST and bind every transition to the
+    // generic form
     val dst = DstCompiler.compile(q)
-    dst.delta.foreach { t => t.p.compiled = null; t.alpha.compiled = null }
+    dst.delta.foreach { t =>
+      t.p.bind(null)
+      if (!t.alpha.isId) t.alpha.bind(null)
+    }
     val ex = new Executor(dst, q.strategy)
     ex.reset()
     val want = events.flatMap(ex.feed)

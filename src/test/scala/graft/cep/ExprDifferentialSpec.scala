@@ -1,144 +1,71 @@
 package graft.cep
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** Condition-language differential: 5,000 generated expressions evaluated
   * by Python's `eval` (the reference's path, `DST.py:84-89`, builtins
   * disabled — see `tools/gen_expr_differential.py`, which also validates
   * its own renderer against CPython). The engine's parser + evaluator
-  * must agree on value, truthiness, and error-ness for every case —
-  * including floor-division/modulo sign corners, operand-returning
-  * `and`/`or`, bool/int coercions, and NameError/ZeroDivision raising.
-  * Both evaluators (boxed `eval` and the hot-path `evalNumIn`) are
-  * checked.
+  * ([[CompiledExpr]]) must agree on value, truthiness (`value != 0`), and
+  * error-ness for every case — including floor-division/modulo sign
+  * corners, operand-returning `and`/`or`, bool/int coercions, and
+  * NameError/ZeroDivision raising. Both compiled forms are checked: the
+  * generic form (`layout = null`, every ref resolved by name) and the
+  * form bound to the event's own attr layout.
   */
 class ExprDifferentialSpec extends AnyFunSuite {
 
-  private def loadCases(): Iterator[(Int, String, Map[String, Long],
-      Option[(Long, Boolean)])] = {
-    val in = getClass.getResourceAsStream("/exprdiff/cases.jsonl.gz")
-    require(in != null, "expr corpus missing — run tools/gen_expr_differential.py")
-    val gz = new java.util.zip.GZIPInputStream(in)
-    scala.io.Source.fromInputStream(gz, "UTF-8").getLines().map { line =>
-      val j = JsonMethods.parse(line)
-      val JInt(id) = (j \ "id"): @unchecked
-      val JString(expr) = (j \ "expr"): @unchecked
-      val env = (j \ "env") match {
-        case JObject(fields) => fields.map {
-          case (k, JInt(v)) => k -> v.toLong
-          case other        => fail(s"bad env $other")
-        }.toMap
-        case _ => Map.empty[String, Long]
-      }
-      val JBool(error) = (j \ "error"): @unchecked
-      val expected =
-        if (error) None
-        else {
-          val JInt(v) = (j \ "value"): @unchecked
-          val JBool(t) = (j \ "truthy"): @unchecked
-          Some((v.toLong, t))
-        }
-      (id.toInt, expr, env, expected)
+  /** The verdict of the case over an event carrying `env` as its integer
+    * attrs (sorted by name) and `strenv` as its string attrs, compiled in
+    * the generic form or, when `bound`, to that attr order:
+    * Some((value, truthiness)), or None when parsing, compiling or
+    * evaluating raises.
+    */
+  private def verdict(c: ExprCorpus.Case,
+      bound: Boolean): Option[(Long, Boolean)] =
+    try {
+      val names = c.env.keys.toVector.sorted
+      val ev = Event("T", names.map(k => k -> c.env(k)), c.strenv.toVector)
+      val ce = CompiledExpr.compile(Expr.parse(c.expr),
+        if (bound) names else null)
+      val v = CompiledExpr.eval(ce, ev, Map.empty)
+      Some((v, v != 0L))
+    } catch {
+      case _: Exception => None
     }
-  }
 
-  test("all expression cases match Python eval semantics, both evaluators") {
+  private def matchCorpus(cases: Iterator[ExprCorpus.Case]): Int = {
     var n = 0
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    loadCases().foreach { case (id, exprStr, env, expected) =>
+    cases.foreach { c =>
       n += 1
-      val got: Option[(Long, Boolean)] =
-        try {
-          val e = Expr.parse(exprStr)
-          val v = Expr.eval(e, env)
-          val fast = Expr.evalNumIn(e, Expr.env(env, Map.empty))
-          assert(Expr.toNum(v) == fast,
-            s"case $id: boxed ${Expr.toNum(v)} != fast $fast for '$exprStr'")
-          Some((Expr.toNum(v), Expr.truthy(v)))
-        } catch {
-          case _: Exception => None
-        }
-      if (got != expected && failures.length < 5)
-        failures += s"case $id: '$exprStr' env=$env want=$expected got=$got"
+      for (bound <- Seq(false, true)) {
+        val got = verdict(c, bound)
+        if (got != c.expected && failures.length < 5)
+          failures += s"case ${c.id} (bound=$bound): '${c.expr}' " +
+            s"env=${c.env} strenv=${c.strenv} want=${c.expected} got=$got"
+      }
     }
     assert(failures.isEmpty,
       s"${failures.length}+ of $n diverged:\n${failures.mkString("\n")}")
-    info(s"$n expression cases matched")
+    n
+  }
+
+  test("all expression cases match Python eval semantics, both evaluators") {
+    val n = matchCorpus(ExprCorpus.numeric())
+    info(s"$n expression cases matched, generic and bound forms")
   }
 
   /** STRING-TIER corpus (round 17 — `tools/gen_str_expr_differential
     * .py`): string ordering/equality/membership atoms mixed into the
     * numeric grammar, Python-eval oracle (Python compares str by CODE
     * POINT — exactly `Expr.strCompare`, including the corpus's astral
-    * and multi-byte cases). All THREE evaluators must agree with it.
+    * and multi-byte cases). Both compiled forms must agree with it; the
+    * bound form reads the numeric attrs by slot.
     */
-  private def loadStrCases(): Iterator[(Int, String, Map[String, Long],
-      Map[String, String], Option[(Long, Boolean)])] = {
-    val in = getClass.getResourceAsStream("/exprdiff/str_cases.jsonl.gz")
-    require(in != null,
-      "string corpus missing — run tools/gen_str_expr_differential.py")
-    val gz = new java.util.zip.GZIPInputStream(in)
-    scala.io.Source.fromInputStream(gz, "UTF-8").getLines().map { line =>
-      val j = JsonMethods.parse(line)
-      val JInt(id) = (j \ "id"): @unchecked
-      val JString(expr) = (j \ "expr"): @unchecked
-      val env = (j \ "env") match {
-        case JObject(fields) => fields.map {
-          case (k, JInt(v)) => k -> v.toLong
-          case other        => fail(s"bad env $other")
-        }.toMap
-        case _ => Map.empty[String, Long]
-      }
-      val strenv = (j \ "strenv") match {
-        case JObject(fields) => fields.map {
-          case (k, JString(v)) => k -> v
-          case other           => fail(s"bad strenv $other")
-        }.toMap
-        case _ => Map.empty[String, String]
-      }
-      val JBool(error) = (j \ "error"): @unchecked
-      val expected =
-        if (error) None
-        else {
-          val JInt(v) = (j \ "value"): @unchecked
-          val JBool(t) = (j \ "truthy"): @unchecked
-          Some((v.toLong, t))
-        }
-      (id.toInt, expr, env, strenv, expected)
-    }
-  }
-
   test("all STRING-tier cases match Python eval semantics — boxed, " +
     "fast, and compiled evaluators") {
-    var n = 0
-    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    loadStrCases().foreach { case (id, exprStr, env, strenv, expected) =>
-      n += 1
-      val got: Option[(Long, Boolean)] =
-        try {
-          val e = Expr.parse(exprStr)
-          val environment = Expr.env(env, Map.empty, strenv)
-          val v = Expr.evalIn(e, environment)
-          val fast = Expr.evalNumIn(e, environment)
-          assert(Expr.toNum(v) == fast,
-            s"case $id: boxed ${Expr.toNum(v)} != fast $fast")
-          // compiled tier over an equivalent Event
-          val ev = Event("T", env.toVector, strenv.toVector)
-          val comp = CompiledExpr.eval(
-            CompiledExpr.compile(e, null), ev, Map.empty)
-          assert(comp == fast, s"case $id: compiled $comp != fast $fast")
-          Some((fast, Expr.truthy(v)))
-        } catch {
-          case _: Exception => None
-        }
-      if (got != expected && failures.length < 5)
-        failures += s"case $id: '$exprStr' env=$env strenv=$strenv " +
-          s"want=$expected got=$got"
-    }
-    assert(failures.isEmpty,
-      s"${failures.length}+ of $n diverged:\n${failures.mkString("\n")}")
-    info(s"$n string-tier cases matched")
+    val n = matchCorpus(ExprCorpus.strings())
+    info(s"$n string-tier cases matched, generic and bound forms")
   }
 }

@@ -8,25 +8,32 @@ import org.scalatest.funsuite.AnyFunSuite
   * UTF-8 byte order, the collation Spark's UTF8String and DuckDB's
   * binary collation share), and `x like '<pattern>'` / `x not like`
   * implement SQL LIKE (`%`/`_`, no escape, anchored, DOTALL). Pinned
-  * here: parser round-trips, interpreted == compiled parity, LIKE
+  * here: parser round-trips, generic == bound compiled-form parity, LIKE
   * semantics against a model, strCompare vs UTF-8 byte order, and the
   * build-time typing audit (`SparkCep.checkStrTyping`).
   */
 class ExprStringOrderLikeSpec extends AnyFunSuite {
 
+  /** The generic form (`layout = null`) over an event with `v` and `host`. */
   private def num(src: String, host: String = "a.com", v: Long = 7L): Long =
-    Expr.evalNumIn(Expr.parse(src),
-      Expr.env(Map("v" -> v), Map.empty, Map("host" -> host)))
+    CompiledExpr.eval(CompiledExpr.compile(Expr.parse(src), null),
+      Event("T", Vector("v" -> v), Vector("host" -> host)), Map.empty)
 
-  private def boxed(src: String, host: String = "a.com", v: Long = 7L) =
-    Expr.evalIn(Expr.parse(src),
-      Expr.env(Map("v" -> v), Map.empty, Map("host" -> host)))
-
+  /** The form bound to the layout `[v]`, over the same event. */
   private def comp(src: String, host: String = "a.com", v: Long = 7L): Long = {
     val ev = Event("T", Vector("v" -> v), Vector("host" -> host))
     CompiledExpr.eval(CompiledExpr.compile(Expr.parse(src), Vector("v")),
       ev, Map.empty)
   }
+
+  /** Whether `h like pattern [escape esc]` holds for `h = s`, in the
+    * generic form.
+    */
+  private def like(pattern: String, esc: Option[String] = None)(
+      s: String): Boolean =
+    CompiledExpr.eval(CompiledExpr.compile(
+      Expr.Like(Expr.Ref("h"), pattern, esc), null),
+      Event("T", Vector.empty, Vector("h" -> s)), Map.empty) == 1L
 
   test("parser: like / not like parse, render round-trips") {
     val e = Expr.parse("host like 'a%.com'")
@@ -50,7 +57,7 @@ class ExprStringOrderLikeSpec extends AnyFunSuite {
       val i = num(src)
       val c = comp(src)
       assert(i == c, src)
-      assert(boxed(src) == Expr.Bool(i == 1L), src)
+      assert(i == 0L || i == 1L, src) // a comparison folds to a bool
     }
     assert(num("host < 'b.com'") == 1L)
     assert(num("host > 'b.com'") == 0L)
@@ -135,8 +142,7 @@ class ExprStringOrderLikeSpec extends AnyFunSuite {
     for (_ <- 0 until 3000) {
       val s = rndS(7).replace("%", "x").replace("_", "y")
       val p = rndS(6)
-      val got = Expr.Like(Expr.Ref("h"), p)
-        .matches(s)
+      val got = like(p)(s)
       assert(got == model(s, p), s"'$s' like '$p'")
     }
   }
@@ -175,15 +181,14 @@ class ExprStringOrderLikeSpec extends AnyFunSuite {
     val emoji = new String(Character.toChars(0x1F600)) // 😀, non-BMP
     // the old per-UTF-16-char quoting split the surrogate pair into two
     // separately-quoted halves and Java regex never matched
-    assert(Expr.Like(Expr.Ref("h"), emoji).matches(emoji))
-    assert(Expr.Like(Expr.Ref("h"), s"a$emoji%").matches(s"a${emoji}xyz"))
-    assert(!Expr.Like(Expr.Ref("h"), emoji).matches("a"))
+    assert(like(emoji)(emoji))
+    assert(like(s"a$emoji%")(s"a${emoji}xyz"))
+    assert(!like(emoji)("a"))
     // `_` is one CODE POINT: it matches the astral char whole
-    assert(Expr.Like(Expr.Ref("h"), "a_b").matches(s"a${emoji}b"))
+    assert(like("a_b")(s"a${emoji}b"))
     // astral ESCAPE character works (compared by code point)
-    assert(Expr.Like(Expr.Ref("h"), s"$emoji%x", Some(emoji))
-      .matches("%x"))
-    // compiled tier agrees
+    assert(like(s"$emoji%x", Some(emoji))("%x"))
+    // the bound form agrees
     val ev = Event("T", Vector("v" -> 1L), Vector("host" -> emoji))
     assert(CompiledExpr.eval(CompiledExpr.compile(
       Expr.parse(s"host like '$emoji'"), Vector("v")), ev, Map.empty) == 1L)
@@ -199,18 +204,18 @@ class ExprStringOrderLikeSpec extends AnyFunSuite {
     assert(Expr.parse(Pattern.ExprRepr(ne)) == ne)
 
     // escaped wildcards are literal; unescaped ones still wild
-    val like = Expr.Like(Expr.Ref("h"), "h!_c%", Some("!"))
-    assert(like.matches("h_com"))
-    assert(like.matches("h_c"))
-    assert(!like.matches("hXcom")) // `_` is literal under the escape
+    val hc = like("h!_c%", Some("!")) _
+    assert(hc("h_com"))
+    assert(hc("h_c"))
+    assert(!hc("hXcom")) // `_` is literal under the escape
     // escape before itself is the literal escape char
-    assert(Expr.Like(Expr.Ref("h"), "a!!b", Some("!")).matches("a!b"))
+    assert(like("a!!b", Some("!"))("a!b"))
     // escaped % is literal
-    assert(Expr.Like(Expr.Ref("h"), "100!%", Some("!")).matches("100%"))
-    assert(!Expr.Like(Expr.Ref("h"), "100!%", Some("!")).matches("1000"))
+    assert(like("100!%", Some("!"))("100%"))
+    assert(!like("100!%", Some("!"))("1000"))
     // backslash with NO escape clause stays an ordinary literal
-    assert(Expr.Like(Expr.Ref("h"), "p\\1%").matches("p\\1x"))
-    assert(!Expr.Like(Expr.Ref("h"), "p\\1%").matches("p1x"))
+    assert(like("p\\1%")("p\\1x"))
+    assert(!like("p\\1%")("p1x"))
 
     // Spark's rule: escape may precede only %, _ or itself; a pattern
     // must not END with the escape char — rejected AT PARSE TIME
@@ -224,7 +229,7 @@ class ExprStringOrderLikeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Expr.parse("host like 'a%' escape ''"))
 
-    // compiled == interpreted parity incl. escapes
+    // generic == bound form parity incl. escapes
     for ((src, host, want) <- Seq(
         ("host like 'h!_c%' escape '!'", "h_com", 1L),
         ("host like 'h!_c%' escape '!'", "hXcom", 0L),
@@ -281,7 +286,7 @@ class ExprStringOrderLikeSpec extends AnyFunSuite {
       toks(p, '!') match {
         case Some(ts) =>
           valid += 1
-          val got = Expr.Like(Expr.Ref("h"), p, Some("!")).matches(s)
+          val got = like(p, Some("!"))(s)
           assert(got == model(s, ts), s"'$s' like '$p' escape '!'")
         case None =>
           invalid += 1

@@ -170,10 +170,8 @@ class GreedyLoopSpec extends AnyFunSuite {
           else {
             val nx = events(stopPos)
             val fires = nx.tpe == "A" &&
-              Expr.evalBoolIn(Expr.parse(ca),
-                Expr.env(nx.attrMap, Map.empty)) &&
-              until.forall(u => !Expr.evalBoolIn(Expr.parse(u),
-                Expr.env(nx.attrMap, Map.empty)))
+              evalCndt(Expr.parse(ca), nx, Map.empty) &&
+              until.forall(u => !evalCndt(Expr.parse(u), nx, Map.empty))
             !fires
           }
         }
@@ -288,8 +286,9 @@ class GreedyLoopSpec extends AnyFunSuite {
   // Differential: greedy engine == reluctant engine + stop-rule filter
   // ---------------------------------------------------------------------
 
+  /** A condition in the generic compiled form (`layout = null`). */
   private def evalCndt(c: Expr, ev: Event, eta: Map[String, Long]): Boolean =
-    Expr.evalBoolIn(c, Expr.env(ev.attrMap, eta))
+    CompiledExpr.evalBool(CompiledExpr.compile(c, null), ev, eta)
 
   /** The independent stop rule (class doc): keep a reluctant match iff
     * the event right after the loop's last take could not extend the
@@ -306,8 +305,9 @@ class GreedyLoopSpec extends AnyFunSuite {
     var eta = vars.map(v => v.name -> v.initial).toMap
     aIds.foreach { id =>
       val ev = events(id.toInt - 1)
-      val env = Expr.env(ev.attrMap, eta)
-      eta = eta ++ vars.map(v => v.name -> Expr.evalNumIn(v.update, env))
+      val pre = eta
+      eta = eta ++ vars.map(v => v.name ->
+        CompiledExpr.eval(CompiledExpr.compile(v.update, null), ev, pre))
     }
     val takeFires = next.tpe == loopEvent && evalCndt(cndt, next, eta) &&
       until.forall(u => !evalCndt(u, next, eta))

@@ -31,8 +31,9 @@ class NegativeDifferentialSpec extends AnyFunSuite {
     Vector("A" -> Vector("id", "v"), "B" -> Vector("id", "v"),
       "C" -> Vector("id", "v"), "D" -> Vector("id", "v"))
 
+  /** A condition in the generic compiled form (`layout = null`). */
   private def evalCndt(c: Expr, ev: Event, eta: Map[String, Long]): Boolean =
-    Expr.evalBoolIn(c, Expr.env(ev.attrMap, eta))
+    CompiledExpr.evalBool(CompiledExpr.compile(c, null), ev, eta)
 
   /** Independent semantics: returns (a_id, b_id) multiset. */
   private def brute(contig: Contiguity, leftC: Expr,
@@ -47,7 +48,8 @@ class NegativeDifferentialSpec extends AnyFunSuite {
         // registers after the left take (update exprs read pre-update η)
         val eta0 = leftVars.map(v => v.name -> v.initial).toMap
         val eta = eta0 ++ leftVars.map(v =>
-          v.name -> Expr.evalNumIn(v.update, Expr.env(a.attrMap, eta0)))
+          v.name -> CompiledExpr.eval(CompiledExpr.compile(v.update, null),
+            a, eta0))
         def negMatches(ev: Event): Boolean =
           ev.tpe == neg.event && evalCndt(neg.cndt, ev, eta)
         def rightTake(ev: Event): Boolean =

@@ -147,8 +147,8 @@ class TimeoutPartialSpec extends AnyFunSuite {
       // FIRST cy-satisfying C after s (relaxed — it cannot be ignored);
       // match iff that take is at t <= s + w - 1; else timeout iff the
       // stream reaches the close step s + w - 1
-      def fires(e: Event, c: String) =
-        Expr.evalBoolIn(Expr.parse(c), Expr.env(e.attrMap, Map.empty))
+      def fires(e: Event, c: String) = CompiledExpr.evalBool(
+        CompiledExpr.compile(Expr.parse(c), null), e, Map.empty)
       val expected = Vector.newBuilder[Long]
       for (s <- 1 to n if events(s - 1).tpe == "A" &&
           fires(events(s - 1), cx)) {
